@@ -460,59 +460,28 @@ def bilinear_sample_u16(
     return out
 
 
-# Resample-arithmetic mode for AXIS-ALIGNED sampling grids (the 3857
-# ingest chunker, regrid, overzoom): "sep-f4" (default) evaluates the
-# bilinear form separably in float32 — exactly the same weighted
-# value*mask / mask semantics, ~3x fewer flops and half the memory
-# traffic, at most 1-ulp-of-u16 output drift on half-integer ties;
-# "f8" restores the legacy joint float64 evaluation (bitwise equal to
-# rounds <= 6).  Warp grids (non-3857 CRS) always use the joint f8 path
-# (their FX/FY are genuinely 2-D).  On a cluster, propagate via
-# spark.executorEnv.SPARK_GRAFT_RESAMPLE; local mode inherits the
-# driver's environment.
-def _resample_mode() -> str:
-    import os
-
-    return os.environ.get("SPARK_GRAFT_RESAMPLE", "sep-f4")
-
-
 def bilinear_sample_u16_axis(
     src_u16: np.ndarray,
     fx: np.ndarray,
     fy: np.ndarray,
     nodata_free: bool = False,
-    mode: str | None = None,
 ) -> np.ndarray:
-    """:func:`bilinear_sample_u16` for an axis-aligned grid: ``fx`` (W,)
-    per-column and ``fy`` (H,) per-row fractional source coords.  Output
-    (nb, H, W) float with NaN NoData — same semantics as the joint
-    sampler on ``meshgrid(fx, fy)``; arithmetic per ``mode`` (falls back
-    to ``_resample_mode``'s env default)."""
-    resolved = mode or _resample_mode()
-    # strict: a typo'd SPARK_GRAFT_RESAMPLE (e.g. 'F8', 'f64') must not
-    # silently pick the drifted fast path when the operator asked for the
-    # bitwise-legacy sampler (ADVICE r7)
-    if resolved not in ("sep-f4", "f8"):
-        raise ValueError(
-            f"unknown resample mode {resolved!r} (expected 'sep-f4' or 'f8')"
-        )
-    if resolved == "f8":
-        FX, FY = np.meshgrid(fx, fy)
-        return bilinear_sample_u16(src_u16, FX, FY, nodata_free=nodata_free)
-    return _bilinear_sep_f4(src_u16, fx, fy, nodata_free)
+    """:func:`bilinear_sample_u16` for an AXIS-ALIGNED grid (the 3857
+    ingest chunker, regrid, overzoom): ``fx`` (W,) per-column and ``fy``
+    (H,) per-row fractional source coords.  Output (nb, H, W) float with
+    NaN NoData — the joint sampler's value*mask / mask semantics on
+    ``meshgrid(fx, fy)``, at most 1-ulp-of-u16 drift on half-integer
+    ties.  Warp grids (non-3857 CRS) use the joint sampler (their FX/FY
+    are genuinely 2-D).
 
-
-def _bilinear_sep_f4(
-    src_u16: np.ndarray, fx: np.ndarray, fy: np.ndarray, nodata_free: bool
-) -> np.ndarray:
-    """Separable float32 evaluation of the bilinear value*mask / mask
-    form.  The 2-D weight w_ij = wy_i * wx_j is an outer product, so
-    sum(w_ij * v_ij) factors into a horizontal lerp per source row
-    followed by a vertical lerp per output row — identical semantics to
-    the joint form, evaluated with O(H*W) multiply-adds instead of
-    O(4*H*W), on f4 instead of f8 (half the stream bytes).  Gathers stay
-    on the raw uint16 source (2 B/neighbor); only source rows inside the
-    grid's row support are touched."""
+    Separable float32 evaluation: the 2-D weight w_ij = wy_i * wx_j is an
+    outer product, so sum(w_ij * v_ij) factors into a horizontal lerp per
+    source row followed by a vertical lerp per output row — O(H*W)
+    multiply-adds instead of O(4*H*W), on f4 instead of f8 (half the
+    stream bytes; it won the ingest A/B 22.4 vs 27.6 s over the joint f8
+    form, BENCH/BASELINE.md round 7).  Gathers stay on the raw uint16
+    source (2 B/neighbor); only source rows inside the grid's row support
+    are touched."""
     nb, h, w = src_u16.shape
     x0 = np.floor(fx).astype("i8")
     y0 = np.floor(fy).astype("i8")
@@ -639,7 +608,6 @@ def split_to_tiles_cropped(
     tile_range,
     tile_size: int = 256,
     src_crs: str = "EPSG:3857",
-    resample: str | None = None,
 ):
     """Regrid a scene onto the aligned tile grid covering it and yield
     ((col, row), (ox, oy), (bands, fh, fw) uint16) CROPPED fragments —
@@ -696,8 +664,7 @@ def split_to_tiles_cropped(
                 i0, i1 = int(iv[0]), int(iv[-1]) + 1
                 yield (c, r), (j0, i0), from_double(
                     bilinear_sample_u16_axis(
-                        src_u16, fx[j0:j1], fy[i0:i1],
-                        nodata_free=ndf, mode=resample,
+                        src_u16, fx[j0:j1], fy[i0:i1], nodata_free=ndf
                     )
                 )
                 continue
@@ -757,7 +724,6 @@ def split_to_tiles(
     tile_range,
     tile_size: int = 256,
     src_crs: str = "EPSG:3857",
-    resample: str | None = None,
 ):
     """Full-tile form of :func:`split_to_tiles_cropped`: yields
     ((col, row), (bands, ts, ts) uint16), each fragment padded back onto
@@ -766,7 +732,7 @@ def split_to_tiles(
     (oracle parity, tests/test_core.py) — the crop excludes exactly the
     pixels the sampler NaNs."""
     for (c, r), (ox, oy), arr in split_to_tiles_cropped(
-        src_u16, src_extent, zoom, tile_range, tile_size, src_crs, resample
+        src_u16, src_extent, zoom, tile_range, tile_size, src_crs
     ):
         yield (c, r), pad_to_tile(arr, ox, oy, tile_size)
 

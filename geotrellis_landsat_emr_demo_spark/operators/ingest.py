@@ -2,28 +2,39 @@
 
 Re-expresses the reference ingest job (ingest/src/main/scala/demo/
 LandsatIngest.scala:25-57, LandsatInput.scala:29-81) as a DataFrame
-pipeline:
+pipeline.  Every entry point that builds leaf tiles — the batch
+:func:`ingest_images`, and streaming.incremental's ``incremental_ingest``
+and ``stream_ingest_files`` — goes through ONE path, :func:`_leaf_tiles`
+(the reference's single ``tileToLayout`` merge, LandsatIngest.scala:39):
 
   images (Iceberg-style table, input_hint schema)
-    -> mapInPandas  decode + reproject-grid + split-to-tile fragments
-       (the RDD fetch/chunk stage, LandsatInput.scala:66-81; one Arrow batch
-       decodes many scenes, no per-row Python)
-    -> groupBy(x, y, ts).applyInPandas  merge co-keyed fragments
-       (tileToLayout merge, LandsatIngest.scala:39; order-insensitized:
-       first-data-wins in ascending image_id)
+    -> mapInPandas  decode + reproject-grid + split into CROPPED tile
+       fragments, and combine the fragments that share an (x, y, ts) key
+       inside the task (the RDD fetch/chunk stage, LandsatInput.scala:66-81,
+       with a map-side combiner; one Arrow batch decodes many scenes)
+    -> [salt_buckets > 1] groupBy(x, y, ts, salt).applyInPandas  combine
+       the partials once more per salt bucket (reduce-side skew)
+    -> groupBy(x, y, ts).applyInPandas  final combine -> one tile row
+       (order-insensitive: first-data-wins in ascending image_id)
     -> per-level groupBy(parent).applyInPandas  2x2 downsample 13 -> 1
        (Pyramid.upLevels, LandsatIngest.scala:42-57)
     -> layer_attrs: distinct sorted times + extent union
        (LandsatIngest.scala:46-55)
 
+Every combine step is the commutative ranked merge
+(kernels.merge_fragments_ranked in the chunk task, kernels.combine_ranked
+after it): partials combine associatively, so any grouping of fragments
+into tasks and salt buckets gives bitwise the tiles of
+kernels.merge_fragments (tests/test_ingest.py).
+
 Scale notes (100 TB design):
-- the only wide shuffles are fragment->tile merge (keyed by the same
-  (x,y,ts) the data is later read by) and one per pyramid level; all are
-  partial-aggregation shaped, bytes shrink monotonically up the pyramid.
-- skewed hot cells (many scenes overlapping one tile) use the salted
-  two-phase merge (``salt_buckets > 1``): a commutative ranked merge whose
-  partials combine associatively — output proven equal to the unsalted
-  order-insensitive merge (tests/test_ingest.py).
+- the only wide shuffles are the leaf combine (keyed by the same (x,y,ts)
+  the data is later read by; plus one salt-keyed shuffle when salting) and
+  one per pyramid level; all are partial-aggregation shaped, bytes shrink
+  monotonically up the pyramid.
+- the map-side combiner caps a hot key's reduce fan-in at one partial per
+  chunk task; salting splits what is left across ~sqrt(fan-in) buckets
+  (:func:`_auto_salt_buckets`; BENCH/BASELINE.md §skew).
 - every stage commits atomically (data + lineage in one manifest swap) with
   a completion marker, so an interrupted ingest resumes without recomputing
   finished levels (north_rule resumability).
@@ -42,286 +53,62 @@ from .. import MAX_ZOOM, MIN_ZOOM, TILE_SIZE
 from ..catalog import Catalog
 from ..core import cellindex, kernels, proj, tiling
 
-# Fragments ride the shuffle CROPPED to their in-source support rect
-# (ox, oy = offset inside the tile canvas; the payload header carries the
-# rect dims).  Padded full tiles inflated the ingest's Arrow + shuffle
-# byte volume ~4x over the source pixels (border tiles are mostly NoData);
-# padding now happens only at the merge reduce side and in stored tiles.
-FRAGMENT_SCHEMA = (
-    "x int, y int, ts timestamp, cell_key long, image_id string, "
-    "caption string, frag binary, ox int, oy int"
-)
+# scene columns the leaf path reads (images table, input_hint schema)
+SOURCE_COLS = [
+    "image_id", "bytes", "ts", "xmin", "ymin", "xmax", "ymax", "caption", "crs",
+]
 TILE_SCHEMA = (
     "layer string, zoom int, x int, y int, cell_key long, time_key long, "
     "ts timestamp, tile binary, caption string, image_id string, n_frags int"
 )
+# A partial: the fragments of one (x, y, ts) key combined so far, CROPPED
+# to the union of their support rects (ox, oy = offset inside the tile
+# canvas; the payload header carries the rect dims) — padded full tiles
+# inflated the ingest's Arrow + shuffle bytes ~4x over the source pixels
+# (border tiles are mostly NoData).  ``winner`` is the ranked-merge
+# provenance (u16 index per cell into ``winner_ids``); a single fragment
+# carries none (null).  image_id/caption = the lexicographically-first
+# contributor, so every step is deterministic under any shuffle order.
 _PARTIAL_SCHEMA = (
     "x int, y int, ts timestamp, cell_key long, image_id string, "
     "caption string, frag binary, winner binary, winner_ids array<string>, "
     "n_frags int, ox int, oy int"
 )
+_PARTIAL_SCHEMA_COLS = [c.split()[0] for c in _PARTIAL_SCHEMA.split(", ")]
 
 
-class _RangeFile:
-    """Seekable file-like over a core.cog RangeReader — lets
-    pyarrow.parquet.ParquetFile read a parquet object through ranged
-    GETs (footer, then only the pruned row groups), i.e. the exact S3
-    access pattern of the reference's in-task fetch
-    (LandsatInput.scala:23-27)."""
+def _chunk_fn(zoom: int):
+    """mapInPandas fn: one images batch -> partial rows for every
+    zoom-``zoom`` tile the scene footprints cover.  Fragments that share a
+    (x, y, ts) key WITHIN the task are combined with the ranked merge
+    before the shuffle — the partial-aggregation (combiner) form of the
+    tile merge, which cuts shuffle rows wherever scenes in one task
+    overlap (hot cells especially).  Singleton fragments skip provenance.
 
-    def __init__(self, rd):
-        self._rd = rd
-        self._pos = 0
-
-    def seek(self, off, whence=0):
-        if whence == 0:
-            self._pos = off
-        elif whence == 1:
-            self._pos += off
-        else:
-            self._pos = self._rd.size() + off
-        return self._pos
-
-    def tell(self):
-        return self._pos
-
-    def read(self, n=-1):
-        if n is None or n < 0:
-            n = self._rd.size() - self._pos
-        b = self._rd.read(self._pos, n)
-        self._pos += len(b)
-        return b
-
-    def size(self):
-        return self._rd.size()
-
-    def seekable(self):
-        return True
-
-    def readable(self):
-        return True
-
-    def writable(self):
-        return False
-
-    def close(self):
-        pass
-
-    @property
-    def closed(self):
-        return False
-
-
-def _fetch_payloads_http(urls: list, ids: list) -> dict:
-    """Pointer fetch over HTTP(S): each url is a catalog parquet object
-    served with Range support.  Row groups are pruned by image_id
-    min/max footer stats (ids are written sorted, so a task's contiguous
-    id range maps to a contiguous run of groups); only surviving groups
-    ride the wire."""
-    import pyarrow.parquet as pq
-
-    from ..core.cog import HttpRangeReader
-
-    want = set(ids)
-    lo, hi = min(ids), max(ids)
-    out: dict = {}
-    for url in urls:
-        f = pq.ParquetFile(_RangeFile(HttpRangeReader(url)))
-        md = f.metadata
-        names = [md.schema.column(i).name for i in range(md.num_columns)]
-        idc = names.index("image_id")
-        groups = []
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(idc).statistics
-            if st is not None and st.has_min_max and (
-                st.max < lo or st.min > hi
-            ):
-                continue
-            groups.append(g)
-        if not groups:
-            continue
-        tbl = f.read_row_groups(groups, columns=["image_id", "bytes"])
-        for iid, by in zip(
-            tbl["image_id"].to_pylist(), tbl["bytes"].to_pylist()
-        ):
-            if iid in want:
-                out[iid] = by
-    return out
-
-
-def _fetch_payloads(paths: list, ids: list) -> dict:
-    """Worker-side payload fetch: read ``bytes`` for the given image_ids
-    straight from the catalog's parquet files via pyarrow, with row-group
-    stat pruning on image_id.  The 100 TB pattern (the reference fetches
-    scene rasters from S3 inside the task, LandsatInput.scala:23-27):
-    payloads never enter the JVM, never ride an Arrow IPC batch, and
-    never shuffle — Spark moves only slim metadata.  ``http(s)://``
-    paths fetch through ranged GETs (:func:`_fetch_payloads_http`) —
-    the object-store deployment itself."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-
-    # dispatch per scheme, not on paths[0]: a mixed list of http URLs and
-    # local files would otherwise route every entry down one scheme and
-    # lose the rest (ADVICE r7)
-    http_paths = [p for p in paths if str(p).startswith(("http://", "https://"))]
-    local_paths = [p for p in paths if p not in http_paths]
-    if http_paths and local_paths:
-        out = _fetch_payloads_http(http_paths, ids)
-        missing = [i for i in ids if i not in out]
-        if missing:
-            out.update(_fetch_payloads(local_paths, missing))
-        return out
-    if http_paths:
-        return _fetch_payloads_http(http_paths, ids)
-
-    # Every executor python worker runs this concurrently: pyarrow's
-    # default pools are sized to ALL machine cores per process, so 32
-    # workers x 32 threads oversubscribes the box ~32x.  One compute
-    # thread + one IO thread per worker keeps aggregate parallelism =
-    # executor count, like the JVM scan it replaces.
-    if pa.cpu_count() > 1:
-        pa.set_cpu_count(1)
-        pa.set_io_thread_count(1)
-    dset = pads.dataset(paths, format="parquet")
-    tbl = dset.to_table(
-        columns=["image_id", "bytes"],
-        filter=pc.field("image_id").isin(ids),
-    )
-    return dict(zip(tbl["image_id"].to_pylist(), tbl["bytes"].to_pylist()))
-
-
-def _chunk_fn(zoom: int, frag_fmt: str = "npy-u16", payload_files: list | None = None,
-              resample: str | None = None):
-    """mapInPandas fn: one images batch -> fragment rows for every
-    zoom-``zoom`` tile the scene footprint covers.
-
-    Fragments default to raw npy-u16: shuffle files are lz4-compressed by
-    Spark and parquet pages are zstd-compressed at rest, so per-fragment
-    zlib only added CPU (~40% of the chunk stage, measured)."""
-
-    def fn(batches):
-        for pdf in batches:
-            out = {
-                k: []
-                for k in (
-                    "x", "y", "ts", "cell_key", "image_id", "caption",
-                    "frag", "ox", "oy",
-                )
-            }
-            fetched = (
-                _fetch_payloads(payload_files, pdf["image_id"].tolist())
-                if payload_files is not None
-                else None
-            )
-            for row in pdf.itertuples(index=False):
-                raw = fetched[row.image_id] if fetched is not None else row.bytes
-                arr = kernels.decode_payload(raw)
-                ext = (row.xmin, row.ymin, row.xmax, row.ymax)
-                # non-3857 scenes (UTM) are warped during the split — the
-                # covering range comes from the reprojected envelope
-                crs = getattr(row, "crs", "EPSG:3857") or "EPSG:3857"
-                ext_3857 = proj.extent_to_mercator(ext, crs)
-                trange = tiling.extent_to_tile_range(*ext_3857, zoom)
-                # single gather for the whole covering block, sliced per tile
-                for (c, r), (ox, oy), tile in kernels.split_to_tiles_cropped(
-                    arr, ext, zoom, trange, TILE_SIZE, src_crs=crs,
-                    resample=resample,
-                ):
-                    out["x"].append(c)
-                    out["y"].append(r)
-                    out["ts"].append(row.ts)
-                    out["cell_key"].append(int(cellindex.cell_key(zoom, c, r)))
-                    out["image_id"].append(row.image_id)
-                    out["caption"].append(row.caption)
-                    out["frag"].append(kernels.encode_payload(tile, frag_fmt))
-                    out["ox"].append(ox)
-                    out["oy"].append(oy)
-            yield pd.DataFrame(out)
-
-    return fn
-
-
-def _merge_fn(layer: str, zoom: int, store_fmt: str):
-    """applyInPandas fn for groupBy(x, y, ts): merge fragments into one tile
-    row; caption/image_id = the lexicographically-first contributor
-    (deterministic under any shuffle order)."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        frags = [
-            kernels.pad_to_tile(kernels.decode_payload(b), ox, oy, TILE_SIZE)
-            for b, ox, oy in zip(pdf["frag"], pdf["ox"], pdf["oy"])
-        ]
-        ids = pdf["image_id"].tolist()
-        merged = kernels.merge_fragments(frags, ids)
-        first = int(np.argmin(np.asarray(ids, dtype=object)))
-        ts = pdf["ts"].iloc[0]
-        millis = int(pd.Timestamp(ts).value // 1_000_000)
-        return pd.DataFrame(
-            dict(
-                layer=[layer],
-                zoom=[zoom],
-                x=[int(pdf["x"].iloc[0])],
-                y=[int(pdf["y"].iloc[0])],
-                cell_key=[int(pdf["cell_key"].iloc[0])],
-                time_key=[int(cellindex.day_bucket(millis))],
-                ts=[ts],
-                tile=[kernels.encode_payload(merged, store_fmt)],
-                caption=[pdf["caption"].iloc[first]],
-                image_id=[ids[first]],
-                n_frags=[len(ids)],
-            )
-        )
-
-    return fn
-
-
-def _chunk_premerge_fn(
-    zoom: int, frag_fmt: str = "npy-u16", payload_files: list | None = None,
-    resample: str | None = None,
-):
-    """Map-side-combining chunk: like :func:`_chunk_fn` but fragments that
-    share a (x, y, ts) key WITHIN the task are pre-merged with the ranked
-    commutative merge before the shuffle — the partial-aggregation
-    (combiner) form of the tile merge.  Cuts shuffle rows wherever scenes
-    in one task overlap (hot cells especially).  Singleton fragments skip
-    provenance (winner columns null) to avoid payload overhead.
-
-    ``payload_files``: pointer mode — the batch carries no ``bytes``
-    column; scene payloads are fetched worker-side from the catalog's
-    parquet files (:func:`_fetch_payloads`)."""
+    Fragments stay raw npy-u16: shuffle files are lz4-compressed by Spark
+    and parquet pages are zstd-compressed at rest, so per-fragment zlib
+    only added CPU (~40% of the chunk stage, BENCH/BASELINE.md negative
+    results)."""
 
     def fn(batches):
         for pdf in batches:
             groups: dict = {}
-            fetched = (
-                _fetch_payloads(payload_files, pdf["image_id"].tolist())
-                if payload_files is not None
-                else None
-            )
             for row in pdf.itertuples(index=False):
-                arr = kernels.decode_payload(
-                    fetched[row.image_id] if fetched is not None else row.bytes
-                )
+                arr = kernels.decode_payload(row.bytes)
                 ext = (row.xmin, row.ymin, row.xmax, row.ymax)
-                crs = getattr(row, "crs", "EPSG:3857") or "EPSG:3857"
+                # non-3857 scenes (UTM) are warped during the split — the
+                # covering range comes from the reprojected envelope
+                crs = row.crs or "EPSG:3857"
                 ext_3857 = proj.extent_to_mercator(ext, crs)
                 trange = tiling.extent_to_tile_range(*ext_3857, zoom)
+                # single gather for the whole covering block, sliced per tile
                 for (c, r), (ox, oy), tile in kernels.split_to_tiles_cropped(
-                    arr, ext, zoom, trange, TILE_SIZE, src_crs=crs,
-                    resample=resample,
+                    arr, ext, zoom, trange, TILE_SIZE, src_crs=crs
                 ):
                     groups.setdefault((c, r, row.ts), []).append(
                         (tile, (ox, oy), row.image_id, row.caption)
                     )
-            out = {
-                k: []
-                for k in (
-                    "x", "y", "ts", "cell_key", "image_id", "caption",
-                    "frag", "winner", "winner_ids", "n_frags", "ox", "oy",
-                )
-            }
+            out = {k: [] for k in _PARTIAL_SCHEMA_COLS}
             for (c, r, ts), items in groups.items():
                 if len(items) == 1:
                     tile, (ox, oy), iid, cap = items[0]
@@ -329,7 +116,7 @@ def _chunk_premerge_fn(
                 else:
                     # pad to canvas for the ranked merge, then crop the
                     # partial back to the union of contributor rects so
-                    # pre-merged keys still shuffle cropped
+                    # combined keys still shuffle cropped
                     full, widx, wids = kernels.merge_fragments_ranked(
                         [
                             kernels.pad_to_tile(t, o[0], o[1], TILE_SIZE)
@@ -337,15 +124,11 @@ def _chunk_premerge_fn(
                         ],
                         [i for _, _, i, _ in items],
                     )
-                    bx0, by0, bx1, by1 = kernels.union_bbox(
+                    tile, winner, (ox, oy) = _crop(
+                        full, widx,
                         [o for _, o, _, _ in items],
                         [t.shape for t, _, _, _ in items],
                     )
-                    tile = full[:, by0:by1, bx0:bx1]
-                    winner = np.ascontiguousarray(
-                        widx[:, by0:by1, bx0:bx1]
-                    ).tobytes()
-                    ox, oy = bx0, by0
                     first = min(range(len(items)), key=lambda j: items[j][2])
                     iid, cap = items[first][2], items[first][3]
                 out["x"].append(c)
@@ -354,7 +137,7 @@ def _chunk_premerge_fn(
                 out["cell_key"].append(int(cellindex.cell_key(zoom, c, r)))
                 out["image_id"].append(iid)
                 out["caption"].append(cap)
-                out["frag"].append(kernels.encode_payload(tile, frag_fmt))
+                out["frag"].append(kernels.encode_payload(tile, "npy-u16"))
                 out["winner"].append(winner)
                 out["winner_ids"].append(wids)
                 out["n_frags"].append(len(items))
@@ -365,141 +148,171 @@ def _chunk_premerge_fn(
     return fn
 
 
-def _partial_merge_fn():
-    """Salted phase 1: merge fragments within a (key, salt) group using the
-    commutative ranked merge; emits one partial fragment + winner map."""
+def _crop(full, widx, offsets, shapes):
+    """Full-canvas ranked merge -> (pixels, winner bytes, (ox, oy)) cropped
+    to the union of the contributor rects, which bounds every data pixel
+    the merge can produce."""
+    bx0, by0, bx1, by1 = kernels.union_bbox(offsets, shapes)
+    winner = np.ascontiguousarray(widx[:, by0:by1, bx0:bx1]).tobytes()
+    return full[:, by0:by1, bx0:bx1], winner, (bx0, by0)
+
+
+def _combine(pdf: pd.DataFrame):
+    """Partial rows of one key -> kernels.combine_ranked over their
+    full-canvas pixels and winner maps.  A row without provenance (a
+    single fragment) ranks its own id wherever it carries data."""
+    parts = []
+    for b, wb, wids, iid, ox, oy in zip(
+        pdf["frag"], pdf["winner"], pdf["winner_ids"], pdf["image_id"],
+        pdf["ox"], pdf["oy"],
+    ):
+        m = kernels.decode_payload(b)
+        if wb is None:
+            w = np.where(
+                m != kernels.NODATA_U16, np.uint16(0), kernels.NO_WINNER
+            ).astype(np.uint16)
+            ids = [str(iid)]
+        else:
+            w = np.frombuffer(wb, dtype=np.uint16).reshape(m.shape)
+            ids = list(wids)
+        parts.append((
+            kernels.pad_to_tile(m, ox, oy, TILE_SIZE),
+            kernels.pad_to_tile(w, ox, oy, TILE_SIZE, fill=kernels.NO_WINNER),
+            ids,
+        ))
+    return kernels.combine_ranked(parts)
+
+
+def _first(pdf: pd.DataFrame) -> int:
+    """Row of the lexicographically-first contributor."""
+    return int(np.argmin(np.asarray(pdf["image_id"].tolist(), dtype=object)))
+
+
+def _salt_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    """applyInPandas fn for groupBy(x, y, ts, salt): combine the partials
+    of one salt bucket into one partial (cropped, with provenance).  A
+    bucket holding a single partial passes it through unchanged — the
+    combine of one partial is the identity."""
+    pdf = pdf[_PARTIAL_SCHEMA_COLS]
+    if len(pdf) == 1:
+        return pdf
+    merged, widx, ids = _combine(pdf)
+    tile, winner, (ox, oy) = _crop(
+        merged, widx,
+        list(zip(pdf["ox"].astype(int), pdf["oy"].astype(int))),
+        [kernels.payload_dims(b) for b in pdf["frag"]],
+    )
+    first = _first(pdf)
+    return pd.DataFrame(
+        dict(
+            x=[int(pdf["x"].iloc[0])],
+            y=[int(pdf["y"].iloc[0])],
+            ts=[pdf["ts"].iloc[0]],
+            cell_key=[int(pdf["cell_key"].iloc[0])],
+            image_id=[pdf["image_id"].iloc[first]],
+            caption=[pdf["caption"].iloc[first]],
+            frag=[kernels.encode_payload(tile, "npy-u16")],
+            winner=[winner],
+            winner_ids=[ids],
+            n_frags=[int(pdf["n_frags"].sum())],
+            ox=[int(ox)],
+            oy=[int(oy)],
+        )
+    )
+
+
+def _tile_pdf(layer, zoom, x, y, ts, tile, caption, image_id, n_frags):
+    """One TILE_SCHEMA row."""
+    millis = int(pd.Timestamp(ts).value // 1_000_000)
+    return pd.DataFrame(
+        dict(
+            layer=[layer],
+            zoom=[zoom],
+            x=[x],
+            y=[y],
+            cell_key=[int(cellindex.cell_key(zoom, x, y))],
+            time_key=[int(cellindex.day_bucket(millis))],
+            ts=[ts],
+            tile=[tile],
+            caption=[caption],
+            image_id=[image_id],
+            n_frags=[n_frags],
+        )
+    )
+
+
+def _final_fn(layer: str, zoom: int, store_fmt: str):
+    """applyInPandas fn for groupBy(x, y, ts): combine a key's partials
+    into one stored tile row.
+
+    A key with a single FULL-canvas partial in the stored format passes
+    its bytes through untouched: the combine of one partial is the
+    identity and encode(decode(x), fmt) == x for the raw format, so no
+    codec work (a cropped border fragment must be padded back onto the
+    NoData canvas).  A JVM-only bypass for singleton keys (window count +
+    filtered union) was measured and reverted: Spark planned the chunk
+    MapInPandas subtree twice (no exchange reuse under AQE across the
+    union branches, ~2x ingest wall); with an explicit persist it merely
+    broke even."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        offs = list(zip(pdf["ox"].astype(int), pdf["oy"].astype(int)))
-        frags = [
-            kernels.pad_to_tile(kernels.decode_payload(b), ox, oy, TILE_SIZE)
-            for b, (ox, oy) in zip(pdf["frag"], offs)
-        ]
-        ids = pdf["image_id"].tolist()
-        merged, winner_idx, sorted_ids = kernels.merge_fragments_ranked(frags, ids)
-        bx0, by0, bx1, by1 = kernels.union_bbox(
-            offs, [kernels.payload_dims(b) for b in pdf["frag"]]
-        )
-        first = int(np.argmin(np.asarray(ids, dtype=object)))
-        return pd.DataFrame(
-            dict(
-                x=[int(pdf["x"].iloc[0])],
-                y=[int(pdf["y"].iloc[0])],
-                ts=[pdf["ts"].iloc[0]],
-                cell_key=[int(pdf["cell_key"].iloc[0])],
-                image_id=[ids[first]],
-                caption=[pdf["caption"].iloc[first]],
-                frag=[
-                    kernels.encode_payload(merged[:, by0:by1, bx0:bx1], "npy-u16")
-                ],
-                # compact provenance: u16 index per cell + the id list
-                winner=[
-                    np.ascontiguousarray(winner_idx[:, by0:by1, bx0:bx1]).tobytes()
-                ],
-                winner_ids=[sorted_ids],
-                n_frags=[len(ids)],
-                ox=[int(bx0)],
-                oy=[int(by0)],
-            )
-        )
-
-    return fn
-
-
-def _final_merge_fn(layer: str, zoom: int, store_fmt: str):
-    """Final phase: combine ranked partials -> one tile row.  Rows without
-    provenance (singleton fragments from the map-side combine) get the
-    trivial winner map (their own id wherever they carry data)."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        ts0 = pdf["ts"].iloc[0]
-        millis0 = int(pd.Timestamp(ts0).value // 1_000_000)
-        if len(pdf) == 1:
-            # singleton key: combine_ranked of one partial is the identity,
-            # and encode(decode(x), fmt) == x for the matching raw format —
-            # pass the fragment bytes through untouched (no codec work).
-            # Only FULL-canvas fragments qualify: a cropped border
-            # fragment must be padded back onto the NoData canvas.
-            frag = pdf["frag"].iloc[0]
-            if (
-                kernels.payload_fmt(frag) == store_fmt
-                and kernels.payload_dims(frag)[1:] == (TILE_SIZE, TILE_SIZE)
-            ):
-                return pd.DataFrame(
-                    dict(
-                        layer=[layer],
-                        zoom=[zoom],
-                        x=[int(pdf["x"].iloc[0])],
-                        y=[int(pdf["y"].iloc[0])],
-                        cell_key=[int(pdf["cell_key"].iloc[0])],
-                        time_key=[int(cellindex.day_bucket(millis0))],
-                        ts=[ts0],
-                        tile=[frag],
-                        caption=[pdf["caption"].iloc[0]],
-                        image_id=[pdf["image_id"].iloc[0]],
-                        n_frags=[int(pdf["n_frags"].iloc[0])],
-                    )
-                )
-        parts = []
-        for b, wb, wids, iid, ox, oy in zip(
-            pdf["frag"], pdf["winner"], pdf["winner_ids"], pdf["image_id"],
-            pdf["ox"], pdf["oy"],
+        frag = pdf["frag"].iloc[0]
+        if (
+            len(pdf) == 1
+            and kernels.payload_fmt(frag) == store_fmt
+            and kernels.payload_dims(frag)[1:] == (TILE_SIZE, TILE_SIZE)
         ):
-            m = kernels.decode_payload(b)
-            if wb is None:
-                w = np.where(
-                    m != kernels.NODATA_U16, np.uint16(0), kernels.NO_WINNER
-                ).astype(np.uint16)
-                parts.append((
-                    kernels.pad_to_tile(m, ox, oy, TILE_SIZE),
-                    kernels.pad_to_tile(w, ox, oy, TILE_SIZE, fill=kernels.NO_WINNER),
-                    [str(iid)],
-                ))
-            else:
-                w = np.frombuffer(wb, dtype=np.uint16).reshape(m.shape)
-                parts.append((
-                    kernels.pad_to_tile(m, ox, oy, TILE_SIZE),
-                    kernels.pad_to_tile(w, ox, oy, TILE_SIZE, fill=kernels.NO_WINNER),
-                    list(wids),
-                ))
-        merged, _, _ = kernels.combine_ranked(parts)
-        ids = pdf["image_id"].tolist()
-        first = int(np.argmin(np.asarray(ids, dtype=object)))
-        ts = pdf["ts"].iloc[0]
-        millis = int(pd.Timestamp(ts).value // 1_000_000)
-        return pd.DataFrame(
-            dict(
-                layer=[layer],
-                zoom=[zoom],
-                x=[int(pdf["x"].iloc[0])],
-                y=[int(pdf["y"].iloc[0])],
-                cell_key=[int(pdf["cell_key"].iloc[0])],
-                time_key=[int(cellindex.day_bucket(millis))],
-                ts=[ts],
-                tile=[kernels.encode_payload(merged, store_fmt)],
-                caption=[pdf["caption"].iloc[first]],
-                image_id=[ids[first]],
-                n_frags=[int(pdf["n_frags"].sum())],
-            )
+            tile = frag
+        else:
+            merged, _, _ = _combine(pdf)
+            tile = kernels.encode_payload(merged, store_fmt)
+        first = _first(pdf)
+        return _tile_pdf(
+            layer, zoom, int(pdf["x"].iloc[0]), int(pdf["y"].iloc[0]),
+            pdf["ts"].iloc[0], tile, pdf["caption"].iloc[first],
+            pdf["image_id"].iloc[first], int(pdf["n_frags"].sum()),
         )
 
     return fn
 
 
-def _merge_partials(
-    partials: DataFrame, layer: str, zoom: int, store_fmt: str
+def _leaf_tiles(
+    src: DataFrame,
+    layer: str,
+    zoom: int,
+    store_fmt: str = "npy-u16",
+    salt_buckets: int = 1,
+    keys: DataFrame | None = None,
 ) -> DataFrame:
-    """Final merge: one shuffle on the key, one grouped UDF.
+    """The one leaf-tile path: scene rows (:data:`SOURCE_COLS`) ->
+    TILE_SCHEMA rows at ``zoom``.  ``salt_buckets > 1`` adds a combine
+    per (key, salt) bucket between the chunk combiner and the final
+    combine.  ``keys`` (x, y rows) restricts the output to those tile
+    keys; the filter runs on the partials, before any reduce-side work.
 
-    A JVM-only two-branch bypass for singleton keys (window count +
-    filtered union) was measured and REVERTED: Spark planned the expensive
-    chunk MapInPandas subtree twice (no exchange reuse under AQE across
-    the union branches, 2 x MapInPandas in the physical plan, ~2x ingest
-    wall); with an explicit persist it merely broke even.  The surviving
-    optimization lives inside :func:`_final_merge_fn`: singleton groups
-    skip the decode/encode (tile bytes == fragment bytes)."""
+    Source partitioning: the chunk stage runs straight off the scan
+    splits when the scan is already >= 4 splits per task slot (work
+    stealing self-balances, and at 100 TB the scan is millions of
+    row-group splits); a coarser source gets an exact-balance round-robin
+    repartition first, because near the width split-size imbalance
+    dominates (interleaved A/B: 36.9 vs 59.5 s median at 56 splits / 32
+    cores, BENCH/BASELINE.md §r6)."""
+    par = src.sparkSession.sparkContext.defaultParallelism
+    if src.rdd.getNumPartitions() < 4 * par:
+        src = src.repartition(par)
+    partials = src.mapInPandas(_chunk_fn(zoom), schema=_PARTIAL_SCHEMA)
+    if keys is not None:
+        partials = partials.join(F.broadcast(keys), ["x", "y"], "left_semi")
+    if salt_buckets > 1:
+        partials = (
+            partials.withColumn(
+                "salt", F.pmod(F.xxhash64("image_id"), F.lit(salt_buckets))
+            )
+            .groupBy("x", "y", "ts", "salt")
+            .applyInPandas(_salt_fn, schema=_PARTIAL_SCHEMA)
+        )
     return partials.groupBy("x", "y", "ts").applyInPandas(
-        _final_merge_fn(layer, zoom, store_fmt), schema=TILE_SCHEMA
+        _final_fn(layer, zoom, store_fmt), schema=TILE_SCHEMA
     )
 
 
@@ -513,26 +326,12 @@ def _parent_fn(layer: str, zoom: int, store_fmt: str):
             quad = (row.y % 2) * 2 + (row.x % 2)
             children[quad] = kernels.decode_payload(row.tile)
         parent = kernels.assemble_parent(children, TILE_SIZE)
-        px = int(pdf["x"].iloc[0]) // 2
-        py = int(pdf["y"].iloc[0]) // 2
-        ids = pdf["image_id"].tolist()
-        first = int(np.argmin(np.asarray(ids, dtype=object)))
-        ts = pdf["ts"].iloc[0]
-        millis = int(pd.Timestamp(ts).value // 1_000_000)
-        return pd.DataFrame(
-            dict(
-                layer=[layer],
-                zoom=[zoom],
-                x=[px],
-                y=[py],
-                cell_key=[int(cellindex.cell_key(zoom, px, py))],
-                time_key=[int(cellindex.day_bucket(millis))],
-                ts=[ts],
-                tile=[kernels.encode_payload(parent, store_fmt)],
-                caption=[pdf["caption"].iloc[first]],
-                image_id=[ids[first]],
-                n_frags=[int(pdf["n_frags"].sum())],
-            )
+        first = _first(pdf)
+        return _tile_pdf(
+            layer, zoom, int(pdf["x"].iloc[0]) // 2, int(pdf["y"].iloc[0]) // 2,
+            pdf["ts"].iloc[0], kernels.encode_payload(parent, store_fmt),
+            pdf["caption"].iloc[first], pdf["image_id"].iloc[first],
+            int(pdf["n_frags"].sum()),
         )
 
     return fn
@@ -625,7 +424,6 @@ def _commit_level(
     stage: str,
     zoom: int,
     t0: float,
-    writer_partitions: int | None = None,
 ):
     """Stage tile files + lineage row, publish in ONE atomic manifest swap
     (exactly-once per stage even if we crash right after).
@@ -635,18 +433,7 @@ def _commit_level(
     tight cell_key min/max, so the serving point reads prune row groups
     the way the reference's Z-order SFC index prunes backend range scans
     (conf/output.json:15-18).  Full cross-file clustering happens at
-    compaction (:func:`compact_tiles`).
-
-    ``writer_partitions`` decouples WRITE parallelism from COMPUTE
-    parallelism: the merge still runs at full width, then one
-    range-repartition on (cell_key, ts) funnels the output into that many
-    writer tasks — fewer, larger, GLOBALLY SFC-clustered files (each file
-    a disjoint cell_key range, so the level is born compacted).  Use when
-    the storage layer saturates below the compute width (this box's disk
-    tops out near 8 concurrent writers; an object store at 1000 executors
-    has the same property per prefix)."""
-    if writer_partitions is not None:
-        df = df.repartitionByRange(writer_partitions, "cell_key", "ts")
+    compaction (:func:`compact_tiles`)."""
     # ~1 MB row groups (≈4 tiles): the row group is the unit of payload IO
     # for a point read — one whole `tile` column chunk is decompressed per
     # hit — so serving latency scales with row-group size, not file size.
@@ -759,139 +546,38 @@ def ingest_images(
     min_zoom: int = MIN_ZOOM,
     store_fmt: str = "npy-u16",
     salt_buckets: int | str = 1,
-    chunk_partitions: int | None = None,
     fail_after_stage: str | None = None,
     cell_type: str = "uint16",
-    writer_partitions: int | None = None,
-    frag_fmt: str = "npy-u16",
-    source_partitioning: str = "auto",
-    payload_source: str = "auto",
-    resample: str | None = None,
-    payload_files: list | None = None,
 ) -> dict:
     """Run the full ingest; resumable (skips stages whose completion marker
     is already committed).  Returns metrics {stage: {rows, wall_s, ...}}.
 
+    ``images_df`` defaults to the catalog's ``images`` table.
+
+    ``salt_buckets``: 1 = combiner-only merge; N > 1 = combine the
+    combiner's partials once more per (key, salt) bucket, for reduce-side
+    skew; "auto" = derive from fragment-count skew measured on the slim
+    footprint metadata (:func:`_auto_salt_buckets`).
+
     ``fail_after_stage`` injects a crash AFTER the named stage's commit —
     the kill/resume test hook.
-
-    ``salt_buckets``: 1 = combiner-only merge; N > 1 = two-phase salted
-    merge for reduce-side skew; "auto" = derive from fragment-count skew
-    measured on the slim footprint metadata (:func:`_auto_salt_buckets`).
-
-    ``payload_source``: "pointer" ships only slim scene metadata through
-    Spark and fetches payload bytes worker-side from the catalog parquet
-    (:func:`_fetch_payloads`) — the object-store deployment shape;
-    "inline"/"auto" (default) carries the bytes column through the plan.
-
-    ``source_partitioning`` (inline mode only): "scan" = no pre-chunk
-    shuffle (file-split parallelism), "roundrobin" = exact-balance
-    repartition of the source rows, "auto" = roundrobin unless the scan
-    is already >= 4 splits per task slot.
-
-    ``resample``: chunk-kernel arithmetic for axis-aligned grids —
-    "sep-f4" (default, separable float32 lerp) or "f8" (legacy joint
-    float64, bitwise round-<=6 output); see kernels._resample_mode.
     """
-    # payload_source="pointer": Spark plans over SLIM scene metadata only;
-    # each chunk task fetches its scenes' bytes straight from the catalog
-    # parquet (pyarrow, image_id row-group pruning).  The payload column
-    # never enters the JVM, an Arrow IPC batch, or a shuffle — the
-    # reference's fetch-raster-in-the-task shape (LandsatInput.scala:23-27
-    # reads S3 inside the Spark task, not through an RDD of bytes).
-    # "auto" = pointer whenever ingesting the catalog's own images table
-    # (caller passed no DataFrame); an explicit images_df keeps bytes
-    # inline since its rows may not exist in any catalog file.
-    # Pointer mode is OPT-IN: on a single box the worker-side parquet
-    # fetch re-reads whole row groups per id range and loses to the JVM
-    # scan (interleaved A/B medians 147 vs 37-60 s, BENCH/BASELINE.md
-    # §r6); its value is the object-store deployment, where each
-    # executor's fetch rides its own NIC and the payloads never cross
-    # the cluster twice.  "auto" therefore resolves to inline.
-    # explicit payload_files (e.g. http(s) URLs of the catalog parquet —
-    # the object-store shape) wins; else pointer mode derives local paths
-    if payload_files is not None:
-        if payload_source not in ("pointer", "auto"):
-            raise ValueError("payload_files requires payload_source='pointer'")
-        payload_source = "pointer"
-    elif payload_source == "pointer" and images_df is None:
-        payload_files = [p for p, _ in cat.file_entries("images")] or None
     if images_df is None:
         images_df = cat.read_spark(spark, "images")
     metrics = {}
-    par = chunk_partitions or spark.sparkContext.defaultParallelism
     if salt_buckets == "auto":
-        salt_buckets = _auto_salt_buckets(images_df, max_zoom, par)
+        salt_buckets = _auto_salt_buckets(
+            images_df, max_zoom, spark.sparkContext.defaultParallelism
+        )
 
     leaf_stage = f"ingest:{layer}:z{max_zoom}"
     if not cat.is_committed(leaf_stage):
         t0 = time.time()
-        slim_cols = ["image_id", "ts", "xmin", "ymin", "xmax", "ymax", "caption", "crs"]
-        src = images_df.select(
-            *(slim_cols if payload_files is not None else slim_cols[:1] + ["bytes"] + slim_cols[1:])
+        tiles = _leaf_tiles(
+            images_df.select(*SOURCE_COLS), layer, max_zoom, store_fmt, salt_buckets
         )
-        if payload_files is not None:
-            # Range-partition the slim metadata on image_id: ids are
-            # written to the catalog in order, so a contiguous id range
-            # maps to a contiguous run of parquet row groups — each
-            # task's _fetch_payloads prunes to ~its own slice of the
-            # file.  (A round-robin scatter makes every task's isin
-            # filter touch ~every row group: measured 7x read
-            # amplification, BENCH/BASELINE.md §r6.)  Shuffling the slim
-            # rows is ~KBs regardless of corpus size.
-            src = src.repartitionByRange(par, "image_id")
-        # Inline payloads: source_partitioning="scan" chunks straight off
-        # the file-scan splits — NO shuffle of the raw scene bytes.  At
-        # 100 TB a pre-chunk round-robin repartition is a full-data
-        # shuffle before any compute; scan splits (sized by parquet row
-        # groups + spark.sql.files.maxPartitionBytes) give the same
-        # parallelism for free when the catalog writes payload tables
-        # with small row groups (catalog.append_pandas row_group_bytes),
-        # and the chunk's map-side combiner sees co-written (spatially
-        # adjacent) scenes, which RAISES its hit rate vs a scatter.
-        # "roundrobin" restores the explicit exact-balance shuffle;
-        # "auto" (default) shuffles only when the scan is too coarse to
-        # feed the configured width (arbitrary caller DataFrames).
-        # "auto": exact-balance round-robin unless the scan is already
-        # MANY tasks per core — with >= 4 splits per slot the scheduler's
-        # work stealing self-balances and the pre-chunk shuffle of every
-        # payload byte buys nothing (at 100 TB the scan is millions of
-        # row-group splits, so auto always resolves to scan there);
-        # near the width, split-size imbalance dominates and the cheap
-        # local shuffle wins (interleaved A/B: 36.9 vs 59.5 s median at
-        # 56 splits / 32 cores, BENCH/BASELINE.md §r6).
-        if payload_files is None and (
-            source_partitioning == "roundrobin"
-            or (
-                source_partitioning == "auto"
-                and src.rdd.getNumPartitions() < 4 * par
-            )
-        ):
-            src = src.repartition(par)
-        if salt_buckets > 1:
-            # explicit salting: partial within (key, salt), final across
-            # salts — for reduce-side skew beyond what the combiner absorbs
-            frags = src.mapInPandas(
-                _chunk_fn(max_zoom, frag_fmt, payload_files, resample),
-                schema=FRAGMENT_SCHEMA,
-            )
-            salted = frags.withColumn(
-                "salt", F.pmod(F.xxhash64("image_id"), F.lit(salt_buckets))
-            )
-            partials = salted.groupBy("x", "y", "ts", "salt").applyInPandas(
-                _partial_merge_fn(), schema=_PARTIAL_SCHEMA
-            )
-        else:
-            # default: map-side combine inside the chunk task (partial
-            # aggregation), final merge after one shuffle
-            partials = src.mapInPandas(
-                _chunk_premerge_fn(max_zoom, frag_fmt, payload_files, resample),
-                schema=_PARTIAL_SCHEMA,
-            )
-        tiles = _merge_partials(partials, layer, max_zoom, store_fmt)
         rows, nbytes, level_files = _commit_level(
-            cat, tiles, layer, leaf_stage, max_zoom, t0,
-            writer_partitions=writer_partitions,
+            cat, tiles, layer, leaf_stage, max_zoom, t0
         )
         metrics[leaf_stage] = dict(rows=rows, bytes=nbytes, wall_s=time.time() - t0)
         if fail_after_stage == leaf_stage:
@@ -921,8 +607,7 @@ def ingest_images(
             .applyInPandas(_parent_fn(layer, zoom, store_fmt), schema=TILE_SCHEMA)
         )
         rows, nbytes, level_files = _commit_level(
-            cat, parents, layer, stage, zoom, t0,
-            writer_partitions=writer_partitions,
+            cat, parents, layer, stage, zoom, t0
         )
         metrics[stage] = dict(rows=rows, bytes=nbytes, wall_s=time.time() - t0)
         if fail_after_stage == stage:

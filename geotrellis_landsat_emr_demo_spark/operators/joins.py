@@ -360,8 +360,13 @@ def zonal_stats(
             yield pd.DataFrame(out)
 
     part = cand.mapInPandas(partials, schema="aoi_id string, s double, c long")
+    # an AOI over only NoData cells has c == 0: NaN, like polygonal_mean
+    # (a bare sum/sum raises DIVIDE_BY_ZERO under ANSI mode)
     return part.groupBy("aoi_id").agg(
-        (F.sum("s") / F.sum("c")).alias("mean"), F.sum("c").alias("n_cells")
+        F.when(F.sum("c") > 0, F.sum("s") / F.sum("c"))
+        .otherwise(F.lit(float("nan")))
+        .alias("mean"),
+        F.sum("c").alias("n_cells"),
     )
 
 

@@ -49,7 +49,8 @@ class LayerService:
         self.spark = spark
         self._meta_cache: dict = {}  # the TrieMap reader cache analog
         # (TileReader.scala:15-19)
-        # decoded-tile LRU — the local-cache analog of the reference's
+        # decoded-tile FIFO cache (insertion-order eviction; size 0 = no
+        # caching) — the local-cache analog of the reference's
         # downloaded-GeoTIFF cache (S3: LandsatInput fetches to local disk
         # once, re-reads for free); repeat point reads of a hot tile skip
         # the parquet scan AND the payload decode
@@ -184,9 +185,10 @@ class LayerService:
                 tile_col = pf.read_row_group(rg, columns=["tile"])
                 out = kernels.decode_payload(tile_col["tile"][int(hit[0])].as_py())
                 break
-        if len(self._tile_cache) >= self._tile_cache_size:
-            self._tile_cache.pop(next(iter(self._tile_cache)))  # FIFO evict
-        self._tile_cache[ckey] = out
+        if self._tile_cache_size > 0:
+            if len(self._tile_cache) >= self._tile_cache_size:
+                self._tile_cache.pop(next(iter(self._tile_cache)))  # FIFO evict
+            self._tile_cache[ckey] = out
         return out
 
     # ------------------------------------------------------------- renders

@@ -60,7 +60,7 @@ def build_session(
         # payload tables (scene bytes, tiles) with ~32 MB row groups, so a
         # 32 MB partition target lets the ingest chunk stage parallelize
         # straight off the file scan with NO pre-chunk repartition shuffle
-        # of the raw bytes (operators/ingest.py source_partitioning).
+        # of the raw bytes (the source rule in operators/ingest._leaf_tiles).
         # Slim tables produce tiny splits either way (openCostInBytes
         # packs them), and post-shuffle sizing is AQE's job, so this is
         # scan-only and scale-neutral.

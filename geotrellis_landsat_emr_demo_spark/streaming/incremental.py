@@ -4,12 +4,13 @@ The reference has no streaming (SURVEY §2.9) — its deployment doc only
 suggests periodic re-ingest (README.md:380).  Here that becomes:
 
 - :func:`incremental_ingest`  batch-incremental appends: only scenes not
-  yet recorded in the lineage table are chunked/merged/appended — the
+  yet recorded in the lineage table are chunked/combined/appended — the
   Iceberg-style "append new snapshots" path.  Exactly-once via the same
   atomic data+lineage commit as the full ingest.
 - :func:`stream_ingest_files` a Structured Streaming pipeline reading new
   image parquet files from a directory (file-source with checkpointing),
-  running the same chunk+merge kernels per micro-batch via foreachBatch.
+  running the batch ingest's leaf path (operators.ingest._leaf_tiles)
+  per micro-batch via foreachBatch.
 """
 
 from __future__ import annotations
@@ -76,21 +77,12 @@ def incremental_ingest(
         .select("image_id")
         .distinct()
     )
-    src = images.join(contributors, "image_id", "left_semi").select(
-        "image_id", "bytes", "ts", "xmin", "ymin", "xmax", "ymax", "caption", "crs"
-    )
-    frags = src.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        ing._chunk_fn(max_zoom), schema=ing.FRAGMENT_SCHEMA
-    )
-    # keep only fragments landing on touched keys (a contributor scene may
-    # also cover untouched keys that need no rebuild)
-    frags = frags.join(
-        F.broadcast(touched.withColumnRenamed("cx", "x").withColumnRenamed("cy", "y")),
-        ["x", "y"],
-        "left_semi",
-    )
-    tiles = frags.groupBy("x", "y", "ts").applyInPandas(
-        ing._merge_fn(layer, max_zoom, store_fmt), schema=ing.TILE_SCHEMA
+    src = images.join(contributors, "image_id", "left_semi").select(*ing.SOURCE_COLS)
+    # only touched keys are rebuilt (a contributor scene may also cover
+    # untouched keys that need no rebuild)
+    tiles = ing._leaf_tiles(
+        src, layer, max_zoom, store_fmt,
+        keys=touched.withColumnRenamed("cx", "x").withColumnRenamed("cy", "y"),
     ).withColumn("gen", F.lit(gen))
     files = cat.stage_spark_write(tiles, "tiles_incremental")
     # data + lineage in ONE atomic snapshot: crash before this commit means
@@ -190,11 +182,8 @@ def stream_ingest_files(
         marker = f"stream:{layer}:epoch:{epoch_id}"
         if cat.is_committed(marker):  # replayed batch after restart
             return
-        frags = df.select(
-            "image_id", "bytes", "ts", "xmin", "ymin", "xmax", "ymax", "caption", "crs"
-        ).mapInPandas(ing._chunk_fn(max_zoom), schema=ing.FRAGMENT_SCHEMA)
-        tiles = frags.groupBy("x", "y", "ts").applyInPandas(
-            ing._merge_fn(layer, max_zoom, store_fmt), schema=ing.TILE_SCHEMA
+        tiles = ing._leaf_tiles(
+            df.select(*ing.SOURCE_COLS), layer, max_zoom, store_fmt
         )
         files = cat.stage_spark_write(tiles, "tiles_stream")
         cat.commit({"tiles_stream": files}, markers={marker: {}})

@@ -299,29 +299,18 @@ def test_bilinear_identity_and_gradient():
 
 
 def test_separable_f4_sampler_contract():
-    """The axis-aligned separable-f4 resample path (default) vs the
-    legacy joint-f8 path: identical NaN/NoData mask, value drift bounded
-    by 1 u16 step (half-integer ties under f4 rounding), and the
+    """The axis-aligned separable-f4 sampler vs the joint-f8 sampler (the
+    warp path) on the same grid: identical NaN/NoData mask, value drift
+    bounded by 1 u16 step (half-integer ties under f4 rounding), and the
     nodata_free fast path bitwise-equal to the masked path on a
     NoData-free source."""
-    import os
-
     rng = np.random.default_rng(11)
     src = rng.integers(0, 65535, size=(4, 192, 192)).astype(np.uint16)
     src[:, 30:40, 20:120] = 0  # NoData patch
     fx = np.linspace(-3.0, 194.0, 123)  # straddles oob on both sides
     fy = np.linspace(-2.0, 193.5, 87)
-    prev = os.environ.get("SPARK_GRAFT_RESAMPLE")
-    try:
-        os.environ["SPARK_GRAFT_RESAMPLE"] = "f8"
-        a = K.bilinear_sample_u16_axis(src, fx, fy)
-        os.environ["SPARK_GRAFT_RESAMPLE"] = "sep-f4"
-        b = K.bilinear_sample_u16_axis(src, fx, fy)
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_RESAMPLE", None)
-        else:
-            os.environ["SPARK_GRAFT_RESAMPLE"] = prev
+    a = K.bilinear_sample_u16(src, *np.meshgrid(fx, fy))
+    b = K.bilinear_sample_u16_axis(src, fx, fy)
     assert (np.isnan(a) == np.isnan(b)).all()
     ua, ub = K.from_double(a), K.from_double(b)
     diff = np.abs(ua.astype("i8") - ub.astype("i8"))
@@ -333,7 +322,7 @@ def test_separable_f4_sampler_contract():
     nf = K.bilinear_sample_u16_axis(src2, fx, fy, nodata_free=True)
     mk = K.bilinear_sample_u16_axis(src2, fx, fy, nodata_free=False)
     assert np.array_equal(K.from_double(nf), K.from_double(mk))
-    # identity grid is exact in BOTH modes (weights are exactly {0, 1})
+    # identity grid is exact (weights are exactly {0, 1})
     out = K.regrid_to_extent(src2, (0, 0, 192, 192), (0, 0, 192, 192), (192, 192))
     assert (out == src2).all()
 
@@ -409,23 +398,3 @@ def test_haversine_known_distance():
 def test_day_bucket():
     assert int(ci.day_bucket(86_400_000)) == 1
     assert int(ci.day_bucket(86_399_999)) == 0
-
-
-def test_resample_mode_typo_raises():
-    """ADVICE r7: a typo'd SPARK_GRAFT_RESAMPLE must raise, not silently
-    select the drifted fast path."""
-    import numpy as np
-    import pytest
-
-    from geotrellis_landsat_emr_demo_spark.core import kernels
-
-    src = np.full((1, 4, 4), 100, dtype=np.uint16)
-    fx = np.array([1.0, 2.0])
-    fy = np.array([1.0, 2.0])
-    for bad in ("F8", "f64", "fast"):
-        with pytest.raises(ValueError, match="resample mode"):
-            kernels.bilinear_sample_u16_axis(src, fx, fy, mode=bad)
-    # both valid modes still work
-    a = kernels.bilinear_sample_u16_axis(src, fx, fy, mode="f8")
-    b = kernels.bilinear_sample_u16_axis(src, fx, fy, mode="sep-f4")
-    assert a.shape == b.shape == (1, 2, 2)

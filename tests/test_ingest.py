@@ -379,100 +379,84 @@ def test_auto_salt_buckets_heuristic(spark):
     assert m["ingest:landsat:z13"]["rows"] > 0
 
 
-def test_pointer_payload_source_bitwise_equals_inline(spark):
-    """payload_source="pointer" (worker-side pyarrow fetch from the
-    catalog parquet, slim metadata through Spark — the object-store
-    deployment shape, LandsatInput.scala:23-27) produces BITWISE the
-    tiles of the inline bytes-through-the-plan path."""
-    outs = {}
-    for mode in ("pointer", "inline"):
-        root = os.path.join(SCRATCH, f"ptr-{mode}")
-        shutil.rmtree(root, ignore_errors=True)
-        cat = Catalog(root)
-        fixtures.write_all(cat, "t-small")
-        ingest.ingest_images(
-            spark, cat, "landsat", max_zoom=13, min_zoom=12,
-            payload_source=mode,
-        )
-        outs[mode] = (
-            cat.read_pandas("tiles")
-            .sort_values(["zoom", "x", "y"])
-            .reset_index(drop=True)
-        )
-    a, b = outs["pointer"], outs["inline"]
-    assert len(a) == len(b) and len(a) > 0
-    for (_, ra), (_, rb) in zip(a.iterrows(), b.iterrows()):
-        assert (ra.x, ra.y, ra.zoom, ra.image_id, ra.cell_key) == (
-            rb.x, rb.y, rb.zoom, rb.image_id, rb.cell_key
-        )
-        assert (
-            K.decode_payload(ra.tile) == K.decode_payload(rb.tile)
-        ).all(), (ra.zoom, ra.x, ra.y)
+def _set_partitions(items, k):
+    """Every split of ``items`` into ``k`` non-empty blocks."""
+    if k == 1:
+        yield [list(items)]
+        return
+    if len(items) == k:
+        yield [[i] for i in items]
+        return
+    head, rest = items[0], items[1:]
+    for part in _set_partitions(rest, k - 1):
+        yield [[head]] + part
+    for part in _set_partitions(rest, k):
+        for j in range(len(part)):
+            yield part[:j] + [[head] + part[j]] + part[j + 1:]
 
 
-def test_pointer_payload_over_http_bitwise_equals_inline(spark):
-    """payload_files as http:// URLs: workers fetch scene bytes through
-    ranged GETs on the catalog parquet (footer + pruned row groups only
-    — the S3 deployment shape, LandsatInput.scala:23-27) and the tiles
-    are BITWISE those of the inline path."""
-    import http.server
-    import threading
+def test_combine_steps_any_grouping_equal_merge_fragments():
+    """The leaf path's combine steps, called directly on pandas: a hot
+    cell's fragments split into every 2-way and 3-way grouping of chunk
+    tasks (a one-fragment task emits a provenance-less partial, a larger
+    one a ranked partial cropped to its contributors' rects), then the
+    salt step (first two partials in one bucket, the rest alone) and the
+    final step give bitwise the stored tile of kernels.merge_fragments."""
+    scenes = fixtures.images_pdf("t-small")[ingest.SOURCE_COLS]
+    chunk = ingest._chunk_fn(13)
 
-    outs = {}
-    # inline reference
-    root = os.path.join(SCRATCH, "ptrhttp-inline")
-    shutil.rmtree(root, ignore_errors=True)
-    cat = Catalog(root)
-    fixtures.write_all(cat, "t-small")
-    ingest.ingest_images(
-        spark, cat, "landsat", max_zoom=13, min_zoom=13, payload_source="inline"
+    def partials(rows):
+        return next(chunk(iter([scenes.iloc[rows]])))
+
+    # per-key singleton partials; the hot cell = a 4-contributor key with
+    # the most cropped fragments
+    frags = {}
+    for i in range(len(scenes)):
+        for r in partials([i]).itertuples(index=False):
+            frags.setdefault((r.x, r.y, r.ts), []).append((i, r))
+
+    def cropped(r):
+        return K.payload_dims(r.frag)[1:] != (256, 256)
+
+    key = max(
+        frags, key=lambda k: (len(frags[k]), sum(cropped(r) for _, r in frags[k]))
     )
-    outs["inline"] = (
-        cat.read_pandas("tiles").sort_values(["zoom", "x", "y"]).reset_index(drop=True)
+    rows = [i for i, _ in frags[key]]
+    assert len(rows) == 4
+    expect = K.encode_payload(
+        K.merge_fragments(
+            [K.pad_to_tile(K.decode_payload(r.frag), r.ox, r.oy) for _, r in frags[key]],
+            [r.image_id for _, r in frags[key]],
+        ),
+        "npy-u16",
     )
-    # http pointer: serve the images table dir, hand URLs to the workers
-    root = os.path.join(SCRATCH, "ptrhttp-http")
-    shutil.rmtree(root, ignore_errors=True)
-    cat = Catalog(root)
-    fixtures.write_all(cat, "t-small")
-    images_dir = cat.table_dir("images")
-
-    class H(http.server.SimpleHTTPRequestHandler):
-        def __init__(self, *a, **kw):
-            super().__init__(*a, directory=images_dir, **kw)
-
-        def log_message(self, *a):
-            pass
-
-    # SimpleHTTPRequestHandler has no Range support -> use the reader's
-    # 200-fallback? No: ranged GETs are the point; serve via the
-    # range-capable handler from test_cog.
-    from test_cog import _RangeHandler
-
-    log = []
-    httpd = http.server.ThreadingHTTPServer(
-        ("127.0.0.1", 0), _RangeHandler.make(images_dir, log)
-    )
-    threading.Thread(target=httpd.serve_forever, daemon=True).start()
-    base = f"http://127.0.0.1:{httpd.server_address[1]}"
-    try:
-        urls = [
-            f"{base}/{os.path.basename(p)}"
-            for p, _ in cat.file_entries("images")
-        ]
-        ingest.ingest_images(
-            spark, cat, "landsat", max_zoom=13, min_zoom=13,
-            payload_files=urls,
-        )
-    finally:
-        httpd.shutdown()
-    outs["http"] = (
-        cat.read_pandas("tiles").sort_values(["zoom", "x", "y"]).reset_index(drop=True)
-    )
-    a, b = outs["http"], outs["inline"]
-    assert len(a) == len(b) and len(a) > 0
-    for (_, ra), (_, rb) in zip(a.iterrows(), b.iterrows()):
-        assert (ra.x, ra.y, ra.zoom, ra.image_id) == (rb.x, rb.y, rb.zoom, rb.image_id)
-        assert (K.decode_payload(ra.tile) == K.decode_payload(rb.tile)).all()
-    # the server-side log proves ranged access, not whole-file streaming
-    assert log, "no ranged requests hit the HTTP server"
+    final = ingest._final_fn("landsat", 13, "npy-u16")
+    n_cropped_ranked = 0
+    for k in (2, 3):
+        for grouping in _set_partitions(rows, k):
+            parts = pd.concat(
+                [
+                    p[(p.x == key[0]) & (p.y == key[1]) & (p.ts == key[2])]
+                    for p in (partials(block) for block in grouping)
+                ],
+                ignore_index=True,
+            )
+            assert len(parts) == k
+            n_cropped_ranked += int(
+                sum(w is not None and cropped(r)
+                    for w, r in zip(parts.winner, parts.itertuples(index=False)))
+            )
+            salted = pd.concat(
+                [ingest._salt_fn(parts.iloc[:2].assign(salt=0))]
+                + [
+                    ingest._salt_fn(parts.iloc[[j]].assign(salt=j))
+                    for j in range(2, k)
+                ],
+                ignore_index=True,
+            )
+            for tiles in (final(salted), final(parts)):
+                assert len(tiles) == 1
+                assert tiles.tile[0] == expect, grouping
+                assert tiles.image_id[0] == min(scenes.image_id.iloc[rows])
+                assert int(tiles.n_frags[0]) == 4
+    assert n_cropped_ranked > 0, "no ranked partial with a cropped rect"

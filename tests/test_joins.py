@@ -105,6 +105,60 @@ def test_zonal_stats_matches_serving(spark, tsmall_catalog, svc):
     assert "aoi-005" not in got
 
 
+def test_zonal_stats_nodata_aoi_is_nan(spark):
+    """An AOI over only NoData cells gets mean NaN and n_cells 0 — what
+    polygonal_mean answers when no data cell is masked — next to an AOI
+    over data, which still gets its mean."""
+    import json
+
+    from geotrellis_landsat_emr_demo_spark.core import tiling
+    from geotrellis_landsat_emr_demo_spark.functions.registry import get_op
+
+    x, y = 7198, 3266
+    data = np.full((5, 256, 256), 4000, dtype=np.uint16)
+    data[3] = 9000  # nir > red: a non-trivial NDVI
+    nodata = np.zeros_like(data)
+    ts = pd.Timestamp(parse_time(T1), unit="ms")
+    tiles = spark.createDataFrame(
+        pd.DataFrame(
+            dict(
+                layer=["landsat"] * 2,
+                zoom=[13, 13],
+                x=[x, x + 1],
+                y=[y, y],
+                ts=[ts, ts],
+                tile=[K.encode_payload(data, "npy-u16"), K.encode_payload(nodata, "npy-u16")],
+            )
+        )
+    )
+
+    def inner_rect(tx, ty):
+        x0, y0, x1, y1 = tiling.tile_extent(tx, ty, 13)
+        dx, dy = (x1 - x0) / 4, (y1 - y0) / 4
+        ring = [
+            [float(v) for v in geom.mercator_to_lnglat(px, py)]
+            for px, py in (
+                (x0 + dx, y0 + dy), (x1 - dx, y0 + dy), (x1 - dx, y1 - dy),
+                (x0 + dx, y1 - dy), (x0 + dx, y0 + dy),
+            )
+        ]
+        return json.dumps({"type": "Polygon", "coordinates": [ring]})
+
+    aoi = pd.DataFrame(
+        dict(aoi_id=["data", "nodata"], geojson=[inner_rect(x, y), inner_rect(x + 1, y)])
+    )
+    got = {
+        r.aoi_id: (r.mean, r.n_cells)
+        for r in joins.zonal_stats(spark, tiles, aoi, "ndvi", T1, 13, "landsat").collect()
+    }
+    assert set(got) == {"data", "nodata"}
+    mean, n = got["nodata"]
+    assert np.isnan(mean) and n == 0
+    mean, n = got["data"]
+    expect = float(np.nanmean(get_op("ndvi")["fn"](data)))
+    assert n > 0 and abs(mean - expect) < 1e-12
+
+
 def test_diff_join_matches_local(spark, tsmall_catalog):
     from test_ingest import oracle_leaf_keys, oracle_tile
 

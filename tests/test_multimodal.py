@@ -118,7 +118,8 @@ def test_image_ahash_and_features_near_dup_pipeline(spark, images):
 
 def test_incremental_ingest_merge_on_read(spark, tsmall_catalog):
     """Two incremental batches (4 + 4 scenes) resolved by latest-gen must
-    equal the one-shot batch ingest of all 8 scenes, tile-for-tile."""
+    equal the one-shot batch ingest of all 8 scenes, tile-for-tile and
+    byte-for-byte."""
     from geotrellis_landsat_emr_demo_spark.streaming import incremental
 
     root = os.path.join(SCRATCH, "incr")
@@ -153,6 +154,8 @@ def test_incremental_ingest_merge_on_read(spark, tsmall_catalog):
         assert (
             K.decode_payload(resolved.tile[i]) == K.decode_payload(batch.tile[i])
         ).all(), (batch.x[i], batch.y[i])
+        # same leaf path -> the stored bytes match too
+        assert resolved.tile[i] == batch.tile[i], (batch.x[i], batch.y[i])
         assert resolved.caption[i] == batch.caption[i]
     # compaction atomically replaces the layer with ONE resolved generation
     pre_snapshot = cat.snapshot_id()

@@ -92,6 +92,21 @@ def test_missing_tile_returns_none(svc):
     assert svc.render_diff("landsat", 13, 1, 1, T1, T2, "ndvi") is None
 
 
+def test_tile_cache_size_zero_disables_caching(svc, tsmall_catalog):
+    """tile_cache_size=0 means no caching: reading one tile twice hits the
+    catalog both times, returns the cached service's pixels, and leaves
+    the cache empty."""
+    from geotrellis_landsat_emr_demo_spark.plans.queries import LayerService
+
+    nocache = LayerService(tsmall_catalog, tile_cache_size=0)
+    x, y = _hot_key(tsmall_catalog)
+    expect = svc.read_tile("landsat", 13, x, y, parse_time(T1))
+    for _ in range(2):
+        got = nocache.read_tile("landsat", 13, x, y, parse_time(T1))
+        assert got is not None and (got == expect).all()
+    assert not nocache._tile_cache
+
+
 def test_polygonal_mean_oracle(svc, tsmall_catalog):
     """Zonal mean vs an independent whole-raster oracle: mask every leaf
     tile's pixel centers, mean over all data cells."""
