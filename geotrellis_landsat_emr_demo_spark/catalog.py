@@ -239,8 +239,8 @@ class Catalog:
         dir (NOT yet visible). Call :meth:`commit` to publish them.
 
         ``write_options`` pass through to the parquet writer — e.g.
-        ``{"parquet.block.size": str(1 << 20)}`` for point-read-optimized
-        small row groups (a row group is the payload-IO unit: a point read
+        ``operators.ingest.TILE_WRITE_OPTIONS``, the tiles table's small
+        row groups (a row group is the payload-IO unit: a point read
         decompresses one whole column chunk of it)."""
         stage = os.path.join(self.root, f"_stage-{uuid.uuid4().hex}")
         w = df.write.mode("overwrite")
@@ -284,33 +284,17 @@ class Catalog:
             raise FileNotFoundError(f"table {table!r} is empty/missing")
         return spark.read.parquet(*files)
 
-    def _dataset(self, table: str, **meta_filter):
-        """pyarrow dataset cached per (table, snapshot, meta-filter) — the
-        analog of the reference's per-layer reader TrieMap cache
-        (TileReader.scala:15-19); avoids re-listing files and re-parsing
-        footers on every point read."""
+    def read_arrow(self, table: str, filters=None, columns=None, **meta_filter):
+        """Driver-side pruned read, uncached (the 'collection reader / no
+        Spark job' path, server/.../Router.scala:234-248).  File set pruned
+        by manifest metadata (``meta_filter``); row groups pruned by parquet
+        footer min/max stats via ``filters``."""
         import pyarrow.dataset as ds
 
-        snap = self.snapshot_id()
-        cached = getattr(self, "_ds_cache", None)
-        if cached is None:
-            cached = self._ds_cache = {}
-        key = (table, snap, tuple(sorted(meta_filter.items())))
-        if key not in cached:
-            files = self.files(table, **meta_filter)
-            if not files:
-                raise FileNotFoundError(f"table {table!r} is empty/missing")
-            for k in [k for k in cached if k[0] == table and k[1] != snap]:
-                del cached[k]  # evict stale snapshots
-            cached[key] = ds.dataset(files, format="parquet")
-        return cached[key]
-
-    def read_arrow(self, table: str, filters=None, columns=None, **meta_filter):
-        """Driver-side pruned read (the 'collection reader / no Spark job'
-        fast path, server/.../TileReader.scala:12-21, Router.scala:234-248).
-        File set pruned by manifest metadata (``meta_filter``); row groups
-        pruned by parquet footer min/max stats via ``filters``."""
-        return self._dataset(table, **meta_filter).to_table(
+        files = self.files(table, **meta_filter)
+        if not files:
+            raise FileNotFoundError(f"table {table!r} is empty/missing")
+        return ds.dataset(files, format="parquet").to_table(
             filter=filters, columns=columns
         )
 

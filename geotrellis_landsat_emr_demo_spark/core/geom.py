@@ -52,9 +52,9 @@ def parse_geojson(text_or_obj):
     MultiPolygon.
     """
     obj = json.loads(text_or_obj) if isinstance(text_or_obj, str) else text_or_obj
-    if obj.get("type") == "Feature":
+    if isinstance(obj, dict) and obj.get("type") == "Feature":
         obj = obj["geometry"]
-    t = obj.get("type")
+    t = obj.get("type") if isinstance(obj, dict) else None
     if t == "Polygon":
         coords = [obj["coordinates"]]
     elif t == "MultiPolygon":

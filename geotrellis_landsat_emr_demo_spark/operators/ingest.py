@@ -337,6 +337,16 @@ def _parent_fn(layer: str, zoom: int, store_fmt: str):
     return fn
 
 
+# The tiles table's row-group bound, set by both tile writers
+# (_commit_level and compact_tiles): at most 4 tiles (~1 MB) per row group.
+# The row group is the unit of payload IO for a serving read — one whole
+# `tile` column chunk is decompressed per hit — so serving latency scales
+# with row-group size, not file size.  A byte bound does not hold it:
+# with parquet.block.size = 1 MB the writer still packed 2-94 tiles per
+# row group, and compaction's default 128 MB block packs whole files.
+TILE_WRITE_OPTIONS = {"parquet.block.row.count.limit": "4"}
+
+
 def compact_tiles(
     spark: SparkSession,
     cat: Catalog,
@@ -378,7 +388,7 @@ def compact_tiles(
             )
         else:
             df = df.repartition(nparts)
-        staged = cat.stage_spark_write(df, table)
+        staged = cat.stage_spark_write(df, table, write_options=TILE_WRITE_OPTIONS)
         meta = {
             k: v
             for k, v in (("layer", layer), ("zoom", zoom))
@@ -432,23 +442,11 @@ def _commit_level(
     write — a free sort (no shuffle) that gives every parquet row group a
     tight cell_key min/max, so the serving point reads prune row groups
     the way the reference's Z-order SFC index prunes backend range scans
-    (conf/output.json:15-18).  Full cross-file clustering happens at
-    compaction (:func:`compact_tiles`)."""
-    # ~1 MB row groups (≈4 tiles): the row group is the unit of payload IO
-    # for a point read — one whole `tile` column chunk is decompressed per
-    # hit — so serving latency scales with row-group size, not file size.
-    # Measured: 128 MB default block -> 30-tile chunks -> 20 renders/s;
-    # 1 MB -> 50-100/s.  Scans lose nothing at these sizes (still
-    # thousands of rows per task via file coalescing).
+    (conf/output.json:15-18); ``TILE_WRITE_OPTIONS`` caps a row group at
+    four tiles, so a serving hit decompresses at most four payloads.  Full
+    cross-file clustering happens at compaction (:func:`compact_tiles`)."""
     files = cat.stage_spark_write(
-        df.sortWithinPartitions("cell_key", "ts"),
-        "tiles",
-        write_options={
-            "parquet.block.size": str(1 << 20),
-            # parquet-mr only starts size-checking after 100 rows by
-            # default — wide tile rows hit the block limit far earlier
-            "parquet.page.size.row.check.min": "2",
-        },
+        df.sortWithinPartitions("cell_key", "ts"), "tiles", write_options=TILE_WRITE_OPTIONS
     )
     import os
     from concurrent.futures import ThreadPoolExecutor

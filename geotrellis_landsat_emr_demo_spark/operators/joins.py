@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..core import cellindex, geom, kernels, tiling
 from ..functions.registry import get_op
-from ..plans.queries import parse_time
+from ..plans.queries import parse_time, zonal_partial
 
 ORIGIN = tiling.ORIGIN
 WORLD = tiling.WORLD
@@ -347,16 +347,12 @@ def zonal_stats(
         for pdf in batches:
             out = dict(aoi_id=[], s=[], c=[])
             for row in pdf.itertuples(index=False):
-                ext = tiling.tile_extent(row.x, row.y, zoom)
-                xs, ys = tiling.pixel_centers(*ext, 256, 256)
-                mask = geom.grid_mask(xs, ys, local[row.aoi_id])
-                if not mask.any():
+                part = zonal_partial(row.tile, row.x, row.y, zoom, local[row.aoi_id], fn)
+                if part is None:
                     continue
-                vals = fn(kernels.decode_payload(row.tile))
-                s, c = kernels.masked_sum_count(vals, mask)
                 out["aoi_id"].append(row.aoi_id)
-                out["s"].append(s)
-                out["c"].append(c)
+                out["s"].append(part[0])
+                out["c"].append(part[1])
             yield pd.DataFrame(out)
 
     part = cand.mapInPandas(partials, schema="aoi_id string, s double, c long")

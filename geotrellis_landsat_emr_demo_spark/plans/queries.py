@@ -7,16 +7,20 @@ Route parity (server/src/main/scala/demo/Router.scala:52-59):
   /mean/{l}/{op}            -> :meth:`LayerService.polygonal_mean`
   /series/{l}/{op}          -> :meth:`LayerService.time_series`
 
-Point reads bypass Spark entirely — pruned pyarrow reads against the tiles
-table (parquet footer min/max on cell_key/ts does what the reference's
-ValueReader + SFC index does, TileReader.scala:12-21).  Analytics queries
-(polygonal mean over large AOIs) can run either on the driver fast path or
-as a Spark job via operators.joins.zonal_stats — same semantics, tested
-equal.
+Every tile route reads the tiles table through one keyed read,
+:meth:`LayerService._read_keys`, with no Spark job: an index of each row
+group's cell_key min/max, built from the parquet footers, picks the row
+groups that can hold a wanted key, and only those with a hit read their
+payload — what the reference's ValueReader + SFC index does
+(TileReader.scala:12-21, Router.scala:84-86,146-150).  Point reads add a
+decoded-tile LRU cache.  Polygonal means over large AOIs can also run as
+a Spark job via operators.joins.zonal_stats, which shares the per-tile
+partial :func:`zonal_partial` — same semantics, tested equal.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 from datetime import datetime, timedelta, timezone
 
@@ -43,19 +47,30 @@ def format_time_utc_minus4(millis: int) -> str:
     return dt.strftime("%Y-%m-%dT%H:%M:%S%z")
 
 
+def zonal_partial(payload: bytes, x: int, y: int, zoom: int, mp, op):
+    """(sum, count) of ``op`` over the tile's pixels whose centres lie in
+    the mercator multipolygon ``mp``, or None when none does — the
+    per-tile partial of polygonalMean (Router.scala:151,162)."""
+    xs, ys = tiling.pixel_centers(*tiling.tile_extent(x, y, zoom), 256, 256)
+    mask = geom.grid_mask(xs, ys, mp)
+    if not mask.any():
+        return None
+    return kernels.masked_sum_count(op(kernels.decode_payload(payload)), mask)
+
+
 class LayerService:
     def __init__(self, cat: Catalog, spark=None, tile_cache_size: int = 256):
         self.cat = cat
         self.spark = spark
         self._meta_cache: dict = {}  # the TrieMap reader cache analog
         # (TileReader.scala:15-19)
-        # decoded-tile FIFO cache (insertion-order eviction; size 0 = no
-        # caching) — the local-cache analog of the reference's
-        # downloaded-GeoTIFF cache (S3: LandsatInput fetches to local disk
-        # once, re-reads for free); repeat point reads of a hot tile skip
-        # the parquet scan AND the payload decode
-        self._tile_cache: dict = {}
-        self._tile_cache_size = tile_cache_size
+        self._rg_idx_cache: dict = {}
+        # decoded-tile LRU cache (size 0 = no caching; thread-safe) — the
+        # local-cache analog of the reference's downloaded-GeoTIFF cache
+        # (S3: LandsatInput fetches to local disk once, re-reads for free);
+        # repeat point reads of a hot tile skip the parquet read AND the
+        # payload decode
+        self._tile_cache = functools.lru_cache(maxsize=tile_cache_size)(self._read_one)
 
     # ------------------------------------------------------------ metadata
 
@@ -129,22 +144,21 @@ class LayerService:
             return kernels.regrid_to_extent(src, src_ext, req_ext, (256, 256))
         return self._point_read(layer, zoom, x, y, time_millis)
 
-    def _rg_index(self, layer: int, zoom: int):
+    def _rg_index(self, layer: str, zoom: int):
         """Per-(layer, zoom, snapshot) row-group index: (ParquetFile
         handle, rg, cell_key min/max) from the parquet FOOTERS only — the
-        ValueReader key-index analog (TileReader.scala:12-21).  Memory is
-        O(row groups), never O(tiles), so it holds at 100-TB layers the
-        same way the manifest stat-cache does."""
+        ValueReader key-index analog (TileReader.scala:12-21).  Both tile
+        writers cap a row group at four tiles
+        (``operators.ingest.TILE_WRITE_OPTIONS``), so the index holds
+        O(tiles / 4) entries."""
         import pyarrow.parquet as pq
 
         snap = self.cat.snapshot_id()
         ikey = (snap, layer, int(zoom))
-        cached = getattr(self, "_rg_idx_cache", None)
-        if cached is None:
-            cached = self._rg_idx_cache = {}
+        cached = self._rg_idx_cache
         if ikey not in cached:
             for k in [k for k in list(cached) if k[0] != snap]:
-                del cached[k]  # stale snapshots
+                cached.pop(k, None)  # stale snapshots
             entries = []
             for path in self.cat.files("tiles", layer=layer, zoom=int(zoom)):
                 pf = pq.ParquetFile(path)
@@ -161,35 +175,46 @@ class LayerService:
             cached[ikey] = entries
         return cached[ikey]
 
-    def _point_read(self, layer, zoom, x, y, time_millis):
-        ckey = (self.cat.snapshot_id(), layer, zoom, x, y, time_millis)
-        if ckey in self._tile_cache:
-            return self._tile_cache[ckey]  # hot-tile fast path (S3 analog)
-        key = int(cellindex.cell_key(zoom, x, y))
-        ts64 = pd.Timestamp(time_millis, unit="ms").to_datetime64()
-        # two-phase columnar point read: (1) LOCATE via the footer index +
-        # a key-columns-only row-group read (a few longs — pays no payload
-        # IO), then (2) read the `tile` column of exactly ONE row group.
-        # The one-phase dataset filter scan decompressed every candidate
-        # row group's tile chunks until it hit (measured 43-60 ms/read on
-        # 31 SFC-overlapping files); this is ~1 payload chunk per read.
-        out = None
+    def _read_keys(self, layer, zoom, keys, time_millis=None):
+        """The one keyed tile read: (x, y, ts, payload) of every stored
+        tile whose cell_key is in ``keys``, at ``time_millis`` (every time
+        when None), in index order — file, row group, row, the order of a
+        dataset scan over the same files.  The footer index skips row
+        groups whose cell_key [min, max] holds no wanted key; the rest
+        read only their ``cell_key, ts`` columns (a few longs, no payload
+        IO); only row groups with a hit read their ``tile`` column."""
+        want = np.unique(np.asarray(keys, dtype="i8"))
+        if time_millis is not None:
+            ts64 = pd.Timestamp(time_millis, unit="ms").to_datetime64()
+        out = []
         for pf, rg, lo, hi in self._rg_index(layer, zoom):
-            if lo is not None and not (lo <= key <= hi):
-                continue
+            if lo is not None:
+                i = np.searchsorted(want, lo)
+                if i == want.size or want[i] > hi:
+                    continue
             kc = pf.read_row_group(rg, columns=["cell_key", "ts"])
-            ks = kc["cell_key"].to_numpy()
-            tss = kc["ts"].to_numpy()
-            hit = np.nonzero((ks == key) & (tss == ts64))[0]
-            if hit.size:
-                tile_col = pf.read_row_group(rg, columns=["tile"])
-                out = kernels.decode_payload(tile_col["tile"][int(hit[0])].as_py())
-                break
-        if self._tile_cache_size > 0:
-            if len(self._tile_cache) >= self._tile_cache_size:
-                self._tile_cache.pop(next(iter(self._tile_cache)))  # FIFO evict
-            self._tile_cache[ckey] = out
+            ks, tss = kc["cell_key"].to_numpy(), kc["ts"].to_numpy()
+            hit = np.isin(ks, want)
+            if time_millis is not None:
+                hit &= tss == ts64
+            rows = np.nonzero(hit)[0]
+            if rows.size:
+                tiles = pf.read_row_group(rg, columns=["tile"])["tile"]
+                _, xs, ys = cellindex.cell_decode(ks[rows])
+                out.extend(
+                    (int(x), int(y), tss[i], tiles[int(i)].as_py())
+                    for x, y, i in zip(xs, ys, rows)
+                )
         return out
+
+    def _read_one(self, snapshot, layer, zoom, x, y, time_millis):
+        """One decoded tile or None; ``snapshot`` only keys the tile cache,
+        so a new commit misses it."""
+        hits = self._read_keys(layer, zoom, [cellindex.cell_key(zoom, x, y)], time_millis)
+        return kernels.decode_payload(hits[0][3]) if hits else None
+
+    def _point_read(self, layer, zoom, x, y, time_millis):
+        return self._tile_cache(self.cat.snapshot_id(), layer, zoom, x, y, time_millis)
 
     # ------------------------------------------------------------- renders
 
@@ -223,26 +248,6 @@ class LayerService:
 
     # ----------------------------------------------------------- analytics
 
-    def _query_tiles(self, layer, zoom, keys, time_millis):
-        """Pruned multi-tile read: the collection-reader path
-        (ReaderSet.scala:17, Router.scala:244-248)."""
-        import pyarrow.dataset as ds
-
-        flt = (
-            (ds.field("layer") == layer)
-            & (ds.field("zoom") == int(zoom))
-            & (ds.field("cell_key").isin([int(k) for k in keys]))
-        )
-        if time_millis is not None:
-            flt = flt & (ds.field("ts") == pd.Timestamp(time_millis, unit="ms"))
-        return self.cat.read_arrow(
-            "tiles",
-            filters=flt,
-            columns=["x", "y", "ts", "tile"],
-            layer=layer,
-            zoom=int(zoom),
-        ).to_pandas()
-
     def polygonal_mean(
         self,
         layer: str,
@@ -262,18 +267,12 @@ class LayerService:
         op = get_op(operation)["fn"]
 
         def one(t_iso):
-            pdf = self._query_tiles(layer, zoom, keys, parse_time(t_iso))
             s_tot, c_tot = 0.0, 0
-            for row in pdf.itertuples(index=False):
-                ext = tiling.tile_extent(row.x, row.y, zoom)
-                xs, ys = tiling.pixel_centers(*ext, 256, 256)
-                mask = geom.grid_mask(xs, ys, mp)
-                if not mask.any():
-                    continue
-                vals = op(kernels.decode_payload(row.tile))
-                s, c = kernels.masked_sum_count(vals, mask)
-                s_tot += s
-                c_tot += c
+            for x, y, _, payload in self._read_keys(layer, zoom, keys, parse_time(t_iso)):
+                part = zonal_partial(payload, x, y, zoom, mp, op)
+                if part is not None:
+                    s_tot += part[0]
+                    c_tot += part[1]
             return s_tot / c_tot if c_tot else float("nan")
 
         if other_time:
@@ -288,21 +287,18 @@ class LayerService:
         zoom = zoom or self.max_zoom(layer)
         mx, my = geom.lnglat_to_mercator(lng, lat)
         x, y = (int(v) for v in tiling.map_to_tile(float(mx), float(my), zoom))
-        key = int(cellindex.cell_key(zoom, x, y))
-        pdf = self._query_tiles(layer, zoom, [key], None)
         op = get_op(operation)["fn"]
+        col, rown = tiling.raster_extent_map_to_grid(
+            float(mx), float(my), *tiling.tile_extent(x, y, zoom), 256, 256
+        )
+        col, rown = int(col), int(rown)
+        if not (0 <= col < 256 and 0 <= rown < 256):
+            return []
         out = []
-        ext = tiling.tile_extent(x, y, zoom)
-        for row in pdf.itertuples(index=False):
-            col, rown = tiling.raster_extent_map_to_grid(
-                float(mx), float(my), *ext, 256, 256
-            )
-            col, rown = int(col), int(rown)
-            if not (0 <= col < 256 and 0 <= rown < 256):
-                continue
-            val = float(op(kernels.decode_payload(row.tile))[rown, col])
+        for _, _, ts, payload in self._read_keys(layer, zoom, [cellindex.cell_key(zoom, x, y)]):
+            val = float(op(kernels.decode_payload(payload))[rown, col])
             if not np.isnan(val):  # Router.scala:100 filterNot(_._2.isNaN)
-                millis = int(pd.Timestamp(row.ts).value // 1_000_000)
+                millis = int(pd.Timestamp(ts).value // 1_000_000)
                 out.append((format_time_utc_minus4(millis), val))
         out.sort(key=lambda p: p[0])
         return out

@@ -11,7 +11,9 @@ reference's akka-http server (server/src/main/scala/demo/Router.scala:52-59):
 Presentation only: all logic lives in plans.queries.LayerService.  Uses the
 stdlib ThreadingHTTPServer (no extra deps in this image); missing tiles
 return 200 with empty body like the reference's HttpResponse for None
-(ReaderSet.scala:76-79).
+(ReaderSet.scala:76-79).  A bad request (missing or malformed parameter,
+unknown layer or operation, non-polygonal GeoJSON) gets 400, an unknown
+route 404.
 """
 
 from __future__ import annotations
@@ -53,15 +55,20 @@ def make_handler(svc: LayerService):
             )
 
         def do_GET(self):
-            try:
-                self._route(None)
-            except Exception as e:  # pragma: no cover
-                self._json({"error": str(e)}, 500)
+            self._handle(0)
 
         def do_POST(self):
+            self._handle(self.headers.get("Content-Length", 0))
+
+        def _handle(self, body_len):
             try:
-                n = int(self.headers.get("Content-Length", 0))
+                n = int(body_len)
                 self._route(self.rfile.read(n).decode() if n else None)
+            except (KeyError, ValueError) as e:
+                # missing parameter or unknown layer (KeyError); unknown
+                # operation, non-numeric or malformed parameter or body
+                # (ValueError)
+                self._json({"error": str(e)}, 400)
             except Exception as e:  # pragma: no cover
                 self._json({"error": str(e)}, 500)
 

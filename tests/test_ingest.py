@@ -56,14 +56,23 @@ def test_compact_tiles_rewrite(spark):
 
 def test_sfc_clustered_layout(spark, tsmall_catalog):
     """Z-order layout parity: within every tiles file, rows are sorted by
-    cell_key (tight row-group min/max = SFC range pruning); after
-    compaction, files within a (layer, zoom) group cover DISJOINT
-    cell_key ranges (global clustering)."""
+    cell_key (tight row-group min/max = SFC range pruning) and every row
+    group holds at most four tiles (the serving read's payload-IO unit),
+    for ingested and compacted files alike; after compaction, files within
+    a (layer, zoom) group cover DISJOINT cell_key ranges (global
+    clustering)."""
     import pyarrow.parquet as pq
 
-    for f in tsmall_catalog.files("tiles"):
+    def check_file(f):
         keys = pq.read_table(f, columns=["cell_key"])["cell_key"].to_pylist()
         assert keys == sorted(keys), f
+        md = pq.ParquetFile(f).metadata
+        rows = [md.row_group(i).num_rows for i in range(md.num_row_groups)]
+        assert max(rows) <= 4, (f, rows)
+        return keys
+
+    for f in tsmall_catalog.files("tiles"):
+        check_file(f)
 
     root = os.path.join(SCRATCH, "cluster")
     shutil.rmtree(root, ignore_errors=True)
@@ -74,8 +83,7 @@ def test_sfc_clustered_layout(spark, tsmall_catalog):
     ingest.compact_tiles(spark, cat, target_mb=1)
     ranges = []
     for f in cat.files("tiles", zoom=13):
-        keys = pq.read_table(f, columns=["cell_key"])["cell_key"].to_pylist()
-        assert keys == sorted(keys), f
+        keys = check_file(f)
         ranges.append((keys[0], keys[-1]))
     ranges.sort()
     assert len(ranges) >= 2, "compaction should have produced several files"

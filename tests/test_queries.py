@@ -93,8 +93,8 @@ def test_missing_tile_returns_none(svc):
 
 
 def test_tile_cache_size_zero_disables_caching(svc, tsmall_catalog):
-    """tile_cache_size=0 means no caching: reading one tile twice hits the
-    catalog both times, returns the cached service's pixels, and leaves
+    """tile_cache_size=0 means no caching: reading one tile twice misses
+    the cache both times, returns the cached service's pixels, and leaves
     the cache empty."""
     from geotrellis_landsat_emr_demo_spark.plans.queries import LayerService
 
@@ -104,7 +104,8 @@ def test_tile_cache_size_zero_disables_caching(svc, tsmall_catalog):
     for _ in range(2):
         got = nocache.read_tile("landsat", 13, x, y, parse_time(T1))
         assert got is not None and (got == expect).all()
-    assert not nocache._tile_cache
+    info = nocache._tile_cache.cache_info()
+    assert (info.hits, info.misses, info.currsize) == (0, 2, 0)
 
 
 def test_polygonal_mean_oracle(svc, tsmall_catalog):

@@ -79,34 +79,118 @@ def test_readall_route(srv, svc):
     assert got["count"] == svc.read_all_count("landsat")
 
 
-def test_point_read_tile_cache(tsmall_catalog):
-    """S3 local-cache analog: a repeat point read of the same tile must not
-    touch the parquet scan again (and invalidates on a new snapshot)."""
+def test_point_read_tile_cache(tsmall_catalog, monkeypatch):
+    """S3 local-cache analog: a repeat point read of the same tile reads
+    no parquet row group again, and a new snapshot invalidates it."""
+    import pyarrow.parquet as pq
+
     from geotrellis_landsat_emr_demo_spark.plans.queries import LayerService
 
     s = LayerService(tsmall_catalog)
     pdf = tsmall_catalog.read_pandas("tiles", columns=["zoom", "x", "y", "ts"])
     row = pdf[pdf.zoom == 13].iloc[0]
-    millis = int(row.ts.value // 1_000_000)
+    x, y, millis = int(row.x), int(row.y), int(row.ts.value // 1_000_000)
     calls = {"n": 0}
-    orig = tsmall_catalog.read_arrow
+    orig = pq.ParquetFile.read_row_group
 
     def counting(*a, **k):
         calls["n"] += 1
         return orig(*a, **k)
 
-    tsmall_catalog.read_arrow = counting
+    monkeypatch.setattr(pq.ParquetFile, "read_row_group", counting)
+    t1 = s.read_tile("landsat", 13, x, y, millis)
+    n_after_first = calls["n"]
+    assert n_after_first > 0
+    t2 = s.read_tile("landsat", 13, x, y, millis)
+    assert calls["n"] == n_after_first  # served from the tile cache
+    assert (t1 == t2).all()
+    # missing keys cache too (the empty-PNG hot path): a stored cell at an
+    # unstored time reads the key columns once
+    assert s.read_tile("landsat", 13, x, y, millis + 1) is None
+    n_after_missing = calls["n"]
+    assert n_after_missing > n_after_first
+    assert s.read_tile("landsat", 13, x, y, millis + 1) is None
+    assert calls["n"] == n_after_missing
+    snap = tsmall_catalog.snapshot_id()
+    monkeypatch.setattr(tsmall_catalog, "snapshot_id", lambda: snap + 1)
+    assert (s.read_tile("landsat", 13, x, y, millis) == t1).all()
+    assert calls["n"] > n_after_missing  # new snapshot -> read again
+
+
+def test_concurrent_reads_share_the_cache_safely(tsmall_catalog):
+    """Server threads share one service's LRU tile cache and footer index:
+    16 threads on a cache of 4 tiles with a short switch interval, every
+    read equals the uncached read of the same key."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    import numpy as np
+
+    from geotrellis_landsat_emr_demo_spark.plans.queries import LayerService
+
+    pdf = tsmall_catalog.read_pandas("tiles", columns=["zoom", "x", "y", "ts"])
+    keys = [
+        (int(r.zoom), int(r.x), int(r.y), int(r.ts.value // 1_000_000))
+        for r in pdf[pdf.zoom >= 12].itertuples(index=False)
+    ]
+    uncached = LayerService(tsmall_catalog, tile_cache_size=0)
+    expect = {k: uncached.read_tile("landsat", *k) for k in keys}
+    shared = LayerService(tsmall_catalog, tile_cache_size=4)
+    order = [keys[i] for i in np.random.default_rng(7).integers(0, len(keys), 640)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
     try:
-        t1 = s._point_read("landsat", 13, int(row.x), int(row.y), millis)
-        n_after_first = calls["n"]
-        t2 = s._point_read("landsat", 13, int(row.x), int(row.y), millis)
-        assert calls["n"] == n_after_first  # served from the tile cache
-        assert (t1 == t2).all()
-        # missing keys cache too (the empty-PNG hot path)
-        assert s._point_read("landsat", 13, 0, 0, millis) is None
-        assert s._point_read("landsat", 13, 0, 0, millis) is None
+        with ThreadPoolExecutor(16) as ex:
+            got = list(ex.map(lambda k: shared.read_tile("landsat", *k), order, timeout=120))
     finally:
-        tsmall_catalog.read_arrow = orig
+        sys.setswitchinterval(interval)
+    assert all((g == expect[k]).all() for k, g in zip(order, got))
+    info = shared._tile_cache.cache_info()
+    assert info.currsize <= 4 and info.hits + info.misses == len(order)
+
+
+def _status(url, body=None):
+    """(status, body) of a request that may fail; an error body is parsed
+    as JSON."""
+    import urllib.error
+
+    req = urllib.request.Request(
+        url, data=None if body is None else body.encode(), method="GET" if body is None else "POST"
+    )
+    try:
+        with urllib.request.urlopen(req, timeout=30) as r:
+            return r.status, r.read()
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read())
+
+
+def test_bad_requests_get_400(srv):
+    t1q = T1.replace(":", "%3A")
+    aoi = fixtures.aoi_pdf("t-small").iloc[4].geojson
+    point = json.dumps({"type": "Point", "coordinates": [0.0, 0.0]})
+    cases = [
+        (f"/mean/landsat/nope?time={t1q}", aoi, "UNKNOWN OPERATION"),
+        (f"/mean/landsat/ndvi?time={t1q}", point, "Polygon/MultiPolygon"),
+        (f"/mean/landsat/ndvi?time={t1q}", "{not json", ""),
+        (f"/mean/landsat/ndvi?time={t1q}", "[1, 2]", "Polygon/MultiPolygon"),
+        ("/mean/landsat/ndvi", aoi, "time"),  # missing parameter
+        ("/mean/landsat/ndvi?time=yesterday", aoi, ""),
+        (f"/mean/landsat/ndvi?time={t1q}", "", "Polygon/MultiPolygon"),  # no body
+        (f"/tiles/landsat/abc/1/1?time={t1q}", None, ""),
+        ("/tiles/landsat/13/1/1", None, "time"),
+        (f"/tiles/nope/13/1/1?time={t1q}", None, "no such layer"),
+        (f"/diff/landsat/13/1/1?time1={t1q}", None, "time2"),
+        ("/series/landsat/ndvi?lat=north&lng=1", None, ""),
+        ("/series/landsat/ndvi?lat=1", None, "lng"),
+        ("/series/landsat/nope?lat=1&lng=1", None, "UNKNOWN OPERATION"),
+        ("/readall/nope", None, "no such layer"),
+    ]
+    for path, body, msg in cases:
+        code, got = _status(srv + path, body)
+        assert code == 400, (path, code, got)
+        assert msg in got["error"], (path, got)
+    code, got = _status(f"{srv}/nope")
+    assert code == 404 and got == {"error": "no such route"}
 
 
 def test_readall_bench_dual_path(spark, tsmall_catalog, svc):
