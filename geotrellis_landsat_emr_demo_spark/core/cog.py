@@ -9,8 +9,10 @@ window at ANY pyramid level with
     1 small header read  +  a few coalesced tile-range reads,
 
 which is exactly the S3 ``GET Range`` access pattern.  This module
-implements both halves with the same pure-numpy discipline as
-:mod:`core.tiff`:
+implements both halves on :mod:`core.tiff`'s container pieces (header,
+validated per-IFD block layout, block decoder and packer, IFD
+serializer), so a windowed read accepts and rejects exactly the files
+:func:`core.tiff.read` does:
 
 - :func:`write_cog` produces the layout (classic-TIFF IFD chain at the
   head, full-res IFD first, tile data written coarsest-overview-first
@@ -32,41 +34,11 @@ from __future__ import annotations
 
 import os
 import struct
-import zlib
 from dataclasses import dataclass, field
 
 import numpy as np
 
 from . import tiff
-from .tiff import (
-    _COMP_DEFLATE,
-    _COMP_DEFLATE_ADOBE,
-    _COMP_JPEG,
-    _COMP_LZW,
-    _COMP_NONE,
-    _COMP_PACKBITS,
-    _T_BITS,
-    _T_JPEG_TABLES,
-    _T_ROWS_PER_STRIP,
-    _T_STRIP_COUNTS,
-    _T_STRIP_OFFSETS,
-    _T_COMPRESSION,
-    _T_GEOKEYS,
-    _T_HEIGHT,
-    _T_PHOTOMETRIC,
-    _T_PIXEL_SCALE,
-    _T_PLANAR,
-    _T_PREDICTOR,
-    _T_SAMPLE_FORMAT,
-    _T_SPP,
-    _T_TIEPOINT,
-    _T_TILE_COUNTS,
-    _T_TILE_H,
-    _T_TILE_OFFSETS,
-    _T_TILE_W,
-    _T_WIDTH,
-    _TYPES,
-)
 
 _T_SUBFILE = 254  # NewSubfileType: 1 = reduced-resolution (overview)
 
@@ -298,39 +270,9 @@ def open_range_reader(path: str) -> RangeReader:
 
 
 @dataclass
-class CogLevel:
-    width: int
-    height: int
-    tile_w: int
-    tile_h: int
-    offsets: np.ndarray  # per-tile byte offset, row-major
-    counts: np.ndarray  # per-tile byte count
-    dtype: np.dtype  # file-order dtype
-    spp: int
-    comp: int
-    pred: int
-    # striped files (classic Landsat L1 layout) are modeled as one-tile-
-    # wide rows: tile_w = width, tile_h = rows_per_strip.  Row windows
-    # still prune to the intersecting strips; column windows necessarily
-    # fetch full strip widths (inherent to the layout, not the reader).
-    striped: bool = False
-    # comp 7: shared abbreviated-stream tables (TIFF TechNote 2), spliced
-    # into each block before decode; None when blocks are self-contained
-    jpeg_tables: bytes | None = None
-
-    @property
-    def tiles_across(self) -> int:
-        return (self.width + self.tile_w - 1) // self.tile_w
-
-    @property
-    def tiles_down(self) -> int:
-        return (self.height + self.tile_h - 1) // self.tile_h
-
-
-@dataclass
 class CogInfo:
-    levels: list  # CogLevel, index 0 = full resolution
-    geo: dict = field(default_factory=dict)  # pixel_scale/tiepoint/epsg
+    levels: list  # tiff.Layout, index 0 = full resolution
+    geo: dict = field(default_factory=dict)  # tiff.geo_meta of the first georeferenced IFD
     header_bytes: int = 0  # prefix consumed to parse the chain
     # bytes fetched while parsing (64 KiB for a proper COG; grows to the
     # IFD span for foreign tail-IFD layouts) — kept so window reads can
@@ -373,21 +315,6 @@ class CogInfo:
         return best
 
 
-def _dtype_of(ifd) -> np.dtype:
-    bits = int(ifd.get(_T_BITS, np.asarray([1]))[0])
-    fmt = int(ifd.get(_T_SAMPLE_FORMAT, [1])[0])
-    comp = int(ifd.get(_T_COMPRESSION, [1])[0])
-    dt = {
-        (8, 1): "u1", (16, 1): "u2", (32, 1): "u4",
-        (16, 2): "i2", (32, 2): "i4", (32, 3): "f4", (64, 3): "f8",
-    }.get((bits, fmt))
-    if comp == _COMP_JPEG and bits == 12 and fmt == 1:
-        dt = "u2"  # 12-bit JPEG blocks decode into uint16 samples
-    if dt is None:
-        raise NotImplementedError(f"bits={bits} sample_format={fmt}")
-    return np.dtype(dt)
-
-
 def parse_chain(reader: RangeReader):
     """Parse the IFD chain from the file head -> :class:`CogInfo`.
 
@@ -414,24 +341,7 @@ class _NeedMore(Exception):
 
 
 def _parse_chain_buf(data: bytes, reader: RangeReader) -> CogInfo:
-    if data[:2] == b"II":
-        bo = "<"
-    elif data[:2] == b"MM":
-        bo = ">"
-    else:
-        raise ValueError("not a TIFF (bad byte-order mark)")
-    (magic,) = struct.unpack_from(bo + "H", data, 2)
-    big = magic == 43
-    if big:
-        (osize,) = struct.unpack_from(bo + "H", data, 4)
-        if osize != 8:
-            raise NotImplementedError(f"BigTIFF offset size {osize}")
-        (off,) = struct.unpack_from(bo + "Q", data, 8)
-    elif magic != 42:
-        raise ValueError(f"not a TIFF (magic {magic})")
-    else:
-        (off,) = struct.unpack_from(bo + "I", data, 4)
-    off = int(off)
+    bo, big, off = tiff.parse_header(data)
     hdr_w, ent_w = (8, 20) if big else (2, 12)
     levels, geo = [], {}
     seen = 0
@@ -442,67 +352,16 @@ def _parse_chain_buf(data: bytes, reader: RangeReader) -> CogInfo:
         if off + hdr_w + ent_w * int(cnt) + (8 if big else 4) > len(data):
             raise _NeedMore
         ifd = tiff._read_ifd(data, bo, off, big=big)
-        planar = int(ifd.get(_T_PLANAR, [1])[0])
-        if planar != 1:
+        lv = tiff.parse_layout(ifd, bo)
+        if lv.planar != 1:
             # windowed COG reads stay chunky-only; whole-file planar
             # decode is supported by core.tiff.decode
             raise NotImplementedError(
                 "planar (separate) configuration in windowed COG reads "
                 "(use core.tiff.decode for whole-file planar)"
             )
-        comp = int(ifd.get(_T_COMPRESSION, [1])[0])
-        if comp not in (
-            _COMP_NONE, _COMP_DEFLATE, _COMP_DEFLATE_ADOBE,
-            _COMP_PACKBITS, _COMP_LZW, _COMP_JPEG,
-        ):
-            raise NotImplementedError(f"TIFF compression {comp}")
-        w = int(ifd[_T_WIDTH][0])
-        h = int(ifd[_T_HEIGHT][0])
-        if _T_TILE_OFFSETS in ifd:
-            tw, th = int(ifd[_T_TILE_W][0]), int(ifd[_T_TILE_H][0])
-            offs, cnts, striped = ifd[_T_TILE_OFFSETS], ifd[_T_TILE_COUNTS], False
-        else:
-            # striped layout (classic Landsat L1): strips ARE full-width
-            # tiles; row windows prune to intersecting strips
-            rps = int(ifd.get(_T_ROWS_PER_STRIP, [h])[0])
-            tw, th = w, min(max(1, rps), h)
-            offs, cnts, striped = ifd[_T_STRIP_OFFSETS], ifd[_T_STRIP_COUNTS], True
-        lv = CogLevel(
-            width=w,
-            height=h,
-            tile_w=tw,
-            tile_h=th,
-            offsets=np.asarray(offs, dtype=np.int64),
-            counts=np.asarray(cnts, dtype=np.int64),
-            dtype=np.dtype(bo + _dtype_of(ifd).str[1:]),
-            spp=int(ifd.get(_T_SPP, [1])[0]),
-            comp=comp,
-            pred=int(ifd.get(_T_PREDICTOR, [1])[0]),
-            striped=striped,
-            jpeg_tables=(
-                bytes(bytearray(int(v) & 0xFF for v in ifd[_T_JPEG_TABLES]))
-                if comp == _COMP_JPEG and _T_JPEG_TABLES in ifd
-                else None
-            ),
-        )
-        sub = int(ifd.get(_T_SUBFILE, [0])[0])
-        levels.append((lv, sub))
-        if not geo:
-            if _T_PIXEL_SCALE in ifd:
-                geo["pixel_scale"] = tuple(float(v) for v in ifd[_T_PIXEL_SCALE])
-            if _T_TIEPOINT in ifd:
-                geo["tiepoint"] = tuple(float(v) for v in ifd[_T_TIEPOINT])
-            if _T_GEOKEYS in ifd:
-                kd = ifd[_T_GEOKEYS]
-                nkeys = int(kd[3])
-                keys = {}
-                for j in range(nkeys):
-                    kid, loc, _c, val = (int(v) for v in kd[4 + 4 * j : 8 + 4 * j])
-                    if loc == 0:
-                        keys[kid] = val
-                epsg = keys.get(3072) or keys.get(2048)
-                if epsg:
-                    geo["epsg"] = int(epsg)
+        levels.append((lv, int(ifd.get(_T_SUBFILE, [0])[0])))
+        geo = geo or tiff.geo_meta(ifd)
         off = ifd[-1]
         seen += 1
         if seen > 64:
@@ -533,30 +392,6 @@ def _coalesce(ranges, gap: int = RANGE_COALESCE_GAP):
         else:
             out.append([off, cnt])
     return [(o, c) for o, c in out]
-
-
-def _decode_tile(raw: bytes, lv: CogLevel) -> np.ndarray:
-    if lv.comp == _COMP_JPEG:
-        return tiff._jpeg_block(
-            raw, lv.jpeg_tables, lv.tile_w, lv.tile_h, lv.spp
-        ).astype(lv.dtype.newbyteorder("="))
-    want = lv.tile_w * lv.tile_h * lv.spp * lv.dtype.itemsize
-    if lv.comp in (_COMP_DEFLATE, _COMP_DEFLATE_ADOBE):
-        raw = zlib.decompress(raw)
-    elif lv.comp == _COMP_PACKBITS:
-        raw = tiff._packbits_decode(raw, want)
-    elif lv.comp == _COMP_LZW:
-        raw = tiff._lzw_decode(raw, want)
-    arr = np.frombuffer(
-        raw, dtype=lv.dtype,
-        count=min(len(raw) // lv.dtype.itemsize, lv.tile_w * lv.tile_h * lv.spp),
-    )
-    if arr.size < lv.tile_w * lv.tile_h * lv.spp:
-        arr = np.concatenate(
-            [arr, np.zeros(lv.tile_w * lv.tile_h * lv.spp - arr.size, lv.dtype)]
-        )
-    blk = arr.reshape(lv.tile_h, lv.tile_w, lv.spp)
-    return tiff._undo_predictor(blk) if lv.pred == 2 else blk
 
 
 class CogReader:
@@ -608,7 +443,7 @@ class CogReader:
         )
         for idx, (off, cnt) in wanted.items():
             ty, tx = divmod(idx, ntx)
-            blk = _decode_tile(tile_bytes(off, cnt), lv)
+            blk = tiff.decode_block(tile_bytes(off, cnt), lv)
             bx0, by0 = tx * lv.tile_w, ty * lv.tile_h
             sx0, sy0 = max(x0c, bx0), max(y0c, by0)
             sx1 = min(x1c, bx0 + lv.tile_w)
@@ -673,92 +508,6 @@ def _downsample2(img: np.ndarray) -> np.ndarray:
     return acc.astype(img.dtype)
 
 
-def _pack_tiles(
-    img: np.ndarray, tile, comp_code: int, predictor: int, quality: int = 85
-):
-    tw, th = tile
-    h, w, spp = img.shape
-    payloads = []
-    for y0 in range(0, h, th):
-        for x0 in range(0, w, tw):
-            blk = np.zeros((th, tw, spp), dtype=img.dtype)
-            ys, xs = min(th, h - y0), min(tw, w - x0)
-            blk[:ys, :xs] = img[y0 : y0 + ys, x0 : x0 + xs]
-            if comp_code == tiff._COMP_JPEG:
-                from . import jpeg
-
-                if img.dtype == np.uint16:  # 12-bit (SOF1) tiles
-                    payloads.append(
-                        jpeg.encode_gray12(blk[:, :, 0], quality=quality)
-                    )
-                elif spp == 1:
-                    payloads.append(
-                        jpeg.encode_gray(blk[:, :, 0], quality=quality)
-                    )
-                else:
-                    payloads.append(jpeg.encode_rgb(blk, quality=quality))
-                continue
-            if predictor == 2:
-                blk = tiff._apply_predictor(blk)
-            raw = blk.tobytes()
-            if comp_code == _COMP_DEFLATE_ADOBE:
-                payloads.append(zlib.compress(raw, 6))
-            elif comp_code == _COMP_PACKBITS:
-                payloads.append(tiff._packbits_encode(raw))
-            elif comp_code == _COMP_LZW:
-                payloads.append(tiff._lzw_encode(raw))
-            else:
-                payloads.append(raw)
-    return payloads
-
-
-def _entry_bytes(typ, cnt, val):
-    letter, size = _TYPES[typ]
-    vals = val if isinstance(val, (list, tuple)) else [val]
-    if typ == 12:
-        return struct.pack("<" + "d" * cnt, *[float(v) for v in vals]), 8 * cnt
-    return struct.pack("<" + letter * cnt, *vals), size * cnt
-
-
-def _ifd_size(entries, big: bool = False) -> int:
-    """IFD table + external-values area size (values placed after the
-    table, word-aligned)."""
-    hdr_w, ent_w, inline = (8, 20, 8) if big else (2, 12, 4)
-    n = hdr_w + ent_w * len(entries) + (8 if big else 4)
-    for typ, cnt, _val in ((t, c, v) for _tag, t, c, v in entries):
-        _raw, nb = _entry_bytes(typ, cnt, _val)
-        if nb > inline:
-            n += nb + (nb % 2)
-    return n
-
-
-def _ifd_bytes(entries, ifd_off: int, next_off: int, big: bool = False) -> bytes:
-    entries = sorted(entries, key=lambda e: e[0])
-    hdr_w, ent_w, inline = (8, 20, 8) if big else (2, 12, 4)
-    cnt_fmt, off_fmt = ("<HHQ", "<Q") if big else ("<HHI", "<I")
-    table = []
-    ext = bytearray()
-    ext_base = ifd_off + hdr_w + ent_w * len(entries) + (8 if big else 4)
-    for tag, typ, cnt, val in entries:
-        raw, nb = _entry_bytes(typ, cnt, val)
-        if nb > inline:
-            table.append(
-                struct.pack(cnt_fmt, tag, typ, cnt)
-                + struct.pack(off_fmt, ext_base + len(ext))
-            )
-            ext += raw
-            if nb % 2:
-                ext += b"\0"
-        else:
-            table.append(
-                struct.pack(cnt_fmt, tag, typ, cnt) + raw.ljust(inline, b"\0")
-            )
-    head = struct.pack("<Q", len(entries)) if big else struct.pack("<H", len(entries))
-    return (
-        head + b"".join(table) + struct.pack(off_fmt, next_off) + bytes(ext)
-    )
-
-
 def write_cog(
     img: np.ndarray,
     geo: dict | None = None,
@@ -784,90 +533,33 @@ def write_cog(
     img = np.asarray(img)
     if img.ndim == 2:
         img = img[:, :, None]
-    if predictor == 2 and img.dtype.kind == "f":
-        raise NotImplementedError("predictor 2 on float samples")
     img = img.astype(img.dtype.newbyteorder("<"))
-    comp_code = {
-        "none": _COMP_NONE, "deflate": _COMP_DEFLATE_ADOBE,
-        "packbits": _COMP_PACKBITS, "lzw": _COMP_LZW,
-        "jpeg": tiff._COMP_JPEG,
-    }[compression]
-    jpeg12 = False
-    if comp_code == tiff._COMP_JPEG:
-        if img.dtype == np.uint16 and img.shape[2] == 1:
-            if img.max(initial=0) > 4095:
-                raise ValueError("12-bit JPEG COG samples must be <= 4095")
-            jpeg12 = True  # BitsPerSample 12, SOF1 tile streams
-        elif img.dtype != np.uint8 or img.shape[2] not in (1, 3):
-            raise NotImplementedError(
-                "JPEG COG tiles need uint8 gray / RGB or uint16 gray samples"
-            )
-        if predictor != 1:
-            raise ValueError("predictor does not apply to JPEG tiles")
+    spec = tiff.sample_spec(img, compression, predictor)
     floor = min_overview if min_overview is not None else max(tile)
 
     levels = [img]
     while max(levels[-1].shape[0], levels[-1].shape[1]) > floor:
         levels.append(_downsample2(levels[-1]))
-
     payloads = [
-        _pack_tiles(lv, tile, comp_code, predictor, quality) for lv in levels
+        tiff.pack_blocks(lv, tile, spec[0], predictor, quality) for lv in levels
     ]
-    fmt = {"u": 1, "i": 2, "f": 3}[img.dtype.kind]
-    bits = 12 if jpeg12 else img.dtype.itemsize * 8
-    spp = img.shape[2]
 
-    def tags(i: int, offsets: list[int]) -> list:
-        lv = levels[i]
-        ent = [
-            (_T_WIDTH, 4, 1, lv.shape[1]),
-            (_T_HEIGHT, 4, 1, lv.shape[0]),
-            (_T_BITS, 3, spp, [bits] * spp),
-            (_T_COMPRESSION, 3, 1, comp_code),
-            (_T_PHOTOMETRIC, 3, 1, 2 if spp == 3 else 1),
-            (_T_SPP, 3, 1, spp),
-            (_T_PLANAR, 3, 1, 1),
-            (_T_SAMPLE_FORMAT, 3, spp, [fmt] * spp),
-            (_T_TILE_W, 3, 1, tile[0]),
-            (_T_TILE_H, 3, 1, tile[1]),
-            # BigTIFF: LONG8 offsets (files past 4 GiB need them)
-            (_T_TILE_OFFSETS, 16 if bigtiff else 4, len(payloads[i]), offsets),
-            (_T_TILE_COUNTS, 4, len(payloads[i]), [len(p) for p in payloads[i]]),
-        ]
-        if predictor != 1:
-            ent.append((_T_PREDICTOR, 3, 1, predictor))
+    def ifd(i: int, offsets: list[int], ext_off: int = 0, next_off: int = 0):
+        ent = tiff.ifd_entries(
+            levels[i].shape, spec, predictor, 1, True, tile, offsets,
+            [len(p) for p in payloads[i]], None if i else geo, big=bigtiff,
+        )
         if i > 0:
             ent.append((_T_SUBFILE, 4, 1, 1))
-        elif geo:
-            ps = list(geo.get("pixel_scale", ()))
-            if ps:
-                ent.append((_T_PIXEL_SCALE, 12, 3, (ps + [0.0, 0.0])[:3]))
-            tp = geo.get("tiepoint")
-            if tp:
-                ent.append((_T_TIEPOINT, 12, 6, list(tp)[:6]))
-            epsg = geo.get("epsg")
-            if epsg:
-                projected = bool(geo.get("projected", True))
-                keys = [
-                    (1024, 0, 1, 1 if projected else 2),
-                    (1025, 0, 1, 1),
-                    ((3072 if projected else 2048), 0, 1, int(epsg)),
-                ]
-                kd = [1, 1, 0, len(keys)] + [v for k in keys for v in k]
-                ent.append((_T_GEOKEYS, 3, len(kd), kd))
-        return ent
+        return tiff.serialize_ifd(ent, ext_off, next_off, big=bigtiff)
 
     # pass 1: IFD sizes with placeholder offsets (same entry shapes)
-    sizes = [
-        _ifd_size(tags(i, [0] * len(payloads[i])), big=bigtiff)
-        for i in range(len(levels))
-    ]
+    sized = [ifd(i, [0] * len(payloads[i])) for i in range(len(levels))]
     ifd_offsets = []
-    cur = 16 if bigtiff else 8
-    for s in sizes:
+    cur = len(tiff.header(0, bigtiff))
+    for table, ext in sized:
         ifd_offsets.append(cur)
-        cur += s + (s % 2)
-    data_start = cur
+        cur += len(table) + len(ext)
 
     # tile data: coarsest overview first (readers that walk overviews
     # for thumbnails touch only the head of the data area)
@@ -879,23 +571,12 @@ def write_cog(
             cur += len(p) + (len(p) % 2)
         tile_offsets[i] = offs
 
-    if bigtiff:
-        out = bytearray(struct.pack("<2sHHHQ", b"II", 43, 8, 0, ifd_offsets[0]))
-    else:
-        out = bytearray(struct.pack("<2sHI", b"II", 42, ifd_offsets[0]))
-    for i in range(len(levels)):
+    out = bytearray(tiff.header(ifd_offsets[0], bigtiff))
+    for i, (table, _) in enumerate(sized):
         nxt = ifd_offsets[i + 1] if i + 1 < len(levels) else 0
-        blk = _ifd_bytes(tags(i, tile_offsets[i]), ifd_offsets[i], nxt, big=bigtiff)
-        assert len(blk) == sizes[i], (len(blk), sizes[i])
-        out += blk
-        if len(blk) % 2:
-            out += b"\0"
-    assert len(out) == data_start
-    body = bytearray()
+        out += b"".join(ifd(i, tile_offsets[i], ifd_offsets[i] + len(table), nxt))
     for i in reversed(range(len(levels))):
         for p in payloads[i]:
-            body += p
-            if len(p) % 2:
-                body += b"\0"
-    out += body
+            out += p + b"\0" * (len(p) % 2)
+    assert len(out) == cur
     return bytes(out)

@@ -91,6 +91,13 @@ def saturate_to_u16(arr: np.ndarray) -> np.ndarray:
     return np.ascontiguousarray(arr).astype(np.uint16, copy=False)
 
 
+def bands_u16(arr: np.ndarray) -> np.ndarray:
+    """Decoded container raster, (h, w) or (h, w, samples) -> the
+    engine's (bands, h, w) uint16 layout through :func:`saturate_to_u16`.
+    The one conversion for TIFF, JPEG and windowed COG pixels."""
+    return saturate_to_u16(arr[None] if arr.ndim == 2 else arr.transpose(2, 0, 1))
+
+
 def decode_payload(data: bytes) -> np.ndarray:
     """bytes -> (bands, h, w) uint16.  Inverse of :func:`encode_payload`,
     plus container dispatch on magic bytes: GeoTIFF (``II*``/``MM*``) and
@@ -105,23 +112,11 @@ def decode_payload(data: bytes) -> np.ndarray:
     if data[:2] in (b"II", b"MM"):  # TIFF / GeoTIFF container
         from . import tiff
 
-        arr = tiff.decode(data)
-        if arr.ndim == 3:
-            arr = arr.transpose(2, 0, 1)
-        else:
-            arr = arr[None, :, :]
-        # int16/int32/float samples are valid TIFF; saturate instead of
-        # wrapping mod 65536 (shared cast with sources/cog.py).
-        return saturate_to_u16(arr)
+        return bands_u16(tiff.decode(data))
     if data[:2] == b"\xff\xd8":  # baseline JPEG container
         from . import jpeg
 
-        arr = jpeg.decode(data)
-        if arr.ndim == 3:
-            arr = arr.transpose(2, 0, 1)
-        else:
-            arr = arr[None, :, :]
-        return saturate_to_u16(arr)
+        return bands_u16(jpeg.decode(data))
     magic, _ver, code, nb, h, w = _HDR.unpack_from(data)
     assert magic == _MAGIC, "bad payload magic"
     fmt = _FMT_INV[code]

@@ -17,26 +17,38 @@ Coverage:
 - both byte orders (``II`` little / ``MM`` big), classic TIFF magic 42
   AND BigTIFF magic 43 (8-byte offsets/counts, LONG8/SLONG8/IFD8 types —
   the layout files past 4 GiB require)
-- grayscale and RGB chunky interleave (SamplesPerPixel 1 or 3)
-- 8/16-bit unsigned, 16/32-bit signed, 32-bit float samples
+- any SamplesPerPixel, chunky (PlanarConfiguration 1) or planar (2)
+- 8/16/32-bit unsigned, 16/32-bit signed, 32/64-bit float samples
 - striped AND tiled layouts (StripOffsets/RowsPerStrip, TileWidth/...)
 - Compression 1 (none), 8 / 32946 (zlib deflate), 5 (LZW, TIFF 6.0 §13
-  early-change variable-width codes), 32773 (PackBits)
+  early-change variable-width codes), 32773 (PackBits), 7 (JPEG, 8- and
+  12-bit, with or without shared JPEGTables)
 - Predictor 2 (horizontal differencing; undone with a wrapping cumsum)
+  on integer samples
 - GeoTIFF georeferencing surfaced in :func:`read` metadata:
   ModelPixelScale (33550), ModelTiepoint (33922), GeoKeyDirectory
   (34735) inline SHORT keys (model type, raster type, EPSG codes)
 
-Encoder (fixture/writer side): little-endian, striped or tiled,
-none/deflate/PackBits, optional predictor 2, optional GeoTIFF tags —
-enough to roundtrip every decoder path and to write valid GeoTIFF tiles
-other tools read.
+Encoder (fixture/writer side): little-endian, striped or tiled, chunky
+or planar, none/deflate/PackBits/LZW/JPEG (8-bit gray/RGB, 12-bit
+gray), optional predictor 2, optional GeoTIFF tags — enough to
+roundtrip every decoder path and to write valid GeoTIFF tiles other
+tools read.
+
+This is the only module that knows the container format.  Its pieces —
+:func:`parse_header`, :func:`parse_layout` (one IFD's validated
+:class:`Layout`), :func:`geo_meta`, :func:`decode_block`,
+:func:`sample_spec`, :func:`pack_blocks`, :func:`ifd_entries`,
+:func:`serialize_ifd` and :func:`header` — serve both :func:`read` /
+:func:`encode` and the windowed reader / COG writer in ``core/cog.py``,
+so the two accept, reject and write exactly the same files.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
+from dataclasses import dataclass
 
 import numpy as np
 
@@ -70,6 +82,17 @@ _COMP_NONE, _COMP_DEFLATE_ADOBE, _COMP_PACKBITS, _COMP_DEFLATE = 1, 8, 32773, 32
 _COMP_LZW = 5
 _COMP_JPEG = 7  # "new-style" JPEG-in-TIFF (TIFF TechNote 2)
 _T_JPEG_TABLES = 347
+
+# encoder compression names -> Compression tag values
+_COMPRESSIONS = {
+    "none": _COMP_NONE, "deflate": _COMP_DEFLATE_ADOBE,
+    "packbits": _COMP_PACKBITS, "lzw": _COMP_LZW, "jpeg": _COMP_JPEG,
+}
+# (BitsPerSample, SampleFormat) -> numpy dtype code
+_DTYPES = {
+    (8, 1): "u1", (16, 1): "u2", (32, 1): "u4",
+    (16, 2): "i2", (32, 2): "i4", (32, 3): "f4", (64, 3): "f8",
+}
 
 
 # ---------------------------------------------------------------- decoder --
@@ -288,11 +311,8 @@ def _undo_predictor(block: np.ndarray) -> np.ndarray:
     return wide.astype(block.dtype)  # mod-2^bits wrap == spec semantics
 
 
-def read(data: bytes):
-    """TIFF bytes -> (array, meta).  array: (h, w) for grayscale, else
-    (h, w, spp).  meta: dims/layout plus GeoTIFF georeferencing when the
-    tags are present (``pixel_scale``, ``tiepoint``, ``geo_keys``,
-    ``epsg`` when derivable)."""
+def parse_header(data: bytes) -> tuple[str, bool, int]:
+    """File head -> (struct byte order, BigTIFF?, first IFD offset)."""
     if data[:2] == b"II":
         bo = "<"
     elif data[:2] == b"MM":
@@ -300,22 +320,62 @@ def read(data: bytes):
     else:
         raise ValueError("not a TIFF (bad byte-order mark)")
     (magic,) = struct.unpack_from(bo + "H", data, 2)
-    big = magic == 43
-    if big:
+    if magic == 43:
         # BigTIFF header: offset-size (must be 8) + reserved, then Q offset
-        osize, _zero = struct.unpack_from(bo + "HH", data, 4)
+        (osize,) = struct.unpack_from(bo + "H", data, 4)
         if osize != 8:
             raise NotImplementedError(f"BigTIFF offset size {osize}")
-        (ifd_off,) = struct.unpack_from(bo + "Q", data, 8)
-    elif magic != 42:
+        return bo, True, int(struct.unpack_from(bo + "Q", data, 8)[0])
+    if magic != 42:
         raise ValueError(f"not a TIFF (magic {magic})")
-    else:
-        (ifd_off,) = struct.unpack_from(bo + "I", data, 4)
-    ifd = _read_ifd(data, bo, int(ifd_off), big=big)
+    return bo, False, int(struct.unpack_from(bo + "I", data, 4)[0])
 
+
+@dataclass
+class Layout:
+    """One IFD's validated block layout: the raster, its sample type and
+    codec, and where each block's bytes live."""
+
+    width: int
+    height: int
+    tile_w: int
+    tile_h: int
+    offsets: np.ndarray  # per-block byte offset, row-major (plane-major when planar)
+    counts: np.ndarray  # per-block byte count
+    dtype: np.dtype  # file-order dtype
+    spp: int
+    bits: int
+    comp: int
+    pred: int
+    planar: int
+    # striped files (classic Landsat L1 layout) are modeled as one-tile-
+    # wide rows: tile_w = width, tile_h = rows_per_strip.  Row windows
+    # still prune to the intersecting strips; column windows necessarily
+    # fetch full strip widths (inherent to the layout, not the reader).
+    striped: bool
+    # comp 7: shared abbreviated-stream tables (TIFF TechNote 2), spliced
+    # into each block before decode; None when blocks are self-contained
+    jpeg_tables: bytes | None
+
+    @property
+    def tiles_across(self) -> int:
+        return (self.width + self.tile_w - 1) // self.tile_w
+
+    @property
+    def tiles_down(self) -> int:
+        return (self.height + self.tile_h - 1) // self.tile_h
+
+    @property
+    def block_spp(self) -> int:
+        """Samples per block: planar blocks hold one sample each."""
+        return 1 if self.planar == 2 else self.spp
+
+
+def parse_layout(ifd: dict, bo: str) -> Layout:
+    """IFD tags -> :class:`Layout`.  Raises NotImplementedError for every
+    variant :func:`decode_block` cannot decode exactly."""
     w = int(ifd[_T_WIDTH][0])
     h = int(ifd[_T_HEIGHT][0])
-    spp = int(ifd.get(_T_SPP, [1])[0])
     bits_arr = ifd.get(_T_BITS, np.asarray([1]))
     if len(set(int(b) for b in bits_arr)) != 1:
         raise NotImplementedError("heterogeneous BitsPerSample")
@@ -328,102 +388,46 @@ def read(data: bytes):
         raise NotImplementedError(f"PlanarConfiguration {planar}")
     if pred not in (1, 2):
         raise NotImplementedError(f"predictor {pred}")
-    dt = {
-        (8, 1): "u1", (16, 1): "u2", (32, 1): "u4",
-        (16, 2): "i2", (32, 2): "i4", (32, 3): "f4", (64, 3): "f8",
-    }.get((bits, fmt))
+    dt = _DTYPES.get((bits, fmt))
     if comp == _COMP_JPEG and bits == 12 and fmt == 1:
         dt = "u2"  # 12-bit JPEG blocks decode into uint16 samples
     if dt is None:
         raise NotImplementedError(f"bits={bits} sample_format={fmt}")
     if pred == 2 and dt in ("f4", "f8"):
         raise NotImplementedError("predictor 2 on float samples")
-    dtype = np.dtype(bo + dt)
-
-    if comp in (_COMP_DEFLATE_ADOBE, _COMP_DEFLATE):
-        inflate = lambda b, want: zlib.decompress(b)  # noqa: E731
-    elif comp == _COMP_PACKBITS:
-        inflate = _packbits_decode
-    elif comp == _COMP_LZW:
-        inflate = _lzw_decode
-    elif comp == _COMP_NONE:
-        inflate = lambda b, want: b  # noqa: E731
-    elif comp == _COMP_JPEG:
-        if bits not in (8, 12):
-            raise NotImplementedError(f"JPEG-in-TIFF at {bits} bits")
-        inflate = None  # decoded straight to pixels in blocks()
-    else:
+    if comp not in (*_COMPRESSIONS.values(), _COMP_DEFLATE):
         raise NotImplementedError(
             f"TIFF compression {comp} (plug a whole-file decoder in "
             "via operators.multimodal.register_decoder)"
         )
-    jpeg_tables = (
-        bytes(bytearray(int(v) & 0xFF for v in ifd[_T_JPEG_TABLES]))
-        if comp == _COMP_JPEG and _T_JPEG_TABLES in ifd
-        else None
-    )
-
-    def blocks(offsets, counts, bw, bh, bspp=None):
-        bspp = spp if bspp is None else bspp
-        for off, cnt in zip(offsets, counts):
-            raw = bytes(data[int(off) : int(off) + int(cnt)])
-            if comp == _COMP_JPEG:
-                yield _jpeg_block(raw, jpeg_tables, bw, bh, bspp)
-                continue
-            want = bw * bh * bspp * dtype.itemsize
-            raw = inflate(raw, want)
-            arr = np.frombuffer(raw, dtype=dtype, count=min(len(raw) // dtype.itemsize, bw * bh * bspp))
-            if arr.size < bw * bh * bspp:  # short final strip: pad
-                arr = np.concatenate([arr, np.zeros(bw * bh * bspp - arr.size, dtype)])
-            blk = arr.reshape(bh, bw, bspp)
-            yield _undo_predictor(blk) if pred == 2 else blk
-
-    out = np.zeros((h, w, spp), dtype=dtype.newbyteorder("="))
-    # planar=2: blocks are per-plane (1 sample each), plane-major in the
-    # offsets array (TIFF 6.0 §Planar Configuration); decode each plane
-    # as an spp=1 image into its band slot
-    nplanes = spp if planar == 2 else 1
-    bspp = 1 if planar == 2 else spp
+    if comp == _COMP_JPEG and bits not in (8, 12):
+        raise NotImplementedError(f"JPEG-in-TIFF at {bits} bits")
     if _T_TILE_OFFSETS in ifd:
-        tw = int(ifd[_T_TILE_W][0])
-        th = int(ifd[_T_TILE_H][0])
-        ntx = (w + tw - 1) // tw
-        nty = (h + th - 1) // th
-        per = ntx * nty
+        tw, th = int(ifd[_T_TILE_W][0]), int(ifd[_T_TILE_H][0])
         offs, cnts = ifd[_T_TILE_OFFSETS], ifd[_T_TILE_COUNTS]
-        for s in range(nplanes):
-            gen = blocks(
-                offs[s * per : (s + 1) * per],
-                cnts[s * per : (s + 1) * per], tw, th, bspp,
-            )
-            for i, blk in enumerate(gen):
-                ty, tx = divmod(i, ntx)
-                y0, x0 = ty * th, tx * tw
-                ys, xs = min(th, h - y0), min(tw, w - x0)
-                if planar == 2:
-                    out[y0 : y0 + ys, x0 : x0 + xs, s : s + 1] = blk[:ys, :xs]
-                else:
-                    out[y0 : y0 + ys, x0 : x0 + xs] = blk[:ys, :xs]
     else:
         rps = int(ifd.get(_T_ROWS_PER_STRIP, [h])[0])
-        per = (h + rps - 1) // rps
+        tw, th = w, min(max(1, rps), h)
         offs, cnts = ifd[_T_STRIP_OFFSETS], ifd[_T_STRIP_COUNTS]
-        for s in range(nplanes):
-            y0 = 0
-            for off, cnt in zip(offs[s * per : (s + 1) * per], cnts[s * per : (s + 1) * per]):
-                rows = min(rps, h - y0)
-                blk = next(blocks([off], [cnt], w, rows, bspp))
-                if planar == 2:
-                    out[y0 : y0 + rows, :, s : s + 1] = blk
-                else:
-                    out[y0 : y0 + rows] = blk
-                y0 += rows
-
-    meta = dict(
-        width=w, height=h, bits=bits, samples=spp, compression=comp,
-        tiled=_T_TILE_OFFSETS in ifd, predictor=pred, planar=planar,
-        dtype=str(out.dtype),
+    return Layout(
+        width=w, height=h, tile_w=tw, tile_h=th,
+        offsets=np.asarray(offs, dtype=np.int64),
+        counts=np.asarray(cnts, dtype=np.int64),
+        dtype=np.dtype(bo + dt), spp=int(ifd.get(_T_SPP, [1])[0]),
+        bits=bits, comp=comp, pred=pred, planar=planar,
+        striped=_T_TILE_OFFSETS not in ifd,
+        jpeg_tables=(
+            ifd[_T_JPEG_TABLES].astype(np.uint8).tobytes()
+            if comp == _COMP_JPEG and _T_JPEG_TABLES in ifd
+            else None
+        ),
     )
+
+
+def geo_meta(ifd: dict) -> dict:
+    """GeoTIFF tags -> {pixel_scale, tiepoint, geo_keys, epsg} (only the
+    keys the IFD carries)."""
+    meta = {}
     if _T_PIXEL_SCALE in ifd:
         meta["pixel_scale"] = tuple(float(v) for v in ifd[_T_PIXEL_SCALE])
     if _T_TIEPOINT in ifd:
@@ -431,9 +435,8 @@ def read(data: bytes):
     if _T_GEOKEYS in ifd:
         kd = ifd[_T_GEOKEYS]
         keys = {}
-        nkeys = int(kd[3])
-        for j in range(nkeys):
-            kid, loc, cnt, val = (int(v) for v in kd[4 + 4 * j : 8 + 4 * j])
+        for j in range(int(kd[3])):
+            kid, loc, _cnt, val = (int(v) for v in kd[4 + 4 * j : 8 + 4 * j])
             if loc == 0:  # inline SHORT value
                 keys[kid] = val
         meta["geo_keys"] = keys
@@ -441,7 +444,58 @@ def read(data: bytes):
         epsg = keys.get(3072) or keys.get(2048)
         if epsg:
             meta["epsg"] = int(epsg)
-    return out[..., 0] if spp == 1 else out, meta
+    return meta
+
+
+def decode_block(raw: bytes, lv: Layout) -> np.ndarray:
+    """One stored block -> (tile_h, tile_w, block_spp) samples, zero-padded
+    when the block is short (a final strip)."""
+    bw, bh, bspp = lv.tile_w, lv.tile_h, lv.block_spp
+    if lv.comp == _COMP_JPEG:
+        return _jpeg_block(raw, lv.jpeg_tables, bw, bh, bspp)
+    n = bw * bh * bspp
+    if lv.comp in (_COMP_DEFLATE, _COMP_DEFLATE_ADOBE):
+        raw = zlib.decompress(raw)
+    elif lv.comp == _COMP_PACKBITS:
+        raw = _packbits_decode(raw, n * lv.dtype.itemsize)
+    elif lv.comp == _COMP_LZW:
+        raw = _lzw_decode(raw, n * lv.dtype.itemsize)
+    arr = np.frombuffer(raw, dtype=lv.dtype, count=min(len(raw) // lv.dtype.itemsize, n))
+    if arr.size < n:
+        arr = np.concatenate([arr, np.zeros(n - arr.size, lv.dtype)])
+    blk = arr.reshape(bh, bw, bspp)
+    return _undo_predictor(blk) if lv.pred == 2 else blk
+
+
+def read(data: bytes):
+    """TIFF bytes -> (array, meta).  array: (h, w) for grayscale, else
+    (h, w, spp).  meta: dims/layout plus GeoTIFF georeferencing when the
+    tags are present (``pixel_scale``, ``tiepoint``, ``geo_keys``,
+    ``epsg`` when derivable)."""
+    bo, big, ifd_off = parse_header(data)
+    ifd = _read_ifd(data, bo, ifd_off, big=big)
+    lv = parse_layout(ifd, bo)
+    h, w, bspp = lv.height, lv.width, lv.block_spp
+    out = np.zeros((h, w, lv.spp), dtype=lv.dtype.newbyteorder("="))
+    # planar=2: blocks are per-plane (1 sample each), plane-major in the
+    # offsets array (TIFF 6.0 §Planar Configuration); each plane's blocks
+    # fill its band slot
+    per = lv.tiles_across * lv.tiles_down
+    nblocks = per * (lv.spp // bspp)
+    for k, (off, cnt) in enumerate(zip(lv.offsets[:nblocks], lv.counts[:nblocks])):
+        s, (ty, tx) = k // per, divmod(k % per, lv.tiles_across)
+        y0, x0 = ty * lv.tile_h, tx * lv.tile_w
+        ys, xs = min(lv.tile_h, h - y0), min(lv.tile_w, w - x0)
+        blk = decode_block(bytes(data[off : off + cnt]), lv)
+        out[y0 : y0 + ys, x0 : x0 + xs, s * bspp : (s + 1) * bspp] = blk[:ys, :xs]
+
+    meta = dict(
+        width=w, height=h, bits=lv.bits, samples=lv.spp, compression=lv.comp,
+        tiled=not lv.striped, predictor=lv.pred, planar=lv.planar,
+        dtype=str(out.dtype),
+    )
+    meta.update(geo_meta(ifd))
+    return out[..., 0] if lv.spp == 1 else out, meta
 
 
 def decode(data: bytes) -> np.ndarray:
@@ -484,6 +538,149 @@ def _apply_predictor(block: np.ndarray) -> np.ndarray:
     ).astype(block.dtype)
 
 
+def sample_spec(
+    img: np.ndarray, compression: str, predictor: int, planar: int = 1
+) -> tuple[int, int, int]:
+    """Check that (h, w, spp) little-endian ``img`` can be written with
+    these options -> (Compression, BitsPerSample, SampleFormat)."""
+    if predictor == 2 and img.dtype.kind == "f":
+        raise NotImplementedError("predictor 2 on float samples")
+    comp = _COMPRESSIONS[compression]
+    bits = img.dtype.itemsize * 8
+    if comp == _COMP_JPEG:
+        if img.dtype == np.uint16 and (img.shape[2] == 1 or planar == 2):
+            if img.max(initial=0) > 4095:
+                raise ValueError("12-bit JPEG-in-TIFF samples must be <= 4095")
+            bits = 12  # BitsPerSample 12, samples ride uint16 arrays
+        elif img.dtype != np.uint8 or img.shape[2] not in (1, 3):
+            raise NotImplementedError(
+                "JPEG-in-TIFF needs uint8 gray / RGB or uint16 gray samples"
+            )
+        if predictor != 1:
+            raise ValueError("predictor does not apply to JPEG blocks")
+    if planar not in (1, 2):
+        raise ValueError(f"PlanarConfiguration {planar}")
+    return comp, bits, {"u": 1, "i": 2, "f": 3}[img.dtype.kind]
+
+
+def _pack_block(block: np.ndarray, comp: int, predictor: int, quality: int) -> bytes:
+    if comp == _COMP_JPEG:
+        from . import jpeg
+
+        if block.dtype == np.uint16:  # 12-bit (SOF1) streams
+            return jpeg.encode_gray12(block[:, :, 0], quality=quality)
+        if block.shape[2] == 1:  # gray image OR one planar plane
+            return jpeg.encode_gray(block[:, :, 0], quality=quality)
+        return jpeg.encode_rgb(block, quality=quality)
+    if predictor == 2:
+        block = _apply_predictor(block)
+    raw = block.tobytes()
+    if comp == _COMP_DEFLATE_ADOBE:
+        return zlib.compress(raw, 6)
+    if comp == _COMP_PACKBITS:
+        return _packbits_encode(raw)
+    if comp == _COMP_LZW:
+        return _lzw_encode(raw)
+    return raw
+
+
+def pack_blocks(
+    img: np.ndarray, block: tuple[int, int], comp: int, predictor: int,
+    quality: int, pad: bool = True,
+) -> list[bytes]:
+    """(h, w, spp) samples -> one stored block per ``block`` = (w, h)
+    cell, row-major.  ``pad``: tiles are zero-padded to the full block;
+    strips (``pad=False``) keep a short final strip short."""
+    bw, bh = block
+    out = []
+    for y0 in range(0, img.shape[0], bh):
+        for x0 in range(0, img.shape[1], bw):
+            blk = img[y0 : y0 + bh, x0 : x0 + bw]
+            if pad:
+                blk = np.pad(blk, ((0, bh - blk.shape[0]), (0, bw - blk.shape[1]), (0, 0)))
+            out.append(_pack_block(blk, comp, predictor, quality))
+    return out
+
+
+def ifd_entries(
+    shape, spec, predictor: int, planar: int, tiled: bool, block,
+    offsets, counts, geo: dict | None = None, big: bool = False,
+) -> list:
+    """One image's IFD entries [(tag, type, count, value)]: the base
+    tags, the block layout (``block`` = (tile w, tile h), or (w,
+    rows per strip) when not ``tiled``) and the GeoTIFF tags of ``geo``
+    ({"pixel_scale", "tiepoint", "epsg", "projected"})."""
+    h, w, spp = shape
+    comp, bits, fmt = spec
+    ent = [
+        (_T_WIDTH, 4, 1, w),
+        (_T_HEIGHT, 4, 1, h),
+        (_T_BITS, 3, spp, [bits] * spp),
+        (_T_COMPRESSION, 3, 1, comp),
+        (_T_PHOTOMETRIC, 3, 1, 2 if spp == 3 else 1),
+        (_T_SPP, 3, 1, spp),
+        (_T_PLANAR, 3, 1, planar),
+        (_T_SAMPLE_FORMAT, 3, spp, [fmt] * spp),
+    ]
+    if predictor != 1:
+        ent.append((_T_PREDICTOR, 3, 1, predictor))
+    if tiled:
+        ent += [(_T_TILE_W, 3, 1, block[0]), (_T_TILE_H, 3, 1, block[1])]
+        offsets_tag, counts_tag = _T_TILE_OFFSETS, _T_TILE_COUNTS
+    else:
+        ent.append((_T_ROWS_PER_STRIP, 4, 1, block[1]))
+        offsets_tag, counts_tag = _T_STRIP_OFFSETS, _T_STRIP_COUNTS
+    # BigTIFF: LONG8 offsets (files past 4 GiB need them)
+    ent.append((offsets_tag, 16 if big else 4, len(offsets), offsets))
+    ent.append((counts_tag, 4, len(counts), counts))
+    geo = geo or {}
+    ps = list(geo.get("pixel_scale", ()))
+    if ps:
+        ent.append((_T_PIXEL_SCALE, 12, 3, (ps + [0.0, 0.0])[:3]))
+    tp = geo.get("tiepoint")
+    if tp:
+        ent.append((_T_TIEPOINT, 12, 6, list(tp)[:6]))
+    epsg = geo.get("epsg")
+    if epsg:
+        projected = bool(geo.get("projected", True))
+        keys = [
+            (1024, 0, 1, 1 if projected else 2),  # GTModelType
+            (1025, 0, 1, 1),  # GTRasterType = PixelIsArea
+            ((3072 if projected else 2048), 0, 1, int(epsg)),
+        ]
+        kd = [1, 1, 0, len(keys)] + [v for k in keys for v in k]
+        ent.append((_T_GEOKEYS, 3, len(kd), kd))
+    return ent
+
+
+def serialize_ifd(
+    entries, ext_off: int, next_off: int = 0, big: bool = False
+) -> tuple[bytes, bytes]:
+    """IFD entries -> (IFD table, external values), little-endian.
+    Values wider than an entry's inline slot go to the external area,
+    word-aligned, which the caller places at file offset ``ext_off``."""
+    cnt_fmt, off_fmt, inline = ("<HHQ", "<Q", 8) if big else ("<HHI", "<I", 4)
+    table = [struct.pack("<Q" if big else "<H", len(entries))]
+    ext = bytearray()
+    for tag, typ, cnt, val in sorted(entries, key=lambda e: e[0]):  # tags ascend
+        vals = val if isinstance(val, (list, tuple)) else [val]
+        raw = struct.pack("<" + _TYPES[typ][0] * cnt, *vals)
+        if len(raw) > inline:
+            table.append(struct.pack(cnt_fmt, tag, typ, cnt) + struct.pack(off_fmt, ext_off + len(ext)))
+            ext += raw + b"\0" * (len(raw) % 2)
+        else:
+            table.append(struct.pack(cnt_fmt, tag, typ, cnt) + raw.ljust(inline, b"\0"))
+    table.append(struct.pack(off_fmt, next_off))
+    return b"".join(table), bytes(ext)
+
+
+def header(ifd_off: int, big: bool = False) -> bytes:
+    """Little-endian file header pointing at the first IFD."""
+    if big:
+        return struct.pack("<2sHHHQ", b"II", 43, 8, 0, ifd_off)
+    return struct.pack("<2sHI", b"II", 42, ifd_off)
+
+
 def encode(
     img: np.ndarray,
     compression: str = "deflate",
@@ -499,176 +696,37 @@ def encode(
 
     ``img``: (h, w) or (h, w, 3), dtype uint8/uint16/int16/int32/float32.
     ``compression``: "none" | "deflate" | "packbits" | "lzw" | "jpeg"
-    (lossy, uint8 gray/RGB only, ``quality`` applies; blocks are
-    self-contained streams — legal per TIFF TechNote 2, no JPEGTables).
+    (lossy, uint8 gray/RGB or uint16 gray <= 4095 as 12-bit streams,
+    ``quality`` applies; blocks are self-contained streams — legal per
+    TIFF TechNote 2, no JPEGTables).
     ``geo``: optional {"pixel_scale": (sx, sy[, sz]), "tiepoint":
     (i, j, k, x, y, z), "epsg": int, "projected": bool} -> GeoTIFF tags.
     """
     img = np.asarray(img)
     if img.ndim == 2:
         img = img[:, :, None]
-    h, w, spp = img.shape
-    fmt = {"u": 1, "i": 2, "f": 3}[img.dtype.kind]
-    bits = img.dtype.itemsize * 8
-    if predictor == 2 and fmt == 3:
-        raise NotImplementedError("predictor 2 on float samples")
     img = img.astype(img.dtype.newbyteorder("<"))
-
-    comp_code = {
-        "none": _COMP_NONE, "deflate": _COMP_DEFLATE_ADOBE,
-        "packbits": _COMP_PACKBITS, "lzw": _COMP_LZW,
-        "jpeg": _COMP_JPEG,
-    }[compression]
-    jpeg12 = False
-    if comp_code == _COMP_JPEG:
-        if img.dtype == np.uint16 and (spp == 1 or planar == 2):
-            if img.max(initial=0) > 4095:
-                raise ValueError("12-bit JPEG-in-TIFF samples must be <= 4095")
-            jpeg12 = True
-            bits = 12  # BitsPerSample 12, samples ride uint16 arrays
-        elif img.dtype != np.uint8 or spp not in (1, 3):
-            raise NotImplementedError(
-                "JPEG-in-TIFF needs uint8 gray / RGB or uint16 gray samples"
-            )
-        if predictor != 1:
-            raise ValueError("predictor does not apply to JPEG blocks")
-
-    def pack(block: np.ndarray) -> bytes:
-        if comp_code == _COMP_JPEG:
-            from . import jpeg
-
-            if jpeg12:
-                return jpeg.encode_gray12(block[:, :, 0], quality=quality)
-            if block.shape[2] == 1:  # gray image OR one planar plane
-                return jpeg.encode_gray(block[:, :, 0], quality=quality)
-            return jpeg.encode_rgb(block, quality=quality)
-        if predictor == 2:
-            block = _apply_predictor(block)
-        raw = block.tobytes()
-        if comp_code == _COMP_DEFLATE_ADOBE:
-            return zlib.compress(raw, 6)
-        if comp_code == _COMP_PACKBITS:
-            return _packbits_encode(raw)
-        if comp_code == _COMP_LZW:
-            return _lzw_encode(raw)
-        return raw
-
-    if planar not in (1, 2):
-        raise ValueError(f"PlanarConfiguration {planar}")
-
-    def block_payloads(plane: np.ndarray) -> list[bytes]:
-        ph, pw, pspp = plane.shape
-        out = []
-        if tiled:
-            tw, th = tile
-            for y0 in range(0, ph, th):
-                for x0 in range(0, pw, tw):
-                    blk = np.zeros((th, tw, pspp), dtype=img.dtype)
-                    ys, xs = min(th, ph - y0), min(tw, pw - x0)
-                    blk[:ys, :xs] = plane[y0 : y0 + ys, x0 : x0 + xs]
-                    out.append(pack(blk))
-        else:
-            for y0 in range(0, ph, rows_per_strip):
-                out.append(pack(plane[y0 : y0 + rows_per_strip]))
-        return out
-
-    payloads: list[bytes] = []
-    if planar == 2:
-        # separate configuration: all of plane 0's blocks, then plane
-        # 1's, ... (TIFF 6.0 §Planar Configuration, plane-major order)
-        for s in range(spp):
-            payloads += block_payloads(np.ascontiguousarray(img[:, :, s : s + 1]))
-    else:
-        payloads = block_payloads(img)
-
-    # layout: header(8) | payloads | [external tag values] | IFD
-    entries: list[tuple[int, int, int, object]] = [
-        (_T_WIDTH, 4, 1, w),
-        (_T_HEIGHT, 4, 1, h),
-        (_T_BITS, 3, spp, [bits] * spp),
-        (_T_COMPRESSION, 3, 1, comp_code),
-        (_T_PHOTOMETRIC, 3, 1, 2 if spp == 3 else 1),
-        (_T_SPP, 3, 1, spp),
-        (_T_PLANAR, 3, 1, planar),
-        (_T_SAMPLE_FORMAT, 3, spp, [fmt] * spp),
+    spec = sample_spec(img, compression, predictor, planar)
+    block = tile if tiled else (img.shape[1], rows_per_strip)
+    # planar=2: all of plane 0's blocks, then plane 1's, ... (TIFF 6.0
+    # §Planar Configuration, plane-major order)
+    planes = [img[:, :, s : s + 1] for s in range(img.shape[2])] if planar == 2 else [img]
+    payloads = [
+        p for plane in planes
+        for p in pack_blocks(plane, block, spec[0], predictor, quality, pad=tiled)
     ]
-    if predictor != 1:
-        entries.append((_T_PREDICTOR, 3, 1, predictor))
-    offsets_tag, counts_tag = (
-        (_T_TILE_OFFSETS, _T_TILE_COUNTS) if tiled
-        else (_T_STRIP_OFFSETS, _T_STRIP_COUNTS)
-    )
-    if tiled:
-        entries += [(_T_TILE_W, 3, 1, tile[0]), (_T_TILE_H, 3, 1, tile[1])]
-    else:
-        entries.append((_T_ROWS_PER_STRIP, 4, 1, rows_per_strip))
-    if geo:
-        ps = list(geo.get("pixel_scale", ()))
-        if ps:
-            ps = (ps + [0.0, 0.0])[:3]
-            entries.append((_T_PIXEL_SCALE, 12, 3, ps))
-        tp = geo.get("tiepoint")
-        if tp:
-            entries.append((_T_TIEPOINT, 12, 6, list(tp)[:6]))
-        epsg = geo.get("epsg")
-        if epsg:
-            projected = bool(geo.get("projected", True))
-            keys = [
-                (1024, 0, 1, 1 if projected else 2),  # GTModelType
-                (1025, 0, 1, 1),  # GTRasterType = PixelIsArea
-                ((3072 if projected else 2048), 0, 1, int(epsg)),
-            ]
-            kd = [1, 1, 0, len(keys)] + [v for k in keys for v in k]
-            entries.append((_T_GEOKEYS, 3, len(kd), kd))
 
-    body = bytearray()
-    data_off = 8
-    payload_offsets = []
+    # layout: header(8) | payloads (word-aligned) | external tag values | IFD
+    body, offsets = bytearray(), []
     for p in payloads:
-        payload_offsets.append(data_off + len(body))
-        body += p
-        if len(body) % 2:
-            body += b"\0"  # word-align
-    entries.append((offsets_tag, 4, len(payloads), payload_offsets))
-    entries.append((counts_tag, 4, len(payloads), [len(p) for p in payloads]))
-    entries.sort(key=lambda e: e[0])  # tags must ascend
-
-    # external values area, then IFD
-    ext = bytearray()
-    ifd_entries = []
-
-    def value_bytes(typ, cnt, val):
-        letter, size = _TYPES[typ]
-        vals = val if isinstance(val, (list, tuple)) else [val]
-        return struct.pack("<" + letter * cnt, *vals), size * cnt
-
-    # two passes: sizes first (to place the IFD), then real offsets
-    ext_sizes = []
-    for tag, typ, cnt, val in entries:
-        raw, nb = value_bytes(typ, cnt, val)
-        ext_sizes.append(nb if nb > 4 else 0)
-    ifd_off = data_off + len(body) + sum((s + s % 2) for s in ext_sizes)
-    ext_cursor = data_off + len(body)
-    for tag, typ, cnt, val in entries:
-        raw, nb = value_bytes(typ, cnt, val)
-        if nb > 4:
-            ifd_entries.append(struct.pack("<HHI", tag, typ, cnt) + struct.pack("<I", ext_cursor))
-            ext += raw
-            if nb % 2:
-                ext += b"\0"
-            ext_cursor += nb + nb % 2
-        else:
-            ifd_entries.append(
-                struct.pack("<HHI", tag, typ, cnt) + raw.ljust(4, b"\0")
-            )
-    ifd = (
-        struct.pack("<H", len(ifd_entries))
-        + b"".join(ifd_entries)
-        + struct.pack("<I", 0)
+        offsets.append(8 + len(body))
+        body += p + b"\0" * (len(p) % 2)
+    entries = ifd_entries(
+        img.shape, spec, predictor, planar, tiled, block,
+        offsets, [len(p) for p in payloads], geo,
     )
-    header = struct.pack("<2sHI", b"II", 42, ifd_off)
-    assert ifd_off == data_off + len(body) + len(ext)
-    return bytes(header + body + ext + ifd)
+    table, ext = serialize_ifd(entries, 8 + len(body))
+    return header(8 + len(body) + len(ext)) + bytes(body) + ext + table
 
 
 def encode_gray(img: np.ndarray, **kw) -> bytes:

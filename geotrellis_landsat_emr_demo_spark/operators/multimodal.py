@@ -1,11 +1,12 @@
 """Multimodal column operators: images as opaque binary + typed metadata.
 
 The Spark-side plumbing (schemas, Arrow batch shapes, partitioning) is real
-and tested; decoders for container formats whose libraries are not in this
-image (jpeg/webp/mp4/...) are STUBBED behind a clearly-marked
-``NotImplementedError`` — the engine's own payload formats (npy-u16[-z],
-png-u16, jq75; core/kernels.py) decode for real, and foreign codecs plug
-in through :func:`register_decoder` (closure-snapshotted per operator so
+and tested.  The engine's own payload formats (npy-u16[-z], png-u16,
+jq75) and the built-in containers (tiff/geotiff through core.tiff, jpeg
+through core.jpeg) all decode through :func:`kernels.decode_payload`;
+container formats whose libraries are not in this image (webp/mp4/...)
+raise ``NotImplementedError`` until a decoder is plugged in through
+:func:`register_decoder` (closure-snapshotted per operator so
 registrations reach remote executors; seam proven by the toy-codec e2e
 test).
 
@@ -29,12 +30,11 @@ from pyspark.sql import functions as F
 
 from ..core import kernels
 
-SUPPORTED_FMTS = {"npy-u16", "npy-u16-z", "jq75", "png-u16"}
+# decoded by kernels.decode_payload (container dispatch on magic bytes)
+SUPPORTED_FMTS = {"npy-u16", "npy-u16-z", "jq75", "png-u16", "tiff", "geotiff", "jpeg"}
 
 # Pluggable decoder seam for foreign container formats (webp/mp4/...):
-# fmt -> callable(bytes) -> ndarray.  Baseline JPEG is built in (see
-# _jpeg_decode below — core.jpeg, a pure-numpy T.81 codec, registered by
-# default); a real deployment adds the rest, e.g.
+# fmt -> callable(bytes) -> ndarray.  A real deployment adds them, e.g.
 #   register_decoder("webp", lambda b: np.asarray(PIL.Image.open(BytesIO(b))))
 # Registrations are snapshotted INTO each operator's closure at plan-build
 # time (see _decoder_snapshot), so they serialize with the mapInPandas
@@ -45,8 +45,9 @@ _DECODERS: dict = {}
 
 def register_decoder(fmt: str, fn) -> None:
     """Plug a foreign-format decoder: ``fn(payload: bytes) -> ndarray``
-    shaped (bands, h, w) or (h, w); values are cast to the engine's uint16
-    band layout.  Takes effect for operators PLANNED after registration."""
+    shaped (bands, h, w) or (h, w); values saturate to the engine's uint16
+    band layout (:func:`kernels.saturate_to_u16`).  Takes effect for
+    operators PLANNED after registration."""
     _DECODERS[fmt] = fn
 
 
@@ -56,37 +57,6 @@ def unregister_decoder(fmt: str) -> None:
 
 def _decoder_snapshot() -> dict:
     return dict(_DECODERS)
-
-
-def _jpeg_decode(payload: bytes) -> "np.ndarray":
-    """Built-in baseline JPEG decoder (core.jpeg — pure numpy, T.81
-    bitstream): grayscale -> (h, w); RGB -> (3, h, w) band layout."""
-    from ..core import jpeg
-
-    arr = jpeg.decode(payload)
-    return arr.transpose(2, 0, 1) if arr.ndim == 3 else arr
-
-
-# JPEG (baseline + progressive, any chroma subsampling) decodes out of
-# the box (no foreign libs needed); webp/mp4 and arithmetic-coded JPEG
-# remain behind the register_decoder seam
-register_decoder("jpeg", _jpeg_decode)
-
-
-def _tiff_decode(payload: bytes) -> "np.ndarray":
-    """Built-in baseline TIFF/GeoTIFF decoder (core.tiff — pure numpy):
-    grayscale -> (h, w); RGB -> (3, h, w) band layout.  Covers the
-    reference's actual payload container (LandsatInput.scala:24 fetches
-    GeoTIFF scenes); LZW/JPEG-in-TIFF still route through the
-    register_decoder seam."""
-    from ..core import tiff
-
-    arr = tiff.decode(payload)
-    return arr.transpose(2, 0, 1) if arr.ndim == 3 else arr
-
-
-register_decoder("tiff", _tiff_decode)
-register_decoder("geotiff", _tiff_decode)
 
 
 def _decode(payload: bytes, fmt: str, extra: dict | None = None) -> np.ndarray:
@@ -99,7 +69,7 @@ def _decode(payload: bytes, fmt: str, extra: dict | None = None) -> np.ndarray:
             arr = arr[None, :, :]
         if arr.ndim != 3:
             raise ValueError(f"decoder for {fmt!r} returned ndim={arr.ndim}")
-        return np.ascontiguousarray(arr).astype(np.uint16, copy=False)
+        return kernels.saturate_to_u16(arr)
     # external container formats: decoder libs not present in this image
     raise NotImplementedError(
         f"decoder for fmt={fmt!r} requires an image library not present in "

@@ -196,11 +196,7 @@ def cog_scenes(
                     )
                 except ValueError:
                     continue
-                if arr.ndim == 3:
-                    arr = arr.transpose(2, 0, 1)
-                else:
-                    arr = arr[None, :, :]
-                arr = kernels.saturate_to_u16(arr)
+                arr = kernels.bands_u16(arr)
                 image_id = (
                     getattr(row, "image_id", None)
                     or os.path.splitext(os.path.basename(path))[0]

@@ -127,6 +127,70 @@ def test_foreign_tail_ifd_tiff_still_parses():
     assert np.array_equal(w, img[20:70, 10:110])
 
 
+def _patch_short(data: bytes, tag: int, value: int, index: int = 0) -> bytes:
+    """Rewrite SHORT value ``index`` of ``tag`` in the first IFD of a
+    little-endian classic TIFF (inline or external value)."""
+    import struct
+
+    out = bytearray(data)
+    (ifd,) = struct.unpack_from("<I", out, 4)
+    (n,) = struct.unpack_from("<H", out, ifd)
+    for e in range(ifd + 2, ifd + 2 + 12 * n, 12):
+        t, _typ, cnt = struct.unpack_from("<HHI", out, e)
+        if t == tag:
+            at = e + 8 if 2 * cnt <= 4 else struct.unpack_from("<I", out, e + 8)[0]
+            struct.pack_into("<H", out, at + 2 * index, value)
+            return bytes(out)
+    raise KeyError(tag)
+
+
+def _ramp(bands=1):
+    """Small uint16 raster that leaves the module RNG untouched."""
+    return np.arange(48 * 40 * bands, dtype=np.uint16).reshape(48, 40, bands).squeeze()
+
+
+_UNDECODABLE = {
+    # Predictor 3 (floating-point differencing) is not implemented
+    "predictor-3": (
+        lambda: _patch_short(
+            tiff.encode(_ramp(), tiled=True, tile=(16, 16), predictor=2),
+            317, 3,
+        ),
+        "predictor 3",
+    ),
+    # Predictor 2 is integer differencing; on float samples it is invalid
+    "float-predictor-2": (
+        lambda: _patch_short(
+            tiff.encode(_ramp().astype(np.int32), tiled=True, tile=(16, 16), predictor=2),
+            339, 3,
+        ),
+        "predictor 2 on float",
+    ),
+    "heterogeneous-bits": (
+        lambda: _patch_short(
+            tiff.encode(_ramp(bands=3), tiled=True, tile=(16, 16)),
+            258, 8, index=1,
+        ),
+        "heterogeneous BitsPerSample",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_UNDECODABLE))
+@pytest.mark.parametrize(
+    "reader",
+    [tiff.read, lambda d: cog.open_cog(d).window(0, 0, 0, 8, 8)],
+    ids=["tiff.read", "cog.window"],
+)
+def test_windowed_reader_rejects_what_read_rejects(case, reader):
+    """The whole-file and windowed readers share one layout parser, so a
+    file one of them cannot decode exactly raises in both instead of
+    decoding to wrong pixels."""
+    make, msg = _UNDECODABLE[case]
+    with pytest.raises(NotImplementedError, match=msg):
+        reader(make())
+
+
 @pytest.mark.parametrize("compression", ["none", "deflate", "packbits", "lzw"])
 def test_striped_tiff_windowed_read(compression):
     """Classic striped GeoTIFF (the Landsat L1 layout): strips are

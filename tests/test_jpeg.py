@@ -172,8 +172,9 @@ def test_ff_fill_bytes_before_marker():
 
 
 def test_multimodal_registry_e2e(spark):
-    """A DataFrame of fmt='jpeg' binary images decodes through the default
-    registry inside the Spark operator — real pixels, real stats."""
+    """A DataFrame of fmt='jpeg' binary images decodes through the
+    built-in container decode (kernels.decode_payload) inside the Spark
+    operator — real pixels, real stats."""
     import pandas as pd
 
     from geotrellis_landsat_emr_demo_spark.operators import multimodal

@@ -123,13 +123,20 @@ def test_unsupported_variants_raise():
 
 
 def test_multimodal_registry_e2e(spark):
-    """fmt='tiff' binary images decode through the default registry
-    inside the Spark operator — real pixels, real stats."""
+    """fmt='tiff' binary images decode through the built-in container
+    decode (kernels.decode_payload) inside the Spark operator — real
+    pixels, real stats."""
     import pandas as pd
 
     from geotrellis_landsat_emr_demo_spark.operators import multimodal
 
     imgs = {f"t{i}": _img(h=24 + 8 * i, w=40, seed=i) for i in range(3)}
+    # wide samples: negative int32 and float32 NaN / > 65535 cells must
+    # saturate (NaN -> NoData 0) the way ingest's decode does, not wrap
+    imgs["i32"] = _img(h=24, w=40, seed=5).astype(np.int32) - 20_000
+    fl = np.linspace(-10.0, 70_000.0, 24 * 40, dtype=np.float32).reshape(24, 40)
+    fl[::5, ::3] = np.nan
+    imgs["f32"] = fl
     pdf = pd.DataFrame(
         [
             dict(
@@ -143,9 +150,11 @@ def test_multimodal_registry_e2e(spark):
     out = multimodal.decode_stats(spark.createDataFrame(pdf)).toPandas()
     assert set(out.image_id) == set(imgs)
     for r in out.itertuples(index=False):
-        ref = imgs[r.image_id].astype(float)
+        v = imgs[r.image_id].astype(float)
+        ref = np.clip(np.where(np.isnan(v), 0.0, np.rint(v)), 0, 65535)
         ref = ref[ref != 0]
         assert abs(r.mean - ref.mean()) < 1e-6  # lossless container
+        assert (r.p_min, r.p_max) == (ref.min(), ref.max())
 
 
 def test_ingest_e2e_geotiff_payload(spark, tsmall_catalog):
@@ -239,9 +248,9 @@ def test_lzw_overestimated_expect_at_bump_boundary():
     data code lands the decoder exactly on the early-change threshold
     leaves the decoder one width ahead of the encoder's trailing EOI.
     With an exact ``expect`` the decoder returns early and never sees it;
-    with an OVERESTIMATED expect (cog.CogLevel's short unpadded final
-    strips) it must still stop cleanly at the misaligned EOI, not raise
-    'corrupt LZW stream'."""
+    with an OVERESTIMATED expect (tiff.decode_block sizes a short
+    unpadded final strip as a full block) it must still stop cleanly at
+    the misaligned EOI, not raise 'corrupt LZW stream'."""
     # n=253 distinct bytes -> decoder table hits 510 (bump to 10 bits) on
     # the last data code; encoder next_code stays 510 (no bump), EOI at 9.
     for n in range(245, 262):  # straddle the boundary on both sides

@@ -10,7 +10,8 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -303,7 +304,7 @@ def main():
             ok_all &= hit
         head = "\n".join(plan.splitlines()[:40])
         out.append(f"\n```\n{head}\n```\n")
-    with open("/root/repo/EXPLAINS.md", "w") as f:
+    with open(os.path.join(REPO, "EXPLAINS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote EXPLAINS.md; all checks present:", ok_all)
 
