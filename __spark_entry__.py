@@ -87,7 +87,7 @@ _MERC_SQL = f"""
 def _cells(spark, sf_dir, zoom=6):
     # r8 NEGATIVE RESULT: spreading the events scan before the trig lost
     # an interleaved A/B (cell_assign spread 1.79 s vs nospread 1.21 s
-    # median at sf1.0, tools/ab_r08.py) — the mercator+floor+partial-agg
+    # median at sf1.0, OPTIMIZATION_r08.md) — the mercator+floor+partial-agg
     # work collapses map-side cheaply enough that the extra round-robin
     # exchange never pays for itself on this table.
     span = 2 * ORIGIN / (1 << zoom)
@@ -266,7 +266,7 @@ def q_knn_points(spark, sf_dir):
 
     # no scan spread here: the vectorized batch work is so light that the
     # round-robin exchange lost an interleaved A/B (2.30 vs 1.31 s median
-    # at sf1.0, tools/ab_r08.py knn)
+    # at sf1.0, OPTIMIZATION_r08.md)
     local = pts.select("event_id", "lng", "lat").mapInPandas(
         topk_batches, "query_id string, event_id long, dist_sq double"
     )
@@ -545,7 +545,7 @@ def q_merge_first_wins(spark, sf_dir):
     # r8 NEGATIVE RESULT (kept as the window): a partial-aggregable
     # struct-min (groupBy(l_orderkey).agg(min(struct(...)))) measured
     # ~2.7x SLOWER in an interleaved A/B at sf1.0 (median 12.2 s vs 4.6 s,
-    # tools/ab_r08.py merge_first_wins) — min over a STRUCT is not a
+    # OPTIMIZATION_r08.md) — min over a STRUCT is not a
     # mutable-buffer aggregate, so it plans as ObjectHashAggregate and
     # falls back to sort-based past 128 distinct keys (1.5M groups here):
     # two sorts instead of the window's one.

@@ -9,8 +9,9 @@ partition's PNGs (locally here; each executor writes its own prefix on
 an object store) — and returns per-task metrics aggregated to one row,
 so the job is a DataFrame with no driver-side pixel loop.
 
-Pixel parity with the live server is tested: exported bytes ==
-``LayerService.render_tile`` output for the same keys.
+Both this sink and ``LayerService.render_tile`` render through
+``plans.queries.render_png``, and pixel parity is tested: exported bytes
+== ``render_tile`` output for the same keys.
 """
 
 from __future__ import annotations
@@ -22,31 +23,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
+from ..plans.queries import LayerService, render_png
 from .ingest import read_level
 
 
 def _render_fn(layer: str, operation: str | None, is_landsat: bool, out_dir: str):
     def fn(batches):
         # executor-side imports: keep the closure light
-        from ..core import kernels, png
-        from ..functions.registry import get_op
+        from ..core import kernels
 
         for pdf in batches:
             n, nbytes = 0, 0
             for row in pdf.itertuples(index=False):
-                tile = kernels.decode_payload(row.tile)
-                if not operation:
-                    rgb = (
-                        kernels.render_rgb(tile)
-                        if is_landsat
-                        else kernels.render_rgb_8bit(tile)
-                    )
-                    data = png.encode_rgba(rgb)
-                else:
-                    op = get_op(operation)
-                    data = png.encode_rgba(
-                        kernels.classify(op["fn"](tile), op["ramp"])
-                    )
+                data = render_png(kernels.decode_payload(row.tile), operation, is_landsat)
                 tkey = pd.Timestamp(row.ts).strftime("%Y%m%dT%H%M%SZ")
                 d = os.path.join(
                     out_dir, layer, operation or "rgb", tkey, str(row.zoom), str(row.x)
@@ -74,14 +63,15 @@ def export_tiles(
     zoom: int,
     out_dir: str,
     operation: str | None = "ndvi",
-    is_landsat: bool = True,
     time_iso: str | None = None,
 ) -> dict:
     """Render every tile of ``(layer, zoom)`` (optionally one timestamp)
     into ``out_dir/<layer>/<op>/<time>/<zoom>/<x>/<y>.png``.  Returns
     {tiles, bytes}.  Distributed: the level scan is the only input, each
     task renders and writes its own partition, and the driver sees one
-    metrics row per task."""
+    metrics row per task.  The RGB branch follows the layer's cell type,
+    as on the live server."""
+    is_landsat = LayerService(cat).is_landsat(layer)
     df = read_level(spark, cat, layer, zoom)
     if time_iso is not None:
         df = df.filter(F.col("ts") == F.lit(pd.Timestamp(time_iso)))

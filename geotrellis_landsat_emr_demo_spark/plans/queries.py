@@ -58,6 +58,18 @@ def zonal_partial(payload: bytes, x: int, y: int, zoom: int, mp, op):
     return kernels.masked_sum_count(op(kernels.decode_payload(payload)), mask)
 
 
+def render_png(tile: np.ndarray, operation: str | None, is_landsat: bool) -> bytes:
+    """The /tiles render (Router.scala:266-293): RGB when no operation —
+    the Landsat clamp/normalize chain or the 8-bit mask branch
+    (Render.scala:21,35-49) — else the op's color-mapped index.  Shared
+    by the live route and the static export."""
+    if not operation:
+        rgb = kernels.render_rgb(tile) if is_landsat else kernels.render_rgb_8bit(tile)
+        return png.encode_rgba(rgb)
+    op = get_op(operation)
+    return png.encode_rgba(kernels.classify(op["fn"](tile), op["ramp"]))
+
+
 class LayerService:
     def __init__(self, cat: Catalog, spark=None, tile_cache_size: int = 256):
         self.cat = cat
@@ -226,12 +238,7 @@ class LayerService:
         tile = self.read_tile(layer, zoom, x, y, parse_time(time))
         if tile is None:
             return None
-        if not operation:
-            if self.is_landsat(layer):
-                return png.encode_rgba(kernels.render_rgb(tile))
-            return png.encode_rgba(kernels.render_rgb_8bit(tile))
-        op = get_op(operation)
-        return png.encode_rgba(kernels.classify(op["fn"](tile), op["ramp"]))
+        return render_png(tile, operation, self.is_landsat(layer))
 
     def render_diff(
         self, layer: str, zoom: int, x: int, y: int, time1: str, time2: str, operation: str

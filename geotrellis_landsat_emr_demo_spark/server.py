@@ -63,6 +63,8 @@ def make_handler(svc: LayerService):
         def _handle(self, body_len):
             try:
                 n = int(body_len)
+                if n < 0:  # rfile.read(-1) would block until the client hangs up
+                    raise ValueError(f"negative Content-Length: {n}")
                 self._route(self.rfile.read(n).decode() if n else None)
             except (KeyError, ValueError) as e:
                 # missing parameter or unknown layer (KeyError); unknown

@@ -1,0 +1,52 @@
+"""tools/measure.py end to end: bench.py's method with per-rep Spark
+totals from the event log."""
+
+from __future__ import annotations
+
+import json
+import os
+import shutil
+import subprocess
+import sys
+
+import bench
+from conftest import SCRATCH
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_measure_ingest_and_leaf(spark):
+    """A tiny ingest and one sf0.001 leaf at local[2], 2 interleaved reps:
+    cold and warm reps per variant, Spark tasks attributed to every rep,
+    and the ingest's tile count equal to a direct ``ingest_images``."""
+    from geotrellis_landsat_emr_demo_spark import fixtures
+    from geotrellis_landsat_emr_demo_spark.catalog import Catalog
+    from geotrellis_landsat_emr_demo_spark.operators import ingest
+
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR=os.path.join(os.path.dirname(bench.SF_DIR), "sf0.001"),
+        SPARK_GRAFT_DRIVER_MEM="2g",
+    )
+    cmd = [sys.executable, os.path.join(REPO, "tools", "measure.py"), "--cpus", "2",
+           "--ingest", "2x128", "--leaves", "envelope_pip_join", "--reps", "2"]
+    proc = subprocess.run(cmd, env=env, capture_output=True, text=True, timeout=900)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    by = {r["workload"]: r for r in json.loads(proc.stdout.splitlines()[-1])["results"]}
+    assert set(by) == {"ingest", "envelope_pip_join"}
+    for r in by.values():
+        walls = [rep["wall_s"] for rep in r["reps"]]
+        assert r["cpus"] == 2 and len(walls) == 2
+        assert r["cold_s"] == walls[0] and r["warm_s"] == walls[1]
+        assert all(rep["spark"]["spark.tasks"] > 0 for rep in r["reps"]), r["reps"]
+    assert "Physical Plan" in by["envelope_pip_join"]["plan"]
+    assert set(by["ingest"]["reps"][0]["stages"]) == {"z13", "z12", "z11", "z10", "z9", "attrs"}
+
+    root = os.path.join(SCRATCH, "measure-ingest")
+    shutil.rmtree(root, ignore_errors=True)
+    cat = Catalog(root)
+    cat.append_pandas(fixtures.images_pdf("t-bench", n_scenes=2, px=128), "images")
+    m = ingest.ingest_images(spark, cat, "bench", max_zoom=13, min_zoom=9)
+    tiles = sum(v.get("rows", 0) for v in m.values())
+    assert tiles > 0
+    assert [rep["tiles"] for rep in by["ingest"]["reps"]] == [tiles, tiles]

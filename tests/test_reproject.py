@@ -214,6 +214,14 @@ def test_8bit_layer_dispatch_e2e(spark):
         assert (rgba == expect).all()
     else:
         assert data == png.encode_rgba(expect)
+    # the static export renders the same RGB branch as /tiles
+    from geotrellis_landsat_emr_demo_spark.operators import export
+
+    out = os.path.join(SCRATCH, "planet-export")
+    shutil.rmtree(out, ignore_errors=True)
+    assert export.export_tiles(spark, cat, "planet", zoom, out, operation=None)["tiles"] == 1
+    with open(os.path.join(out, "planet", "rgb", "20150601T000000Z", str(zoom), "500", "400.png"), "rb") as f:
+        assert f.read() == data
 
 
 def test_ingest_utm_scene_e2e(spark):

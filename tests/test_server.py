@@ -191,6 +191,23 @@ def test_bad_requests_get_400(srv):
         assert msg in got["error"], (path, got)
     code, got = _status(f"{srv}/nope")
     assert code == 404 and got == {"error": "no such route"}
+    # a negative Content-Length is rejected, not read to EOF (which would
+    # block the handler thread until the client hangs up)
+    import socket
+    from urllib.parse import urlparse
+
+    u = urlparse(srv)
+    with socket.create_connection((u.hostname, u.port), timeout=10) as s:
+        s.sendall(
+            f"POST /mean/landsat/ndvi?time={t1q} HTTP/1.1\r\nHost: x\r\n"
+            "Content-Length: -1\r\n\r\n".encode()
+        )
+        reply = b""
+        while chunk := s.recv(4096):  # the server closes after one reply
+            reply += chunk
+    status, _, body = reply.decode().partition("\r\n\r\n")
+    assert status.split()[1] == "400", status
+    assert "negative Content-Length" in json.loads(body)["error"]
 
 
 def test_readall_bench_dual_path(spark, tsmall_catalog, svc):

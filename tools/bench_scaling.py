@@ -7,15 +7,19 @@ IDENTICAL job at two parallelism levels — local[8] vs local[32] — on the
 same input and report throughput at both plus
 eff = throughput(32) / (4 x throughput(8)).
 
-Measurement discipline for a noisy shared box: ONE process, one JVM
-(identical heap), sessions rebuilt per level, levels INTERLEAVED
+Measurement discipline for a noisy shared box (tools/measure.py's
+interleaved loop): ONE process, one JVM (identical heap), each level
+pinned to its CPUs on a session rebuilt per level, levels INTERLEAVED
 (8,32,8,32,...) so host throttle drift hits both levels equally, python
-workers pre-warmed, best-of-N per level reported (like `perf stat -r`).
+workers pre-warmed, rep 0 a warm-up, best-of-N per level reported (like
+`perf stat -r`).
 
 Jobs measured:
-  1. image ingest (scenes -> zoom-13 tiles -> pyramid to z10): tiles/sec
+  1. image ingest (measure.py's t-bench ingest: scenes -> zoom-13 tiles
+     -> pyramid to z9): tiles/sec
   2. dedup/join workload over sf0.1 (CPU-heavy wide operators):
      input rows/sec
+  3. CPU-bound MinHash: docs/sec
 
 Writes BENCH/scaling_run.md (raw) and prints one JSON line;
 BENCH/BASELINE.md is curated from the best observations across runs.
@@ -25,12 +29,15 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from tools import measure  # noqa: E402
+
+LEVELS = (8, 32)
 
 # The suite measures the SCALE-PATH operators (the plans that run at
 # 100 TB): LSH near-dup / ANN variants, not their documented O(n^2)
@@ -101,93 +108,6 @@ def scaled_sf_dir(sf_dir: str, k: int) -> str:
     return out
 
 
-def _pin(cpus: int | None):
-    """Pin this process (and every child spawned AFTER the call — the
-    JVM, python workers, pool workers) to the first ``cpus`` logical
-    CPUs; ``None`` restores the full set.
-
-    This is the interference-controlled protocol: an UNPINNED local[8]
-    on a 32-core box quietly borrows extra cores (GC/netty threads + 8
-    python workers overlap across >8 cores), inflating the baseline
-    denominator and DEFLATING measured 8->32 efficiency below what a
-    real 8-core node would give.  Pinning each level to exactly its
-    core budget models the cluster the north rule describes: an N-core
-    executor node HAS N cores.  SCALE_PIN=0 restores the old protocol."""
-    if not hasattr(os, "sched_setaffinity"):
-        return
-    total = os.cpu_count()
-    mask = set(range(total if cpus is None else min(cpus, total)))
-    os.sched_setaffinity(0, mask)
-    # The py4j JVM (launched by the FIRST session) outlives spark.stop()
-    # and keeps its threads' old affinity, so walk every descendant
-    # process and pin each of its threads too.  New threads inherit from
-    # their creating thread, so later-spawned executors/python workers
-    # stay inside the mask.
-    def _tasks(pid):
-        try:
-            return [int(t) for t in os.listdir(f"/proc/{pid}/task")]
-        except OSError:
-            return []
-
-    def _children(pid):
-        kids = []
-        for tid in _tasks(pid):
-            try:
-                with open(f"/proc/{pid}/task/{tid}/children") as f:
-                    kids += [int(x) for x in f.read().split()]
-            except OSError:
-                pass
-        return kids
-
-    stack = _children(os.getpid())
-    while stack:
-        pid = stack.pop()
-        stack += _children(pid)
-        for tid in _tasks(pid):
-            try:
-                os.sched_setaffinity(tid, mask)
-            except OSError:
-                pass
-
-
-def build(cpus: int):
-    from geotrellis_landsat_emr_demo_spark.session import build_session
-
-    spark = build_session(master=f"local[{cpus}]", shuffle_partitions=cpus)
-
-    def _noop(it):
-        for b in it:
-            yield b
-
-    spark.range(cpus * 4, numPartitions=cpus * 4).mapInPandas(_noop, "id long").count()
-    return spark
-
-
-def ingest_job(spark, cpus: int, scenes: int, px: int) -> dict:
-    from geotrellis_landsat_emr_demo_spark import fixtures
-    from geotrellis_landsat_emr_demo_spark.catalog import Catalog
-    from geotrellis_landsat_emr_demo_spark.operators import ingest
-
-    # SCALE_DATA_ROOT: where the ingest catalog lives.  Default is repo
-    # disk (shared vda — saturates near 8 concurrent writers in current
-    # tenancy, see BENCH/BASELINE.md caveats).  Point at /dev/shm to model
-    # storage whose bandwidth scales with executor count (a cluster's
-    # per-executor disks / an object store's aggregate throughput).
-    data_root = os.environ.get(
-        "SCALE_DATA_ROOT", os.path.join(REPO, ".bench_data")
-    )
-    root = os.path.join(data_root, f"scale-{cpus}")
-    shutil.rmtree(root, ignore_errors=True)
-    cat = Catalog(root)
-    cat.append_pandas(fixtures.images_pdf("t-bench", n_scenes=scenes, px=px), "images")
-    t0 = time.time()
-    m = ingest.ingest_images(spark, cat, "bench", max_zoom=13, min_zoom=10)
-    wall = time.time() - t0
-    tiles = sum(v.get("rows", 0) for v in m.values())
-    shutil.rmtree(root, ignore_errors=True)
-    return dict(tiles=tiles, ingest_wall=wall, tiles_per_sec=tiles / wall)
-
-
 def joins_job(spark, sf_dir: str) -> dict:
     import __spark_entry__ as entry
 
@@ -208,7 +128,7 @@ def joins_job(spark, sf_dir: str) -> dict:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
         for t in ("events", "documents", "embeddings")
     )
-    return dict(join_out_rows=rows, join_wall=wall, join_rows_per_sec=nin / wall,
+    return dict(join_out_rows=rows, wall_s=wall, join_rows_per_sec=nin / wall,
                 join_per_query=per_q)
 
 
@@ -240,7 +160,7 @@ def cpu_job(spark, sf_dir: str, target_docs: int = 400_000) -> dict:
     )
     wall = time.time() - t0
     assert out == total
-    return dict(cpu_docs=total, cpu_wall=wall, cpu_docs_per_sec=total / wall)
+    return dict(cpu_docs=total, wall_s=wall, cpu_docs_per_sec=total / wall)
 
 
 def _kernel_probe_worker(i: int) -> int:
@@ -259,11 +179,9 @@ def kernel_probe(jobs: int = 96) -> dict:
     isolates the single-node memory-bandwidth ceiling from Spark overheads."""
     import multiprocessing as mp
 
-    pin = os.environ.get("SCALE_PIN", "1") == "1"
     out = {}
-    for procs in (8, 32):
-        if pin:
-            _pin(procs)
+    for procs in LEVELS:
+        measure.pin(procs)
         try:
             with mp.Pool(procs) as pool:
                 pool.map(_kernel_probe_worker, range(procs))  # warm imports
@@ -271,8 +189,7 @@ def kernel_probe(jobs: int = 96) -> dict:
                 tiles = sum(pool.map(_kernel_probe_worker, range(jobs)))
                 out[procs] = tiles / (time.time() - t0)
         finally:
-            if pin:
-                _pin(None)
+            measure.pin(None)
     out["efficiency"] = out[32] / (4 * out[8])
     return out
 
@@ -283,62 +200,62 @@ def main():
     reps = int(os.environ.get("SCALE_REPS", "2"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     join_k = int(os.environ.get("SCALE_JOIN_K", "16"))
-    join_dir = scaled_sf_dir(sf_dir, join_k) if join_k > 1 else sf_dir
 
     # SCALE_SUITES: comma list of ingest,joins,cpu (default all) — rerun
     # a single contended suite without paying for the others
     suites = set(
         os.environ.get("SCALE_SUITES", "ingest,joins,cpu").split(",")
     )
-    pin = os.environ.get("SCALE_PIN", "1") == "1"
-    obs = {8: [], 32: []}
-    for _ in range(reps):
-        for cpus in (8, 32):
-            if pin:
-                _pin(cpus)  # JVM + python workers inherit the affinity
-            spark = build(cpus)
-            # cold pass warms the page cache / JIT / python workers (a real
-            # cluster pays these once per long-lived executor, not per job);
-            # the measured pass is steady-state
-            r = {}
-            if "ingest" in suites:
-                ingest_job(spark, cpus, scenes, px)
-                r = ingest_job(spark, cpus, scenes, px)
-            if "joins" in suites:
-                joins_job(spark, join_dir)
-                r.update(joins_job(spark, join_dir))
-            if "cpu" in suites:
-                cpu_job(spark, sf_dir)
-                r.update(cpu_job(spark, sf_dir))
-            r["cpus"] = cpus
-            obs[cpus].append(r)
-            print(f"# obs {r}", flush=True)
-            spark.stop()
-            if pin:
-                _pin(None)
+    runs = {}
+    if "ingest" in suites:
+        from geotrellis_landsat_emr_demo_spark import fixtures
 
-    def best(level, key):
-        return max(o[key] for o in obs[level])
-
+        images = fixtures.images_pdf("t-bench", n_scenes=scenes, px=px)
+        runs["ingest"] = measure.ingest(images, {})
+    if "joins" in suites:
+        join_dir = scaled_sf_dir(sf_dir, join_k) if join_k > 1 else sf_dir
+        runs["joins"] = lambda spark: joins_job(spark, join_dir)
+    if "cpu" in suites:
+        runs["cpu"] = lambda spark: cpu_job(spark, sf_dir)
+    # rep 0 warms the page cache / JIT / python workers (a real cluster
+    # pays these once per long-lived executor, not per job); the reps
+    # after it are the steady-state observations
+    results = measure.measure(
+        [measure.Variant(name, cpus, fn) for cpus in LEVELS for name, fn in runs.items()], reps + 1
+    )
+    obs = {cpus: [{} for _ in range(reps)] for cpus in LEVELS}
+    for r in results:
+        for o, rep in zip(obs[r["cpus"]], r["reps"][1:]):
+            o[r["workload"]] = rep
     if suites != {"ingest", "joins", "cpu"}:
         # partial rerun: print raw observations only, keep the full report
-        print(json.dumps({"partial": sorted(suites), "obs": {k: v for k, v in obs.items()}}, default=str))
+        print(json.dumps({"partial": sorted(suites), "obs": obs}, default=str))
         return
+    rate = dict(
+        ingest=lambda r: r["tiles"] / r["wall_s"],
+        joins=lambda r: r["join_rows_per_sec"],
+        cpu=lambda r: r["cpu_docs_per_sec"],
+    )
+
+    def best(level, suite):
+        return max(rate[suite](o[suite]) for o in obs[level])
+
     probe = kernel_probe()
-    lo_t, hi_t = best(8, "tiles_per_sec"), best(32, "tiles_per_sec")
-    lo_j, hi_j = best(8, "join_rows_per_sec"), best(32, "join_rows_per_sec")
-    lo_c, hi_c = best(8, "cpu_docs_per_sec"), best(32, "cpu_docs_per_sec")
+    lo_t, hi_t = best(8, "ingest"), best(32, "ingest")
+    lo_j, hi_j = best(8, "joins"), best(32, "joins")
+    lo_c, hi_c = best(8, "cpu"), best(32, "cpu")
     eff_ingest = hi_t / (4 * lo_t)
     eff_join = hi_j / (4 * lo_j)
     eff_cpu = hi_c / (4 * lo_c)
-    tiles = obs[8][0]["tiles"]
-    def paired(key):
+    tiles = obs[8][0]["ingest"]["tiles"]
+
+    def paired(suite):
         """Per-rep (n8, n32) efficiencies — each rep's levels run
         time-adjacent, so a pair shares one tenancy window; the max pair
         is the interference-controlled reading (best-of-LEVEL mixes
         windows and understates when one level lucks into a clean one)."""
         return [
-            round(b[key] / (4 * a[key]), 3)
+            round(rate[suite](b[suite]) / (4 * rate[suite](a[suite])), 3)
             for a, b in zip(obs[8], obs[32])
         ]
 
@@ -349,26 +266,25 @@ def main():
     ceil = probe["efficiency"]
     result = dict(
         ingest=dict(n8=round(lo_t, 1), n32=round(hi_t, 1), efficiency=round(eff_ingest, 3), tiles=tiles,
-                    paired=paired("tiles_per_sec"),
+                    paired=paired("ingest"),
                     vs_ceiling=round(eff_ingest / ceil, 3),
-                    paired_vs_ceiling=[round(p / ceil, 3) for p in paired("tiles_per_sec")]),
+                    paired_vs_ceiling=[round(p / ceil, 3) for p in paired("ingest")]),
         joins=dict(n8=round(lo_j, 1), n32=round(hi_j, 1), efficiency=round(eff_join, 3),
-                   paired=paired("join_rows_per_sec"),
+                   paired=paired("joins"),
                    vs_ceiling=round(eff_join / ceil, 3),
-                   paired_vs_ceiling=[round(p / ceil, 3) for p in paired("join_rows_per_sec")],
+                   paired_vs_ceiling=[round(p / ceil, 3) for p in paired("joins")],
                    per_query_walls={
-                       lvl: [o["join_per_query"] for o in obs[lvl]] for lvl in (8, 32)
+                       lvl: [o["joins"]["join_per_query"] for o in obs[lvl]] for lvl in LEVELS
                    }),
         cpu_minhash=dict(n8=round(lo_c, 1), n32=round(hi_c, 1), efficiency=round(eff_cpu, 3),
-                         paired=paired("cpu_docs_per_sec"),
+                         paired=paired("cpu"),
                          vs_ceiling=round(eff_cpu / ceil, 3),
-                         paired_vs_ceiling=[round(p / ceil, 3) for p in paired("cpu_docs_per_sec")]),
+                         paired_vs_ceiling=[round(p / ceil, 3) for p in paired("cpu")]),
         kernel_probe=dict(
             n8=round(probe[8], 1), n32=round(probe[32], 1),
             efficiency=round(probe["efficiency"], 3),
         ),
-        config=dict(scenes=scenes, px=px, sf_dir=sf_dir, join_k=join_k, reps=reps,
-                    pinned=os.environ.get("SCALE_PIN", "1") == "1"),
+        config=dict(scenes=scenes, px=px, sf_dir=sf_dir, join_k=join_k, reps=reps),
     )
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     # raw report per run; BENCH/BASELINE.md is curated from the best
@@ -379,10 +295,11 @@ def main():
 
 Per BASELINE.md §2: the same job at two parallelism levels (no real
 cluster in this sandbox), `local[8]` vs `local[32]`, identical input,
-one JVM, levels interleaved, warmup pass per level (page cache /\nJIT / python workers), best of {reps} steady-state runs per level.
+one JVM, each level pinned to its CPUs, levels interleaved, a warm-up rep
+(page cache / JIT / python workers), best of {reps} steady-state runs per level.
 `eff = throughput(32) / (4 x throughput(8))`; north_rule target >= 0.8.
 
-## Image ingest ({scenes} scenes @ {px}px -> zoom-13 tiles + pyramid to z10)
+## Image ingest ({scenes} scenes @ {px}px -> zoom-13 tiles + pyramid to z9)
 
 | parallelism | tiles | tiles/sec |
 |---|---|---|
