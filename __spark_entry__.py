@@ -600,7 +600,8 @@ def sql_dedup_exact():
 def q_dedup_minhash_bands(spark, sf_dir):
     """MinHash banding with portable string-min hashes: band bucket = the
     two per-seed min(md5(seed||word)); buckets with >1 doc are near-dup
-    candidates (engine: operators.textops.minhash_signatures/lsh_pairs)."""
+    candidates (engine: operators.textops.minhash_portable_signatures /
+    _minhash_banded)."""
     d = _spread(_t(spark, sf_dir, "documents"))
     words = d.select(
         "doc_id", F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("w")
@@ -1670,9 +1671,7 @@ def q_minhash_lsh_pairs(spark, sf_dir):
     """Full MinHash+LSH near-dup pipeline, JVM-only portable formulation:
     explode distinct word 3-shingles -> per-seed min(md5(seed||shingle))
     signatures -> banded bucket equi-join -> signature-estimated Jaccard
-    (engine: operators.textops.minhash_portable_pairs; the numpy
-    multiply-shift path minhash_dedup_pairs is the wide-signature variant,
-    pytest-oracled)."""
+    (engine: operators.textops.minhash_portable_pairs)."""
     from geotrellis_landsat_emr_demo_spark.operators.textops import (
         minhash_portable_pairs,
     )

@@ -15,7 +15,6 @@ Even-odd semantics make holes fall out of the same ray-cast.
 from __future__ import annotations
 
 import json
-import math
 
 import numpy as np
 
@@ -288,18 +287,6 @@ def _rects_chunk(xmin, ymin, xmax, ymax, mp):
                 cross |= seg.any(axis=1).reshape(-1, 4).any(axis=1)
         hit[rem[cross]] = True
     return hit
-
-
-def parse_extent(s):
-    """'xmin,ymin,xmax,ymax' -> tuple of floats (Extent.fromString,
-    TemporalMultibandLandsatInput.scala:43)."""
-    xmin, ymin, xmax, ymax = (float(v) for v in s.split(","))
-    return xmin, ymin, xmax, ymax
-
-
-def envelopes_intersect(a, b):
-    """Envelope overlap predicate (P3)."""
-    return not (a[2] < b[0] or a[0] > b[2] or a[3] < b[1] or a[1] > b[3])
 
 
 def haversine_m(lat1, lng1, lat2, lng2):

@@ -70,7 +70,6 @@ def _zigzag_order() -> np.ndarray:
 
 
 ZIGZAG = _zigzag_order()          # natural index for each zigzag position
-UNZIGZAG = np.argsort(ZIGZAG)     # zigzag position for each natural index
 
 # Annex K.3/K.5 luminance Huffman specs (BITS counts per code length 1..16
 # followed by the symbol values in canonical order)

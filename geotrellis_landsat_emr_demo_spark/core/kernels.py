@@ -326,89 +326,31 @@ def classify(values: np.ndarray, ramp) -> np.ndarray:
 
 # ---------------------------------------------------------- resampling ----
 
-def bilinear_sample(src: np.ndarray, fx: np.ndarray, fy: np.ndarray) -> np.ndarray:
-    """NaN-aware bilinear sample of ``src`` (h, w) float64 at fractional
-    pixel coords (fx = col-space, fy = row-space, pixel centers at integers).
-
-    Weights of NaN neighbors are dropped and remaining weights renormalized;
-    all-NaN or out-of-bounds -> NaN.  Shared by tileToLayout regrid (A3),
-    pyramid (A4) and overzoom serving (F16 / ReaderSet.scala:54-72).
-    Delegates to the multiband hot path."""
-    return bilinear_sample_multi(src[None, :, :], fx, fy)[0]
-
-
-def bilinear_sample_multi(
-    src: np.ndarray, fx: np.ndarray, fy: np.ndarray, pre=None
-) -> np.ndarray:
-    """NaN-aware bilinear sample of a multiband (nb, h, w) float64 raster at
-    fractional pixel coords shared across bands.
-
-    Hot-path formulation: value = sum(w_i * v_i * m_i) / sum(w_i * m_i)
-    with m the data mask — a plain weighted interpolation of (value*mask)
-    over an interpolation of mask, mathematically identical to dropping
-    NaN neighbors and renormalizing, but with no NaN branching in the loop.
-    ``pre`` optionally carries precomputed (vm, m) from
-    :func:`prepare_bilinear_src` so repeated samples of one scene skip the
-    mask build."""
-    nb, h, w = src.shape
-    if pre is None:
-        pre = prepare_bilinear_src(src)
-    vm, m = pre
-    x0 = np.floor(fx).astype("i8")
-    y0 = np.floor(fy).astype("i8")
-    tx = fx - x0
-    ty = fy - y0
-    x0c = np.clip(x0, 0, w - 1)
-    x1c = np.clip(x0 + 1, 0, w - 1)
-    y0c = np.clip(y0, 0, h - 1)
-    y1c = np.clip(y0 + 1, 0, h - 1)
-    w00 = (1 - tx) * (1 - ty)
-    w01 = tx * (1 - ty)
-    w10 = (1 - tx) * ty
-    w11 = tx * ty
-    num = w00 * vm[:, y0c, x0c]
-    num += w01 * vm[:, y0c, x1c]
-    num += w10 * vm[:, y1c, x0c]
-    num += w11 * vm[:, y1c, x1c]
-    den = w00 * m[:, y0c, x0c]
-    den += w01 * m[:, y0c, x1c]
-    den += w10 * m[:, y1c, x0c]
-    den += w11 * m[:, y1c, x1c]
-    with np.errstate(invalid="ignore", divide="ignore"):
-        out = num / den
-    out[den <= 0] = np.nan
-    oob = (fx < -0.5) | (fx > w - 0.5) | (fy < -0.5) | (fy > h - 0.5)
-    if oob.any():
-        out[:, oob] = np.nan
-    return out
-
-
-def prepare_bilinear_src(src: np.ndarray):
-    """(value*mask, mask) float64 pair for :func:`bilinear_sample_multi`."""
-    m = (~np.isnan(src)).astype("f8")
-    vm = np.where(np.isnan(src), 0.0, src)
-    return vm, m
-
-
 def bilinear_sample_u16(
     src_u16: np.ndarray,
     fx: np.ndarray,
     fy: np.ndarray,
     nodata_free: bool = False,
 ) -> np.ndarray:
-    """:func:`bilinear_sample_multi` specialized to a raw (nb, h, w)
-    uint16 raster with the 0 NoData sentinel — BITWISE-identical output
-    (``to_double`` maps 0 -> NaN, so the multi path's value*mask array IS
-    the raw raster and its mask IS ``raster != 0``; the accumulation
-    order and f8 arithmetic below are the same).
+    """NaN-aware bilinear sample of a raw (nb, h, w) uint16 raster (0 =
+    NoData) at fractional pixel coords shared across bands (fx = col-space,
+    fy = row-space, pixel centers at integers).  Output float64, NaN =
+    NoData.  The sampler of warp grids (non-3857 CRS), whose coords are
+    genuinely 2-D; axis-aligned grids (ingest regrid, overzoom serving,
+    F16 / ReaderSet.scala:54-72) use :func:`bilinear_sample_u16_axis`.
 
-    Why it exists: the multi path gathers from two precomputed float64
-    planes (value*mask, mask) — 16 bytes of random-access traffic per
-    neighbor sample.  Gathering the uint16 source directly costs 2 bytes
-    per neighbor and derives the mask from the gathered values, an 8x
-    cut in the gather bytes that dominate the chunk kernel (profiled:
-    the sampler body is ~2/3 of ingest's python time), and the
-    (value*mask, mask) planes are never materialized at all."""
+    value = sum(w_i * v_i * m_i) / sum(w_i * m_i) with m_i = (v_i != 0):
+    an interpolation of value*mask over an interpolation of mask, i.e.
+    NoData neighbors are dropped and the remaining weights renormalized,
+    with no NaN branching.  All-NoData neighborhoods and samples outside
+    the raster by more than half a pixel (fx < -0.5, fx > w - 0.5, and
+    likewise fy) -> NaN.
+
+    Gathering the uint16 source directly costs 2 bytes of random-access
+    traffic per neighbor and derives the mask from the gathered values;
+    precomputed float64 (value*mask, mask) planes would cost 16 — the
+    gathers dominate the chunk kernel (profiled: the sampler body is ~2/3
+    of ingest's python time)."""
     nb, h, w = src_u16.shape
     x0 = np.floor(fx).astype("i8")
     y0 = np.floor(fy).astype("i8")
@@ -578,6 +520,10 @@ def warp_to_extent(
     the closed forms in core.proj, then bilinear-sampled in the source
     grid — the reproject-before-tiling of the reference ingest
     (LandsatInput.scala:72; NoData fills outside the curved scene image).
+
+    A test reference: ingest warps per tile inside
+    :func:`split_to_tiles_cropped`, which the reprojection tests pin
+    bitwise-equal to this whole-tile warp.
     """
     from . import proj as _proj
 
@@ -608,11 +554,12 @@ def split_to_tiles_cropped(
     ((col, row), (ox, oy), (bands, fh, fw) uint16) CROPPED fragments —
     only the tile pixels with any in-source bilinear support.
 
-    Every pixel outside the crop is NoData by
-    :func:`bilinear_sample_multi`'s out-of-bounds rule (|fx| beyond
-    [-0.5, w-0.5] -> NaN), so compositing the fragment into a NoData
-    canvas at (ox, oy) is bitwise-equal to the full-tile sample — that is
-    the contract :func:`split_to_tiles` wraps and the parity tests pin.
+    Every pixel outside the crop is NoData: the samplers return NaN for
+    any coordinate outside [-0.5, w-0.5] x [-0.5, h-0.5], and the crop is
+    the bounding box of the tile pixels whose coordinates are inside.  So
+    :func:`pad_to_tile` of a fragment at (ox, oy) onto a NoData canvas is
+    bitwise-equal to the full-tile sample (``regrid_to_extent`` /
+    ``warp_to_extent`` of the tile extent), which the parity tests pin.
 
     Why cropped: a scene's covering tile set includes many partially
     covered border tiles; padded full tiles inflated the ingest
@@ -712,26 +659,6 @@ def union_bbox(offsets, shapes):
     return x0, y0, x1, y1
 
 
-def split_to_tiles(
-    src_u16: np.ndarray,
-    src_extent,
-    zoom: int,
-    tile_range,
-    tile_size: int = 256,
-    src_crs: str = "EPSG:3857",
-):
-    """Full-tile form of :func:`split_to_tiles_cropped`: yields
-    ((col, row), (bands, ts, ts) uint16), each fragment padded back onto
-    the NoData canvas.  Output is bitwise-equal to
-    regrid_to_extent(src, src_extent, tile_extent(c, r, zoom)) per tile
-    (oracle parity, tests/test_core.py) — the crop excludes exactly the
-    pixels the sampler NaNs."""
-    for (c, r), (ox, oy), arr in split_to_tiles_cropped(
-        src_u16, src_extent, zoom, tile_range, tile_size, src_crs
-    ):
-        yield (c, r), pad_to_tile(arr, ox, oy, tile_size)
-
-
 def downsample_2x2(child_f8: np.ndarray) -> np.ndarray:
     """(bands, 2n, 2n) float64 -> (bands, n, n): NaN-aware mean of each 2x2
     block — the z -> z-1 pyramid resample (Pyramid.upLevels Bilinear at
@@ -766,6 +693,10 @@ def merge_fragments(fragments, image_ids) -> np.ndarray:
     """Merge co-keyed tile fragments: first-data-wins in ascending image_id
     order (order-insensitized version of GeoTrellis tile merge,
     LandsatIngest.scala:39-40; SURVEY §7 'merge determinism').
+
+    A test reference: ingest merges through :func:`merge_fragments_ranked`
+    / :func:`combine_ranked`, which the ingest tests and perfbench's
+    oracle pin equal to this definition.
 
     fragments: list of (bands, h, w) uint16;  image_ids: parallel list.
     """

@@ -106,16 +106,3 @@ def pixel_centers(xmin, ymin, xmax, ymax, cols, rows):
     xs = xmin + (np.arange(cols, dtype="f8") + 0.5) * cw
     ys = ymax - (np.arange(rows, dtype="f8") + 0.5) * ch
     return xs, ys
-
-
-def parent_tile(col, row):
-    """Tile at zoom z -> its parent at z-1 (2x2 children -> 1 parent).
-
-    The pyramid aggregation key (LandsatIngest.scala:42, Pyramid.upLevels).
-    """
-    return col // 2, row // 2
-
-
-def child_quadrant(col, row):
-    """Which quadrant (0..3 = 2*dy+dx) a tile occupies within its parent."""
-    return (row % 2) * 2 + (col % 2)

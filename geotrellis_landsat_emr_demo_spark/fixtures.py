@@ -21,7 +21,7 @@ from datetime import datetime, timezone
 import numpy as np
 import pandas as pd
 
-from . import NBANDS, SEED, TILE_SIZE
+from . import NBANDS, SEED
 from .core import geom, kernels, tiling
 
 # Region: around the reference's default Japan bbox corner

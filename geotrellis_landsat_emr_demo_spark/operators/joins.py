@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..core import cellindex, geom, kernels, tiling
+from ..core import geom, kernels, tiling
 from ..functions.registry import get_op
 from ..plans.queries import parse_time, zonal_partial
 

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -39,12 +39,11 @@ def _norm(a):
 
 
 def with_cosine_expr(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    """Catalyst higher-order-function cosine (the original formulation).
-
-    Kept as the semantic reference: HOF lambdas are CodegenFallback in
-    Spark 4 (interpreted, boxed per element), so :func:`with_cosine`
-    below computes the SAME value — bit-for-bit — through one vectorized
-    Arrow batch instead (tests/test_similarity_exact.py pins equality)."""
+    """Catalyst higher-order-function cosine — a test reference: no query
+    runs it.  HOF lambdas are CodegenFallback in Spark 4 (interpreted,
+    boxed per element), so :func:`with_cosine` below computes the SAME
+    value — bit-for-bit — through one vectorized Arrow batch instead;
+    tests/test_similarity_exact.py pins the two equal."""
     return df.withColumn(
         out, _dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b)))
     )

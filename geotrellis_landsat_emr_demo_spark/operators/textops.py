@@ -6,12 +6,15 @@ Python in any shuffle-adjacent stage.
 
 Dedup family:
 - :func:`exact_dedup`        hash-groupBy on a normalized fingerprint
-- :func:`minhash_signatures` word-shingle MinHash (vectorized uint64 numpy)
-- :func:`minhash_portable_pairs` JVM-only MinHash+LSH pipeline (min-md5
-  signatures; bit-identical to a plain-SQL recomputation — oracle-checked)
-- :func:`lsh_pairs`          banded LSH candidate pairs (explode + bucket join)
-- :func:`simhash64`          64-bit SimHash, pure Catalyst column algebra
-- :func:`simhash_near_pairs` 4x16-bit block tables (pigeonhole-exact to
+- :func:`minhash_portable_signatures` word-shingle MinHash: per-seed
+  min(md5(seed || shingle)), one vectorized Arrow pass; bit-identical to
+  a plain-SQL recomputation (oracle-checked)
+- :func:`minhash_portable_pairs` MinHash+LSH near-dup pairs: banded bucket
+  equi-join on those signatures, estimated-Jaccard verify
+- :func:`incremental_minhash_pairs` probe a new batch against a stored
+  signature corpus (the streaming dedup path)
+- :func:`simhash_near_pairs` 64-bit SimHash signatures in one Arrow pass
+  (:func:`_simhash_table`), 4x16-bit block tables (pigeonhole-exact to
   hamming 3), block rows via one posexplode of the checkpointed signature
 - :func:`ngram_jaccard_pairs` exact Jaccard via a PREFIX-FILTERED
   inverted-index join (Bayardo WWW'07; hot tokens sort last, so skew is
@@ -44,7 +47,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
@@ -73,61 +76,6 @@ def exact_dedup(docs: DataFrame, key=None) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------- minhash --
-
-_MIX = np.uint64(0x9E3779B97F4A7C15)  # odd golden-ratio multiplier
-
-
-def _hash_params(n_hashes: int, seed: int = 1337):
-    """Deterministic odd multipliers + offsets for the multiply-shift
-    universal-hash family h_i(x) = (a_i * x + b_i) mod 2^64 (a_i odd)."""
-    rng = np.random.default_rng(seed)
-    a = rng.integers(0, 1 << 63, size=n_hashes).astype(np.uint64) * 2 + 1
-    b = rng.integers(0, 1 << 63, size=n_hashes).astype(np.uint64)
-    return a, b
-
-
-def _shingle_hashes(words: list[str], k: int) -> np.ndarray:
-    """uint64 hashes of the distinct word k-shingles — all vectorized:
-    word hashes via pandas' C siphash (deterministic across runs/machines),
-    shingles via a rolling odd-multiplier combine (no per-shingle Python)."""
-    if not words:
-        return np.zeros(1, dtype=np.uint64)
-    wh = pd.util.hash_array(np.asarray(words, dtype=object)).astype(np.uint64)
-    if len(wh) < k:
-        k = len(wh)
-    with np.errstate(over="ignore"):
-        acc = wh[: len(wh) - k + 1].copy()
-        for j in range(1, k):
-            acc = acc * _MIX + wh[j : len(wh) - k + 1 + j]
-    return np.unique(acc)
-
-
-def minhash_signatures(
-    docs: DataFrame, n_hashes: int = 16, shingle_k: int = 3
-) -> DataFrame:
-    """(doc_id, sig array<bigint>): MinHash over word k-shingles.
-
-    The whole hot path is numpy uint64: siphash word hashes, rolling-combine
-    shingle hashes, multiply-shift universal hashes, column-min — no
-    per-shingle Python and no object-dtype math (Arrow batches in/out)."""
-    a, b = _hash_params(n_hashes)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sig_udf(texts: pd.Series) -> pd.Series:
-        out = []
-        with np.errstate(over="ignore"):
-            for t in texts:
-                base = _shingle_hashes(t.lower().split(), shingle_k)
-                # (n_shingles, 1) * (n_hashes,) mod 2^64 -> min over shingles
-                hv = base[:, None] * a[None, :] + b[None, :]
-                out.append(hv.min(axis=0).view(np.int64).tolist())
-        return pd.Series(out)
-
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.repartition(par).select("doc_id", sig_udf(F.col("text")).alias("sig"))
-
-
 # ------------------------------------------------ portable (JVM) minhash --
 
 def _shingles_col(text_col, k: int):
@@ -146,9 +94,10 @@ def minhash_signatures_expr(
 ) -> DataFrame:
     """MinHash computed entirely JVM-side: explode the distinct shingles,
     take per-seed min(md5(seed || shingle)) strings — the semantic
-    reference formulation (and the shape of the oracle SQL twin).
-    :func:`minhash_portable_signatures` computes the identical values
-    through one vectorized Arrow pass; tests pin them equal."""
+    reference formulation (and the shape of the oracle SQL twin).  A test
+    reference: no query runs it.  :func:`minhash_portable_signatures`
+    computes the identical values through one vectorized Arrow pass;
+    tests pin them equal."""
     # small parquet inputs arrive as ONE scan partition; spread the docs
     # first or the explode + md5 partial-aggregation runs in a single task
     par = docs.sparkSession.sparkContext.defaultParallelism
@@ -327,79 +276,6 @@ def minhash_portable_pairs(
     )
 
 
-def lsh_pairs(signatures: DataFrame, bands: int = 4) -> DataFrame:
-    """Banded LSH: split each signature into ``bands`` bands, bucket-join.
-
-    Returns candidate pairs (doc_a < doc_b, band). One shuffle on the band
-    bucket key; buckets are tiny so the self-join is bucket-local."""
-    n = bands
-    # the last band absorbs any remainder so every signature element lands
-    # in exactly one band (floor(size/n) per band would silently drop the
-    # trailing hashes from all bands, losing recall with no warning)
-    width = (F.size("sig") / n).cast("int")
-    banded = signatures.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n - 1)),
-                lambda i: F.slice(
-                    F.col("sig"),
-                    i * width + 1,
-                    F.when(i == n - 1, F.size("sig") - i * width).otherwise(width),
-                ),
-            )
-        ).alias("band", "chunk"),
-    ).select(
-        "doc_id", "band", F.xxhash64(F.to_json(F.struct("band", "chunk"))).alias("bucket")
-    )
-    x = banded.alias("x")
-    y = banded.alias("y")
-    return (
-        x.join(
-            y,
-            (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("x.band").alias("band"),
-        )
-        .distinct()
-    )
-
-
-def minhash_dedup_pairs(
-    docs: DataFrame, n_hashes: int = 16, bands: int = 4, threshold: float = 0.6,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Full MinHash+LSH near-dup pipeline: candidates from banded LSH,
-    verified by exact signature-estimated Jaccard >= threshold."""
-    # signatures feed lsh_pairs (twice: both join sides) and both verify
-    # sides — materialize once so the Arrow MinHash UDF runs one pass
-    sigs = minhash_signatures(docs, n_hashes, shingle_k).localCheckpoint(eager=True)
-    cand = lsh_pairs(sigs, bands).select("doc_a", "doc_b").distinct()
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    est = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "est_jaccard",
-            F.aggregate(
-                F.zip_with("sig_a", "sig_b", lambda p, q: (p == q).cast("int")),
-                F.lit(0),
-                lambda acc, v: acc + v,
-            )
-            / F.size("sig_a"),
-        )
-    )
-    return est.filter(F.col("est_jaccard") >= threshold).select(
-        "doc_a", "doc_b", "est_jaccard"
-    )
-
-
 def incremental_minhash_pairs(
     new_docs: DataFrame,
     corpus_sigs: DataFrame,
@@ -538,7 +414,6 @@ def incremental_minhash_pairs(
 # b%4 of that digit — a fixed permutation of md5's first 64 bits, chosen
 # because every SQL engine can extract it with substr + strpos arithmetic
 # (the oracle computes the identical value).
-_HEX = "0123456789abcdef"
 
 
 def _simhash_votes(words_df: DataFrame) -> DataFrame:
@@ -568,7 +443,9 @@ def _simhash_votes(words_df: DataFrame) -> DataFrame:
 
 def _simhash_full(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash, v0..v63) — simhash plus the per-bit votes the
-    block tables are sliced from."""
+    block tables are sliced from.  A test reference, in pure Catalyst:
+    queries run :func:`_simhash_table`, which the tests pin bit-identical
+    to ``simhash_blocks(_simhash_full(docs))``."""
     # spread the (often single-partition) doc scan before the word explode
     # so the md5 + 64-vote partial aggregation parallelizes
     par = docs.sparkSession.sparkContext.defaultParallelism
@@ -588,14 +465,16 @@ def _simhash_full(docs: DataFrame) -> DataFrame:
 def simhash64(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash bigint): 64-bit SimHash over word hashes — bit b is
     the majority vote (strictly positive) of bit b across all word
-    occurrences.  Entirely JVM-side column algebra: no Python UDF."""
+    occurrences.  Entirely JVM-side column algebra: no Python UDF.  A test
+    reference (over :func:`_simhash_full`): no query runs it."""
     return _simhash_full(docs).select("doc_id", "simhash")
 
 
 def simhash_blocks(sh: DataFrame, n_blocks: int = 4) -> DataFrame:
     """Add block0..block{n-1}: 16-bit slices of the simhash, from the vote
     columns (avoids signed-shift edge cases). Pigeonhole: any pair within
-    hamming <= n_blocks - 1 shares at least one identical block."""
+    hamming <= n_blocks - 1 shares at least one identical block.  A test
+    reference (over :func:`_simhash_full`): no query runs it."""
     width = 64 // n_blocks
     bit = lambda b: F.when(F.col(f"v{b}") > 0, 1).otherwise(0)  # noqa: E731
     out = sh

@@ -114,15 +114,19 @@ def test_warp_nodata_outside_footprint():
 
 
 def test_split_to_tiles_warped_parity():
-    """split_to_tiles(src_crs=UTM) is bitwise-equal to warp_to_extent of
-    each tile extent — same oracle pattern as the 3857 split parity."""
+    """split_to_tiles_cropped(src_crs=UTM), padded back onto the tile, is
+    bitwise-equal to warp_to_extent of each tile extent — same oracle
+    pattern as the 3857 split parity."""
     scene = _utm_scene(px=256)
     zoom = 10
     env = proj.extent_to_mercator(UTM_EXT, CRS)
     trange = tiling.extent_to_tile_range(*env, zoom)
-    tiles = dict(
-        kernels.split_to_tiles(scene, UTM_EXT, zoom, trange, 256, src_crs=CRS)
-    )
+    tiles = {
+        key: kernels.pad_to_tile(arr, ox, oy, 256)
+        for key, (ox, oy), arr in kernels.split_to_tiles_cropped(
+            scene, UTM_EXT, zoom, trange, 256, src_crs=CRS
+        )
+    }
     assert len(tiles) >= 2
     for (c, r), tile in tiles.items():
         oracle = kernels.warp_to_extent(

@@ -127,7 +127,7 @@ def measure(spark, n: int) -> dict:
     n_out = textops.simhash_near_pairs(docs, max_hamming=3).count()
     wall = time.time() - t0
     sh = (
-        textops.simhash_blocks(textops._simhash_full(docs), 4)
+        textops._simhash_table(docs, 4)
         .select("doc_id", *[f"block{t}" for t in range(4)])
         .localCheckpoint(eager=True)
     )
