@@ -5,7 +5,8 @@ Replaces the reference's geotrellis.vector usage:
 - GeoJSON parse + Polygon->MultiPolygon normalization (Router.scala:128-137)
 - geometry envelope (Router.scala:75,138)
 - the implicit cell-center-in-polygon rasterization inside polygonalMean
-  (Router.scala:151) — here an explicit vectorized even-odd ray cast.
+  (Router.scala:151) — here an explicit even-odd ray cast, evaluated
+  per scanline (:func:`grid_mask`).
 
 Polygons are represented as ``list[list[np.ndarray(n,2)]]``:
 multipolygon -> polygons -> rings (first ring = exterior, rest = holes).
@@ -104,20 +105,22 @@ def _ring_crossings(px, py, ring):
     return hits.sum(axis=1)
 
 
+def _closed(ring):
+    """The ring, with its first vertex repeated at the end if it is not."""
+    return ring if (ring[0] == ring[-1]).all() else np.vstack([ring, ring[:1]])
+
+
 def points_in_multipolygon(px, py, mp):
     """Even-odd ray cast: boolean mask of points inside the multipolygon.
 
-    Used for both the zonal mask (A5/F21) and the PIP join refine step.
+    The PIP join refine step; :func:`grid_mask` is its scanline form.
     """
     px = np.atleast_1d(np.asarray(px, dtype="f8"))
     py = np.atleast_1d(np.asarray(py, dtype="f8"))
     total = np.zeros(px.shape[0], dtype="i8")
     for poly in mp:
         for ring in poly:
-            r = ring
-            if not (r[0] == r[-1]).all():
-                r = np.vstack([r, r[:1]])
-            total += _ring_crossings(px, py, r)
+            total += _ring_crossings(px, py, _closed(ring))
     return (total % 2) == 1
 
 
@@ -125,11 +128,29 @@ def grid_mask(xs, ys, mp):
     """Pixel-center mask for a grid: xs (cols,), ys (rows,) -> bool (rows, cols).
 
     Rasterization of the query polygon with cell-center-in-polygon
-    semantics, as polygonalMean does (Router.scala:151).
+    semantics, as polygonalMean does (Router.scala:151) (A5/F21).  The
+    scanline form of :func:`points_in_multipolygon`, equal to it bit for
+    bit: each edge's x-crossing is computed once per pixel-centre row,
+    with :func:`_ring_crossings`' expression and half-open straddle rule,
+    and ``xs < crossing`` is XORed into the parity of the rows the edge
+    straddles — O(rows x edges + straddled rows x cols), not
+    O(rows x cols x edges).
     """
-    gx, gy = np.meshgrid(xs, ys)
-    flat = points_in_multipolygon(gx.ravel(), gy.ravel(), mp)
-    return flat.reshape(len(ys), len(xs))
+    xs = np.asarray(xs, dtype="f8")
+    py = np.asarray(ys, dtype="f8")[:, None]
+    inside = np.zeros((py.shape[0], xs.shape[0]), dtype=bool)
+    for poly in mp:
+        for ring in poly:
+            r = _closed(ring)
+            x0, y0 = r[:-1, 0], r[:-1, 1]
+            x1, y1 = r[1:, 0], r[1:, 1]
+            straddle = (y0 <= py) != (y1 <= py)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                xint = x0 + (py - y0) * (x1 - x0) / (y1 - y0)
+            for e in np.nonzero(straddle.any(axis=0))[0]:
+                rows = np.nonzero(straddle[:, e])[0]
+                inside[rows] ^= xs < xint[rows, e][:, None]
+    return inside
 
 
 # ------------------------------------------------------------ rect x poly --

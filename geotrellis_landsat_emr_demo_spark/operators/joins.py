@@ -159,7 +159,7 @@ def pip_join(
         for pdf in batches:
             # vectorized rect-batch x polygon test per AOI group — the
             # whole Arrow batch refines in numpy broadcasts, no per-row
-            # Python (same machinery as grid_mask)
+            # Python (same machinery as points_in_multipolygon)
             pdf = pdf.reset_index(drop=True)
             keep = np.zeros(len(pdf), dtype=bool)
             for aid, g in pdf.groupby("aoi_id", sort=False):

@@ -102,26 +102,20 @@ def _cos_batch(va: pd.Series, vb: pd.Series) -> pd.Series:
     return pd.Series([_cos_exact_rows(x, y) for x, y in zip(va, vb)], dtype="float64")
 
 
-_COS_UDF = None
-
-
-def _cos_udf():
-    """pandas_udf handle, built lazily (the decorator needs an active
-    session) and marked non-deterministic: that stops the optimizer
-    duplicating the UDF when a caller filters on the output column
-    (guide §4.4 — filter pushdown splits one ArrowEvalPython into two);
-    the function itself is deterministic."""
-    global _COS_UDF
-    if _COS_UDF is None:
-        _COS_UDF = F.pandas_udf(_cos_batch, "double").asNondeterministic()
-    return _COS_UDF
-
-
 def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
     """Exact cosine between two array columns, vectorized through one
     Arrow batch per task (bit-identical to :func:`with_cosine_expr` —
-    see :func:`_cos_exact_np`)."""
-    return df.withColumn(out, _cos_udf()(F.col(a), F.col(b)))
+    see :func:`_cos_exact_np`).
+
+    The pandas_udf handle is built per call: PySpark binds it to the
+    SparkContext (and its accumulator server) active when it is first
+    used, so a handle kept across sessions fails to report its tasks'
+    accumulators in every later session.  It is marked non-deterministic:
+    that stops the optimizer duplicating the UDF when a caller filters on
+    the output column (guide §4.4 — filter pushdown splits one
+    ArrowEvalPython into two); the function itself is deterministic."""
+    cos = F.pandas_udf(_cos_batch, "double").asNondeterministic()
+    return df.withColumn(out, cos(F.col(a), F.col(b)))
 
 
 def _desc_cosine_key(cos: np.ndarray) -> np.ndarray:

@@ -8,12 +8,14 @@ Route parity (server/src/main/scala/demo/Router.scala:52-59):
   /series/{l}/{op}          -> :meth:`LayerService.time_series`
 
 Every tile route reads the tiles table through one keyed read,
-:meth:`LayerService._read_keys`, with no Spark job: an index of each row
-group's cell_key min/max, built from the parquet footers, picks the row
-groups that can hold a wanted key, and only those with a hit read their
-payload — what the reference's ValueReader + SFC index does
-(TileReader.scala:12-21, Router.scala:84-86,146-150).  Point reads add a
-decoded-tile LRU cache.  Polygonal means over large AOIs can also run as
+:meth:`LayerService._read_keys`, with no Spark job: a row-level key index
+(:class:`_KeyIndex`, every row's cell_key and ts, built once per snapshot,
+layer and zoom) finds the rows of the wanted keys by binary search, and
+only the ``tile`` column of the row groups holding them is read — what
+the reference's ValueReader + SFC index does (TileReader.scala:12-21,
+Router.scala:84-86,146-150).  A key that is not stored reads nothing.
+Point reads add a decoded-tile LRU cache.  The /mean mask is the scanline
+:func:`geom.grid_mask`.  Polygonal means over large AOIs can also run as
 a Spark job via operators.joins.zonal_stats, which shares the per-tile
 partial :func:`zonal_partial` — same semantics, tested equal.
 """
@@ -22,10 +24,12 @@ from __future__ import annotations
 
 import functools
 import json
+import threading
 from datetime import datetime, timedelta, timezone
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 
 from ..catalog import Catalog
 from ..core import cellindex, geom, kernels, png, tiling
@@ -70,13 +74,72 @@ def render_png(tile: np.ndarray, operation: str | None, is_landsat: bool) -> byt
     return png.encode_rgba(kernels.classify(op["fn"](tile), op["ramp"]))
 
 
+class _KeyIndex:
+    """Row-level key index of one layer zoom's tile files: every row's
+    cell_key and ts, sorted by key, with the row's position in index
+    order (file, row group, row — the order of a dataset scan over the
+    files) and per row group its file and first position.  Built from one
+    ``cell_key, ts`` read per file; each file is kept as (path, footer
+    metadata), so a payload read opens its own handle without re-reading
+    the footer.
+
+    Memory is 24 bytes per tile (key, ts, position), against the
+    O(tiles / 4) footer min/max pairs of a row-group index; in exchange a
+    lookup reads no key column, and a key that is not stored reads
+    nothing."""
+
+    def __init__(self, paths: list[str]):
+        self.files, keys, ts, rg_start, rg_file, rg_num = [], [], [], [], [], []
+        n = 0
+        for path in paths:
+            with pq.ParquetFile(path) as pf:
+                md = pf.metadata
+                kc = pf.read(columns=["cell_key", "ts"])
+            keys.append(kc["cell_key"].to_numpy())
+            ts.append(kc["ts"].to_numpy())
+            for rg in range(md.num_row_groups):
+                rg_start.append(n)
+                rg_file.append(len(self.files))
+                rg_num.append(rg)
+                n += md.row_group(rg).num_rows
+            self.files.append((path, md))
+        key = np.concatenate(keys) if keys else np.empty(0, "i8")
+        self.pos = np.argsort(key, kind="stable")
+        self.key = key[self.pos]
+        self.ts = (np.concatenate(ts) if ts else np.empty(0, "M8[ns]"))[self.pos]
+        self.rg_start = np.asarray(rg_start, dtype="i8")
+        self.rg_file, self.rg_num = rg_file, rg_num
+
+    def lookup(self, keys, time_millis=None):
+        """Per row group holding a hit, in index order: (path, footer
+        metadata, row group, cell_keys, ts, rows) of the rows whose
+        cell_key is in ``keys`` and, unless ``time_millis`` is None, whose
+        ts is that time."""
+        want = np.unique(np.asarray(keys, dtype="i8"))
+        lo = np.searchsorted(self.key, want, "left")
+        n = np.searchsorted(self.key, want, "right") - lo
+        sel = np.arange(n.sum()) + np.repeat(lo - (np.cumsum(n) - n), n)
+        if time_millis is not None:
+            sel = sel[self.ts[sel] == pd.Timestamp(time_millis, unit="ms").to_datetime64()]
+        sel = sel[np.argsort(self.pos[sel])]  # back to index order
+        pos = self.pos[sel]
+        g = np.searchsorted(self.rg_start, pos, "right") - 1
+        for part in np.split(np.arange(sel.size), np.flatnonzero(np.diff(g)) + 1):
+            if part.size:
+                gi = g[part[0]]
+                path, md = self.files[self.rg_file[gi]]
+                rows = pos[part] - self.rg_start[gi]
+                yield path, md, self.rg_num[gi], self.key[sel[part]], self.ts[sel[part]], rows
+
+
 class LayerService:
     def __init__(self, cat: Catalog, spark=None, tile_cache_size: int = 256):
         self.cat = cat
         self.spark = spark
         self._meta_cache: dict = {}  # the TrieMap reader cache analog
         # (TileReader.scala:15-19)
-        self._rg_idx_cache: dict = {}
+        self._key_idx_cache: dict = {}
+        self._key_idx_lock = threading.Lock()
         # decoded-tile LRU cache (size 0 = no caching; thread-safe) — the
         # local-cache analog of the reference's downloaded-GeoTIFF cache
         # (S3: LandsatInput fetches to local disk once, re-reads for free);
@@ -156,67 +219,39 @@ class LayerService:
             return kernels.regrid_to_extent(src, src_ext, req_ext, (256, 256))
         return self._point_read(layer, zoom, x, y, time_millis)
 
-    def _rg_index(self, layer: str, zoom: int):
-        """Per-(layer, zoom, snapshot) row-group index: (ParquetFile
-        handle, rg, cell_key min/max) from the parquet FOOTERS only — the
-        ValueReader key-index analog (TileReader.scala:12-21).  Both tile
-        writers cap a row group at four tiles
-        (``operators.ingest.TILE_WRITE_OPTIONS``), so the index holds
-        O(tiles / 4) entries."""
-        import pyarrow.parquet as pq
-
+    def _key_index(self, layer: str, zoom: int) -> _KeyIndex:
+        """The per-(snapshot, layer, zoom) row-level key index — the
+        ValueReader + SFC index analog (TileReader.scala:12-21) — built
+        once, under a lock, with one ``cell_key, ts`` read per file; a new
+        snapshot drops the old snapshot's indexes."""
         snap = self.cat.snapshot_id()
         ikey = (snap, layer, int(zoom))
-        cached = self._rg_idx_cache
-        if ikey not in cached:
-            for k in [k for k in list(cached) if k[0] != snap]:
-                cached.pop(k, None)  # stale snapshots
-            entries = []
-            for path in self.cat.files("tiles", layer=layer, zoom=int(zoom)):
-                pf = pq.ParquetFile(path)
-                md = pf.metadata
-                ci = {md.schema.column(i).name: i for i in range(md.num_columns)}
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(ci["cell_key"]).statistics
-                    lo, hi = (
-                        (st.min, st.max)
-                        if st is not None and st.has_min_max
-                        else (None, None)
-                    )
-                    entries.append((pf, rg, lo, hi))
-            cached[ikey] = entries
-        return cached[ikey]
+        idx = self._key_idx_cache.get(ikey)
+        if idx is None:
+            with self._key_idx_lock:
+                idx = self._key_idx_cache.get(ikey)
+                if idx is None:
+                    for k in [k for k in self._key_idx_cache if k[0] != snap]:
+                        del self._key_idx_cache[k]  # stale snapshots
+                    idx = _KeyIndex(self.cat.files("tiles", layer=layer, zoom=int(zoom)))
+                    self._key_idx_cache[ikey] = idx
+        return idx
 
     def _read_keys(self, layer, zoom, keys, time_millis=None):
         """The one keyed tile read: (x, y, ts, payload) of every stored
         tile whose cell_key is in ``keys``, at ``time_millis`` (every time
         when None), in index order — file, row group, row, the order of a
-        dataset scan over the same files.  The footer index skips row
-        groups whose cell_key [min, max] holds no wanted key; the rest
-        read only their ``cell_key, ts`` columns (a few longs, no payload
-        IO); only row groups with a hit read their ``tile`` column."""
-        want = np.unique(np.asarray(keys, dtype="i8"))
-        if time_millis is not None:
-            ts64 = pd.Timestamp(time_millis, unit="ms").to_datetime64()
+        dataset scan over the same files.  The key index finds the rows;
+        only the ``tile`` column of the row groups holding them is read,
+        and a key that is not stored reads nothing."""
         out = []
-        for pf, rg, lo, hi in self._rg_index(layer, zoom):
-            if lo is not None:
-                i = np.searchsorted(want, lo)
-                if i == want.size or want[i] > hi:
-                    continue
-            kc = pf.read_row_group(rg, columns=["cell_key", "ts"])
-            ks, tss = kc["cell_key"].to_numpy(), kc["ts"].to_numpy()
-            hit = np.isin(ks, want)
-            if time_millis is not None:
-                hit &= tss == ts64
-            rows = np.nonzero(hit)[0]
-            if rows.size:
+        for path, md, rg, ks, tss, rows in self._key_index(layer, zoom).lookup(keys, time_millis):
+            with pq.ParquetFile(path, metadata=md) as pf:
                 tiles = pf.read_row_group(rg, columns=["tile"])["tile"]
-                _, xs, ys = cellindex.cell_decode(ks[rows])
-                out.extend(
-                    (int(x), int(y), tss[i], tiles[int(i)].as_py())
-                    for x, y, i in zip(xs, ys, rows)
-                )
+            _, xs, ys = cellindex.cell_decode(ks)
+            out.extend(
+                (int(x), int(y), t, tiles[int(r)].as_py()) for x, y, t, r in zip(xs, ys, tss, rows)
+            )
         return out
 
     def _read_one(self, snapshot, layer, zoom, x, y, time_millis):

@@ -117,6 +117,62 @@ def test_multipolygon_pip():
     assert res.tolist() == [True, True, False]
 
 
+def _random_multipolygon(rng, shape, xs, ys):
+    """A seeded polygon of one of five kinds over a tile's pixel-centre
+    grid, in mercator: ``rect``, ``star`` (concave, ring left unclosed),
+    ``hole`` (star with a rectangular hole), ``multi`` (2-3 overlapping
+    rectangles/stars) or ``centres`` (every vertex on a pixel centre, so
+    vertices and horizontal edges lie exactly on pixel-centre rows)."""
+    cw = xs[1] - xs[0]
+    ch = ys[0] - ys[1]
+
+    def at(u, v):  # tile-relative pixel coordinates -> mercator
+        return np.column_stack([xs[0] + (u - 0.5) * cw, ys[0] - (v - 0.5) * ch])
+
+    def rect(lo=-40, hi=296):
+        u0, u1 = np.sort(rng.uniform(lo, hi, 2))
+        v0, v1 = np.sort(rng.uniform(lo, hi, 2))
+        return at(np.array([u0, u1, u1, u0, u0]), np.array([v0, v0, v1, v1, v0]))
+
+    def star():
+        n = int(rng.integers(5, 12))
+        ang = np.sort(rng.uniform(0, 2 * np.pi, 2 * n))
+        rad = np.where(np.arange(2 * n) % 2 == 0, rng.uniform(60, 160), rng.uniform(10, 60))
+        cu, cv = rng.uniform(40, 216, 2)
+        return at(cu + rad * np.cos(ang), cv + rad * np.sin(ang))  # unclosed
+
+    if shape == "rect":
+        return [[rect()]]
+    if shape == "star":
+        return [[star()]]
+    if shape == "hole":
+        ext = star()
+        cu, cv = ext[:, 0].mean(), ext[:, 1].mean()
+        du, dv = rng.uniform(2, 30, 2) * (cw, ch)
+        hole = np.array([[cu - du, cv - dv], [cu + du, cv - dv], [cu + du, cv + dv], [cu - du, cv + dv]])
+        return [[ext, hole]]
+    if shape == "multi":
+        return [[rect(0, 256)] if rng.random() < 0.5 else [star()] for _ in range(rng.integers(2, 4))]
+    i = rng.integers(0, 256, (int(rng.integers(3, 9)), 2))
+    return [[np.column_stack([xs[i[:, 0]], ys[i[:, 1]]])], [rect(0, 256)]]
+
+
+def test_grid_mask_equals_point_in_polygon():
+    """The scanline grid_mask is the even-odd ray cast of every pixel
+    centre, bit for bit, on real z13 tile grids: rectangles, unclosed
+    concave stars, holes, multipolygons and polygons whose vertices and
+    edges lie exactly on pixel centres."""
+    rng = np.random.default_rng(20260)
+    for case in range(200):
+        shape = ("rect", "star", "hole", "multi", "centres")[case % 5]
+        tx, ty = (int(v) for v in rng.integers(0, 1 << 13, 2))
+        xs, ys = tiling.pixel_centers(*tiling.tile_extent(tx, ty, 13), 256, 256)
+        mp = _random_multipolygon(rng, shape, xs, ys)
+        gx, gy = np.meshgrid(xs, ys)
+        expect = geom.points_in_multipolygon(gx.ravel(), gy.ravel(), mp).reshape(256, 256)
+        assert np.array_equal(geom.grid_mask(xs, ys, mp), expect), (case, shape)
+
+
 def test_rect_intersects_cases():
     tri = geom.parse_geojson(
         '{"type":"Polygon","coordinates":[[[0,0],[10,0],[5,10],[0,0]]]}'

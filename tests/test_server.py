@@ -80,8 +80,10 @@ def test_readall_route(srv, svc):
 
 
 def test_point_read_tile_cache(tsmall_catalog, monkeypatch):
-    """S3 local-cache analog: a repeat point read of the same tile reads
-    no parquet row group again, and a new snapshot invalidates it."""
+    """S3 local-cache analog: the first point read of a stored tile reads
+    one row group's ``tile`` column and nothing else, a repeat read and a
+    read of an unstored key read no row group, and a new snapshot
+    invalidates the cache."""
     import pyarrow.parquet as pq
 
     from geotrellis_landsat_emr_demo_spark.plans.queries import LayerService
@@ -90,25 +92,26 @@ def test_point_read_tile_cache(tsmall_catalog, monkeypatch):
     pdf = tsmall_catalog.read_pandas("tiles", columns=["zoom", "x", "y", "ts"])
     row = pdf[pdf.zoom == 13].iloc[0]
     x, y, millis = int(row.x), int(row.y), int(row.ts.value // 1_000_000)
-    calls = {"n": 0}
+    calls = {"n": 0, "columns": []}
     orig = pq.ParquetFile.read_row_group
 
-    def counting(*a, **k):
+    def counting(self, i, columns=None, **k):
         calls["n"] += 1
-        return orig(*a, **k)
+        calls["columns"].append(columns)
+        return orig(self, i, columns=columns, **k)
 
     monkeypatch.setattr(pq.ParquetFile, "read_row_group", counting)
     t1 = s.read_tile("landsat", 13, x, y, millis)
     n_after_first = calls["n"]
-    assert n_after_first > 0
+    assert n_after_first == 1 and calls["columns"] == [["tile"]]
     t2 = s.read_tile("landsat", 13, x, y, millis)
     assert calls["n"] == n_after_first  # served from the tile cache
     assert (t1 == t2).all()
-    # missing keys cache too (the empty-PNG hot path): a stored cell at an
-    # unstored time reads the key columns once
+    # the empty-PNG hot path: a stored cell at an unstored time is found
+    # missing in the key index and reads no row group
     assert s.read_tile("landsat", 13, x, y, millis + 1) is None
     n_after_missing = calls["n"]
-    assert n_after_missing > n_after_first
+    assert n_after_missing == n_after_first
     assert s.read_tile("landsat", 13, x, y, millis + 1) is None
     assert calls["n"] == n_after_missing
     snap = tsmall_catalog.snapshot_id()
@@ -147,6 +150,55 @@ def test_concurrent_reads_share_the_cache_safely(tsmall_catalog):
     assert all((g == expect[k]).all() for k, g in zip(order, got))
     info = shared._tile_cache.cache_info()
     assert info.currsize <= 4 and info.hits + info.misses == len(order)
+
+
+def test_concurrent_mixed_routes_equal_serial(tsmall_catalog):
+    """16 threads with a 1 us switch interval share one fresh service (so
+    they also race to build its key index) and mix point reads, polygonal
+    means and time series; every answer equals the serial answer of
+    another service and no call raises."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    import numpy as np
+
+    from geotrellis_landsat_emr_demo_spark.plans.queries import LayerService
+
+    pdf = tsmall_catalog.read_pandas("tiles", columns=["zoom", "x", "y", "ts"])
+    calls = [
+        ("read_tile", ("landsat", int(r.zoom), int(r.x), int(r.y), int(r.ts.value // 1_000_000)))
+        for r in pdf[pdf.zoom >= 12].itertuples(index=False)
+    ]
+    calls += [
+        ("polygonal_mean", ("landsat", "ndvi", gj, t))
+        for gj in fixtures.aoi_pdf("t-small").geojson
+        for t in (T1, T2)
+    ]
+    calls += [
+        ("time_series", ("landsat", op, float(p.lat), float(p.lng)))
+        for p in fixtures.query_points_pdf("t-small").itertuples(index=False)
+        for op in ("ndvi", "ndwi")
+    ]
+
+    def answer(s, call):
+        name, args = call
+        out = getattr(s, name)(*args)
+        return out if isinstance(out, np.ndarray) or out is None else repr(out)
+
+    serial = LayerService(tsmall_catalog, tile_cache_size=0)
+    expect = [answer(serial, c) for c in calls]
+    shared = LayerService(tsmall_catalog, tile_cache_size=8)
+    order = np.random.default_rng(11).integers(0, len(calls), 480)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as ex:
+            got = list(ex.map(lambda i: answer(shared, calls[i]), order, timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    for i, g in zip(order, got):
+        e = expect[i]
+        assert (g is None and e is None) or np.array_equal(g, e), calls[i]
 
 
 def _status(url, body=None):
