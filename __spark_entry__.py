@@ -636,7 +636,8 @@ def sql_dedup_minhash_bands():
 # SAME relation — re-deriving the token-index join per stage would be the
 # anti-pattern at 100 TB.  Keyed by (application, corpus dir) so a fresh
 # session or a different corpus rebuilds; the checkpoint is a ~255k-row
-# slim relation (doc_a, doc_b, jaccard).
+# slim relation (doc_a, doc_b, jaccard).  Storing an entry drops those of
+# other applications: their checkpoints are bound to a stopped context.
 _PAIRS_MEMO: dict = {}
 
 
@@ -674,6 +675,8 @@ def _shared_jaccard_pairs(spark, sf_dir):
         # explicit repartition keeps those scans even and wide
         pairs = pairs.repartition(spark.sparkContext.defaultParallelism)
         got = pairs.checkpoint(eager=True)
+        for old in [k for k in _PAIRS_MEMO if k[0] != key[0]]:
+            del _PAIRS_MEMO[old]
         _PAIRS_MEMO[key] = got
     return got
 

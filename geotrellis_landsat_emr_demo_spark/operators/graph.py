@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import gates
+
 
 def _sym(edges: DataFrame) -> DataFrame:
     """Both directions, self-loops dropped: (u, v).
@@ -124,7 +126,7 @@ def _driver_components(spark, e: DataFrame) -> DataFrame:
     return spark.createDataFrame(out, schema="node long, component long")
 
 
-def _contracted_components(spark, e: DataFrame, m: DataFrame, edge_cap: int):
+def _contracted_components(spark, e: DataFrame, m: DataFrame):
     """Single star-contraction + tiny driver union-find (r8).
 
     ``m`` maps every node u to ``m(u) = min(N(u) ∪ {u})``.  Contracting
@@ -141,8 +143,9 @@ def _contracted_components(spark, e: DataFrame, m: DataFrame, edge_cap: int):
     broadcast hash joins attach m(u)/m(v), the self-pairs are filtered
     before the exchange, and the distinct dedups the few surviving
     cross-root pairs.  No O(E) shuffle, no O(rounds) jobs.  Returns None
-    if the contracted graph unexpectedly exceeds ``edge_cap`` (degenerate
-    low-contraction graphs) — caller falls back to the star loop."""
+    if the contracted graph unexpectedly exceeds the ``cc_contracted_edges``
+    cap (degenerate low-contraction graphs) — caller falls back to the
+    star loop."""
     import numpy as np
 
     ms = F.broadcast(m.select(F.col("u").alias("src"), F.col("m").alias("cu")))
@@ -154,8 +157,8 @@ def _contracted_components(spark, e: DataFrame, m: DataFrame, edge_cap: int):
         .select("cu", "cv")
         .distinct()
     )
-    cpdf = contracted.limit(edge_cap + 1).toPandas()
-    if len(cpdf) > edge_cap:
+    cpdf = gates.collect_upto(contracted, "cc_contracted_edges")
+    if cpdf is None:
         return None
     mpdf = m.toPandas()
     node = mpdf["u"].to_numpy(dtype="int64")
@@ -192,9 +195,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 30,
-    driver_threshold: int = 2_000_000,
-    contract_node_threshold: int = 2_000_000,
-    contract_edge_cap: int = 5_000_000,
     assume_distinct: bool = False,
 ) -> DataFrame:
     """Label every node of the (undirected) edge set with its component's
@@ -208,23 +208,24 @@ def connected_components(
     ``max_iter`` rounds don't converge (O(log^2 n) expected; default 30
     covers graphs far beyond any realistic corpus).
 
-    ``driver_threshold``: edge count at or below which the closure runs
-    as a driver-local vectorized union-find instead of the distributed
-    loop (the broadcast-join-style adaptive cutoff — below it the loop's
-    cost is pure per-round job latency; 2M edges collect to ~32 MB and
-    resolve in numpy in a few hundred ms, vs seconds of round latency).
-    Pass 0 to force a distributed path.
+    Three paths, chosen by the size gates of ``gates.CAPS``:
 
-    ``contract_node_threshold`` (r8): when the edge set is too big for
-    the driver but the NODE count fits a broadcast (2M nodes = ~32 MB),
-    one exact star-contraction collapses the graph map-side — the edges
-    are never shuffled — and a driver union-find finishes on the tiny
-    contracted graph (see :func:`_contracted_components`; at sf1.0 the
-    25.8M-edge near-clique pair graph contracts to a few hundred edges:
-    13-25 s of star rounds became ~4 s).  Driver state is O(nodes), not
-    O(edges).  Pass 0 to skip (forces the star loop beyond
-    ``driver_threshold``).  At corpus scale (billions of NODES) the star
-    loop still runs — all three paths are tested identical."""
+    - ``cc_driver_edges``: at or below this edge count the closure runs
+      as a driver-local vectorized union-find instead of the distributed
+      loop (the broadcast-join-style adaptive cutoff — below it the
+      loop's cost is pure per-round job latency; 2M edges resolve in
+      numpy in a few hundred ms, vs seconds of round latency).
+    - ``cc_contract_nodes`` (r8): when the edge set is too big for the
+      driver but the NODE count fits a broadcast, one exact
+      star-contraction collapses the graph map-side — the edges are never
+      shuffled — and a driver union-find finishes on the tiny contracted
+      graph (see :func:`_contracted_components`; at sf1.0 the 25.8M-edge
+      near-clique pair graph contracts to a few hundred edges: 13-25 s of
+      star rounds became ~4 s).  Driver state is O(nodes), not O(edges);
+      a contracted graph over ``cc_contracted_edges`` falls through.
+    - otherwise (billions of NODES) the distributed star loop runs.
+
+    All three paths are tested identical."""
     # checkpoint the entry edges ONCE: _sym references them twice (union
     # of both orientations), and the caller's edge relation is typically
     # an expensive LSH-pairs pipeline — without this it is planned and
@@ -243,36 +244,30 @@ def connected_components(
     else:
         e = sel.distinct().localCheckpoint(eager=True)
         entry_ckpt = e
-    # adaptive small-side path: below the threshold the transitive
-    # closure fits trivially on the driver, and a local union-find beats
-    # the distributed loop whose per-round cost at small N is pure job
-    # latency.  The count is a cheap aggregation over the materialized
-    # checkpoint.  At corpus scale the distributed loop always runs.
-    if driver_threshold and e.count() <= driver_threshold:
+    # adaptive small-side path: the count is a cheap aggregation over the
+    # materialized checkpoint
+    if gates.fits("cc_driver_edges", e.count()):
         out = _driver_components(edges.sparkSession, e)
         if entry_ckpt is not None:
             entry_ckpt.unpersist()
         return out
-    if contract_node_threshold:
-        # node-count gate: m is one map-side-combinable aggregation; its
-        # row count IS the node count
-        m = (
-            _sym(e)
-            .groupBy("u")
-            .agg(F.min("v").alias("mv"))
-            .select("u", F.least("mv", "u").alias("m"))
-            .localCheckpoint(eager=True)
-        )
-        if m.count() <= contract_node_threshold:
-            out = _contracted_components(
-                edges.sparkSession, e, m, contract_edge_cap
-            )
-            if out is not None:
-                m.unpersist()
-                if entry_ckpt is not None:
-                    entry_ckpt.unpersist()
-                return out
-        m.unpersist()
+    # node-count gate: m is one map-side-combinable aggregation; its row
+    # count IS the node count
+    m = (
+        _sym(e)
+        .groupBy("u")
+        .agg(F.min("v").alias("mv"))
+        .select("u", F.least("mv", "u").alias("m"))
+        .localCheckpoint(eager=True)
+    )
+    if gates.fits("cc_contract_nodes", m.count()):
+        out = _contracted_components(edges.sparkSession, e, m)
+        if out is not None:
+            m.unpersist()
+            if entry_ckpt is not None:
+                entry_ckpt.unpersist()
+            return out
+    m.unpersist()
 
     def _sig(df: DataFrame):
         # count + xor of row hashes: an order-insensitive set signature

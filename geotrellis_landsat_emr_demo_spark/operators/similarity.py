@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import gates
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -140,7 +142,7 @@ def _desc_cosine_key(cos: np.ndarray) -> np.ndarray:
 
 def _cosine_topk_collected(
     embeddings: DataFrame,
-    qrows,
+    qpdf: pd.DataFrame,
     k: int,
     id_col: str,
     vec_col: str,
@@ -159,8 +161,9 @@ def _cosine_topk_collected(
     of every batch's local top-k — the final window just re-ranks the
     ~k * n_batches survivors.  No query-vector bytes ever cross the
     shuffle and no Q x N pair relation is materialized."""
-    qids = [r["query_id"] for r in qrows]
-    Q = np.asarray([[float(x) for x in r["qvec"]] for r in qrows], dtype="f8")
+    qids = qpdf["query_id"].tolist()
+    qvecs = qpdf["qvec"].tolist()
+    Q = np.asarray([[float(x) for x in v] for v in qvecs], dtype="f8")
     nq = len(qids)
     id_type = embeddings.schema[id_col].dataType.simpleString()
     schema = f"query_id {query_id_type}, neighbor_id {id_type}, cosine double"
@@ -180,8 +183,8 @@ def _cosine_topk_collected(
             except (ValueError, TypeError):
                 # ragged / null vectors: scalar fallback, same roundings
                 cos_rows = [
-                    [_cos_exact_rows(r["qvec"], v) for v in pdf["nvec"]]
-                    for r in qrows
+                    [_cos_exact_rows(qv, v) for v in pdf["nvec"]]
+                    for qv in qvecs
                 ]
                 V = None
             if V is not None:
@@ -242,23 +245,21 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     exclude_self: bool = True,
-    max_collect_queries: int = 256,
 ) -> DataFrame:
     """Exact brute-force ANN baseline: queries x all vectors, cosine,
     two-phase top-k. Returns (query_id, neighbor_id, cosine, rank).
 
-    r8 shape: when the query side is provably tiny (``limit(n+1)`` probe
-    collects at most ``max_collect_queries`` rows — a bounded driver read
-    of a few KB of vectors, the kmeans-update precedent), phase 1 runs
+    r8 shape: when the query side is provably tiny (the bounded probe of
+    the ``topk_collect_queries`` gate collects it — a driver read of a
+    few KB of vectors, the kmeans-update precedent), phase 1 runs
     map-side inside ``mapInPandas`` against the collected query matrix
     (:func:`_cosine_topk_collected`): no broadcast crossJoin carrying
     both vectors per pair through Arrow, no repartition exchange, no
     per-partition window — measured 2x at sf1.0-scale.  Bit-exact: the
     per-dimension accumulation is the identical IEEE sequence, and the
-    batch-local selection uses Double.compare's exact total order.  Pass
-    ``max_collect_queries=0`` (or a larger-than-cap query set) for the
-    fully-lazy formulation below — results are pinned identical
-    (tests/test_similarity_exact.py).
+    batch-local selection uses Double.compare's exact total order.  A
+    query set over the cap takes the fully-lazy formulation below —
+    results are pinned identical (tests/test_similarity_exact.py).
 
     The top-k is TWO-PHASE either way (the q_knn_points pattern): a
     local pass keyed by (query_id, scan partition) keeps k rows per
@@ -268,9 +269,9 @@ def cosine_topk(
     qsel = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
-    if max_collect_queries and k >= 1:
-        probe = qsel.limit(max_collect_queries + 1).collect()
-        if len(probe) <= max_collect_queries:
+    if k >= 1:
+        probe = gates.collect_upto(qsel, "topk_collect_queries")
+        if probe is not None:
             return _cosine_topk_collected(
                 embeddings,
                 probe,
@@ -425,10 +426,8 @@ def lsh_topk(
     nv = embeddings.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
     )
-    if n_corpus is not None and n_corpus <= 1_000_000:
-        # the corpus vector relation fits a broadcast at this size — skip
-        # the shuffle of the candidate side (guide §3.1); at scale the
-        # shuffle join stands
+    if n_corpus is not None and gates.fits("ann_broadcast_vectors", n_corpus):
+        # broadcast: the candidate side is not shuffled (guide §3.1)
         nv = F.broadcast(nv)
     scored = with_cosine(cand.join(qv, "query_id").join(nv, "neighbor_id"), "qvec", "nvec")
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
@@ -651,11 +650,11 @@ def lsh_candidate_pairs(
     ).localCheckpoint(eager=True)
     x = b.select(F.col("id").alias("id_a"), "tbl", "bucket")
     y = b.select(F.col("id").alias("id_b"), "tbl", "bucket")
-    if n_corpus is not None and n_corpus * tables <= 2_000_000:
-        # the bucketed relation is a few MB at this size: broadcasting one
-        # self-join side turns the (tbl, bucket) equi-join map-side and
-        # drops both its exchanges (guide §3.1); the shuffle join stands
-        # at corpus scale
+    if n_corpus is not None and gates.fits(
+        "lsh_broadcast_bucket_rows", n_corpus * tables
+    ):
+        # broadcasting one self-join side turns the (tbl, bucket)
+        # equi-join map-side and drops both its exchanges (guide §3.1)
         y = F.broadcast(y)
     return (
         x.join(y, ["tbl", "bucket"])
@@ -699,9 +698,9 @@ def lsh_near_dup_pairs(
     base = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     va = base.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"))
     vb = base.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"))
-    if n_corpus <= 1_000_000:
-        # vector relation fits a broadcast: the (much larger) candidate
-        # relation is never shuffled for the verify (guide §3.1)
+    if gates.fits("lsh_broadcast_vectors", n_corpus):
+        # the (much larger) candidate relation is never shuffled for the
+        # verify (guide §3.1)
         va, vb = F.broadcast(va), F.broadcast(vb)
     j = with_cosine(cand.join(va, "id_a").join(vb, "id_b"), "vec_a", "vec_b")
     return j.filter(F.col("cosine") >= threshold).select("id_a", "id_b", "cosine")

@@ -49,6 +49,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .. import gates
+
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
 
@@ -232,9 +234,9 @@ def minhash_portable_pairs(
     n_docs = sigs.count()  # cheap agg over the materialized checkpoint
     banded = _minhash_banded(sigs, bands, rows)
     x, y = banded.alias("x"), banded.alias("y")
-    if n_docs * bands <= 2_000_000:
-        # broadcast one self-join side: the banded relation is a few MB
-        # at this size, so the bucket equi-join stays map-side (guide §3.1)
+    if gates.fits("minhash_broadcast_band_rows", n_docs * bands):
+        # broadcast one self-join side: the bucket equi-join stays
+        # map-side (guide §3.1)
         y = F.broadcast(y)
     cand = (
         x.join(
@@ -254,9 +256,8 @@ def minhash_portable_pairs(
         F.col("doc_id").alias("doc_b"),
         *[F.col(f"h{i}").alias(f"hb{i}") for i in range(n_hashes)],
     )
-    if n_docs <= 500_000:
-        # signature relation fits a broadcast: the candidate relation is
-        # never shuffled for the estimate join
+    if gates.fits("minhash_broadcast_signatures", n_docs):
+        # the candidate relation is never shuffled for the estimate join
         sa, sb = F.broadcast(sa), F.broadcast(sb)
     # r8: the match count as a plain sum of column equalities — the former
     # aggregate(zip_with(...)) is a CodegenFallback higher-order function,
@@ -584,10 +585,10 @@ def simhash_near_pairs(
         ).alias("tbl", "blk"),
     )
     x, y = banded.alias("x"), banded.alias("y")
-    if sh.count() * n_blocks <= 2_000_000:
-        # the banded relation is a few MB at this size: broadcasting one
-        # self-join side keeps the block equi-join map-side (guide §3.1);
-        # the count is a cheap agg over the materialized checkpoint
+    if gates.fits("simhash_broadcast_block_rows", sh.count() * n_blocks):
+        # broadcasting one self-join side keeps the block equi-join
+        # map-side (guide §3.1); the count is a cheap agg over the
+        # materialized checkpoint
         y = F.broadcast(y)
     cand = (
         x.join(
@@ -638,30 +639,29 @@ def _token_base(docs, bucket_col, lowercase, split_pattern):
     )
 
 
-def _hot_hashes(base, cutoff: int, max_hot: int = 10_000) -> list:
-    """Token hashes with document frequency > cutoff — the heavy hitters
-    that must sort LAST in the global prefix order — HARD-CAPPED at the
-    ``max_hot`` most frequent (ties broken by hash asc, deterministic).
+def _hot_hashes(base) -> list:
+    """Token hashes with document frequency over the
+    ``jaccard_key_fanout`` cap — the heavy hitters that must sort LAST in
+    the global prefix order — HARD-CAPPED at the ``jaccard_hot_tokens``
+    most frequent (ties broken by hash asc, deterministic).
 
-    The cap is the driver/plan guard: the above-cutoff set is bounded by
-    ``total_token_rows / cutoff`` which Zipf keeps tiny in practice, but a
-    pathological corpus could push it to millions of in-plan literals — a
-    plan-size blow-up.  ``limit(max_hot + 1)`` bounds what ever reaches
-    the driver; when truncation kicks in, tokens above the cutoff but
-    below the top-``max_hot`` simply stay in the cold order — EXACTNESS
-    is unaffected (any fixed global total order is valid for prefix
-    filtering); only the skew bound for those keys relaxes from
-    ``cutoff`` to the df of the max_hot-th hottest token."""
-    rows = (
+    The second cap is the driver/plan guard: the above-fanout set is
+    bounded by ``total_token_rows / fanout`` which Zipf keeps tiny in
+    practice, but a pathological corpus could push it to millions of
+    in-plan literals — a plan-size blow-up.  When truncation kicks in,
+    tokens above the fanout but below the top ``jaccard_hot_tokens``
+    simply stay in the cold order — EXACTNESS is unaffected (any fixed
+    global total order is valid for prefix filtering); only the skew
+    bound for those keys relaxes to the df of the hottest token kept."""
+    rows = gates.take(
         base.select(F.explode("hs").alias("h"))
         .groupBy("h")
         .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > cutoff)
-        .orderBy(F.desc("df"), F.asc("h"))
-        .limit(max_hot + 1)
-        .collect()
+        .filter(F.col("df") > gates.CAPS["jaccard_key_fanout"])
+        .orderBy(F.desc("df"), F.asc("h")),
+        "jaccard_hot_tokens",
     )
-    return sorted(r.h for r in rows[:max_hot])
+    return sorted(r.h for r in rows)
 
 
 def _prefix_index(base, t_pref: float, hot: list | None = None):
@@ -754,7 +754,7 @@ def _pop16():
 
 
 def _dense_jaccard_pairs(
-    base: DataFrame, vocab: list, min_jaccard: float, round_to: int | None,
+    base: DataFrame, vocab, min_jaccard: float, round_to: int | None,
     max_n: int,
 ) -> DataFrame:
     """Exact all-pairs jaccard per bucket over BITSET token masks — the
@@ -764,10 +764,11 @@ def _dense_jaccard_pairs(
     vocabulary, the pathological case for prefix filtering: candidate
     fan-out was ~4.7x the (genuinely huge) output and the candidate
     distinct alone shuffled 121M rows at sf1.0.  When the GLOBAL vocab
-    fits a few machine words (gate: <= 1024 tokens, <= 256 tokens/doc,
-    bounded bucket size), each doc's token set is a W-word bitmask and
-    every pair's intersection is a vectorized AND+popcount — no inverted
-    index, no candidate shuffle, no verify join.  Exactness: intersection
+    fits a few machine words (the ``jaccard_dense_*`` gates bound the
+    vocabulary, the tokens per doc and the bucket size), each doc's token
+    set is a W-word bitmask and every pair's intersection is a vectorized
+    AND+popcount — no inverted index, no candidate shuffle, no verify
+    join.  Exactness: intersection
     popcounts are integers; jaccard = p/q in IEEE double (the same
     division Catalyst performs); HALF_UP rounding via the (p, q) lookup
     table (:func:`_half_up_table`), so emitted values AND threshold
@@ -849,9 +850,6 @@ def ngram_jaccard_pairs(
     lowercase: bool = True,
     split_pattern: str = r"\s+",
     round_to: int | None = None,
-    hot_cutoff: int = 256,
-    max_hot: int = 10_000,
-    dense_path: bool | None = None,
 ) -> DataFrame:
     """Exact token-set Jaccard via a PREFIX-FILTERED inverted-index join.
 
@@ -864,14 +862,18 @@ def ngram_jaccard_pairs(
     are then verified exactly against the full token sets.
 
     The global order is (is_hot, token_hash) with the heavy hitters
-    (document frequency > ``hot_cutoff``) forced LAST (see
-    :func:`_prefix_index`), so an ultra-frequent token (stopword) almost
-    never enters the index and every cold key's fan-out is <=
-    ``hot_cutoff``: hot-token skew on the (bucket, token) shuffle key is
+    (document frequency over the ``jaccard_key_fanout`` cap) forced LAST
+    (see :func:`_hot_hashes`, :func:`_prefix_index`), so an
+    ultra-frequent token (stopword) almost never enters the index and
+    every cold key's fan-out is within that cap: hot-token skew on the (bucket, token) shuffle key is
     bounded by construction, the lever the plain inverted index lacked at
     web scale.  A length filter (t*|A| <= |B| <= |A|/t, implied by
     J >= t) prunes the join further.  Tokens travel as xxhash64 longs
     end-to-end (see :func:`_token_base`).
+
+    Tiny-vocabulary corpora take the exact dense bitset path instead
+    (:func:`_dense_jaccard_pairs`) when they pass the ``jaccard_dense_*``
+    gates.
 
     ``round_to`` reproduces serving formulations that threshold on a
     rounded jaccard; the prefix threshold is relaxed by half an ulp of
@@ -889,34 +891,24 @@ def ngram_jaccard_pairs(
     # GLOBAL vocabulary fits a few machine words defeat prefix filtering
     # (every prefix token is shared corpus-wide), but admit exact bitset
     # all-pairs per bucket.  The gates are measured relation properties
-    # (max tokens/doc <= 256, <= 1024 distinct tokens, <= 200k docs per
-    # bucket), each a cheap aggregation over the materialized checkpoint;
-    # any real web-scale corpus fails the vocab probe immediately and
-    # keeps the ppjoin index.  dense_path=False forces ppjoin (tests);
-    # True skips only the max_n pre-gate.
-    if dense_path is not False:
-        mx = base.agg(F.max("n")).collect()[0][0] or 0
-        if dense_path or (0 < mx <= 256):
-            vocab = [
-                r.h
-                for r in base.select(F.explode("hs").alias("h"))
-                .distinct()
-                .limit(1025)
-                .collect()
-            ]
-            if 0 < len(vocab) <= 1024:
-                bmax = (
-                    base.groupBy("bucket")
-                    .count()
-                    .agg(F.max("count"))
-                    .collect()[0][0]
-                    or 0
+    # (max tokens/doc, distinct tokens, docs per bucket), each a cheap
+    # aggregation over the materialized checkpoint; any real web-scale
+    # corpus fails the vocab probe immediately and keeps the ppjoin index.
+    mx = base.agg(F.max("n")).collect()[0][0] or 0
+    if mx > 0 and gates.fits("jaccard_dense_doc_tokens", mx):
+        vocab = gates.collect_upto(
+            base.select(F.explode("hs").alias("h")).distinct(), "jaccard_dense_vocab"
+        )
+        if vocab is not None:
+            bmax = (
+                base.groupBy("bucket").count().agg(F.max("count")).collect()[0][0]
+                or 0
+            )
+            if gates.fits("jaccard_dense_bucket_docs", bmax):
+                return _dense_jaccard_pairs(
+                    base, vocab["h"], min_jaccard, round_to, int(mx)
                 )
-                if bmax <= 200_000:
-                    return _dense_jaccard_pairs(
-                        base, vocab, min_jaccard, round_to, int(mx)
-                    )
-    inv = _prefix_index(base, t_pref, hot=_hot_hashes(base, hot_cutoff, max_hot))
+    inv = _prefix_index(base, t_pref, hot=_hot_hashes(base))
     x, y = inv.alias("x"), inv.alias("y")
     # ppjoin positional filter: overlap(A, B) >= ceil(t/(1+t)*(|A|+|B|))
     # is implied by J >= t; for the FIRST common prefix token (positions
@@ -965,7 +957,7 @@ def ngram_jaccard_pairs(
     # removes the dependence on size estimates (guide §3.1).  Gated on
     # the materialized doc count so corpus-scale inputs keep the shuffle
     # join.
-    if base.count() <= 500_000:
+    if gates.fits("jaccard_broadcast_docs", base.count()):
         a, b = F.broadcast(a), F.broadcast(b)
     inter = F.size(F.array_intersect("hs_a", "hs_b"))
     jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 
@@ -41,3 +42,32 @@ def svc(tsmall_catalog):
     from geotrellis_landsat_emr_demo_spark.plans.queries import LayerService
 
     return LayerService(tsmall_catalog)
+
+
+class GateLog:
+    """The size-gate decisions (``gates`` DEBUG records) seen by a test."""
+
+    def __init__(self, caplog):
+        from geotrellis_landsat_emr_demo_spark import gates
+
+        self._caplog, self._logger = caplog, gates.log.name
+        caplog.set_level(logging.DEBUG, logger=self._logger)
+
+    def decisions(self, name: str) -> list:
+        """(gate, n, cap, branch) of every decision of gate ``name``."""
+        return [
+            r.args
+            for r in self._caplog.records
+            if r.name == self._logger and r.args[0] == name
+        ]
+
+    def branches(self, name: str) -> set:
+        return {d[3] for d in self.decisions(name)}
+
+    def clear(self) -> None:
+        self._caplog.clear()
+
+
+@pytest.fixture
+def gate_log(caplog):
+    return GateLog(caplog)

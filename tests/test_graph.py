@@ -4,9 +4,29 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from geotrellis_landsat_emr_demo_spark import gates
 from geotrellis_landsat_emr_demo_spark.operators import graph, textops
 
 SF = "/root/testdata/sf0.001"
+
+# caps closed to force each connected_components path, and the decision
+# that proves the path ran
+PATHS = {
+    "driver": ({}, ("cc_driver_edges", "fits")),
+    "contract": ({"cc_driver_edges": 0}, ("cc_contracted_edges", "fits")),
+    "star": ({"cc_driver_edges": 0, "cc_contract_nodes": 0}, ("cc_contract_nodes", "over")),
+}
+
+
+def _components(monkeypatch, gate_log, df, caps, proof):
+    gate, branch = proof
+    gate_log.clear()
+    with monkeypatch.context() as mp:
+        for name, cap in caps.items():
+            mp.setitem(gates.CAPS, name, cap)
+        got = {r.node: r.component for r in graph.connected_components(df).collect()}
+    assert gate_log.branches(gate) == {branch}, (caps, gate_log.decisions(gate))
+    return got
 
 
 def _uf_components(edges):
@@ -27,7 +47,7 @@ def _uf_components(edges):
     return {n: find(n) for n in parent}
 
 
-def test_connected_components_random_graphs(spark):
+def test_connected_components_random_graphs(spark, monkeypatch, gate_log):
     """Random sparse graphs: star/star result == union-find, including the
     component-min labeling."""
     rng = np.random.default_rng(5)
@@ -39,51 +59,36 @@ def test_connected_components_random_graphs(spark):
         df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
         expect = _uf_components(edges)
         # ALL THREE execution paths: the adaptive driver union-find
-        # (default at this size), the r8 star-contraction path (forced
-        # via driver_threshold=0), and the distributed star/star loop
-        # (both adaptive cutoffs disabled) must agree with the oracle
+        # (default at this size), the r8 star-contraction path and the
+        # distributed star/star loop must agree with the oracle
         # bit-for-bit
-        for dthresh, cthresh in ((200_000, 200_000), (0, 200_000), (0, 0)):
-            got = {
-                r.node: r.component
-                for r in graph.connected_components(
-                    df,
-                    driver_threshold=dthresh,
-                    contract_node_threshold=cthresh,
-                ).collect()
-            }
-            assert got == expect, f"trial {trial} thresh={dthresh}/{cthresh}"
+        for path in PATHS:
+            got = _components(monkeypatch, gate_log, df, *PATHS[path])
+            assert got == expect, f"trial {trial} path={path}"
             # labels are component minima
             assert all(v <= k for k, v in got.items())
 
 
-def test_connected_components_long_path(spark):
+def test_connected_components_long_path(spark, monkeypatch, gate_log):
     """A 500-node path is the adversarial case for naive label propagation
     (diameter rounds); star/star must converge within the O(log^2 n) cap
     and label every node with the path's minimum."""
     edges = [(i, i + 1) for i in range(500)]
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
-    got = {
-        r.node: r.component
-        for r in graph.connected_components(
-            df, driver_threshold=0, contract_node_threshold=0
-        ).collect()
-    }
+    got = _components(monkeypatch, gate_log, df, *PATHS["star"])
     assert got == {i: 0 for i in range(501)}
     # the path graph is also the LOW-contraction adversary for the r8
     # contraction route (m(i) = i-1 keeps ~all edges): must still be exact
-    got_c = {
-        r.node: r.component
-        for r in graph.connected_components(df, driver_threshold=0).collect()
-    }
+    got_c = _components(monkeypatch, gate_log, df, *PATHS["contract"])
     assert got_c == {i: 0 for i in range(501)}
     # and the edge-cap fallback to the star loop must be exact too
-    got_f = {
-        r.node: r.component
-        for r in graph.connected_components(
-            df, driver_threshold=0, contract_edge_cap=10
-        ).collect()
-    }
+    got_f = _components(
+        monkeypatch,
+        gate_log,
+        df,
+        {"cc_driver_edges": 0, "cc_contracted_edges": 10},
+        ("cc_contracted_edges", "over"),
+    )
     assert got_f == {i: 0 for i in range(501)}
 
 
@@ -117,3 +122,20 @@ def test_dedup_clusters_end_to_end(spark):
     # keeper count == corpus size minus collapsed dups
     n_clusters = out.cluster.nunique()
     assert out.is_keeper.sum() == n_clusters
+
+
+def test_pairs_memo_keeps_one_application(spark, monkeypatch):
+    """The dedup entries' shared pair relation is memoized per
+    application: storing a new application's entry drops the entries of
+    the old ones, whose checkpoints belong to a stopped context."""
+    from pyspark import SparkContext
+
+    import __spark_entry__ as entry
+
+    monkeypatch.setattr(entry, "_PAIRS_MEMO", {})
+    for app in ("app-1", "app-2"):
+        monkeypatch.setattr(
+            SparkContext, "applicationId", property(lambda self, app=app: app)
+        )
+        entry._shared_jaccard_pairs(spark, SF)
+    assert list(entry._PAIRS_MEMO) == [("app-2", SF)]

@@ -39,6 +39,8 @@ def test_measure_ingest_and_leaf(spark):
         assert r["cpus"] == 2 and len(walls) == 2
         assert r["cold_s"] == walls[0] and r["warm_s"] == walls[1]
         assert all(rep["spark"]["spark.tasks"] > 0 for rep in r["reps"]), r["reps"]
+        # neither workload passes a size gate, so no decision is recorded
+        assert all(rep["gates"] == [] for rep in r["reps"]), r["reps"]
     assert "Physical Plan" in by["envelope_pip_join"]["plan"]
     assert set(by["ingest"]["reps"][0]["stages"]) == {"z13", "z12", "z11", "z10", "z9", "attrs"}
 

@@ -14,6 +14,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from geotrellis_landsat_emr_demo_spark import gates
 from geotrellis_landsat_emr_demo_spark.operators import similarity as sim
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -146,15 +147,27 @@ def _assert_topk_equal(got, want):
             assert gc == wc, (k, gc.hex(), wc.hex())  # bitwise double equality
 
 
-def test_cosine_topk_collected_matches_lazy_on_corpus(spark):
+def _topk_capped(monkeypatch, gate_log, cap, branch, *args, **kwargs):
+    """cosine_topk with the query-collect cap at ``cap`` (None: as set),
+    checking that the gate took ``branch``."""
+    gate_log.clear()
+    with monkeypatch.context() as mp:
+        if cap is not None:
+            mp.setitem(gates.CAPS, "topk_collect_queries", cap)
+        got = _topk_map(sim.cosine_topk(*args, **kwargs))
+    assert gate_log.branches("topk_collect_queries") == {branch}
+    return got
+
+
+def test_cosine_topk_collected_matches_lazy_on_corpus(spark, monkeypatch, gate_log):
     e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = e.filter(F.col("vec_id") < 7)
-    got = _topk_map(sim.cosine_topk(e, q, k=5))          # collected fast path
-    want = _topk_map(sim.cosine_topk(e, q, k=5, max_collect_queries=0))
+    got = _topk_capped(monkeypatch, gate_log, None, "fits", e, q, k=5)
+    want = _topk_capped(monkeypatch, gate_log, 0, "over", e, q, k=5)
     _assert_topk_equal(got, want)
 
 
-def test_cosine_topk_collected_matches_lazy_adversarial(spark):
+def test_cosine_topk_collected_matches_lazy_adversarial(spark, monkeypatch, gate_log):
     # zero vectors (NaN/null cosine ordering), exact duplicate vectors
     # (cosine ties broken by neighbor id), float32 inputs, self-exclusion
     rng = np.random.default_rng(11)
@@ -167,17 +180,22 @@ def test_cosine_topk_collected_matches_lazy_adversarial(spark):
     e = spark.createDataFrame(pdf)
     q = e.filter(F.col("vec_id").isin([0, 3, 5]))  # incl. a zero-vector query
     for excl in (True, False):
-        got = _topk_map(sim.cosine_topk(e, q, k=6, exclude_self=excl))
-        want = _topk_map(
-            sim.cosine_topk(e, q, k=6, exclude_self=excl, max_collect_queries=0)
+        got = _topk_capped(
+            monkeypatch, gate_log, None, "fits", e, q, k=6, exclude_self=excl
+        )
+        want = _topk_capped(
+            monkeypatch, gate_log, 0, "over", e, q, k=6, exclude_self=excl
         )
         _assert_topk_equal(got, want)
 
 
-def test_cosine_topk_cap_falls_back_to_lazy(spark):
+def test_cosine_topk_cap_falls_back_to_lazy(spark, monkeypatch, gate_log):
     # a query side above the cap must keep the fully-lazy formulation
     e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = e.filter(F.col("vec_id") < 9)
-    got = _topk_map(sim.cosine_topk(e, q, k=3, max_collect_queries=4))
-    want = _topk_map(sim.cosine_topk(e, q, k=3, max_collect_queries=0))
+    got = _topk_capped(monkeypatch, gate_log, 4, "over", e, q, k=3)
+    assert gate_log.decisions("topk_collect_queries") == [
+        ("topk_collect_queries", 5, 4, "over")
+    ]
+    want = _topk_capped(monkeypatch, gate_log, 0, "over", e, q, k=3)
     _assert_topk_equal(got, want)

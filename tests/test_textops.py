@@ -5,6 +5,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from geotrellis_landsat_emr_demo_spark import gates
 from geotrellis_landsat_emr_demo_spark.operators import similarity, textops
 
 SF = "/root/testdata/sf0.001"
@@ -100,7 +101,7 @@ def test_simhash_properties(docs):
     assert any((r.doc_a, r.doc_b) == (0, 9001) for r in pairs)
 
 
-def test_ngram_jaccard_pairs(docs):
+def test_ngram_jaccard_pairs(docs, monkeypatch, gate_log):
     # low threshold so the 'dup' bucket pair (different base texts) appears
     pairs = textops.ngram_jaccard_pairs(docs, bucket_col="source", min_jaccard=1e-9)
     got = {(r.doc_a, r.doc_b): r.jaccard for r in pairs.collect()}
@@ -125,13 +126,12 @@ def test_ngram_jaccard_pairs(docs):
             j = len(ta & tb) / len(ta | tb)
             if j >= 0.3:
                 brute[(a, b)] = j
-    got3 = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in textops.ngram_jaccard_pairs(docs, "source", 0.3).collect()
-    }
-    assert got3.keys() == brute.keys()
-    for k in brute:
-        assert abs(got3[k] - brute[k]) < 1e-9
+    # this corpus passes the dense gates: check the ppjoin path too
+    for dense in (True, False):
+        got3 = _jaccard(monkeypatch, gate_log, dense, docs, "source", 0.3)
+        assert got3.keys() == brute.keys()
+        for k in brute:
+            assert abs(got3[k] - brute[k]) < 1e-9
 
 
 def test_simhash_block_recall_guarantee(spark):
@@ -165,28 +165,31 @@ def test_simhash_block_recall_guarantee(spark):
     assert got == brute
 
 
-def test_ngram_jaccard_skewed_bucket(spark):
-    """One giant bucket must not blow up the inverted-index join: every doc
-    in one source, pair count stays bounded by shared-token pairs."""
+def test_ngram_jaccard_skewed_bucket(spark, monkeypatch, gate_log):
+    """One giant bucket must not blow up the inverted-index join (nor the
+    dense path): every doc in one source, pair count stays bounded by
+    shared-token pairs."""
     rows = [
         dict(doc_id=i, source="hot", text=f"tok{i} tok{i+1} tok{i+2}", lang="en",
              n_chars=20)
         for i in range(200)
     ]
     docs = spark.createDataFrame(pd.DataFrame(rows))
-    out = textops.ngram_jaccard_pairs(docs, "source", 0.2).collect()
-    # doc i overlaps only docs i±1 (2 shared) and i±2 (1 shared):
-    # jaccard 2/4=0.5 and 1/5=0.2 -> 199 + 198 pairs
-    assert len(out) == 199 + 198
-    assert all(r.jaccard in (0.5, 0.2) for r in out)
+    for dense in (True, False):
+        out = _jaccard(monkeypatch, gate_log, dense, docs, "source", 0.2)
+        # doc i overlaps only docs i±1 (2 shared) and i±2 (1 shared):
+        # jaccard 2/4=0.5 and 1/5=0.2 -> 199 + 198 pairs
+        assert len(out) == 199 + 198
+        assert all(j in (0.5, 0.2) for j in out.values())
 
 
-def test_ngram_jaccard_hot_cap_truncation_exact(spark):
-    """Force the hot-set cap to truncate (hot_cutoff=1 makes nearly every
-    token 'hot', max_hot=3 keeps only the 3 hottest in the literal): the
-    result must STILL equal the all-pairs brute force — truncation only
-    relaxes the skew bound, never exactness — and the in-plan literal is
-    bounded at max_hot."""
+def test_ngram_jaccard_hot_cap_truncation_exact(spark, monkeypatch, gate_log):
+    """Force the hot-set cap to truncate (a key fan-out cap of 1 makes
+    nearly every token 'hot', a hot-token cap of 3 keeps only the 3
+    hottest in the literal) on the ppjoin path: the result must STILL
+    equal the all-pairs brute force — truncation only relaxes the skew
+    bound, never exactness — and the in-plan literal is bounded at the
+    cap."""
     rows = [
         dict(
             doc_id=i,
@@ -198,16 +201,22 @@ def test_ngram_jaccard_hot_cap_truncation_exact(spark):
         for i in range(60)
     ]
     docs = spark.createDataFrame(pd.DataFrame(rows))
-    # sanity: the uncapped hot set at cutoff=1 is larger than the cap
+    # sanity: the uncapped hot set at fan-out 1 is larger than the cap
+    monkeypatch.setitem(gates.CAPS, "jaccard_key_fanout", 1)
     base = textops._token_base(docs, "source", True, r"\s+")
-    assert len(textops._hot_hashes(base, 1, max_hot=10_000)) > 3
-    assert len(textops._hot_hashes(base, 1, max_hot=3)) == 3
+    assert len(textops._hot_hashes(base)) > 3
+    monkeypatch.setitem(gates.CAPS, "jaccard_hot_tokens", 3)
+    assert len(textops._hot_hashes(base)) == 3
+    # this tiny vocabulary would take the dense path: close it
+    monkeypatch.setitem(gates.CAPS, "jaccard_dense_doc_tokens", 0)
+    gate_log.clear()
     got = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in textops.ngram_jaccard_pairs(
-            docs, "source", 0.4, hot_cutoff=1, max_hot=3
-        ).collect()
+        for r in textops.ngram_jaccard_pairs(docs, "source", 0.4).collect()
     }
+    assert gate_log.decisions("jaccard_hot_tokens") == [
+        ("jaccard_hot_tokens", 3, 3, "capped")
+    ]
     brute = {}
     for i in range(60):
         for j in range(i + 1, 60):
@@ -363,7 +372,7 @@ def test_prefix_filter_bounds_hot_tokens(spark):
     t = 0.7
     base = textops._token_base(docs, "source", True, r"\s+")
     full_rows = base.select(F.explode("hs")).count()
-    hot = textops._hot_hashes(base, 256)
+    hot = textops._hot_hashes(base)
     assert len(hot) == 10  # exactly the 10 planted stopwords exceed df=256
     idx = textops._prefix_index(base, t, hot=hot)
     idx_rows = idx.count()
@@ -682,10 +691,11 @@ def test_train_test_split_properties(spark):
     assert 0.1 < frac < 0.35, frac
 
 
-def test_prefix_filter_parity_sweep(spark):
+def test_prefix_filter_parity_sweep(spark, monkeypatch, gate_log):
     """Seeded sweep: random corpora x random thresholds — the prefix-
-    filtered join must equal brute force EXACTLY at every threshold,
-    including ceil-boundary thresholds (t*n exactly integral)."""
+    filtered join (and the dense path these tiny corpora pass the gates
+    for) must equal brute force EXACTLY at every threshold, including
+    ceil-boundary thresholds (t*n exactly integral)."""
     import random
 
     rng = random.Random(23)
@@ -701,10 +711,6 @@ def test_prefix_filter_parity_sweep(spark):
         # planted exact dup -> jaccard 1.0 beats every threshold
         rows.append(dict(rows[0], doc_id=100))
         docs = spark.createDataFrame(pd.DataFrame(rows))
-        got = {
-            (r.doc_a, r.doc_b): r.jaccard
-            for r in textops.ngram_jaccard_pairs(docs, "source", t).collect()
-        }
         texts = {r["doc_id"]: (r["source"], set(r["text"].split())) for r in rows}
         ids = sorted(texts)
         brute = {}
@@ -716,10 +722,12 @@ def test_prefix_filter_parity_sweep(spark):
                 j = len(ta & tb) / len(ta | tb)
                 if j >= t:
                     brute[(a, b)] = j
-        assert got.keys() == brute.keys(), f"trial {trial} t={t}"
-        for k in brute:
-            assert abs(got[k] - brute[k]) < 1e-9
         assert brute, f"trial {trial} must be non-vacuous"
+        for dense in (True, False):
+            got = _jaccard(monkeypatch, gate_log, dense, docs, "source", t)
+            assert got.keys() == brute.keys(), f"trial {trial} t={t} dense={dense}"
+            for k in brute:
+                assert abs(got[k] - brute[k]) < 1e-9
 
 
 def test_pii_scrub(spark):
@@ -957,7 +965,41 @@ def test_minhash_portable_signatures_match_expr(spark, docs):
         assert got == want and len(got) > 0
 
 
-def test_ngram_jaccard_dense_path_matches_ppjoin(spark):
+# caps that force ngram_jaccard_pairs onto each path, and the decision
+# that proves the path ran
+_OPEN = 1 << 20
+JACCARD_PATHS = {
+    True: (
+        {
+            "jaccard_dense_doc_tokens": _OPEN,
+            "jaccard_dense_vocab": _OPEN,
+            "jaccard_dense_bucket_docs": _OPEN,
+        },
+        ("jaccard_dense_bucket_docs", "fits"),
+    ),
+    False: ({"jaccard_dense_doc_tokens": 0}, ("jaccard_dense_doc_tokens", "over")),
+}
+
+
+def _jaccard(monkeypatch, gate_log, dense, *args, **kwargs):
+    """ngram_jaccard_pairs forced onto the dense (True) or ppjoin (False)
+    path, as {(doc_a, doc_b): jaccard}."""
+    caps, (gate, branch) = JACCARD_PATHS[dense]
+    gate_log.clear()
+    with monkeypatch.context() as mp:
+        for name, cap in caps.items():
+            mp.setitem(gates.CAPS, name, cap)
+        got = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in textops.ngram_jaccard_pairs(*args, **kwargs).collect()
+        }
+    assert gate_log.branches(gate) == {branch}, (dense, gate_log.decisions(gate))
+    # only the ppjoin path reads the hot-token set
+    assert bool(gate_log.decisions("jaccard_hot_tokens")) != dense
+    return got
+
+
+def test_ngram_jaccard_dense_path_matches_ppjoin(spark, monkeypatch, gate_log):
     """r8: the dense-bitset fast path must equal the ppjoin inverted-index
     path row-for-row (ids and jaccard doubles bitwise) — rounded and
     unrounded variants."""
@@ -966,24 +1008,14 @@ def test_ngram_jaccard_dense_path_matches_ppjoin(spark):
         dict(min_jaccard=0.7, round_to=3),
         dict(min_jaccard=0.5, round_to=None),
     ):
-        dense = {
-            (r.doc_a, r.doc_b): r.jaccard
-            for r in textops.ngram_jaccard_pairs(
-                d, "source", dense_path=True, **kwargs
-            ).collect()
-        }
-        pp = {
-            (r.doc_a, r.doc_b): r.jaccard
-            for r in textops.ngram_jaccard_pairs(
-                d, "source", dense_path=False, **kwargs
-            ).collect()
-        }
+        dense = _jaccard(monkeypatch, gate_log, True, d, "source", **kwargs)
+        pp = _jaccard(monkeypatch, gate_log, False, d, "source", **kwargs)
         assert dense.keys() == pp.keys() and len(dense) > 0
         for k in pp:
             assert dense[k] == pp[k], (k, dense[k].hex(), pp[k].hex())
 
 
-def test_ngram_jaccard_dense_half_up_midpoint(spark):
+def test_ngram_jaccard_dense_half_up_midpoint(spark, monkeypatch, gate_log):
     """13/16 = 0.8125 is exactly representable: Spark's HALF_UP rounds it
     to 0.813 where numpy's half-even gives 0.812 — the dense path must
     take the HALF_UP table."""
@@ -998,14 +1030,11 @@ def test_ngram_jaccard_dense_half_up_midpoint(spark):
         ]
     )
     d = spark.createDataFrame(pdf)
-    for force in (True, False):
-        got = {
-            (r.doc_a, r.doc_b): r.jaccard
-            for r in textops.ngram_jaccard_pairs(
-                d, "source", min_jaccard=0.5, round_to=3, dense_path=force
-            ).collect()
-        }
-        assert got == {(1, 2): 0.813}, (force, got)
+    for dense in (True, False):
+        got = _jaccard(
+            monkeypatch, gate_log, dense, d, "source", min_jaccard=0.5, round_to=3
+        )
+        assert got == {(1, 2): 0.813}, (dense, got)
 
 
 def _lang_id_ngram_ref(docs, gram_n=3, top_k=300, max_chars=400, round_to=4):

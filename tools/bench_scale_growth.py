@@ -94,20 +94,7 @@ def measure(spark, n: int) -> dict:
     n_out = pairs.count()
     wall = time.time() - t0
     sigs = textops.minhash_portable_signatures(docs, 8, 3).localCheckpoint(eager=True)
-    banded = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("band"),
-                        F.concat_ws("|", f"h{t*2}", f"h{t*2+1}").alias("bucket"),
-                    )
-                    for t in range(4)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
+    banded = textops._minhash_banded(sigs, 4, 2)
     x, y = banded.alias("x"), banded.alias("y")
     n_cand = (
         x.join(
@@ -159,7 +146,7 @@ def measure(spark, n: int) -> dict:
     base = textops._token_base(docs, "source", True, r"\s+").localCheckpoint(
         eager=True
     )
-    inv = textops._prefix_index(base, t_pref, hot=textops._hot_hashes(base, 256))
+    inv = textops._prefix_index(base, t_pref, hot=textops._hot_hashes(base))
     x, y = inv.alias("x"), inv.alias("y")
     n_cand = (
         x.join(

@@ -134,10 +134,11 @@ CHECKS = {
     ],
     # connected components: the returned plan reads the converged edge
     # fixpoint (checkpointed per round) — ExistingRDD, no parquet re-scan
-    # adaptive: at sf0.01 the edge count is under the driver_threshold,
-    # so the plan is the small-side union-find result (LocalTableScan);
-    # the distributed star/star loop (ExistingRDD checkpoints) is forced
-    # and verified in tests/test_graph.py with driver_threshold=0
+    # adaptive: at sf0.01 the edge count is within the cc_driver_edges
+    # cap (gates.CAPS), so the plan is the small-side union-find result
+    # (LocalTableScan); the distributed star/star loop (ExistingRDD
+    # checkpoints) is forced and verified in tests/test_graph.py by
+    # closing that cap
     "dedup_components": ["ExistingRDD|LocalTableScan", "count<=0:Scan parquet"],
     # incremental probe: batch signatures checkpointed once (ExistingRDD),
     # banded equi-joins, all JVM (md5 min-aggregation)

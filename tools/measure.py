@@ -13,7 +13,8 @@ Each rep runs under its own Spark job group, and its totals (task run vs
 CPU time, GC, shuffle, spill, Python bytes; ``perfbench/tracing.py``'s
 event-log parser) come with its wall time; an ingest rep also carries
 the per-stage walls ``ingest_images`` returns, a leaf rep its formatted
-plan.  Every level runs pinned to its CPUs on a session with warm Python
+plan.  Every rep also lists the size-gate decisions it made
+(``gates.py``: gate, measured size, cap, branch).  Every level runs pinned to its CPUs on a session with warm Python
 workers, and caches are dropped after every rep.
 
 Data and default level as in bench.py: $SPARK_GRAFT_SF_DIR (leaves) and
@@ -35,6 +36,7 @@ from __future__ import annotations
 import argparse
 import gc
 import json
+import logging
 import os
 import shutil
 import sys
@@ -46,6 +48,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from bench import CPUS, HEADLINE, SF_DIR, materialize  # noqa: E402
+from geotrellis_landsat_emr_demo_spark import gates  # noqa: E402
 from perfbench import tracing  # noqa: E402
 
 DATA = os.path.join(REPO, ".bench_data")
@@ -177,6 +180,22 @@ def ingest(images, kw: dict) -> Callable:
     return run
 
 
+class Decisions(logging.Handler):
+    """The size-gate decision records (one line each) since the last
+    :meth:`take`."""
+
+    def __init__(self):
+        super().__init__(logging.DEBUG)
+        self.lines: list[str] = []
+
+    def emit(self, record):
+        self.lines.append(record.getMessage())
+
+    def take(self) -> list[str]:
+        lines, self.lines = self.lines, []
+        return lines
+
+
 def measure(variants: list[Variant], reps: int) -> list[dict]:
     """Run ``reps`` reps of every variant.  The variants of one workload
     (its CPU levels and ingest kwargs, the ones a run compares) are
@@ -185,6 +204,9 @@ def measure(variants: list[Variant], reps: int) -> list[dict]:
     consecutive variants of one CPU level."""
     runs: list[list[dict]] = [[] for _ in variants]
     os.makedirs(DATA, exist_ok=True)
+    gate_log = Decisions()
+    gates.log.addHandler(gate_log)
+    gates.log.setLevel(logging.DEBUG)
     with tempfile.TemporaryDirectory(prefix="events-", dir=DATA) as log_dir:
         spark, level = None, None
         try:
@@ -200,17 +222,19 @@ def measure(variants: list[Variant], reps: int) -> list[dict]:
                             spark, level = session(v.cpus, log_dir), v.cpus
                         group = f"{workload}{json.dumps(v.kw) if v.kw else ''}@{level}#{rep}"
                         spark.sparkContext.setJobGroup(group, group)
+                        gate_log.take()
                         try:
                             r = v.run(spark)
                         finally:
                             spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
                         drop_caches(spark)
-                        out.append(dict(r, group=group))
+                        out.append(dict(r, group=group, gates=gate_log.take()))
                         print(f"# {group} {r['wall_s']} s", file=sys.stderr, flush=True)
         finally:
             if spark is not None:
                 spark.stop()  # closes the event log
             pin(None)
+            gates.log.removeHandler(gate_log)
         groups = tracing.parse_event_log(log_dir)
     results = []
     for v, out in zip(variants, runs):
