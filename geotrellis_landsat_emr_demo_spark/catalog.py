@@ -239,9 +239,9 @@ class Catalog:
         dir (NOT yet visible). Call :meth:`commit` to publish them.
 
         ``write_options`` pass through to the parquet writer — e.g.
-        ``operators.ingest.TILE_WRITE_OPTIONS``, the tiles table's small
-        row groups (a row group is the payload-IO unit: a point read
-        decompresses one whole column chunk of it)."""
+        ``operators.ingest.TILE_WRITE_OPTIONS``, the tiles table's
+        one-tile row groups (a row group is the payload-IO unit: a point
+        read decompresses one whole column chunk of it)."""
         stage = os.path.join(self.root, f"_stage-{uuid.uuid4().hex}")
         w = df.write.mode("overwrite")
         for k, v in (write_options or {}).items():

@@ -99,7 +99,8 @@ def bands_u16(arr: np.ndarray) -> np.ndarray:
 
 
 def decode_payload(data: bytes) -> np.ndarray:
-    """bytes -> (bands, h, w) uint16.  Inverse of :func:`encode_payload`,
+    """bytes -> (bands, h, w) uint16, an array that owns its pixels (also
+    for a zero-copy ``pyarrow.Buffer``).  Inverse of :func:`encode_payload`,
     plus container dispatch on magic bytes: GeoTIFF (``II*``/``MM*``) and
     baseline JPEG (``FFD8``) payloads decode through the built-in
     pure-numpy codecs, so scenes can arrive in the reference's actual
@@ -173,17 +174,16 @@ def from_double(arr_f8: np.ndarray) -> np.ndarray:
 # ----------------------------------------------------------- band math ----
 
 def ndvi(arr: np.ndarray) -> np.ndarray:
-    """(nir - r) / (nir + r) over bands (0, 3) — NDVI.scala:5-10."""
-    d = to_double(arr)
-    r, nir = d[0], d[3]
+    """(nir - r) / (nir + r) over bands (0, 3) — NDVI.scala:5-10.  Only
+    the two bands read are converted."""
+    r, nir = to_double(arr[0]), to_double(arr[3])
     with np.errstate(invalid="ignore", divide="ignore"):
         return (nir - r) / (nir + r)
 
 
 def ndwi(arr: np.ndarray) -> np.ndarray:
     """(g - nir) / (g + nir) over bands (1, 3) — NDWI.scala:5-10."""
-    d = to_double(arr)
-    g, nir = d[1], d[3]
+    g, nir = to_double(arr[1]), to_double(arr[3])
     with np.errstate(invalid="ignore", divide="ignore"):
         return (g - nir) / (g + nir)
 
@@ -232,24 +232,24 @@ def _adjust(v: np.ndarray) -> np.ndarray:
     return out
 
 
+# The clamp/normalize/adjust chain per uint16 value (NoData 0 -> 0): the
+# chain above stays the definition, evaluated once over all 65,536 values.
+_RGB_LUT = np.clip(
+    _adjust(_normalize_band(np.arange(65536, dtype=np.uint16))), 0, 255
+).astype(np.uint8)
+
+
 def render_rgb(arr: np.ndarray) -> np.ndarray:
     """MultibandTile -> (h, w, 4) uint8 RGBA. NoData -> fully transparent.
 
     Render.image for the Landsat (UShortCellType) branch,
-    Render.scala:19-86."""
-    r = _adjust(_normalize_band(arr[0]))
-    g = _adjust(_normalize_band(arr[1]))
-    b = _adjust(_normalize_band(arr[2]))
-    alpha = np.where((r >= 0) & (g >= 0) & (b >= 0), 255, 0).astype(np.uint8)
-    rgba = np.stack(
-        [
-            np.clip(r, 0, 255).astype(np.uint8),
-            np.clip(g, 0, 255).astype(np.uint8),
-            np.clip(b, 0, 255).astype(np.uint8),
-            alpha,
-        ],
-        axis=-1,
-    )
+    Render.scala:19-86: each of bands 0/1/2 through the chain's lookup
+    table, alpha 255 where all three are data."""
+    rgba = np.empty(arr.shape[1:] + (4,), dtype=np.uint8)
+    for b in range(3):
+        rgba[..., b] = _RGB_LUT.take(arr[b])
+    data = (arr[0] != NODATA_U16) & (arr[1] != NODATA_U16) & (arr[2] != NODATA_U16)
+    rgba[..., 3] = np.where(data, 255, 0)
     return rgba
 
 
@@ -317,11 +317,12 @@ NDWI_DIFF_RAMP = _parse_color_ramp(
 def classify(values: np.ndarray, ramp) -> np.ndarray:
     """float64 field -> RGBA via <=-break classification (F10)."""
     breaks, colors = ramp
+    # searchsorted puts NaN and values above the last break at index n:
+    # the transparent entry of the (n + 1)-entry RGBA table
+    table = np.zeros(len(breaks) + 1, dtype=np.uint32)
+    table[:-1] = colors.view(np.uint32).ravel()
     idx = np.searchsorted(breaks, values, side="left")
-    out = np.zeros(values.shape + (4,), dtype=np.uint8)
-    ok = ~np.isnan(values) & (idx < len(breaks))
-    out[ok] = colors[idx[ok]]
-    return out
+    return table.take(idx).view(np.uint8).reshape(values.shape + (4,))
 
 
 # ---------------------------------------------------------- resampling ----

@@ -338,13 +338,17 @@ def _parent_fn(layer: str, zoom: int, store_fmt: str):
 
 
 # The tiles table's row-group bound, set by both tile writers
-# (_commit_level and compact_tiles): at most 4 tiles (~1 MB) per row group.
-# The row group is the unit of payload IO for a serving read — one whole
-# `tile` column chunk is decompressed per hit — so serving latency scales
-# with row-group size, not file size.  A byte bound does not hold it:
-# with parquet.block.size = 1 MB the writer still packed 2-94 tiles per
-# row group, and compaction's default 128 MB block packs whole files.
-TILE_WRITE_OPTIONS = {"parquet.block.row.count.limit": "4"}
+# (_commit_level and compact_tiles): one tile per row group.  The row
+# group is the unit of payload IO for a serving read — one whole `tile`
+# column chunk is decompressed per hit — so a point read decompresses
+# exactly the tile it serves, as the reference's ValueReader reads one
+# value per key (TileReader.scala:12-21).  Against 4 tiles per row group
+# this costs ~2.3% more stored bytes per tile (per-row-group footer and
+# page headers) and cuts the payload a point read decompresses from
+# ~2.6 MB to ~0.66 MB.  A byte bound does not hold it: with parquet.block.size =
+# 1 MB the writer still packed 2-94 tiles per row group, and compaction's
+# default 128 MB block packs whole files.
+TILE_WRITE_OPTIONS = {"parquet.block.row.count.limit": "1"}
 
 
 def compact_tiles(
@@ -442,9 +446,9 @@ def _commit_level(
     write — a free sort (no shuffle) that gives every parquet row group a
     tight cell_key min/max, so the serving point reads prune row groups
     the way the reference's Z-order SFC index prunes backend range scans
-    (conf/output.json:15-18); ``TILE_WRITE_OPTIONS`` caps a row group at
-    four tiles, so a serving hit decompresses at most four payloads.  Full
-    cross-file clustering happens at compaction (:func:`compact_tiles`)."""
+    (conf/output.json:15-18); ``TILE_WRITE_OPTIONS`` holds a row group to
+    one tile, so a serving hit decompresses only the payload it serves.
+    Full cross-file clustering happens at compaction (:func:`compact_tiles`)."""
     files = cat.stage_spark_write(
         df.sortWithinPartitions("cell_key", "ts"), "tiles", write_options=TILE_WRITE_OPTIONS
     )

@@ -11,7 +11,8 @@ Every tile route reads the tiles table through one keyed read,
 :meth:`LayerService._read_keys`, with no Spark job: a row-level key index
 (:class:`_KeyIndex`, every row's cell_key and ts, built once per snapshot,
 layer and zoom) finds the rows of the wanted keys by binary search, and
-only the ``tile`` column of the row groups holding them is read — what
+only the ``tile`` column of the row groups holding them is read — one
+tile per row group, so a hit decompresses only its own payload, what
 the reference's ValueReader + SFC index does (TileReader.scala:12-21,
 Router.scala:84-86,146-150).  A key that is not stored reads nothing.
 Point reads add a decoded-tile LRU cache.  The /mean mask is the scanline
@@ -83,10 +84,10 @@ class _KeyIndex:
     metadata), so a payload read opens its own handle without re-reading
     the footer.
 
-    Memory is 24 bytes per tile (key, ts, position), against the
-    O(tiles / 4) footer min/max pairs of a row-group index; in exchange a
-    lookup reads no key column, and a key that is not stored reads
-    nothing."""
+    Memory is 24 bytes per tile (key, ts, position) plus a row-group
+    start per tile (the tiles table holds one tile per row group); in
+    exchange a lookup reads no key column and no footer statistics, and a
+    key that is not stored reads nothing."""
 
     def __init__(self, paths: list[str]):
         self.files, keys, ts, rg_start, rg_file, rg_num = [], [], [], [], [], []
@@ -243,14 +244,19 @@ class LayerService:
         when None), in index order — file, row group, row, the order of a
         dataset scan over the same files.  The key index finds the rows;
         only the ``tile`` column of the row groups holding them is read,
-        and a key that is not stored reads nothing."""
+        on the calling thread (one column chunk of one tile: handing it to
+        Arrow's thread pool costs more than it saves), and a key that is
+        not stored reads nothing.  Payloads are zero-copy ``pyarrow.Buffer``
+        views of the read; :func:`kernels.decode_payload` returns arrays
+        that own their pixels, so the tile cache pins no Arrow buffer."""
         out = []
         for path, md, rg, ks, tss, rows in self._key_index(layer, zoom).lookup(keys, time_millis):
             with pq.ParquetFile(path, metadata=md) as pf:
-                tiles = pf.read_row_group(rg, columns=["tile"])["tile"]
+                tiles = pf.read_row_group(rg, columns=["tile"], use_threads=False)["tile"]
             _, xs, ys = cellindex.cell_decode(ks)
             out.extend(
-                (int(x), int(y), t, tiles[int(r)].as_py()) for x, y, t, r in zip(xs, ys, tss, rows)
+                (int(x), int(y), t, tiles[int(r)].as_buffer())
+                for x, y, t, r in zip(xs, ys, tss, rows)
             )
         return out
 
@@ -338,7 +344,8 @@ class LayerService:
             return []
         out = []
         for _, _, ts, payload in self._read_keys(layer, zoom, [cellindex.cell_key(zoom, x, y)]):
-            val = float(op(kernels.decode_payload(payload))[rown, col])
+            pixel = kernels.decode_payload(payload)[:, rown : rown + 1, col : col + 1]
+            val = float(op(pixel)[0, 0])
             if not np.isnan(val):  # Router.scala:100 filterNot(_._2.isNaN)
                 millis = int(pd.Timestamp(ts).value // 1_000_000)
                 out.append((format_time_utc_minus4(millis), val))

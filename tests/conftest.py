@@ -9,6 +9,14 @@ import shutil
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+# The suite's one local-mode JVM gets a heap sized to the host — half its
+# RAM, at most 6 GiB — not session.py's 60g default, under which the JVM
+# can grow until the host runs out of memory.  Not perfbench's 4 GiB:
+# test_ingest::test_auto_salt_buckets_heuristic ships a ~790 MB frame to
+# the JVM in one task, which the driver and the executor both hold in the
+# one heap, and at 4 GiB it ran out of heap in one of two full runs.
+_RAM_MB = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{max(1024, min(6144, _RAM_MB // 2))}m")
 
 SCRATCH = os.path.join(os.path.dirname(__file__), "..", ".scratch", "pytest")
 

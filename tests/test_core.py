@@ -339,6 +339,98 @@ def test_classify_break_semantics():
     assert rgba[5].tolist() == [0, 0, 0, 0]  # NaN -> noDataColor
 
 
+# The formulations the serving kernels replaced, kept as oracles: the
+# float64 clamp/normalize/adjust chain per pixel, the boolean-mask colour
+# scatter, and band math over every band converted to float64.
+
+
+def _render_rgb_chain(arr):
+    r, g, b = (K._adjust(K._normalize_band(arr[i])) for i in range(3))
+    alpha = np.where((r >= 0) & (g >= 0) & (b >= 0), 255, 0).astype(np.uint8)
+    chans = [np.clip(c, 0, 255).astype(np.uint8) for c in (r, g, b)]
+    return np.stack(chans + [alpha], axis=-1)
+
+
+def _classify_scatter(values, ramp):
+    breaks, colors = ramp
+    idx = np.searchsorted(breaks, values, side="left")
+    out = np.zeros(values.shape + (4,), dtype=np.uint8)
+    ok = ~np.isnan(values) & (idx < len(breaks))
+    out[ok] = colors[idx[ok]]
+    return out
+
+
+def _index_all_bands(arr, a, b):
+    d = K.to_double(arr)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return (d[b] - d[a]) / (d[b] + d[a])
+
+
+def test_render_rgb_lut_every_value():
+    """Every uint16 value in every band, each band in a different order
+    so the NoData value 0 sits alone in one band at a time."""
+    rng = np.random.default_rng(5)
+    v = np.arange(65536, dtype=np.uint16)
+    arr = np.stack([v, rng.permutation(v), rng.permutation(v)]).reshape(3, 256, 256)
+    got = K.render_rgb(arr)
+    assert got.dtype == np.uint8 and got.shape == (256, 256, 4)
+    np.testing.assert_array_equal(got, _render_rgb_chain(arr))
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_render_rgb_lut_random_tiles(seed):
+    """Random 5-band tiles with NoData in single bands, in every band
+    combination, and values around the clamp bounds."""
+    rng = np.random.default_rng(seed)
+    arr = rng.integers(0, 20000, size=(5, 256, 256)).astype(np.uint16)
+    arr[:, :8] = rng.choice([1, 3999, 4000, 4001, 15175, 15176, 15177, 65535], (5, 8, 256))
+    for b in range(5):
+        arr[b][rng.random((256, 256)) < 0.1] = 0
+    np.testing.assert_array_equal(K.render_rgb(arr), _render_rgb_chain(arr))
+
+
+@pytest.mark.parametrize(
+    "ramp", [K.NDVI_RAMP, K.NDWI_RAMP, K.NDVI_DIFF_RAMP, K.NDWI_DIFF_RAMP]
+)
+def test_classify_table_matches_scatter(ramp):
+    """NaN, +-inf, -0.0, every break, its two neighbouring doubles and a
+    random field: one colour-table gather equals the masked scatter."""
+    breaks = ramp[0]
+    rng = np.random.default_rng(9)
+    vals = np.concatenate(
+        [
+            [np.nan, np.inf, -np.inf, 0.0, -0.0],
+            breaks,
+            np.nextafter(breaks, np.inf),
+            np.nextafter(breaks, -np.inf),
+            rng.uniform(-2, 2, 4096),
+        ]
+    )
+    np.testing.assert_array_equal(K.classify(vals, ramp), _classify_scatter(vals, ramp))
+    field = rng.uniform(-1.2, 1.2, (256, 256))
+    field[rng.random((256, 256)) < 0.1] = np.nan
+    got = K.classify(field, ramp)
+    assert got.dtype == np.uint8 and got.shape == (256, 256, 4)
+    np.testing.assert_array_equal(got, _classify_scatter(field, ramp))
+
+
+def test_band_index_matches_all_band_conversion():
+    """ndvi/ndwi convert only the bands they read: same doubles, same NaN
+    positions, as converting all five bands; and the 1x1 window the
+    /series route evaluates gives the full-tile value at that pixel."""
+    rng = np.random.default_rng(4)
+    arr = rng.integers(0, 20000, size=(5, 256, 256)).astype(np.uint16)
+    for b in range(5):
+        arr[b][rng.random((256, 256)) < 0.1] = 0
+    pixels = rng.integers(0, 256, size=(256, 2))
+    for fn, a, b in ((K.ndvi, 0, 3), (K.ndwi, 3, 1)):
+        got, want = fn(arr), _index_all_bands(arr, a, b)
+        np.testing.assert_array_equal(np.isnan(got), np.isnan(want))
+        assert got.tobytes() == want.tobytes()
+        win = np.array([fn(arr[:, r : r + 1, c : c + 1])[0, 0] for r, c in pixels])
+        assert win.tobytes() == got[pixels[:, 0], pixels[:, 1]].tobytes()
+
+
 def test_bilinear_identity_and_gradient():
     rng = np.random.default_rng(3)
     src = rng.integers(1, 60000, size=(2, 64, 64)).astype(np.uint16)

@@ -1,5 +1,7 @@
 """Connected components / dedup-cluster collapse (operators.graph)."""
 
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -139,3 +141,29 @@ def test_pairs_memo_keeps_one_application(spark, monkeypatch):
         )
         entry._shared_jaccard_pairs(spark, SF)
     assert list(entry._PAIRS_MEMO) == [("app-2", SF)]
+    entry.drop_pairs_memo()
+
+
+def test_pairs_memo_removes_dropped_checkpoints(spark, monkeypatch):
+    """Each memo entry checkpoints into its own directory, which is
+    removed when the entry is dropped: by a later application's entry or
+    by ``drop_pairs_memo``."""
+    from pyspark import SparkContext
+
+    import __spark_entry__ as entry
+
+    monkeypatch.setattr(entry, "_PAIRS_MEMO", {})
+    dirs = []
+    for app in ("app-1", "app-2"):
+        monkeypatch.setattr(
+            SparkContext, "applicationId", property(lambda self, app=app: app)
+        )
+        pairs = entry._shared_jaccard_pairs(spark, SF)
+        d = entry._PAIRS_MEMO[(app, SF)][1]
+        assert os.path.basename(d).startswith("spark-graft-ckpt-") and os.listdir(d)
+        dirs.append(d)
+    assert dirs[0] != dirs[1]
+    assert not os.path.exists(dirs[0]) and os.path.isdir(dirs[1])
+    assert pairs.count() > 0  # app-2's checkpoint still reads
+    entry.drop_pairs_memo()
+    assert entry._PAIRS_MEMO == {} and not os.path.exists(dirs[1])

@@ -57,7 +57,7 @@ def test_compact_tiles_rewrite(spark):
 def test_sfc_clustered_layout(spark, tsmall_catalog):
     """Z-order layout parity: within every tiles file, rows are sorted by
     cell_key (tight row-group min/max = SFC range pruning) and every row
-    group holds at most four tiles (the serving read's payload-IO unit),
+    group holds exactly one tile (the serving read's payload-IO unit),
     for ingested and compacted files alike; after compaction, files within
     a (layer, zoom) group cover DISJOINT cell_key ranges (global
     clustering)."""
@@ -68,7 +68,7 @@ def test_sfc_clustered_layout(spark, tsmall_catalog):
         assert keys == sorted(keys), f
         md = pq.ParquetFile(f).metadata
         rows = [md.row_group(i).num_rows for i in range(md.num_row_groups)]
-        assert max(rows) <= 4, (f, rows)
+        assert rows == [1] * len(keys), (f, rows)
         return keys
 
     for f in tsmall_catalog.files("tiles"):

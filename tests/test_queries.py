@@ -108,6 +108,48 @@ def test_tile_cache_size_zero_disables_caching(svc, tsmall_catalog):
     assert (info.hits, info.misses, info.currsize) == (0, 2, 0)
 
 
+def test_keyed_read_is_zero_copy_and_decode_owns(svc, tsmall_catalog):
+    """A keyed read hands out payloads as zero-copy Arrow buffers; the
+    decoded tile owns its pixels, so the tile cache pins no Arrow
+    buffer."""
+    import pyarrow as pa
+
+    from geotrellis_landsat_emr_demo_spark.core import cellindex
+
+    x, y = _hot_key(tsmall_catalog)
+    hits = svc._read_keys("landsat", 13, [cellindex.cell_key(13, x, y)], parse_time(T1))
+    assert len(hits) == 1 and isinstance(hits[0][3], pa.Buffer)
+    tile = K.decode_payload(hits[0][3])
+    assert tile.flags.owndata and tile.dtype == np.uint16
+    assert svc._read_one(0, "landsat", 13, x, y, parse_time(T1)).flags.owndata
+
+
+def test_series_matches_full_tile_op(svc, tsmall_catalog):
+    """/series applies the op to the one pixel it answers; its values are
+    the full-tile op's at that pixel, at every stored time."""
+    from geotrellis_landsat_emr_demo_spark.core import cellindex
+
+    x, y = _hot_key(tsmall_catalog)
+    x0, y0, x1, y1 = tiling.tile_extent(x, y, 13)
+    for op in ("ndvi", "ndwi"):
+        for fx, fy in ((0.1, 0.2), (0.5, 0.5), (0.93, 0.71)):
+            mx, my = x0 + fx * (x1 - x0), y0 + fy * (y1 - y0)
+            lng, lat = (float(v) for v in geom.mercator_to_lnglat(mx, my))
+            got = svc.time_series("landsat", op, lat, lng)
+            # the pixel the route resolves, from the round-tripped point
+            mx, my = (float(v) for v in geom.lnglat_to_mercator(lng, lat))
+            px, py = (int(v) for v in tiling.map_to_tile(mx, my, 13))
+            ext = tiling.tile_extent(px, py, 13)
+            col, row = tiling.raster_extent_map_to_grid(mx, my, *ext, 256, 256)
+            key, expect = cellindex.cell_key(13, px, py), []
+            for _, _, ts, payload in svc._read_keys("landsat", 13, [key]):
+                v = float(getattr(K, op)(K.decode_payload(payload))[int(row), int(col)])
+                if not np.isnan(v):
+                    millis = int(pd.Timestamp(ts).value // 1_000_000)
+                    expect.append((format_time_utc_minus4(millis), v))
+            assert got == sorted(expect) and got, (op, fx, fy)
+
+
 def test_polygonal_mean_oracle(svc, tsmall_catalog):
     """Zonal mean vs an independent whole-raster oracle: mask every leaf
     tile's pixel centers, mean over all data cells."""

@@ -120,7 +120,7 @@ def joins_job(spark, sf_dir: str) -> dict:
     # the entry layer shares one checkpointed pair relation across the
     # dedup entries (production shape); the SCALING suite must execute
     # the full pipeline every pass, so drop the memo per measurement
-    entry._PAIRS_MEMO.clear()
+    entry.drop_pairs_memo()
     per_q = {}
     for name in JOIN_QUERIES:
         tq = time.time()
