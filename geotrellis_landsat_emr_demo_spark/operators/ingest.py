@@ -488,7 +488,7 @@ def _commit_level(
          "lineage": lin_files},
         markers={stage: dict(rows=rows, bytes=nbytes, wall_s=wall, zoom=zoom)},
     )
-    return rows, nbytes, files
+    return rows, nbytes
 
 
 _SALT_TARGET = 32  # fragments per (key, salt) reduce group the salted path aims for
@@ -578,39 +578,27 @@ def ingest_images(
         tiles = _leaf_tiles(
             images_df.select(*SOURCE_COLS), layer, max_zoom, store_fmt, salt_buckets
         )
-        rows, nbytes, level_files = _commit_level(
-            cat, tiles, layer, leaf_stage, max_zoom, t0
-        )
+        rows, nbytes = _commit_level(cat, tiles, layer, leaf_stage, max_zoom, t0)
         metrics[leaf_stage] = dict(rows=rows, bytes=nbytes, wall_s=time.time() - t0)
         if fail_after_stage == leaf_stage:
             raise RuntimeError(f"injected failure after {leaf_stage}")
     else:
         metrics[leaf_stage] = dict(skipped=True, **(cat.marker(leaf_stage) or {}))
-        level_files = None
 
     for zoom in range(max_zoom - 1, min_zoom - 1, -1):
         stage = f"ingest:{layer}:z{zoom}"
         if cat.is_committed(stage):
             metrics[stage] = dict(skipped=True, **(cat.marker(stage) or {}))
-            level_files = None
             continue
         t0 = time.time()
-        # read just the previous level's committed files when we wrote them
-        # this run; full table scan+filter only on resume
-        child = (
-            spark.read.parquet(*level_files)
-            if level_files
-            else read_level(spark, cat, layer, zoom + 1)
-        )
         parents = (
-            child.withColumn("px", (F.col("x") / 2).cast("int"))
+            read_level(spark, cat, layer, zoom + 1)
+            .withColumn("px", (F.col("x") / 2).cast("int"))
             .withColumn("py", (F.col("y") / 2).cast("int"))
             .groupBy("px", "py", "ts")
             .applyInPandas(_parent_fn(layer, zoom, store_fmt), schema=TILE_SCHEMA)
         )
-        rows, nbytes, level_files = _commit_level(
-            cat, parents, layer, stage, zoom, t0
-        )
+        rows, nbytes = _commit_level(cat, parents, layer, stage, zoom, t0)
         metrics[stage] = dict(rows=rows, bytes=nbytes, wall_s=time.time() - t0)
         if fail_after_stage == stage:
             raise RuntimeError(f"injected failure after {stage}")

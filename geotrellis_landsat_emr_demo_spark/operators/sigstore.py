@@ -27,7 +27,7 @@ the touched fraction is ``|new batch| x bands`` distinct buckets versus
 ``n_partitions``.  Size ``n_partitions`` well above the typical batch's
 bucket count (e.g. 64k for hourly crawl batches) and each probe touches
 ~``batch_buckets / n_partitions`` of the corpus index.  The growth check
-in tools/bench_scale_growth.py measures per-batch wall as the stored
+(``tools/measure.py --growth N``) measures per-batch wall as the stored
 corpus grows 10x.
 """
 

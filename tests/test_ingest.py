@@ -360,7 +360,9 @@ def test_auto_salt_buckets_heuristic(spark):
     partial per task; once the POST-COMBINER fan-in min(hot, par)
     reaches _SALT_TARGET, salting splits it across ~sqrt(eff) buckets
     (critical path eff/B + B; measured flat within 2x of the optimum)."""
-    pdf = fixtures.images_pdf("t-small")
+    # _auto_salt_buckets reads footprints only, so the frames carry no
+    # payload: 300 copies of a scene's footprint make the hot cell
+    pdf = fixtures.images_pdf("t-small")[["image_id", "ts", "xmin", "ymin", "xmax", "ymax"]]
     df = spark.createDataFrame(pdf)
     # uniform coverage, par 32: hot cells have only a handful of
     # contributors -> eff < _SALT_TARGET -> combiner only
