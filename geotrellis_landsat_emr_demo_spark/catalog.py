@@ -84,7 +84,7 @@ class Catalog:
         new inode, so the key is collision-proof even when two commits land
         in one coarse-clock mtime tick with unchanged size.  The returned
         dict is SHARED — treat as read-only; mutators must deep-copy (see
-        :meth:`commit`)."""
+        :meth:`_swap`)."""
         st = os.stat(self._manifest_path)
         key = (st.st_ino, st.st_mtime_ns, st.st_size)
         cached = getattr(self, "_manifest_cache", None)
@@ -108,6 +108,38 @@ class Catalog:
 
     # -------------------------------------------------------------- commit
 
+    def _swap(self, edit, markers: dict | None = None) -> int:
+        """The one manifest swap, under :meth:`_commit_lock`: re-read the
+        live manifest INSIDE the lock (so a racing commit's files survive),
+        apply ``edit`` to a deep copy (the cached manifest is shared) —
+        ``edit`` returns the new manifest and may raise to abort before
+        anything is written — archive the old manifest as a snapshot,
+        stamp ``markers`` (stage -> metadata), bump the snapshot id and
+        write.  Returns the new snapshot id."""
+        with self._commit_lock():
+            cur = self._read_manifest()
+            m = edit(copy.deepcopy(cur))
+            hist = os.path.join(self.root, "_history", f"{cur['snapshot']}.json")
+            with open(hist, "w") as f:
+                json.dump(cur, f)
+            now = time.time()
+            for k, v in (markers or {}).items():
+                m["committed"][k] = {"at": now, **(v or {})}
+            m["snapshot"] = cur["snapshot"] + 1  # snapshots are monotonic
+            self._write_manifest(m)
+            return m["snapshot"]
+
+    def _entries(self, files) -> list:
+        """Paths or (path, file-level metadata) tuples -> manifest file
+        entries: the relpath under root, or {path, meta} with metadata."""
+        out = []
+        for p in files:
+            p, meta = p if isinstance(p, tuple) else (p, None)
+            rel = os.path.relpath(p, self.root)
+            assert not rel.startswith(".."), f"file outside catalog root: {p}"
+            out.append({"path": rel, "meta": meta} if meta else rel)
+        return out
+
     def commit(self, adds: dict[str, list[str]], markers: dict | None = None) -> int:
         """Atomically append files to one or more tables, optionally
         recording completion ``markers`` (stage -> metadata) in the same
@@ -115,29 +147,14 @@ class Catalog:
 
         adds: {table_name: [absolute parquet paths already under root/<table>/]}
         """
-        with self._commit_lock():
-            # re-read INSIDE the lock so a racing commit's files survive
-            m = copy.deepcopy(self._read_manifest())  # cached manifest is shared
-            # archive previous manifest as a snapshot
-            hist = os.path.join(self.root, "_history", f"{m['snapshot']}.json")
-            with open(hist, "w") as f:
-                json.dump(m, f)
+
+        def edit(m):
             for table, files in adds.items():
                 entry = m["tables"].setdefault(table, {"files": []})
-                for p in files:
-                    meta = None
-                    if isinstance(p, tuple):  # (path, file-level metadata dict)
-                        p, meta = p
-                    rel = os.path.relpath(p, self.root)
-                    assert not rel.startswith(".."), f"file outside catalog root: {p}"
-                    entry["files"].append({"path": rel, "meta": meta} if meta else rel)
-            if markers:
-                now = time.time()
-                for k, v in markers.items():
-                    m["committed"][k] = {"at": now, **(v or {})}
-            m["snapshot"] += 1
-            self._write_manifest(m)
-            return m["snapshot"]
+                entry["files"].extend(self._entries(files))
+            return m
+
+        return self._swap(edit, markers)
 
     def replace(
         self,
@@ -159,32 +176,17 @@ class Catalog:
         Iceberg's validate-base-snapshot-then-commit protocol.  The snapshot
         check runs under :meth:`_commit_lock`, so validate+write is a true
         CAS: two racing writers serialize and the loser sees the conflict."""
-        with self._commit_lock():
-            m = copy.deepcopy(self._read_manifest())  # cached manifest is shared
+
+        def edit(m):
             if expected_snapshot is not None and m["snapshot"] != expected_snapshot:
                 raise CommitConflict(
                     f"table {table!r} rewrite based on snapshot {expected_snapshot} "
                     f"but manifest is at {m['snapshot']} — re-scan and retry"
                 )
-            hist = os.path.join(self.root, "_history", f"{m['snapshot']}.json")
-            with open(hist, "w") as f:
-                json.dump(m, f)
-            entry = {"files": []}
-            for p in files:
-                meta = None
-                if isinstance(p, tuple):
-                    p, meta = p
-                rel = os.path.relpath(p, self.root)
-                assert not rel.startswith(".."), f"file outside catalog root: {p}"
-                entry["files"].append({"path": rel, "meta": meta} if meta else rel)
-            m["tables"][table] = entry
-            if markers:
-                now = time.time()
-                for k, v in markers.items():
-                    m["committed"][k] = {"at": now, **(v or {})}
-            m["snapshot"] += 1
-            self._write_manifest(m)
-            return m["snapshot"]
+            m["tables"][table] = {"files": self._entries(files)}
+            return m
+
+        return self._swap(edit, markers)
 
     def is_committed(self, marker: str) -> bool:
         return marker in self._read_manifest()["committed"]
@@ -203,36 +205,31 @@ class Catalog:
     def _entry_path(e):
         return e["path"] if isinstance(e, dict) else e
 
-    def file_entries(self, table: str) -> list[tuple[str, dict | None]]:
-        """(absolute path, file-level metadata) pairs for a table."""
-        m = self._read_manifest()
-        entry = m["tables"].get(table, {"files": []})
+    def _file_entries(self, m: dict, table: str) -> list[tuple[str, dict | None]]:
+        """(absolute path, file-level metadata) pairs of a table in the
+        manifest ``m``: entries are plain relpaths or {path, meta} dicts."""
         return [
             (
                 os.path.join(self.root, self._entry_path(e)),
                 e.get("meta") if isinstance(e, dict) else None,
             )
-            for e in entry["files"]
+            for e in m["tables"].get(table, {"files": []})["files"]
         ]
+
+    def file_entries(self, table: str) -> list[tuple[str, dict | None]]:
+        """(absolute path, file-level metadata) pairs for a table."""
+        return self._file_entries(self._read_manifest(), table)
 
     def files(self, table: str, **meta_filter) -> list[str]:
         """Paths of a table's data files; ``meta_filter`` prunes on
         file-level metadata recorded at commit time (e.g. zoom=13) — the
         manifest-level partition pruning Iceberg does with partition specs."""
-        m = self._read_manifest()
-        entry = m["tables"].get(table)
-        if not entry:
-            return []
-        out = []
-        for e in entry["files"]:
-            if meta_filter:
-                meta = e.get("meta") if isinstance(e, dict) else None
-                if meta is not None and any(
-                    k in meta and meta[k] != v for k, v in meta_filter.items()
-                ):
-                    continue
-            out.append(os.path.join(self.root, self._entry_path(e)))
-        return out
+        return [
+            p
+            for p, meta in self.file_entries(table)
+            if meta is None
+            or not any(k in meta and meta[k] != v for k, v in meta_filter.items())
+        ]
 
     def stage_spark_write(self, df, table: str, write_options: dict | None = None) -> list[str]:
         """Write a Spark DataFrame as staged parquet files under the table
@@ -378,16 +375,12 @@ class Catalog:
         path = os.path.join(self.root, "_history", f"{snapshot}.json")
         if not os.path.exists(path):
             raise KeyError(f"no snapshot {snapshot}; have {self.history()}")
-        with self._commit_lock():
-            cur = self._read_manifest()
-            hist = os.path.join(self.root, "_history", f"{cur['snapshot']}.json")
-            with open(hist, "w") as f:
-                json.dump(cur, f)
+
+        def edit(_):
             with open(path) as f:
-                m = json.load(f)
-            m["snapshot"] = cur["snapshot"] + 1  # snapshots are monotonic
-            self._write_manifest(m)
-            return m["snapshot"]
+                return json.load(f)
+
+        return self._swap(edit)
 
     def read_at(self, table: str, snapshot: int):
         """Pruned arrow read of a table AS OF a historical snapshot."""
@@ -398,12 +391,9 @@ class Catalog:
             path = os.path.join(self.root, "_history", f"{snapshot}.json")
             with open(path) as f:
                 m = json.load(f)
-        entry = m["tables"].get(table, {"files": []})
         import pyarrow.dataset as ds
 
-        # entries are either plain relpath strings or {path, meta} dicts
-        # (files committed with file-level metadata, e.g. the tiles table)
-        files = [os.path.join(self.root, self._entry_path(e)) for e in entry["files"]]
+        files = [p for p, _ in self._file_entries(m, table)]
         if not files:
             raise FileNotFoundError(f"{table!r} empty at snapshot {snapshot}")
         return ds.dataset(files, format="parquet").to_table()

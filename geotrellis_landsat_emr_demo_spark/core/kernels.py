@@ -695,9 +695,8 @@ def merge_fragments(fragments, image_ids) -> np.ndarray:
     order (order-insensitized version of GeoTrellis tile merge,
     LandsatIngest.scala:39-40; SURVEY §7 'merge determinism').
 
-    A test reference: ingest merges through :func:`merge_fragments_ranked`
-    / :func:`combine_ranked`, which the ingest tests and perfbench's
-    oracle pin equal to this definition.
+    A test reference: ingest merges through :func:`combine_ranked`, which
+    the ingest tests and perfbench's oracle pin equal to this definition.
 
     fragments: list of (bands, h, w) uint16;  image_ids: parallel list.
     """
@@ -713,70 +712,36 @@ def merge_fragments(fragments, image_ids) -> np.ndarray:
 NO_WINNER = np.uint16(0xFFFF)
 
 
-def merge_fragments_ranked(fragments, image_ids):
-    """Commutative/associative merge for the salted two-phase path.
-
-    Returns (merged uint16, winner_idx uint16, ids) where winner_idx[b,y,x]
-    indexes into the sorted ``ids`` list (0xFFFF = no data) — compact
-    provenance (2 bytes/cell vs a string per cell), decoded back to ids
-    only transiently when partials combine.  Combining partials with
-    :func:`combine_ranked` yields exactly :func:`merge_fragments`'s output
-    regardless of grouping — the skew-salting correctness requirement
-    (north_rule).
-
-    Winner is per (band, pixel): merge_fragments fills each band cell
-    independently (a later scene can fill band 1 where an earlier one
-    already supplied band 0)."""
-    nb, h, w = fragments[0].shape
-    ids = sorted(str(i) for i in image_ids)
-    # combine_ranked compares winners as raw S64 bytes: that order equals
-    # this sorted-str ranking only for ASCII ids <= 64 bytes (longer ids
-    # would truncate-collide; non-ASCII would flip UTF-8 vs str order and
-    # silently break salted == unsalted merge equivalence)
-    for iid in ids:
-        # ValueError, not assert: the guard must survive python -O, and a
-        # violation should read as a data error, not an internal bug
-        if len(iid) > 64 or not iid.isascii():
-            raise ValueError(f"image_id not ASCII<=64B: {iid!r}")
-    rank_of = {iid: r for r, iid in enumerate(ids)}
-    merged = np.zeros((nb, h, w), dtype=np.uint16)
-    winner = np.full((nb, h, w), NO_WINNER, dtype=np.uint16)
-    for f, iid in zip(fragments, image_ids):
-        r = np.uint16(rank_of[str(iid)])
-        has = f != NODATA_U16
-        better = has & (r < winner)
-        winner = np.where(better, r, winner)
-        merged = np.where(better, f, merged)
-    return merged, winner, ids
-
-
-def _winner_bytes(winner_idx, ids):
-    """idx array -> lexicographically comparable 'S64' array (transient,
-    combine-time only); NO_WINNER maps to the max sentinel."""
-    lut = np.array([s.encode() for s in ids] + [b"\xff" * 8], dtype="S64")
-    idx = np.where(winner_idx == NO_WINNER, len(ids), winner_idx)
-    return lut[idx]
-
-
 def combine_ranked(parts):
-    """Combine [(merged, winner_idx, ids), ...] partials ->
-    (merged, winner_idx, ids) over the union of contributor ids."""
-    all_ids = sorted({i for _, _, ids in parts for i in ids})
-    rank_of = {iid: np.uint16(r) for r, iid in enumerate(all_ids)}
-    merged, widx, ids = parts[0]
-    merged = merged.copy()
-    winner = _winner_bytes(widx, ids)
-    for m, wi, pids in parts[1:]:
-        wb = _winner_bytes(wi, pids)
-        has = wb != np.bytes_(b"\xff" * 8)
-        better = has & (wb < winner)
-        winner = np.where(better, wb, winner)
-        merged = np.where(better, m, merged)
-    out_idx = np.full(merged.shape, NO_WINNER, dtype=np.uint16)
-    lut = {s.encode(): rank_of[s] for s in all_ids}
-    for sb, r in lut.items():
-        out_idx[winner == np.bytes_(sb)] = r
-    return merged, out_idx, all_ids
+    """The one ranked merge: [(pixels, winner | None, ids), ...] ->
+    (merged, winner, ids), all arrays (bands, h, w) and aligned.
+
+    ``winner[b, y, x]`` indexes the contributor of a cell into ``ids``
+    (sorted, 0xFFFF = no data); ``None`` means one contributor, ``ids[0]``,
+    wherever the part's pixels are not NoData (a fragment).  Each part's
+    indices map through a small lookup table to ranks over the sorted
+    union of ids, and the lowest rank wins per (band, cell); a tie keeps
+    the earlier part.  Ranks come from Python's ``sorted``, the order
+    :func:`merge_fragments` sorts by, so any grouping of fragments into
+    parts, combined in any number of steps, gives its pixels — the
+    skew-salting correctness requirement (north_rule)."""
+    ids = sorted({i for _, _, pids in parts for i in pids})
+    rank_of = {iid: r for r, iid in enumerate(ids)}
+    merged = np.full(parts[0][0].shape, NODATA_U16, dtype=np.uint16)
+    winner = np.full(merged.shape, NO_WINNER, dtype=np.uint16)
+    for pixels, widx, pids in parts:
+        if widx is None:
+            rank = np.where(
+                pixels != NODATA_U16, np.uint16(rank_of[pids[0]]), NO_WINNER
+            )
+        else:
+            # NO_WINNER clips onto the table's last entry, itself NO_WINNER
+            lut = np.array([rank_of[i] for i in pids] + [NO_WINNER], np.uint16)
+            rank = lut.take(widx, mode="clip")
+        better = rank < winner
+        np.copyto(winner, rank, where=better)
+        np.copyto(merged, pixels, where=better)
+    return merged, winner, ids
 
 
 # ------------------------------------------------------------ zonal ops ---

@@ -21,11 +21,11 @@ and ``stream_ingest_files`` — goes through ONE path, :func:`_leaf_tiles`
     -> layer_attrs: distinct sorted times + extent union
        (LandsatIngest.scala:46-55)
 
-Every combine step is the commutative ranked merge
-(kernels.merge_fragments_ranked in the chunk task, kernels.combine_ranked
-after it): partials combine associatively, so any grouping of fragments
-into tasks and salt buckets gives bitwise the tiles of
-kernels.merge_fragments (tests/test_ingest.py).
+Every combine step — the chunk task's, the salt bucket's and the final —
+is one call of :func:`_combine`, kernels.combine_ranked's integer-rank
+merge: partials combine associatively, so any grouping of fragments into
+tasks and salt buckets gives bitwise the tiles of kernels.merge_fragments
+(tests/test_ingest.py).
 
 Scale notes (100 TB design):
 - the only wide shuffles are the leaf combine (keyed by the same (x,y,ts)
@@ -80,10 +80,11 @@ _PARTIAL_SCHEMA_COLS = [c.split()[0] for c in _PARTIAL_SCHEMA.split(", ")]
 def _chunk_fn(zoom: int):
     """mapInPandas fn: one images batch -> partial rows for every
     zoom-``zoom`` tile the scene footprints cover.  Fragments that share a
-    (x, y, ts) key WITHIN the task are combined with the ranked merge
-    before the shuffle — the partial-aggregation (combiner) form of the
-    tile merge, which cuts shuffle rows wherever scenes in one task
-    overlap (hot cells especially).  Singleton fragments skip provenance.
+    (x, y, ts) key WITHIN the task are combined (:func:`_combine`) before
+    the shuffle — the partial-aggregation (combiner) form of the tile
+    merge, which cuts shuffle rows wherever scenes in one task overlap
+    (hot cells especially).  A key's lone fragment is emitted as it is,
+    without provenance.
 
     Fragments stay raw npy-u16: shuffle files are lz4-compressed by Spark
     and parquet pages are zstd-compressed at rest, so per-fragment zlib
@@ -106,81 +107,73 @@ def _chunk_fn(zoom: int):
                     arr, ext, zoom, trange, TILE_SIZE, src_crs=crs
                 ):
                     groups.setdefault((c, r, row.ts), []).append(
-                        (tile, (ox, oy), row.image_id, row.caption)
+                        (row.image_id, row.caption, (tile, None, [row.image_id], (ox, oy)))
                     )
-            out = {k: [] for k in _PARTIAL_SCHEMA_COLS}
+            rows = []
             for (c, r, ts), items in groups.items():
-                if len(items) == 1:
-                    tile, (ox, oy), iid, cap = items[0]
-                    winner, wids = None, None
-                else:
-                    # pad to canvas for the ranked merge, then crop the
-                    # partial back to the union of contributor rects so
-                    # combined keys still shuffle cropped
-                    full, widx, wids = kernels.merge_fragments_ranked(
-                        [
-                            kernels.pad_to_tile(t, o[0], o[1], TILE_SIZE)
-                            for t, o, _, _ in items
-                        ],
-                        [i for _, _, i, _ in items],
-                    )
-                    tile, winner, (ox, oy) = _crop(
-                        full, widx,
-                        [o for _, o, _, _ in items],
-                        [t.shape for t, _, _, _ in items],
-                    )
-                    first = min(range(len(items)), key=lambda j: items[j][2])
-                    iid, cap = items[first][2], items[first][3]
-                out["x"].append(c)
-                out["y"].append(r)
-                out["ts"].append(ts)
-                out["cell_key"].append(int(cellindex.cell_key(zoom, c, r)))
-                out["image_id"].append(iid)
-                out["caption"].append(cap)
-                out["frag"].append(kernels.encode_payload(tile, "npy-u16"))
-                out["winner"].append(winner)
-                out["winner_ids"].append(wids)
-                out["n_frags"].append(len(items))
-                out["ox"].append(ox)
-                out["oy"].append(oy)
-            yield pd.DataFrame(out)
+                iid, cap, _ = min(items, key=lambda it: it[0])
+                rows.append(_partial_row(
+                    c, r, ts, int(cellindex.cell_key(zoom, c, r)), iid, cap,
+                    _combine([part for _, _, part in items]), len(items),
+                ))
+            yield pd.DataFrame(rows, columns=_PARTIAL_SCHEMA_COLS)
 
     return fn
 
 
-def _crop(full, widx, offsets, shapes):
-    """Full-canvas ranked merge -> (pixels, winner bytes, (ox, oy)) cropped
-    to the union of the contributor rects, which bounds every data pixel
-    the merge can produce."""
-    bx0, by0, bx1, by1 = kernels.union_bbox(offsets, shapes)
-    winner = np.ascontiguousarray(widx[:, by0:by1, bx0:bx1]).tobytes()
-    return full[:, by0:by1, bx0:bx1], winner, (bx0, by0)
-
-
-def _combine(pdf: pd.DataFrame):
-    """Partial rows of one key -> kernels.combine_ranked over their
-    full-canvas pixels and winner maps.  A row without provenance (a
-    single fragment) ranks its own id wherever it carries data."""
-    parts = []
-    for b, wb, wids, iid, ox, oy in zip(
-        pdf["frag"], pdf["winner"], pdf["winner_ids"], pdf["image_id"],
-        pdf["ox"], pdf["oy"],
-    ):
-        m = kernels.decode_payload(b)
-        if wb is None:
-            w = np.where(
-                m != kernels.NODATA_U16, np.uint16(0), kernels.NO_WINNER
-            ).astype(np.uint16)
-            ids = [str(iid)]
-        else:
-            w = np.frombuffer(wb, dtype=np.uint16).reshape(m.shape)
-            ids = list(wids)
-        parts.append((
-            kernels.pad_to_tile(m, ox, oy, TILE_SIZE),
-            kernels.pad_to_tile(w, ox, oy, TILE_SIZE, fill=kernels.NO_WINNER),
+def _combine(parts):
+    """The parts of one key, [(pixels, winner bytes | None, ids, (ox, oy)),
+    ...] with pixels cropped at (ox, oy) of the tile canvas ->
+    (pixels, winner bytes, ids, (ox, oy)) of their
+    kernels.combine_ranked, cropped to the union of the part rects (which
+    bounds every data pixel the merge can produce).  A part without
+    provenance (a lone fragment) ranks its one id wherever it has data.
+    One part is returned as it is: its combine is the identity."""
+    if len(parts) == 1:
+        return parts[0]
+    x0, y0, x1, y1 = kernels.union_bbox(
+        [p[3] for p in parts], [p[0].shape for p in parts]
+    )
+    merged, winner, ids = kernels.combine_ranked([
+        (
+            kernels.pad_to_tile(pixels, ox, oy, TILE_SIZE),
+            None if wb is None else kernels.pad_to_tile(
+                np.frombuffer(wb, dtype=np.uint16).reshape(pixels.shape),
+                ox, oy, TILE_SIZE, fill=kernels.NO_WINNER,
+            ),
             ids,
-        ))
-    return kernels.combine_ranked(parts)
+        )
+        for pixels, wb, ids, (ox, oy) in parts
+    ])
+    crop = np.s_[:, y0:y1, x0:x1]
+    winner = np.ascontiguousarray(winner[crop]).tobytes()
+    return merged[crop], winner, ids, (x0, y0)
+
+
+def _parts(pdf: pd.DataFrame) -> list:
+    """Partial rows of one key -> :func:`_combine` parts."""
+    return [
+        (
+            kernels.decode_payload(b), wb,
+            [str(iid)] if wb is None else list(wids), (int(ox), int(oy)),
+        )
+        for b, wb, wids, iid, ox, oy in zip(
+            pdf["frag"], pdf["winner"], pdf["winner_ids"], pdf["image_id"],
+            pdf["ox"], pdf["oy"],
+        )
+    ]
+
+
+def _partial_row(x, y, ts, cell_key, image_id, caption, merged, n_frags) -> dict:
+    """One _PARTIAL_SCHEMA row from a :func:`_combine` result; a result
+    without provenance (a lone fragment) carries no winner ids either."""
+    pixels, winner, ids, (ox, oy) = merged
+    return dict(
+        x=int(x), y=int(y), ts=ts, cell_key=cell_key, image_id=image_id,
+        caption=caption, frag=kernels.encode_payload(pixels, "npy-u16"),
+        winner=winner, winner_ids=None if winner is None else ids,
+        n_frags=n_frags, ox=int(ox), oy=int(oy),
+    )
 
 
 def _first(pdf: pd.DataFrame) -> int:
@@ -196,29 +189,13 @@ def _salt_fn(pdf: pd.DataFrame) -> pd.DataFrame:
     pdf = pdf[_PARTIAL_SCHEMA_COLS]
     if len(pdf) == 1:
         return pdf
-    merged, widx, ids = _combine(pdf)
-    tile, winner, (ox, oy) = _crop(
-        merged, widx,
-        list(zip(pdf["ox"].astype(int), pdf["oy"].astype(int))),
-        [kernels.payload_dims(b) for b in pdf["frag"]],
-    )
     first = _first(pdf)
-    return pd.DataFrame(
-        dict(
-            x=[int(pdf["x"].iloc[0])],
-            y=[int(pdf["y"].iloc[0])],
-            ts=[pdf["ts"].iloc[0]],
-            cell_key=[int(pdf["cell_key"].iloc[0])],
-            image_id=[pdf["image_id"].iloc[first]],
-            caption=[pdf["caption"].iloc[first]],
-            frag=[kernels.encode_payload(tile, "npy-u16")],
-            winner=[winner],
-            winner_ids=[ids],
-            n_frags=[int(pdf["n_frags"].sum())],
-            ox=[int(ox)],
-            oy=[int(oy)],
-        )
-    )
+    return pd.DataFrame([_partial_row(
+        pdf["x"].iloc[0], pdf["y"].iloc[0], pdf["ts"].iloc[0],
+        int(pdf["cell_key"].iloc[0]), pdf["image_id"].iloc[first],
+        pdf["caption"].iloc[first], _combine(_parts(pdf)),
+        int(pdf["n_frags"].sum()),
+    )])
 
 
 def _tile_pdf(layer, zoom, x, y, ts, tile, caption, image_id, n_frags):
@@ -243,7 +220,8 @@ def _tile_pdf(layer, zoom, x, y, ts, tile, caption, image_id, n_frags):
 
 def _final_fn(layer: str, zoom: int, store_fmt: str):
     """applyInPandas fn for groupBy(x, y, ts): combine a key's partials
-    into one stored tile row.
+    (:func:`_combine`) and pad the result onto the NoData tile canvas ->
+    one stored tile row.
 
     A key with a single FULL-canvas partial in the stored format passes
     its bytes through untouched: the combine of one partial is the
@@ -264,8 +242,10 @@ def _final_fn(layer: str, zoom: int, store_fmt: str):
         ):
             tile = frag
         else:
-            merged, _, _ = _combine(pdf)
-            tile = kernels.encode_payload(merged, store_fmt)
+            pixels, _, _, (ox, oy) = _combine(_parts(pdf))
+            tile = kernels.encode_payload(
+                kernels.pad_to_tile(pixels, ox, oy, TILE_SIZE), store_fmt
+            )
         first = _first(pdf)
         return _tile_pdf(
             layer, zoom, int(pdf["x"].iloc[0]), int(pdf["y"].iloc[0]),
@@ -469,10 +449,13 @@ def _commit_level(
     nbytes = sum(m[0] for m in metas)
     rows = sum(m[1] for m in metas)
     wall = time.time() - t0
-    lin_files = []
+    import uuid
+
     import pyarrow as pa
 
-    lpath = os.path.join(cat.table_dir("lineage"), f"{stage.replace(':','_')}-{zoom}.parquet")
+    # a unique name, like every staged data file: a rerun after a rollback
+    # must not overwrite the lineage file an archived snapshot still lists
+    lpath = os.path.join(cat.table_dir("lineage"), f"{uuid.uuid4().hex}.parquet")
     pq.write_table(
         pa.Table.from_pandas(
             _lineage_pdf(layer, stage, zoom, rows, nbytes, wall, len(files)),
@@ -480,12 +463,11 @@ def _commit_level(
         ),
         lpath,
     )
-    lin_files.append(lpath)
     cat.commit(
         # per-file metadata -> manifest-level partition pruning for the
         # serving point reads (files of other zooms never opened)
         {"tiles": [(f, {"layer": layer, "zoom": zoom}) for f in files],
-         "lineage": lin_files},
+         "lineage": [lpath]},
         markers={stage: dict(rows=rows, bytes=nbytes, wall_s=wall, zoom=zoom)},
     )
     return rows, nbytes
@@ -548,7 +530,6 @@ def ingest_images(
     min_zoom: int = MIN_ZOOM,
     store_fmt: str = "npy-u16",
     salt_buckets: int | str = 1,
-    fail_after_stage: str | None = None,
     cell_type: str = "uint16",
 ) -> dict:
     """Run the full ingest; resumable (skips stages whose completion marker
@@ -560,9 +541,6 @@ def ingest_images(
     combiner's partials once more per (key, salt) bucket, for reduce-side
     skew; "auto" = derive from fragment-count skew measured on the slim
     footprint metadata (:func:`_auto_salt_buckets`).
-
-    ``fail_after_stage`` injects a crash AFTER the named stage's commit —
-    the kill/resume test hook.
     """
     if images_df is None:
         images_df = cat.read_spark(spark, "images")
@@ -580,8 +558,6 @@ def ingest_images(
         )
         rows, nbytes = _commit_level(cat, tiles, layer, leaf_stage, max_zoom, t0)
         metrics[leaf_stage] = dict(rows=rows, bytes=nbytes, wall_s=time.time() - t0)
-        if fail_after_stage == leaf_stage:
-            raise RuntimeError(f"injected failure after {leaf_stage}")
     else:
         metrics[leaf_stage] = dict(skipped=True, **(cat.marker(leaf_stage) or {}))
 
@@ -600,8 +576,6 @@ def ingest_images(
         )
         rows, nbytes = _commit_level(cat, parents, layer, stage, zoom, t0)
         metrics[stage] = dict(rows=rows, bytes=nbytes, wall_s=time.time() - t0)
-        if fail_after_stage == stage:
-            raise RuntimeError(f"injected failure after {stage}")
 
     attrs_stage = f"ingest:{layer}:attrs"
     if not cat.is_committed(attrs_stage):

@@ -1,5 +1,7 @@
 """Pure-numpy core tests: tiling math, cell index, geometry, kernels, PNG."""
 
+import itertools
+
 import numpy as np
 import pytest
 from hypothesis import given, settings
@@ -485,29 +487,59 @@ def test_downsample_nan_aware():
     assert np.isnan(out[0, 0, 1])
 
 
+def _groupings(n: int, k: int):
+    """Every partition of range(n) into k non-empty blocks."""
+    for labels in itertools.product(range(k), repeat=n):
+        firsts = [labels.index(b) for b in range(k) if b in labels]
+        if len(firsts) == k and firsts == sorted(firsts):
+            yield [[i for i in range(n) if labels[i] == b] for b in range(k)]
+
+
+# id sets: plain ASCII; non-ASCII; and ids sharing their first 70 bytes,
+# which a byte-string compare truncated to 64 bytes would tie
+_MERGE_ID_SETS = [
+    [f"scene-{i:05d}" for i in [6, 2, 4, 0, 5, 1, 3]],
+    [f"scène-ñ-{c}" for c in "ΩzéaЖ0ß"],
+    ["L" * 70 + f"-{i}" for i in [6, 2, 4, 0, 5, 1, 3]],
+]
+
+
 def test_merge_equivalence_salted():
+    """combine_ranked of any 2- or 3-way grouping of 7 fragments — a
+    one-fragment block as a provenance-less part, a larger block as its
+    own ranked partial — gives the pixels of merge_fragments and the
+    winner map and ids of the one-shot combine, for every id set."""
+    for ids in _MERGE_ID_SETS:
+        _check_merge_groupings(ids)
+
+
+def _check_merge_groupings(ids):
     rng = np.random.default_rng(4)
     frags = [
         (rng.integers(0, 3, size=(5, 32, 32)) * 1500).astype(np.uint16)
         for _ in range(7)
     ]
-    ids = [f"scene-{i:05d}" for i in [6, 2, 4, 0, 5, 1, 3]]
     ref = K.merge_fragments(frags, ids)
-    whole, widx, wids = K.merge_fragments_ranked(frags, ids)
+    whole, widx, wids = K.combine_ranked([(f, None, [i]) for f, i in zip(frags, ids)])
     assert (ref == whole).all()
     assert widx.dtype == np.uint16  # compact provenance (2 bytes/cell)
+    assert wids == sorted(ids)
+
+    def part(block):
+        if len(block) == 1:
+            return frags[block[0]], None, [ids[block[0]]]
+        return K.combine_ranked([(frags[j], None, [ids[j]]) for j in block])
+
     # any partition of fragments into salt groups combines to the same tile
-    for cuts in [(2, 5), (1, 3), (3, 6)]:
-        a, b = cuts
-        parts = [
-            K.merge_fragments_ranked(frags[:a], ids[:a]),
-            K.merge_fragments_ranked(frags[a:b], ids[a:b]),
-            K.merge_fragments_ranked(frags[b:], ids[b:]),
-        ]
-        got, gidx, gids = K.combine_ranked(parts)
-        assert (ref == got).all()
-        # provenance decodes identically to the whole-group run
-        assert (K._winner_bytes(widx, wids) == K._winner_bytes(gidx, gids)).all()
+    n_groupings = 0
+    for k in (2, 3):
+        for grouping in _groupings(len(frags), k):
+            got, gidx, gids = K.combine_ranked([part(b) for b in grouping])
+            assert (ref == got).all(), grouping
+            # provenance decodes identically to the whole-group run
+            assert gids == wids and (gidx == widx).all(), grouping
+            n_groupings += 1
+    assert n_groupings == 63 + 301  # Stirling numbers S(7, 2) + S(7, 3)
 
 
 def test_png_roundtrip():

@@ -266,18 +266,25 @@ def test_salted_ingest_equals_unsalted(spark, tsmall_catalog):
         assert int(a.n_frags[i]) == int(b.n_frags[i])
 
 
-def test_resume_after_crash(spark, tsmall_catalog):
+def test_resume_after_crash(spark, tsmall_catalog, monkeypatch):
     """Kill mid-ingest (after z13 commit), rerun: completed stages are
     skipped, final result identical, no duplicate rows."""
     root = os.path.join(SCRATCH, "resume")
     shutil.rmtree(root, ignore_errors=True)
     cat = Catalog(root)
     fixtures.write_all(cat, "t-small")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        ingest.ingest_images(
-            spark, cat, "landsat", max_zoom=13, min_zoom=11,
-            fail_after_stage="ingest:landsat:z13",
-        )
+    commit_level = ingest._commit_level
+
+    def crash_after_z13(cat, df, layer, stage, zoom, t0):
+        out = commit_level(cat, df, layer, stage, zoom, t0)
+        if stage == "ingest:landsat:z13":
+            raise RuntimeError(f"injected failure after {stage}")
+        return out
+
+    with monkeypatch.context() as mp:
+        mp.setattr(ingest, "_commit_level", crash_after_z13)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            ingest.ingest_images(spark, cat, "landsat", max_zoom=13, min_zoom=11)
     assert cat.is_committed("ingest:landsat:z13")
     m = ingest.ingest_images(spark, cat, "landsat", max_zoom=13, min_zoom=11)
     assert m["ingest:landsat:z13"].get("skipped") is True
@@ -286,10 +293,35 @@ def test_resume_after_crash(spark, tsmall_catalog):
     assert not pdf.duplicated(["layer", "zoom", "x", "y", "ts"]).any()
     ref = tsmall_catalog.read_pandas("tiles").query("zoom >= 11")
     assert pdf.groupby("zoom").size().to_dict() == ref.groupby("zoom").size().to_dict()
+
+    def tile_bytes(df):
+        return {(r.zoom, r.x, r.y, r.ts): r.tile for r in df.itertuples(index=False)}
+
+    assert tile_bytes(pdf) == tile_bytes(ref)
     # lineage recorded for each stage
     lin = cat.read_pandas("lineage")
     assert set(lin["zoom"]) == {13, 12, 11}
     assert (lin["rows"] > 0).all()
+
+
+def test_lineage_file_survives_rollback(spark):
+    """A stage re-committed after a rollback writes a new lineage file:
+    the archived snapshot still reads its own lineage row."""
+    root = os.path.join(SCRATCH, "lineage_rollback")
+    shutil.rmtree(root, ignore_errors=True)
+    cat = Catalog(root)
+    ts = pd.Timestamp("2020-01-01")
+
+    def commit(n):
+        df = spark.createDataFrame(pd.DataFrame(dict(cell_key=list(range(n)), ts=[ts] * n)))
+        ingest._commit_level(cat, df.coalesce(1), "landsat", "ingest:landsat:z13", 13, 0.0)
+
+    commit(1)
+    first = cat.snapshot_id()
+    cat.rollback(first - 1)
+    commit(2)
+    assert cat.read_pandas("lineage")["rows"].tolist() == [2]
+    assert cat.read_at("lineage", first).to_pandas()["rows"].tolist() == [1]
 
 
 def test_pyramid_parent_pixels(tsmall_catalog):
