@@ -54,9 +54,9 @@ def encode_payload(arr: np.ndarray, fmt: str = "npy-u16-z") -> bytes:
     code = _FMT[fmt]
     hdr = _HDR.pack(_MAGIC, 1, code, nb, h, w)
     if fmt == "npy-u16":
-        body = arr.astype("<u2").tobytes()
+        body = arr.astype("<u2", copy=False).tobytes()
     elif fmt == "npy-u16-z":
-        body = zlib.compress(arr.astype("<u2").tobytes(), 1)
+        body = zlib.compress(np.ascontiguousarray(arr, dtype="<u2"), 1)
     elif fmt == "jq75":
         # NoData (0) must survive exactly: quantize data cells 1..65535 into
         # 1..255 (so no data cell ever decodes back to the sentinel)
@@ -635,15 +635,18 @@ def split_to_tiles_cropped(
 
 
 def pad_to_tile(
-    arr: np.ndarray, ox: int, oy: int, tile_size: int = 256, fill=NODATA_U16
+    arr: np.ndarray, ox: int, oy: int, tile_size=256, fill=NODATA_U16
 ) -> np.ndarray:
-    """Cropped fragment -> full (bands, tile_size, tile_size) canvas with
-    ``fill`` outside; exact inverse of the split crop.  ``fill=NO_WINNER``
+    """Cropped fragment at (ox, oy) -> a (bands, h, w) canvas with
+    ``fill`` outside: the full tile (``tile_size`` a side; exact inverse
+    of the split crop) or, with ``tile_size`` an (h, w) pair, any canvas
+    that holds the fragment (a merge's union rect).  ``fill=NO_WINNER``
     pads provenance winner maps."""
     nb, fh, fw = arr.shape
-    if fh == tile_size and fw == tile_size:
+    h, w = (tile_size, tile_size) if np.isscalar(tile_size) else tile_size
+    if (fh, fw) == (h, w):
         return arr
-    full = np.full((nb, tile_size, tile_size), fill, dtype=arr.dtype)
+    full = np.full((nb, h, w), fill, dtype=arr.dtype)
     full[:, oy : oy + fh, ox : ox + fw] = arr
     return full
 

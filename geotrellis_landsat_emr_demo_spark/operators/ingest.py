@@ -122,46 +122,47 @@ def _chunk_fn(zoom: int):
 
 
 def _combine(parts):
-    """The parts of one key, [(pixels, winner bytes | None, ids, (ox, oy)),
-    ...] with pixels cropped at (ox, oy) of the tile canvas ->
-    (pixels, winner bytes, ids, (ox, oy)) of their
-    kernels.combine_ranked, cropped to the union of the part rects (which
-    bounds every data pixel the merge can produce).  A part without
-    provenance (a lone fragment) ranks its one id wherever it has data.
-    One part is returned as it is: its combine is the identity."""
+    """The parts of one key, [(pixels, winner | None, ids, (ox, oy)), ...]
+    with pixels and winner cropped at (ox, oy) of the tile canvas ->
+    (pixels, winner, ids, (ox, oy)) of their kernels.combine_ranked on
+    the union of the part rects (which bounds every data pixel the merge
+    can produce).  A part without provenance (a lone fragment) ranks its
+    one id wherever it has data.  One part is returned as it is: its
+    combine is the identity."""
     if len(parts) == 1:
         return parts[0]
     x0, y0, x1, y1 = kernels.union_bbox(
         [p[3] for p in parts], [p[0].shape for p in parts]
     )
+    canvas = (y1 - y0, x1 - x0)
     merged, winner, ids = kernels.combine_ranked([
         (
-            kernels.pad_to_tile(pixels, ox, oy, TILE_SIZE),
-            None if wb is None else kernels.pad_to_tile(
-                np.frombuffer(wb, dtype=np.uint16).reshape(pixels.shape),
-                ox, oy, TILE_SIZE, fill=kernels.NO_WINNER,
+            kernels.pad_to_tile(pixels, ox - x0, oy - y0, canvas),
+            None if widx is None else kernels.pad_to_tile(
+                widx, ox - x0, oy - y0, canvas, fill=kernels.NO_WINNER
             ),
             ids,
         )
-        for pixels, wb, ids, (ox, oy) in parts
+        for pixels, widx, ids, (ox, oy) in parts
     ])
-    crop = np.s_[:, y0:y1, x0:x1]
-    winner = np.ascontiguousarray(winner[crop]).tobytes()
-    return merged[crop], winner, ids, (x0, y0)
+    return merged, winner, ids, (x0, y0)
 
 
 def _parts(pdf: pd.DataFrame) -> list:
     """Partial rows of one key -> :func:`_combine` parts."""
-    return [
-        (
-            kernels.decode_payload(b), wb,
-            [str(iid)] if wb is None else list(wids), (int(ox), int(oy)),
-        )
-        for b, wb, wids, iid, ox, oy in zip(
-            pdf["frag"], pdf["winner"], pdf["winner_ids"], pdf["image_id"],
-            pdf["ox"], pdf["oy"],
-        )
-    ]
+    parts = []
+    for b, wb, wids, iid, ox, oy in zip(
+        pdf["frag"], pdf["winner"], pdf["winner_ids"], pdf["image_id"],
+        pdf["ox"], pdf["oy"],
+    ):
+        pixels = kernels.decode_payload(b)
+        if wb is None:
+            widx, ids = None, [str(iid)]
+        else:
+            widx = np.frombuffer(wb, dtype=np.uint16).reshape(pixels.shape)
+            ids = list(wids)
+        parts.append((pixels, widx, ids, (int(ox), int(oy))))
+    return parts
 
 
 def _partial_row(x, y, ts, cell_key, image_id, caption, merged, n_frags) -> dict:
@@ -171,7 +172,8 @@ def _partial_row(x, y, ts, cell_key, image_id, caption, merged, n_frags) -> dict
     return dict(
         x=int(x), y=int(y), ts=ts, cell_key=cell_key, image_id=image_id,
         caption=caption, frag=kernels.encode_payload(pixels, "npy-u16"),
-        winner=winner, winner_ids=None if winner is None else ids,
+        winner=None if winner is None else winner.tobytes(),
+        winner_ids=None if winner is None else ids,
         n_frags=n_frags, ox=int(ox), oy=int(oy),
     )
 

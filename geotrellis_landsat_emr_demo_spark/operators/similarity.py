@@ -9,6 +9,13 @@
   count ~ N / 2^bits per probe instead of N.
 - :func:`pairwise_near_dups` embedding-cosine near-duplicate pairs within
   a blocking key (label), for dedup pipelines.
+
+Every operator here is candidates -> exact cosine -> rank, and each step
+has one implementation: :func:`_fold` is the one exact dot-product
+kernel (bit-identical to the Catalyst fold), :func:`_scored` joins both
+vector sides back onto narrow candidate pairs, :func:`_ranked_topk` is
+the final ``row_number() <= k`` window, and the bucket self-join and
+in-group pair scan come from :mod:`.pairs`.
 """
 
 from __future__ import annotations
@@ -20,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import gates
+from . import pairs
 
 
 def _dot(a, b):
@@ -51,28 +59,23 @@ def with_cosine_expr(df: DataFrame, a: str, b: str, out: str = "cosine") -> Data
     )
 
 
-def _cos_exact_np(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """Bit-exact vectorized replica of the zip_with/aggregate cosine.
+def _fold(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """The one exact dot-product kernel: ``acc = acc + A[..., d] * B[..., d]``
+    over the last axis, in dimension order, for any broadcastable leading
+    shapes (pairs of rows, one query against a batch, a row chunk
+    against a whole group).
 
-    The Catalyst expression folds LEFT-TO-RIGHT over dimensions:
-    ``acc = (acc + x_d * y_d)`` — one IEEE rounding per product, one per
-    add, in dimension order.  Accumulating column-by-column performs the
-    identical operation sequence per row (numpy elementwise double ops,
-    Java double ops, and np/Math.sqrt are all IEEE-754 correctly
-    rounded), so every cosine — including values at a caller's threshold
-    boundary — is the same double the HOF expression produces."""
-    n = A.shape[0]
-    dot = np.zeros(n)
-    na = np.zeros(n)
-    nb = np.zeros(n)
-    for d in range(A.shape[1]):
-        x = A[:, d]
-        y = B[:, d]
-        dot = dot + x * y
-        na = na + x * x
-        nb = nb + y * y
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return dot / (np.sqrt(na) * np.sqrt(nb))
+    The Catalyst zip_with/aggregate expression folds LEFT-TO-RIGHT over
+    dimensions the same way — one IEEE rounding per product, one per add,
+    in dimension order — and numpy elementwise double ops, Java double
+    ops and np/Math.sqrt are all IEEE-754 correctly rounded, so every dot
+    product, norm and cosine built from it (including values at a
+    caller's threshold boundary) is the same double the HOF expression
+    produces."""
+    acc = np.zeros(np.broadcast_shapes(A.shape[:-1], B.shape[:-1]))
+    for d in range(A.shape[-1]):
+        acc += A[..., d] * B[..., d]
+    return acc
 
 
 def _cos_exact_rows(va, vb) -> float:
@@ -93,21 +96,28 @@ def _cos_exact_rows(va, vb) -> float:
     return dot / (math.sqrt(na) * math.sqrt(nb))
 
 
-def _cos_batch(va: pd.Series, vb: pd.Series) -> pd.Series:
+def _matrix(vecs: pd.Series) -> np.ndarray | None:
+    """An Arrow list column as an (n, dim) float64 matrix, or None when
+    its vectors are ragged or null (the callers' scalar fallback)."""
     try:
-        A = np.asarray(va.tolist(), dtype="f8")
-        B = np.asarray(vb.tolist(), dtype="f8")
-        if A.ndim == 2 and B.ndim == 2:
-            return pd.Series(_cos_exact_np(A, B))
+        M = np.asarray(vecs.tolist(), dtype="f8")
     except (ValueError, TypeError):
-        pass
+        return None
+    return M if M.ndim == 2 else None
+
+
+def _cos_batch(va: pd.Series, vb: pd.Series) -> pd.Series:
+    A, B = _matrix(va), _matrix(vb)
+    if A is not None and B is not None:
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return pd.Series(_fold(A, B) / (np.sqrt(_fold(A, A)) * np.sqrt(_fold(B, B))))
     return pd.Series([_cos_exact_rows(x, y) for x, y in zip(va, vb)], dtype="float64")
 
 
 def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
     """Exact cosine between two array columns, vectorized through one
     Arrow batch per task (bit-identical to :func:`with_cosine_expr` —
-    see :func:`_cos_exact_np`).
+    see :func:`_fold`).
 
     The pandas_udf handle is built per call: PySpark binds it to the
     SparkContext (and its accumulator server) active when it is first
@@ -152,9 +162,9 @@ def _cosine_topk_collected(
     """Map-side two-phase top-k against a driver-collected query set.
 
     Phase 1 runs per Arrow batch inside ``mapInPandas``: every batch
-    vector's cosine against every query via the per-dimension
-    accumulation of :func:`_cos_exact_np` (identical IEEE sequence to
-    the zip_with/aggregate fold, hence bit-identical cosines), then the
+    vector's cosine against every query via :func:`_fold` (identical
+    IEEE sequence to the zip_with/aggregate fold, hence bit-identical
+    cosines), then the
     batch-local top-k by the exact ``(desc cosine, asc neighbor)`` total
     order (:func:`_desc_cosine_key`).  Because neighbor ids are
     unique the order is total, so the global top-k is provably a subset
@@ -171,44 +181,25 @@ def _cosine_topk_collected(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
     )
 
+    qnorm = np.sqrt(_fold(Q, Q))
+
     def batches(it):
         for pdf in it:
             if len(pdf) == 0:
                 continue
             nid = pdf["neighbor_id"].to_numpy()
-            try:
-                V = np.asarray(pdf["nvec"].tolist(), dtype="f8")
-                if V.ndim != 2:
-                    raise ValueError
-            except (ValueError, TypeError):
-                # ragged / null vectors: scalar fallback, same roundings
-                cos_rows = [
-                    [_cos_exact_rows(qv, v) for v in pdf["nvec"]]
-                    for qv in qvecs
-                ]
-                V = None
+            V = _matrix(pdf["nvec"])
             if V is not None:
-                nb = np.zeros(len(V))
-                for d in range(V.shape[1]):
-                    y = V[:, d]
-                    nb = nb + y * y
-                sq_nb = np.sqrt(nb)
+                vnorm = np.sqrt(_fold(V, V))
             outs = []
             for i in range(nq):
                 if V is not None:
-                    qv = Q[i]
-                    dot = np.zeros(len(V))
-                    na = 0.0
-                    for d in range(V.shape[1]):
-                        x = qv[d]
-                        dot = dot + x * V[:, d]
-                        na = na + x * x
                     with np.errstate(divide="ignore", invalid="ignore"):
-                        cos = dot / (np.sqrt(na) * sq_nb)
+                        cos = _fold(Q[i], V) / (qnorm[i] * vnorm)
                 else:
+                    # ragged / null vectors: scalar fallback, same roundings
                     cos = np.asarray(
-                        [np.nan if c is None else c for c in cos_rows[i]],
-                        dtype="f8",
+                        [_cos_exact_rows(qvecs[i], v) for v in pdf["nvec"]], dtype="f8"
                     )
                 if exclude_self:
                     keep = nid != qids[i]
@@ -228,11 +219,16 @@ def _cosine_topk_collected(
             if outs:
                 yield pd.concat(outs)
 
-    local = base.mapInPandas(batches, schema)
-    order = (F.desc("cosine"), F.asc("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(*order)
+    return _ranked_topk(base.mapInPandas(batches, schema), k)
+
+
+def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The top-k of every query: ``row_number()`` over
+    (query_id) ordered by (desc cosine, asc neighbor_id), kept at rank <=
+    k -> (query_id, neighbor_id, cosine, rank)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
-        local.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
@@ -292,9 +288,10 @@ def cosine_topk(
     if exclude_self:
         j = j.filter(F.col("query_id") != F.col("neighbor_id"))
     j = with_cosine(j, "qvec", "nvec").select("query_id", "neighbor_id", "cosine")
-    order = (F.desc("cosine"), F.asc("neighbor_id"))
     # phase 1: top-k per (query, source partition) — bounded window groups
-    w_local = Window.partitionBy("query_id", "pid").orderBy(*order)
+    w_local = Window.partitionBy("query_id", "pid").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id")
+    )
     local = (
         j.withColumn("pid", F.spark_partition_id())
         .withColumn("lr", F.row_number().over(w_local))
@@ -302,12 +299,7 @@ def cosine_topk(
         .drop("pid", "lr")
     )
     # phase 2: global rank over the ~k * P survivors per query
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _ranked_topk(local, k)
 
 
 def _planes(dim: int, bits: int, table: int = 0, seed: int = 1337) -> np.ndarray:
@@ -420,22 +412,27 @@ def lsh_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    qv = F.broadcast(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
+    # broadcast: the candidate side is not shuffled (guide §3.1)
+    fits = n_corpus is not None and gates.fits("ann_broadcast_vectors", n_corpus)
+    return _ranked_topk(
+        _scored(cand, (queries, embeddings), id_col, vec_col, (True, fits)), k
     )
-    nv = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
-    )
-    if n_corpus is not None and gates.fits("ann_broadcast_vectors", n_corpus):
-        # broadcast: the candidate side is not shuffled (guide §3.1)
-        nv = F.broadcast(nv)
-    scored = with_cosine(cand.join(qv, "query_id").join(nv, "neighbor_id"), "qvec", "nvec")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+
+
+def _scored(cand: DataFrame, sides, id_col: str, vec_col: str, broadcast) -> DataFrame:
+    """Narrow candidate pairs (two id columns) -> with their exact
+    ``cosine`` (:func:`with_cosine`).  Each id column joins back once to
+    the vectors of its side (``sides``: the relations its ids come from)
+    — carrying vector payloads through the candidate fan-out would
+    shuffle each vector once per collision.  ``broadcast`` holds the
+    caller's decision per side: a broadcast side leaves the (larger)
+    candidate relation unshuffled (guide §3.1)."""
+    out = cand
+    for name, src, hint in zip(cand.columns, sides, broadcast):
+        v = src.select(F.col(id_col).alias(name), F.col(vec_col).alias(f"{name}_vec"))
+        out = out.join(F.broadcast(v) if hint else v, name)
+    a, b = cand.columns
+    return with_cosine(out, f"{a}_vec", f"{b}_vec")
 
 
 def _ivf_centroids(n_centroids: int, dim: int, seed: int = 4242) -> np.ndarray:
@@ -605,18 +602,8 @@ def ivf_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    qv = F.broadcast(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    )
-    nv = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
-    )
-    scored = with_cosine(cand.join(qv, "query_id").join(nv, "neighbor_id"), "qvec", "nvec")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _ranked_topk(
+        _scored(cand, (queries, embeddings), id_col, vec_col, (True, False)), k
     )
 
 
@@ -648,20 +635,12 @@ def lsh_candidate_pairs(
         tables,
         dim,
     ).localCheckpoint(eager=True)
-    x = b.select(F.col("id").alias("id_a"), "tbl", "bucket")
-    y = b.select(F.col("id").alias("id_b"), "tbl", "bucket")
-    if n_corpus is not None and gates.fits(
+    fits = n_corpus is not None and gates.fits(
         "lsh_broadcast_bucket_rows", n_corpus * tables
-    ):
-        # broadcasting one self-join side turns the (tbl, bucket)
-        # equi-join map-side and drops both its exchanges (guide §3.1)
-        y = F.broadcast(y)
-    return (
-        x.join(y, ["tbl", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
     )
+    return pairs.self_join(
+        b, ("tbl", "bucket"), ("id_a", "id_b"), "id", broadcast=fits
+    ).distinct()
 
 
 def lsh_near_dup_pairs(
@@ -692,17 +671,10 @@ def lsh_near_dup_pairs(
     cand = lsh_candidate_pairs(
         embeddings, bits, tables, dim, id_col, vec_col, target_bucket
     )
-    # join the (narrow) distinct pairs back to the vectors once per side —
-    # carrying vector payloads through the tables x collisions candidate
-    # set would shuffle each vector up to `tables` times
-    base = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    va = base.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"))
-    vb = base.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"))
-    if gates.fits("lsh_broadcast_vectors", n_corpus):
-        # the (much larger) candidate relation is never shuffled for the
-        # verify (guide §3.1)
-        va, vb = F.broadcast(va), F.broadcast(vb)
-    j = with_cosine(cand.join(va, "id_a").join(vb, "id_b"), "vec_a", "vec_b")
+    # broadcast: the (much larger) candidate relation is never shuffled
+    # for the verify (guide §3.1)
+    fits = gates.fits("lsh_broadcast_vectors", n_corpus)
+    j = _scored(cand, (embeddings, embeddings), id_col, vec_col, (fits, fits))
     return j.filter(F.col("cosine") >= threshold).select("id_a", "id_b", "cosine")
 
 
@@ -724,11 +696,12 @@ def pairwise_near_dups(
     through an interpreted HOF cosine; 20M pairs at sf1.0 took ~70 s).
     The Gram accumulates column-by-column, i.e. the exact left-to-right
     per-dimension rounding sequence of the zip_with/aggregate cosine (see
-    :func:`_cos_exact_np`), so emitted cosines — and threshold
+    :func:`_fold`), so emitted cosines — and threshold
     survivors — are bit-identical to the join formulation (pinned by
     tests/test_similarity_exact.py).  Only pairs >= threshold ever leave
     the UDF.  Memory stays bounded: the Gram is computed in row chunks of
-    the block, O(chunk * n_block) doubles at a time."""
+    the block (:func:`.pairs.upper_pairs`), O(chunk * n_block) doubles at
+    a time."""
     bt = embeddings.schema[block_col].dataType.simpleString()
     it = embeddings.schema[id_col].dataType.simpleString()
     out_schema = f"block {bt}, id_a {it}, id_b {it}, cosine double"
@@ -743,41 +716,23 @@ def pairwise_near_dups(
             return pd.DataFrame(
                 {"block": [], "id_a": [], "id_b": [], "cosine": []}
             ).astype({"cosine": "f8"})
-        dim = A.shape[1]
-        # exact norms, per-dimension accumulation (see _cos_exact_np)
-        nrm = np.zeros(n)
-        for d in range(dim):
-            x = A[:, d]
-            nrm = nrm + x * x
-        nrm = np.sqrt(nrm)
-        out_a, out_b, out_c = [], [], []
-        chunk = max(1, min(n, (4 << 20) // max(n, 1)))  # ~32 MB of doubles
-        for lo in range(0, n, chunk):
-            hi = min(lo + chunk, n)
-            G = np.zeros((hi - lo, n))
-            for d in range(dim):
-                G += A[lo:hi, d, None] * A[None, :, d]
+        nrm = np.sqrt(_fold(A, A))
+
+        def cosines(lo, hi):
             with np.errstate(divide="ignore", invalid="ignore"):
-                C = G / (nrm[lo:hi, None] * nrm[None, :])
-            # Spark SQL orders NaN above every double, so a NaN cosine
-            # (zero-norm vector) PASSES `cosine >= threshold` in the join
-            # formulation — replicate that
-            rows, cols = np.nonzero((C >= thr) | np.isnan(C))
-            keep = (rows + lo) < cols
-            rows, cols = rows[keep], cols[keep]
-            out_a.append(ids[rows + lo])
-            out_b.append(ids[cols])
-            out_c.append(C[rows, cols])
-        blk = pdf[block_col].iloc[0]
-        ra = np.concatenate(out_a) if out_a else np.array([], dtype=ids.dtype)
-        return pd.DataFrame(
-            {
-                "block": np.repeat(blk, len(ra)),
-                "id_a": ra,
-                "id_b": np.concatenate(out_b) if out_b else ra,
-                "cosine": np.concatenate(out_c) if out_c else np.array([], dtype="f8"),
-            }
+                return _fold(A[lo:hi, None, :], A[None, :, :]) / (
+                    nrm[lo:hi, None] * nrm[None, :]
+                )
+
+        # Spark SQL orders NaN above every double, so a NaN cosine
+        # (zero-norm vector) PASSES `cosine >= threshold` in the join
+        # formulation — replicate that
+        ra, rb, rc = pairs.upper_pairs(
+            ids, cosines, lambda C: (C >= thr) | np.isnan(C),
+            max(1, (4 << 20) // n),  # ~32 MB of doubles
         )
+        blk = np.repeat(pdf[block_col].iloc[0], len(ra))
+        return pd.DataFrame({"block": blk, "id_a": ra, "id_b": rb, "cosine": rc})
 
     sel = embeddings.select(
         F.col(block_col),

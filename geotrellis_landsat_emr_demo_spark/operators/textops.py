@@ -20,6 +20,10 @@ Dedup family:
   inverted-index join (Bayardo WWW'07; hot tokens sort last, so skew is
   bounded by construction; never an all-pairs self-join)
 
+Every candidate self-join above is :func:`.pairs.self_join`, the dense
+Jaccard path scans its buckets with :func:`.pairs.upper_pairs`, and both
+MinHash pipelines verify through :func:`_signature_verify`.
+
 Analysis family:
 - :func:`token_stats`        whitespace + regex token counts (pure F.*)
 - :func:`quality_score`      length/punct/stopword/distinct ratios (pure F.*)
@@ -27,6 +31,9 @@ Analysis family:
 - :func:`lang_id_ngram`      char-trigram naive-Bayes LID with learned
   profiles (:func:`lang_ngram_profiles`) — the real model
 - :func:`doc_fingerprint`    normalized rolling fingerprint (md5)
+
+Splits: :func:`train_test_split` and :func:`stratified_sample` share one
+engine-portable md5 bucket (:func:`_md5_bucket`).
 
 At 100 TB the shapes matter more than the hashes: exact dedup is one
 shuffle on the fingerprint; LSH is explode(bands) + shuffle on band key
@@ -50,6 +57,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .. import gates
+from . import pairs
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
@@ -232,48 +240,53 @@ def minhash_portable_pairs(
         eager=True
     )
     n_docs = sigs.count()  # cheap agg over the materialized checkpoint
-    banded = _minhash_banded(sigs, bands, rows)
-    x, y = banded.alias("x"), banded.alias("y")
-    if gates.fits("minhash_broadcast_band_rows", n_docs * bands):
-        # broadcast one self-join side: the bucket equi-join stays
-        # map-side (guide §3.1)
-        y = F.broadcast(y)
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
+    # broadcast one self-join side: the bucket equi-join stays map-side
+    cand = pairs.self_join(
+        _minhash_banded(sigs, bands, rows), ("band", "bucket"),
+        broadcast=gates.fits("minhash_broadcast_band_rows", n_docs * bands),
+    ).distinct()
+    # the candidate relation is never shuffled for the estimate join
+    return _signature_verify(
+        cand, sigs, n_hashes, threshold,
+        gates.fits("minhash_broadcast_signatures", n_docs),
+    )
+
+
+def _signature_verify(
+    cand: DataFrame, sigs: DataFrame, n_hashes: int, threshold: float,
+    broadcast: bool = False,
+) -> DataFrame:
+    """Candidate pairs (doc_a, doc_b, carried columns) -> those whose
+    signature-estimated Jaccard (the share of the ``n_hashes`` MinHash
+    values of ``sigs`` the two docs agree on) is >= ``threshold``:
+    (doc_a, doc_b, est_jaccard, carried columns).  ``broadcast`` (the
+    caller's gate decision) hints both signature sides of the estimate
+    join.
+
+    The match count is a plain sum of column equalities: the former
+    aggregate(zip_with(...)) is a CodegenFallback higher-order function,
+    interpreted per candidate row; the integer sum / n_hashes double
+    division is value-identical."""
+    sa, sb = (
+        sigs.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            *[F.col(f"h{i}").alias(f"h{s}{i}") for i in range(n_hashes)],
         )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
+        for s in "ab"
     )
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{i}").alias(f"ha{i}") for i in range(n_hashes)],
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{i}").alias(f"hb{i}") for i in range(n_hashes)],
-    )
-    if gates.fits("minhash_broadcast_signatures", n_docs):
-        # the candidate relation is never shuffled for the estimate join
+    if broadcast:
         sa, sb = F.broadcast(sa), F.broadcast(sb)
-    # r8: the match count as a plain sum of column equalities — the former
-    # aggregate(zip_with(...)) is a CodegenFallback higher-order function,
-    # interpreted per candidate row; the integer sum / n_hashes double
-    # division is value-identical
     matches = sum(
         ((F.col(f"ha{i}") == F.col(f"hb{i}")).cast("int") for i in range(n_hashes)),
         F.lit(0),
     )
-    est = (
+    carried = [c for c in cand.columns if c not in ("doc_a", "doc_b")]
+    return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn("est_jaccard", matches / F.lit(float(n_hashes)))
-    )
-    return est.filter(F.col("est_jaccard") >= threshold).select(
-        "doc_a", "doc_b", "est_jaccard"
+        .filter(F.col("est_jaccard") >= threshold)
+        .select("doc_a", "doc_b", "est_jaccard", *carried)
     )
 
 
@@ -348,20 +361,9 @@ def incremental_minhash_pairs(
         )
         .filter(F.col("doc_a") != F.col("doc_b"))
     )
-    y = nb.alias("y")
-    vs_new = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.lit(True).alias("is_new_pair"),
-        )
-    )
+    vs_new = pairs.self_join(
+        nb, ("band", "bucket"), broadcast=corpus_bands is not None
+    ).withColumn("is_new_pair", F.lit(True))
     # candidates feed the est join AND the verify-base semi-join — two
     # branches; materialize once (tiny: colliding pairs only)
     cand = vs_corpus.unionByName(vs_new).distinct().localCheckpoint(eager=True)
@@ -379,28 +381,7 @@ def incremental_minhash_pairs(
     # sides; checkpoint so the corpus-sig scan behind it runs once, not
     # once per side
     all_sigs = new_sigs.unionByName(matched).distinct().localCheckpoint(eager=True)
-    sa = all_sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{i}").alias(f"ha{i}") for i in range(n_hashes)],
-    )
-    sb = all_sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{i}").alias(f"hb{i}") for i in range(n_hashes)],
-    )
-    # codegen-able equality sum, not the interpreted aggregate(zip_with)
-    # HOF — value-identical (see minhash_portable_pairs)
-    matches = sum(
-        ((F.col(f"ha{i}") == F.col(f"hb{i}")).cast("int") for i in range(n_hashes)),
-        F.lit(0),
-    )
-    est = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("est_jaccard", matches / F.lit(float(n_hashes)))
-    )
-    out = est.filter(F.col("est_jaccard") >= threshold).select(
-        "doc_a", "doc_b", "est_jaccard", "is_new_pair"
-    )
+    out = _signature_verify(cand, all_sigs, n_hashes, threshold)
     # handles for callers that materialize the result and want to free the
     # internal checkpoints (the streaming loop must not leak blocks per
     # micro-batch)
@@ -584,30 +565,15 @@ def simhash_near_pairs(
             F.array(*[F.col(f"block{t}") for t in range(n_blocks)])
         ).alias("tbl", "blk"),
     )
-    x, y = banded.alias("x"), banded.alias("y")
-    if gates.fits("simhash_broadcast_block_rows", sh.count() * n_blocks):
-        # broadcasting one self-join side keeps the block equi-join
-        # map-side (guide §3.1); the count is a cheap agg over the
-        # materialized checkpoint
-        y = F.broadcast(y)
-    cand = (
-        x.join(
-            y,
-            (F.col("x.tbl") == F.col("y.tbl"))
-            & (F.col("x.blk") == F.col("y.blk"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("x.simhash").alias("sh_a"),
-            F.col("y.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
+    # broadcasting one self-join side keeps the block equi-join map-side;
+    # the count is a cheap agg over the materialized checkpoint
+    cand = pairs.self_join(
+        banded, ("tbl", "blk"), carry=("simhash",),
+        broadcast=gates.fits("simhash_broadcast_block_rows", sh.count() * n_blocks),
+    ).distinct()
     return (
         cand.withColumn(
-            "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+            "hamming", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
         )
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
@@ -787,11 +753,10 @@ def _dense_jaccard_pairs(
     def _bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("doc_id", kind="mergesort").reset_index(drop=True)
         n = len(pdf)
-        empty = pd.DataFrame({"doc_a": [], "doc_b": [], "jaccard": []}).astype(
-            {"doc_a": "i8", "doc_b": "i8", "jaccard": "f8"}
-        )
         if n < 2:
-            return empty
+            return pd.DataFrame({"doc_a": [], "doc_b": [], "jaccard": []}).astype(
+                {"doc_a": "i8", "doc_b": "i8", "jaccard": "f8"}
+            )
         ids = pdf["doc_id"].to_numpy(dtype="i8")
         sizes = pdf["n"].to_numpy(dtype="i8")
         masks = np.zeros((n, W), dtype=np.uint64)
@@ -801,33 +766,18 @@ def _dense_jaccard_pairs(
             np.bitwise_or.at(
                 masks[i], idx >> 6, one << (idx & 63).astype(np.uint64)
             )
-        out_a, out_b, out_j = [], [], []
-        chunk = max(1, (2 << 20) // max(n, 1))
-        for lo in range(0, n, chunk):
-            hi = min(lo + chunk, n)
+
+        def jaccards(lo, hi):
             inter_and = masks[lo:hi, None, :] & masks[None, :, :]
             u16 = inter_and.view(np.uint16).reshape(hi - lo, n, W * 4)
             p = pop[u16].sum(axis=2, dtype=np.int64)
             q = sizes[lo:hi, None] + sizes[None, :] - p
-            if rtab is not None:
-                jac = rtab[p, q]
-            else:
-                jac = p.astype("f8") / q.astype("f8")
-            rows, cols = np.nonzero(jac >= thr)
-            keep = (rows + lo) < cols
-            rows, cols = rows[keep], cols[keep]
-            out_a.append(ids[rows + lo])
-            out_b.append(ids[cols])
-            out_j.append(jac[rows, cols])
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {
-                "doc_a": np.concatenate(out_a),
-                "doc_b": np.concatenate(out_b),
-                "jaccard": np.concatenate(out_j),
-            }
+            return rtab[p, q] if rtab is not None else p.astype("f8") / q.astype("f8")
+
+        a, b, j = pairs.upper_pairs(
+            ids, jaccards, lambda J: J >= thr, max(1, (2 << 20) // n)
         )
+        return pd.DataFrame({"doc_a": a, "doc_b": b, "jaccard": j})
 
     # explicit REPARTITION_BY_NUM on the group key: the input shuffle is
     # tiny (the doc relation), so AQE would coalesce it to 1-2 tasks —
@@ -909,7 +859,6 @@ def ngram_jaccard_pairs(
                     base, vocab["h"], min_jaccard, round_to, int(mx)
                 )
     inv = _prefix_index(base, t_pref, hot=_hot_hashes(base))
-    x, y = inv.alias("x"), inv.alias("y")
     # ppjoin positional filter: overlap(A, B) >= ceil(t/(1+t)*(|A|+|B|))
     # is implied by J >= t; for the FIRST common prefix token (positions
     # i_x, i_y in the global order) no common token precedes it, so
@@ -926,19 +875,14 @@ def ngram_jaccard_pairs(
         F.col("x.n") - F.col("x.pos") - F.lit(1),
         F.col("y.n") - F.col("y.pos") - F.lit(1),
     )
-    cand = (
-        x.join(
-            y,
-            (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.h") == F.col("y.h"))
-            & (F.col("x.doc_id") < F.col("y.doc_id"))
-            & (F.col("y.n") >= F.lit(t_pref) * F.col("x.n") - F.lit(1e-9))
-            & (F.col("x.n") >= F.lit(t_pref) * F.col("y.n") - F.lit(1e-9))
-            & (ubound >= min_overlap),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = pairs.self_join(
+        inv, ("bucket", "h"),
+        on=(
+            F.col("y.n") >= F.lit(t_pref) * F.col("x.n") - F.lit(1e-9),
+            F.col("x.n") >= F.lit(t_pref) * F.col("y.n") - F.lit(1e-9),
+            ubound >= min_overlap,
+        ),
+    ).distinct()
     a = base.select(
         F.col("doc_id").alias("doc_a"),
         F.col("hs").alias("hs_a"),
@@ -1019,6 +963,16 @@ def contamination_pairs(
     )
 
 
+def _md5_bucket(salt: str, id_col: str):
+    """The engine-portable split key: the first 8 hex chars of
+    md5(salt || ':' || id) as a uniform 32-bit integer."""
+    return F.conv(
+        F.substring(F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))), 1, 8),
+        16,
+        10,
+    ).cast("long")
+
+
 def train_test_split(
     docs: DataFrame,
     test_frac: float = 0.1,
@@ -1033,13 +987,8 @@ def train_test_split(
     oracle twin), re-splittable by changing ``salt``.  Adds a boolean
     ``is_test`` column.  (In-engine, xxhash64 would be cheaper; md5 is
     kept so the split definition is portable to non-Spark consumers.)"""
-    bucket = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))), 1, 8),
-        16,
-        10,
-    ).cast("long")
     return docs.withColumn(
-        "is_test", bucket < F.lit(int(test_frac * float(1 << 32)))
+        "is_test", _md5_bucket(salt, id_col) < F.lit(int(test_frac * float(1 << 32)))
     )
 
 
@@ -1060,21 +1009,14 @@ def stratified_sample(
     an in-plan literal map (tiny: one entry per group).  Groups absent
     from ``fractions`` fall back to ``default_frac``.  Pure column
     algebra: a narrow filter over the scan, no shuffle, no UDF."""
-    bucket = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("long")
-    pairs: list = []
+    entries: list = []
     for g, frac in sorted(fractions.items()):
-        pairs += [F.lit(g), F.lit(int(frac * float(1 << 32)))]
+        entries += [F.lit(g), F.lit(int(frac * float(1 << 32)))]
     thresh = F.coalesce(
-        F.create_map(*pairs)[F.col(group_col)],
+        F.create_map(*entries)[F.col(group_col)],
         F.lit(int(default_frac * float(1 << 32))),
     )
-    return docs.filter(bucket < thresh)
+    return docs.filter(_md5_bucket(salt, id_col) < thresh)
 
 
 # ---------------------------------------------------------------- analysis --

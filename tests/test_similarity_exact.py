@@ -1,7 +1,7 @@
 """Round-8 optimization equivalence pins: the vectorized Arrow cosine
 paths must be BIT-IDENTICAL to the Catalyst higher-order-function
 formulations they replaced (same IEEE rounding sequence — see
-similarity._cos_exact_np).  These tests compare the two implementations
+similarity._fold).  These tests compare the two implementations
 on real corpus data and on adversarial synthetic vectors (zero vectors,
 float32 inputs, threshold-straddling pairs)."""
 

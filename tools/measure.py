@@ -352,12 +352,11 @@ def _growth_vectors(spark, n: int, dim: int = 64):
 
 def _candidates(df, keys, *extra) -> int:
     """A blocking stage's candidates: the distinct doc pairs (x < y) of
-    ``df`` rows equal on ``keys`` that also meet ``extra``."""
-    x, y = df.alias("x"), df.alias("y")
-    cond = F.col("x.doc_id") < F.col("y.doc_id")
-    for c in [F.col(f"x.{k}") == F.col(f"y.{k}") for k in keys] + list(extra):
-        cond = cond & c
-    return x.join(y, cond).select(F.col("x.doc_id"), F.col("y.doc_id")).distinct().count()
+    ``df`` rows equal on ``keys`` that also meet ``extra``, through the
+    engine's bucket self-join."""
+    from geotrellis_landsat_emr_demo_spark.operators import pairs
+
+    return pairs.self_join(df, keys, on=extra).distinct().count()
 
 
 def _growth_at(spark, n: int, batch: int = 200) -> tuple[dict, dict]:
