@@ -10,9 +10,10 @@ window at ANY pyramid level with
 
 which is exactly the S3 ``GET Range`` access pattern.  This module
 implements both halves on :mod:`core.tiff`'s container pieces (header,
-validated per-IFD block layout, block decoder and packer, IFD
-serializer), so a windowed read accepts and rejects exactly the files
-:func:`core.tiff.read` does:
+validated per-IFD block layout, block assembler and packer, IFD
+serializer), so a windowed read accepts, rejects and decodes exactly the
+files :func:`core.tiff.read` does, chunky or planar; only where the
+block bytes come from differs:
 
 - :func:`write_cog` produces the layout (classic-TIFF IFD chain at the
   head, full-res IFD first, tile data written coarsest-overview-first
@@ -353,13 +354,6 @@ def _parse_chain_buf(data: bytes, reader: RangeReader) -> CogInfo:
             raise _NeedMore
         ifd = tiff._read_ifd(data, bo, off, big=big)
         lv = tiff.parse_layout(ifd, bo)
-        if lv.planar != 1:
-            # windowed COG reads stay chunky-only; whole-file planar
-            # decode is supported by core.tiff.decode
-            raise NotImplementedError(
-                "planar (separate) configuration in windowed COG reads "
-                "(use core.tiff.decode for whole-file planar)"
-            )
         levels.append((lv, int(ifd.get(_T_SUBFILE, [0])[0])))
         geo = geo or tiff.geo_meta(ifd)
         off = ifd[-1]
@@ -408,50 +402,35 @@ class CogReader:
     def window(self, level: int, x0: int, y0: int, w: int, h: int) -> np.ndarray:
         """Pixel window at ``level`` -> (h, w) or (h, w, spp) array.
 
-        Fetches only the tiles the window intersects, coalescing adjacent
-        byte ranges into single requests."""
+        Fetches only the blocks the window intersects (in every plane of
+        a planar file), coalescing adjacent byte ranges into single
+        requests."""
         lv = self.info.levels[level]
         x0c, y0c = max(0, x0), max(0, y0)
         x1c, y1c = min(lv.width, x0 + w), min(lv.height, y0 + h)
         if x1c <= x0c or y1c <= y0c:
             raise ValueError("window outside raster")
-        tx0, tx1 = x0c // lv.tile_w, (x1c - 1) // lv.tile_w
-        ty0, ty1 = y0c // lv.tile_h, (y1c - 1) // lv.tile_h
-        ntx = lv.tiles_across
-        wanted = {}
-        for ty in range(ty0, ty1 + 1):
-            for tx in range(tx0, tx1 + 1):
-                idx = ty * ntx + tx
-                wanted[idx] = (int(lv.offsets[idx]), int(lv.counts[idx]))
+        return tiff.read_window(lv, x0c, y0c, x1c, y1c, lambda ks: self._fetch(lv, ks))
+
+    def _fetch(self, lv, ks) -> list:
+        """Raw bytes of blocks ``ks`` of ``lv``, in order: one read per
+        coalesced range, served from the parse prefix when inside it."""
+        wanted = [(int(lv.offsets[k]), int(lv.counts[k])) for k in ks]
         fetched = {}
         gap = getattr(self.reader, "coalesce_gap", RANGE_COALESCE_GAP)
-        for off, cnt in _coalesce(list(wanted.values()), gap=gap):
+        for off, cnt in _coalesce(wanted, gap=gap):
             if off + cnt <= len(self.prefix):
                 fetched[off] = self.prefix[off : off + cnt]
             else:
                 fetched[off] = self.reader.read(off, cnt)
 
-        def tile_bytes(off: int, cnt: int) -> bytes:
-            for base in fetched:
-                buf = fetched[base]
+        def block_bytes(off: int, cnt: int) -> bytes:
+            for base, buf in fetched.items():
                 if base <= off and off + cnt <= base + len(buf):
                     return buf[off - base : off - base + cnt]
             raise AssertionError("range not fetched")
 
-        out = np.zeros(
-            (y1c - y0c, x1c - x0c, lv.spp), dtype=lv.dtype.newbyteorder("=")
-        )
-        for idx, (off, cnt) in wanted.items():
-            ty, tx = divmod(idx, ntx)
-            blk = tiff.decode_block(tile_bytes(off, cnt), lv)
-            bx0, by0 = tx * lv.tile_w, ty * lv.tile_h
-            sx0, sy0 = max(x0c, bx0), max(y0c, by0)
-            sx1 = min(x1c, bx0 + lv.tile_w)
-            sy1 = min(y1c, by0 + lv.tile_h)
-            out[sy0 - y0c : sy1 - y0c, sx0 - x0c : sx1 - x0c] = blk[
-                sy0 - by0 : sy1 - by0, sx0 - bx0 : sx1 - bx0
-            ]
-        return out[..., 0] if lv.spp == 1 else out
+        return [block_bytes(off, cnt) for off, cnt in wanted]
 
     def window_by_extent(self, extent, resolution: float | None = None):
         """Map-space window (file CRS) -> (array, actual_extent, level).

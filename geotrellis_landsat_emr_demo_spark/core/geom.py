@@ -19,7 +19,7 @@ import json
 
 import numpy as np
 
-R_EARTH = 6378137.0
+from .tiling import R_EARTH
 
 
 def lnglat_to_mercator(lng, lat):

@@ -580,7 +580,7 @@ def split_to_tiles_cropped(
     from . import proj as _proj
     from . import tiling as _tiling
 
-    native_3857 = str(src_crs).upper() in ("EPSG:3857", "3857")
+    native_3857 = _proj.is_3857(src_crs)
     c0, r0, c1, r1 = tile_range
     sxmin, symin, sxmax, symax = src_extent
     nb, sh, sw = src_u16.shape

@@ -9,8 +9,11 @@ can inverse-map destination (3857) pixel centers back into the source UTM
 grid and bilinear-sample there — same semantics, no GDAL.
 
 Formulas: Krüger flattening series for the transverse Mercator (standard
-published form, exact to << 1 mm over a UTM zone); spherical Web Mercator
-closed forms live in core.geom.
+published form, exact to << 1 mm over a UTM zone), written once — UTM is
+that projection with the UTM constants; spherical Web Mercator closed
+forms live in core.geom.  One densified-boundary builder gives extent
+envelopes in both directions (source CRS -> 3857 and back), and
+:func:`is_3857` is the one test for "already Web Mercator".
 """
 
 from __future__ import annotations
@@ -62,8 +65,24 @@ def utm_central_meridian_deg(zone: int) -> float:
 
 
 def lnglat_to_utm(lng_deg, lat_deg, zone: int, north: bool = True):
-    """Vectorized WGS84 forward transverse Mercator -> (easting, northing)."""
-    lam0 = np.radians(utm_central_meridian_deg(zone))
+    """Vectorized WGS84 forward UTM -> (easting, northing)."""
+    return _tmerc_forward(
+        lng_deg, lat_deg, utm_central_meridian_deg(zone), _K0, _E0,
+        0.0 if north else _N0_SOUTH,
+    )
+
+
+def utm_to_lnglat(easting, northing, zone: int, north: bool = True):
+    """Vectorized inverse UTM -> (lng_deg, lat_deg)."""
+    return _tmerc_inverse(
+        easting, northing, utm_central_meridian_deg(zone), _K0, _E0,
+        0.0 if north else _N0_SOUTH,
+    )
+
+
+def _tmerc_forward(lng_deg, lat_deg, lng0, k0, fe, fn):
+    """General WGS84 transverse Mercator via the Krüger series above."""
+    lam0 = np.radians(lng0)
     phi = np.radians(np.asarray(lat_deg, dtype="f8"))
     lam = np.radians(np.asarray(lng_deg, dtype="f8")) - lam0
     s = np.sin(phi)
@@ -71,25 +90,18 @@ def lnglat_to_utm(lng_deg, lat_deg, zone: int, north: bool = True):
     t = np.sinh(np.arctanh(s) - _E * np.arctanh(_E * s))
     xi_p = np.arctan2(t, np.cos(lam))
     eta_p = np.arcsinh(np.sin(lam) / np.hypot(t, np.cos(lam)))
-    xi = xi_p.copy()
-    eta = eta_p.copy()
+    xi, eta = xi_p.copy(), eta_p.copy()
     for j, a in enumerate(_ALPHA, start=1):
         xi += a * np.sin(2 * j * xi_p) * np.cosh(2 * j * eta_p)
         eta += a * np.cos(2 * j * xi_p) * np.sinh(2 * j * eta_p)
-    easting = _E0 + _K0 * _AR * eta
-    northing = _K0 * _AR * xi + (0.0 if north else _N0_SOUTH)
-    return easting, northing
+    return fe + k0 * _AR * eta, fn + k0 * _AR * xi
 
 
-def utm_to_lnglat(easting, northing, zone: int, north: bool = True):
-    """Vectorized inverse transverse Mercator -> (lng_deg, lat_deg)."""
-    lam0 = np.radians(utm_central_meridian_deg(zone))
-    xi = (np.asarray(northing, dtype="f8") - (0.0 if north else _N0_SOUTH)) / (
-        _K0 * _AR
-    )
-    eta = (np.asarray(easting, dtype="f8") - _E0) / (_K0 * _AR)
-    xi_p = xi.copy()
-    eta_p = eta.copy()
+def _tmerc_inverse(x, y, lng0, k0, fe, fn):
+    lam0 = np.radians(lng0)
+    xi = (np.asarray(y, dtype="f8") - fn) / (k0 * _AR)
+    eta = (np.asarray(x, dtype="f8") - fe) / (k0 * _AR)
+    xi_p, eta_p = xi.copy(), eta.copy()
     for j, b in enumerate(_BETA, start=1):
         xi_p -= b * np.sin(2 * j * xi) * np.cosh(2 * j * eta)
         eta_p -= b * np.cos(2 * j * xi) * np.sinh(2 * j * eta)
@@ -158,15 +170,17 @@ def resolve_crs(crs: str):
     )
 
 
-def _is_3857(crs: str) -> bool:
-    return str(crs).upper() in ("EPSG:3857", "3857")
+def is_3857(crs) -> bool:
+    """Is ``crs`` Web Mercator?  A missing CRS (None or empty) is: scene
+    and footprint rows without one are in EPSG:3857."""
+    return not crs or str(crs).upper() in ("EPSG:3857", "3857")
 
 
 def mercator_to_crs(mx, my, crs: str):
     """EPSG:3857 coords -> coords in ``crs`` (any resolvable CRS)."""
     from . import geom
 
-    if _is_3857(crs):
+    if is_3857(crs):
         return np.asarray(mx, dtype="f8"), np.asarray(my, dtype="f8")
     _, from_ll = resolve_crs(crs)
     lng, lat = geom.mercator_to_lnglat(np.asarray(mx, "f8"), np.asarray(my, "f8"))
@@ -177,7 +191,7 @@ def crs_to_mercator(x, y, crs: str):
     """Coords in ``crs`` -> EPSG:3857."""
     from . import geom
 
-    if _is_3857(crs):
+    if is_3857(crs):
         return np.asarray(x, dtype="f8"), np.asarray(y, dtype="f8")
     to_ll, _ = resolve_crs(crs)
     lng, lat = to_ll(np.asarray(x, "f8"), np.asarray(y, "f8"))
@@ -326,39 +340,6 @@ def parse_proj4(crs: str) -> dict | None:
     return out
 
 
-def _tmerc_forward(lng_deg, lat_deg, lng0, k0, fe, fn):
-    """General transverse Mercator via the Krüger series above (the UTM
-    functions are this with zone-derived lam0 and UTM constants)."""
-    lam0 = np.radians(lng0)
-    phi = np.radians(np.asarray(lat_deg, dtype="f8"))
-    lam = np.radians(np.asarray(lng_deg, dtype="f8")) - lam0
-    s = np.sin(phi)
-    t = np.sinh(np.arctanh(s) - _E * np.arctanh(_E * s))
-    xi_p = np.arctan2(t, np.cos(lam))
-    eta_p = np.arcsinh(np.sin(lam) / np.hypot(t, np.cos(lam)))
-    xi, eta = xi_p.copy(), eta_p.copy()
-    for j, a in enumerate(_ALPHA, start=1):
-        xi += a * np.sin(2 * j * xi_p) * np.cosh(2 * j * eta_p)
-        eta += a * np.cos(2 * j * xi_p) * np.sinh(2 * j * eta_p)
-    return fe + k0 * _AR * eta, fn + k0 * _AR * xi
-
-
-def _tmerc_inverse(x, y, lng0, k0, fe, fn):
-    lam0 = np.radians(lng0)
-    xi = (np.asarray(y, dtype="f8") - fn) / (k0 * _AR)
-    eta = (np.asarray(x, dtype="f8") - fe) / (k0 * _AR)
-    xi_p, eta_p = xi.copy(), eta.copy()
-    for j, b in enumerate(_BETA, start=1):
-        xi_p -= b * np.sin(2 * j * xi) * np.cosh(2 * j * eta)
-        eta_p -= b * np.cos(2 * j * xi) * np.sinh(2 * j * eta)
-    chi = np.arcsin(np.sin(xi_p) / np.cosh(eta_p))
-    phi = chi.copy()
-    for j, d in enumerate(_DELTA, start=1):
-        phi += d * np.sin(2 * j * chi)
-    lam = np.arctan2(np.sinh(eta_p), np.cos(xi_p))
-    return np.degrees(lam + lam0), np.degrees(phi)
-
-
 def _proj4_resolver(crs: str):
     p = parse_proj4(crs)
     if p is None:
@@ -391,7 +372,7 @@ def extent_to_mercator(extent, crs: str, densify: int = 16):
     boundary (a projected rectangle's image is curved, so corners alone
     under-cover; 16 points/edge bounds the envelope error well below one
     pixel at Landsat scene scale)."""
-    if str(crs).upper() in ("EPSG:3857", "3857"):
+    if is_3857(crs):
         return tuple(float(v) for v in extent)
     xmin, ymin, xmax, ymax = (float(v) for v in extent)
     t = np.linspace(0.0, 1.0, densify + 1)
@@ -409,15 +390,33 @@ def extent_to_mercator(extent, crs: str, densify: int = 16):
 
 def extents_to_mercator(xmin, ymin, xmax, ymax, crs: str, densify: int = 16):
     """Vectorized :func:`extent_to_mercator` over n same-CRS extents:
-    four (n,) arrays in, four (n,) arrays out.  The densified boundary of
-    every extent is built as one (n, 4*(densify+1)) block and projected
-    in a single vectorized transform — no per-extent Python."""
-    xmin = np.atleast_1d(np.asarray(xmin, dtype="f8"))
-    ymin = np.atleast_1d(np.asarray(ymin, dtype="f8"))
-    xmax = np.atleast_1d(np.asarray(xmax, dtype="f8"))
-    ymax = np.atleast_1d(np.asarray(ymax, dtype="f8"))
-    if str(crs).upper() in ("EPSG:3857", "3857"):
+    four (n,) arrays in, four (n,) arrays out."""
+    xmin, ymin, xmax, ymax = (
+        np.atleast_1d(np.asarray(v, dtype="f8")) for v in (xmin, ymin, xmax, ymax)
+    )
+    if is_3857(crs):
         return xmin, ymin, xmax, ymax
+    return _envelopes(xmin, ymin, xmax, ymax, crs_to_mercator, crs, densify)
+
+
+def extent_from_mercator(extent, crs: str):
+    """EPSG:3857 extent -> its covering envelope in ``crs``: the inverse
+    direction of :func:`extent_to_mercator`, by the same densified
+    boundary."""
+    if is_3857(crs):
+        return tuple(float(v) for v in extent)
+    env = _envelopes(
+        *(np.asarray([v], dtype="f8") for v in extent), mercator_to_crs, crs
+    )
+    return tuple(float(v[0]) for v in env)
+
+
+def _envelopes(xmin, ymin, xmax, ymax, transform, crs: str, densify: int = 16):
+    """(n,) extents -> the (n,) envelopes of their boundaries under
+    ``transform(x, y, crs)``.  Every extent's boundary is densified to
+    ``densify + 1`` points per edge, built as one (n, 4*(densify+1))
+    block and projected in a single vectorized call — no per-extent
+    Python."""
     t = np.linspace(0.0, 1.0, densify + 1)  # (d,)
     d = t.size
     w, h = (xmax - xmin)[:, None], (ymax - ymin)[:, None]
@@ -430,6 +429,6 @@ def extents_to_mercator(xmin, ymin, xmax, ymax, crs: str, densify: int = 16):
         [rep(ymin), ymin[:, None] + h * t, rep(ymax), ymax[:, None] - h * t],
         axis=1,
     )
-    mx, my = crs_to_mercator(bx.ravel(), by.ravel(), crs)
+    mx, my = transform(bx.ravel(), by.ravel(), crs)
     mx, my = mx.reshape(bx.shape), my.reshape(by.shape)
     return mx.min(axis=1), my.min(axis=1), mx.max(axis=1), my.max(axis=1)

@@ -37,11 +37,13 @@ tools read.
 
 This is the only module that knows the container format.  Its pieces —
 :func:`parse_header`, :func:`parse_layout` (one IFD's validated
-:class:`Layout`), :func:`geo_meta`, :func:`decode_block`,
-:func:`sample_spec`, :func:`pack_blocks`, :func:`ifd_entries`,
-:func:`serialize_ifd` and :func:`header` — serve both :func:`read` /
-:func:`encode` and the windowed reader / COG writer in ``core/cog.py``,
-so the two accept, reject and write exactly the same files.
+:class:`Layout`), :func:`geo_meta`, :func:`read_window` (the one block
+assembler: which blocks a window touches, in every plane, and where
+their decoded pixels go), :func:`sample_spec`, :func:`pack_blocks`,
+:func:`ifd_entries`, :func:`serialize_ifd` and :func:`header` — serve
+both :func:`read` / :func:`encode` and the windowed reader / COG writer
+in ``core/cog.py``, so the two accept, reject, decode and write exactly
+the same files, planar ones included.
 """
 
 from __future__ import annotations
@@ -467,6 +469,34 @@ def decode_block(raw: bytes, lv: Layout) -> np.ndarray:
     return _undo_predictor(blk) if lv.pred == 2 else blk
 
 
+def read_window(lv: Layout, x0: int, y0: int, x1: int, y1: int, fetch) -> np.ndarray:
+    """Pixels [y0, y1) x [x0, x1) of one IFD's raster -> (h, w) for one
+    sample, else (h, w, spp).  ``fetch(indices)`` returns the raw bytes
+    of those blocks, in order: every block the window touches, in every
+    plane of a planar file (plane-major, one sample per block, TIFF 6.0
+    §Planar Configuration)."""
+    tx0, tx1 = x0 // lv.tile_w, (x1 - 1) // lv.tile_w
+    ty0, ty1 = y0 // lv.tile_h, (y1 - 1) // lv.tile_h
+    ntx, bspp = lv.tiles_across, lv.block_spp
+    per = ntx * lv.tiles_down
+    wanted = [
+        s * per + ty * ntx + tx
+        for s in range(lv.spp // bspp)
+        for ty in range(ty0, ty1 + 1)
+        for tx in range(tx0, tx1 + 1)
+    ]
+    out = np.zeros((y1 - y0, x1 - x0, lv.spp), dtype=lv.dtype.newbyteorder("="))
+    for k, raw in zip(wanted, fetch(wanted)):
+        s, (ty, tx) = k // per, divmod(k % per, ntx)
+        bx0, by0 = tx * lv.tile_w, ty * lv.tile_h
+        sx0, sy0 = max(x0, bx0), max(y0, by0)
+        sx1, sy1 = min(x1, bx0 + lv.tile_w), min(y1, by0 + lv.tile_h)
+        out[sy0 - y0 : sy1 - y0, sx0 - x0 : sx1 - x0, s * bspp : (s + 1) * bspp] = (
+            decode_block(raw, lv)[sy0 - by0 : sy1 - by0, sx0 - bx0 : sx1 - bx0]
+        )
+    return out[..., 0] if lv.spp == 1 else out
+
+
 def read(data: bytes):
     """TIFF bytes -> (array, meta).  array: (h, w) for grayscale, else
     (h, w, spp).  meta: dims/layout plus GeoTIFF georeferencing when the
@@ -475,27 +505,19 @@ def read(data: bytes):
     bo, big, ifd_off = parse_header(data)
     ifd = _read_ifd(data, bo, ifd_off, big=big)
     lv = parse_layout(ifd, bo)
-    h, w, bspp = lv.height, lv.width, lv.block_spp
-    out = np.zeros((h, w, lv.spp), dtype=lv.dtype.newbyteorder("="))
-    # planar=2: blocks are per-plane (1 sample each), plane-major in the
-    # offsets array (TIFF 6.0 §Planar Configuration); each plane's blocks
-    # fill its band slot
-    per = lv.tiles_across * lv.tiles_down
-    nblocks = per * (lv.spp // bspp)
-    for k, (off, cnt) in enumerate(zip(lv.offsets[:nblocks], lv.counts[:nblocks])):
-        s, (ty, tx) = k // per, divmod(k % per, lv.tiles_across)
-        y0, x0 = ty * lv.tile_h, tx * lv.tile_w
-        ys, xs = min(lv.tile_h, h - y0), min(lv.tile_w, w - x0)
-        blk = decode_block(bytes(data[off : off + cnt]), lv)
-        out[y0 : y0 + ys, x0 : x0 + xs, s * bspp : (s + 1) * bspp] = blk[:ys, :xs]
-
+    out = read_window(
+        lv, 0, 0, lv.width, lv.height,
+        lambda ks: (
+            bytes(data[lv.offsets[k] : lv.offsets[k] + lv.counts[k]]) for k in ks
+        ),
+    )
     meta = dict(
-        width=w, height=h, bits=lv.bits, samples=lv.spp, compression=lv.comp,
-        tiled=not lv.striped, predictor=lv.pred, planar=lv.planar,
-        dtype=str(out.dtype),
+        width=lv.width, height=lv.height, bits=lv.bits, samples=lv.spp,
+        compression=lv.comp, tiled=not lv.striped, predictor=lv.pred,
+        planar=lv.planar, dtype=str(out.dtype),
     )
     meta.update(geo_meta(ifd))
-    return out[..., 0] if lv.spp == 1 else out, meta
+    return out, meta
 
 
 def decode(data: bytes) -> np.ndarray:

@@ -99,12 +99,11 @@ def _chunk_fn(zoom: int):
                 ext = (row.xmin, row.ymin, row.xmax, row.ymax)
                 # non-3857 scenes (UTM) are warped during the split — the
                 # covering range comes from the reprojected envelope
-                crs = row.crs or "EPSG:3857"
-                ext_3857 = proj.extent_to_mercator(ext, crs)
+                ext_3857 = proj.extent_to_mercator(ext, row.crs)
                 trange = tiling.extent_to_tile_range(*ext_3857, zoom)
                 # single gather for the whole covering block, sliced per tile
                 for (c, r), (ox, oy), tile in kernels.split_to_tiles_cropped(
-                    arr, ext, zoom, trange, TILE_SIZE, src_crs=crs
+                    arr, ext, zoom, trange, TILE_SIZE, src_crs=row.crs
                 ):
                     groups.setdefault((c, r, row.ts), []).append(
                         (row.image_id, row.caption, (tile, None, [row.image_id], (ox, oy)))
@@ -598,8 +597,7 @@ def ingest_images(
         ).collect()
         envs = [
             proj.extent_to_mercator(
-                (r["xmin"], r["ymin"], r["xmax"], r["ymax"]),
-                r["crs"] or "EPSG:3857",
+                (r["xmin"], r["ymin"], r["xmax"], r["ymax"]), r["crs"]
             )
             for r in ext_rows
         ]

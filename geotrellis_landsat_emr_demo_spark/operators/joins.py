@@ -34,9 +34,6 @@ from ..core import geom, kernels, tiling
 from ..functions.registry import get_op
 from ..plans.queries import parse_time, zonal_partial
 
-ORIGIN = tiling.ORIGIN
-WORLD = tiling.WORLD
-
 
 def with_mercator_envelope(df: DataFrame) -> DataFrame:
     """Normalize footprint columns (xmin..ymax) to EPSG:3857.
@@ -56,9 +53,9 @@ def with_mercator_envelope(df: DataFrame) -> DataFrame:
         for pdf in batches:
             # one vectorized batch projection per distinct source CRS (a
             # handful of UTM zones in practice) — no per-row Python
-            crs_s = pdf["crs"].fillna("EPSG:3857")
+            crs_s = pdf["crs"]
             for crs in crs_s.unique():
-                if str(crs).upper() in ("EPSG:3857", "3857"):
+                if proj.is_3857(crs):
                     continue
                 m = (crs_s == crs).to_numpy()
                 env = proj.extents_to_mercator(
@@ -82,12 +79,12 @@ def with_cover_cells(df: DataFrame, zoom: int, prefix: str = "") -> DataFrame:
 
     Mirrors tiling.extent_to_tile_range (same eps/clamp semantics)."""
     n = 1 << zoom
-    span = WORLD / n
+    span = tiling.WORLD / n
     eps = span * 1e-9
-    c0 = F.greatest(F.lit(0), F.floor((F.col(f"{prefix}xmin") + ORIGIN) / span))
-    c1 = F.least(F.lit(n - 1), F.floor((F.col(f"{prefix}xmax") + ORIGIN - eps) / span))
-    r0 = F.greatest(F.lit(0), F.floor((ORIGIN - F.col(f"{prefix}ymax")) / span))
-    r1 = F.least(F.lit(n - 1), F.floor((ORIGIN - F.col(f"{prefix}ymin") - eps) / span))
+    c0 = F.greatest(F.lit(0), F.floor((F.col(f"{prefix}xmin") + tiling.ORIGIN) / span))
+    c1 = F.least(F.lit(n - 1), F.floor((F.col(f"{prefix}xmax") + tiling.ORIGIN - eps) / span))
+    r0 = F.greatest(F.lit(0), F.floor((tiling.ORIGIN - F.col(f"{prefix}ymax")) / span))
+    r1 = F.least(F.lit(n - 1), F.floor((tiling.ORIGIN - F.col(f"{prefix}ymin") - eps) / span))
     return (
         df.withColumn("cx", F.explode(F.sequence(c0.cast("int"), c1.cast("int"))))
         .withColumn("cy", F.explode(F.sequence(r0.cast("int"), r1.cast("int"))))
@@ -182,7 +179,6 @@ def knn_join(
     points_pdf: pd.DataFrame,
     k: int | None = None,
     zoom: int = 10,
-    max_rounds: int | None = None,
 ) -> DataFrame:
     """k nearest scenes (by euclidean distance in EPSG:3857 between query
     point and scene footprint center) for each query point.
@@ -206,9 +202,9 @@ def knn_join(
         ((F.col("xmin") + F.col("xmax")) / 2).alias("sx"),
         ((F.col("ymin") + F.col("ymax")) / 2).alias("sy"),
     ).withColumn(
-        "cx", F.floor((F.col("sx") + ORIGIN) / span).cast("int")
+        "cx", F.floor((F.col("sx") + tiling.ORIGIN) / span).cast("int")
     ).withColumn(
-        "cy", F.floor((ORIGIN - F.col("sy")) / span).cast("int")
+        "cy", F.floor((tiling.ORIGIN - F.col("sy")) / span).cast("int")
     ).persist()
     n_scenes = scene_cells.count()
 
@@ -221,8 +217,9 @@ def knn_join(
     qcol, qrow = tiling.map_to_tile(pts["mx"].values, pts["my"].values, zoom)
     pts["qcx"], pts["qcy"] = qcol.astype(int), qrow.astype(int)
 
-    # enough doublings to reach the world ring regardless of caller input
-    rounds = max(max_rounds or 0, zoom + 2)
+    # round i scans the ring r = 2^i, so the rounds reach the world ring
+    # (r >= 2^zoom) whatever the caller's input
+    rounds = zoom + 2
     unresolved = pts
     kept: list[DataFrame] = []
     r = 1

@@ -618,13 +618,25 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Distinct SRP-LSH candidate pairs (id_a < id_b) — the blocking stage
     shared by :func:`lsh_near_dup_pairs` (and testable on its own: with
-    ``bits=None`` the candidate count grows ~linearly in N, not N^2).
+    ``bits=None`` the candidate count grows ~linearly in N, not N^2)."""
+    n_corpus = embeddings.count() if bits is None else None
+    return _lsh_candidates(
+        embeddings, n_corpus, bits, tables, dim, id_col, vec_col, target_bucket
+    )
+
+
+def _lsh_candidates(
+    embeddings, n_corpus, bits, tables, dim, id_col, vec_col, target_bucket
+):
+    """:func:`lsh_candidate_pairs` given the corpus size ``n_corpus``,
+    which sizes the hash (:func:`adaptive_bits`) and gates the bucket
+    broadcast when ``bits`` is None; an explicit ``bits`` never
+    broadcasts.
 
     The bucketed relation is NARROW (id, tbl, bucket) and checkpointed so
     the Arrow matmul runs once, not once per self-join side."""
-    n_corpus = None
-    if bits is None:
-        n_corpus = embeddings.count()
+    adaptive = bits is None
+    if adaptive:
         bits = adaptive_bits(n_corpus, target_bucket)
     par = embeddings.sparkSession.sparkContext.defaultParallelism
     b = _table_buckets(
@@ -635,9 +647,7 @@ def lsh_candidate_pairs(
         tables,
         dim,
     ).localCheckpoint(eager=True)
-    fits = n_corpus is not None and gates.fits(
-        "lsh_broadcast_bucket_rows", n_corpus * tables
-    )
+    fits = adaptive and gates.fits("lsh_broadcast_bucket_rows", n_corpus * tables)
     return pairs.self_join(
         b, ("tbl", "bucket"), ("id_a", "id_b"), "id", broadcast=fits
     ).distinct()
@@ -668,8 +678,8 @@ def lsh_near_dup_pairs(
     :func:`pairwise_near_dups` stays the exact (blocked) baseline.
     Returns (id_a, id_b, cosine)."""
     n_corpus = embeddings.count()
-    cand = lsh_candidate_pairs(
-        embeddings, bits, tables, dim, id_col, vec_col, target_bucket
+    cand = _lsh_candidates(
+        embeddings, n_corpus, bits, tables, dim, id_col, vec_col, target_bucket
     )
     # broadcast: the (much larger) candidate relation is never shuffled
     # for the verify (guide §3.1)

@@ -23,11 +23,7 @@ def default_parallelism() -> int:
 
 def build_session(
     master: str | None = None,
-    app_name: str = "geotrellis-landsat-emr-demo-spark",
     shuffle_partitions: int | None = None,
-    arrow_batch: int = 8192,
-    arrow_batch_bytes: int = 32 << 20,
-    driver_mem: str | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     cpus = default_parallelism()
@@ -38,10 +34,10 @@ def build_session(
     # local mode: the driver heap hosts all executor threads' Arrow buffers
     # and shuffle blocks; an undersized heap turns 32-thread runs into GC
     # storms (measured 3x throughput loss at 20g vs 60g with 32 threads)
-    driver_mem = driver_mem or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "60g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "60g")
     b = (
         SparkSession.builder.master(master)
-        .appName(app_name)
+        .appName("geotrellis-landsat-emr-demo-spark")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -77,8 +73,8 @@ def build_session(
         # made every pandas-UDF stage on narrow data pay ~150x the batch
         # count; payload rows are now capped at 32 MB/batch instead
         # (tighter than the old 64 x ~1 MB) — guide §4.2.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(arrow_batch_bytes))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(32 << 20))
         # binary tile rows defeat size estimates; keep broadcasts explicit
         .config("spark.sql.autoBroadcastJoinThreshold", str(8 * 1024 * 1024))
         .config("spark.sql.parquet.compression.codec", "zstd")

@@ -67,25 +67,6 @@ def _paths_df(spark: SparkSession, paths) -> DataFrame:
     return df.repartition(par)
 
 
-def _native_envelope(aoi, crs: str, densify: int = 16):
-    """EPSG:3857 AOI -> covering envelope in ``crs`` via a densified
-    boundary (inverse of proj.extent_to_mercator's envelope logic)."""
-    if str(crs).upper() in ("EPSG:3857", "3857"):
-        return tuple(float(v) for v in aoi)
-    xmin, ymin, xmax, ymax = (float(v) for v in aoi)
-    t = np.linspace(0.0, 1.0, densify + 1)
-    bx = np.concatenate(
-        [xmin + (xmax - xmin) * t, np.full_like(t, xmax),
-         xmax - (xmax - xmin) * t, np.full_like(t, xmin)]
-    )
-    by = np.concatenate(
-        [np.full_like(t, ymin), ymin + (ymax - ymin) * t,
-         np.full_like(t, ymax), ymax - (ymax - ymin) * t]
-    )
-    nx, ny = proj.mercator_to_crs(bx, by, crs)
-    return float(nx.min()), float(ny.min()), float(nx.max()), float(ny.max())
-
-
 def cog_inventory(spark: SparkSession, paths) -> DataFrame:
     """Header-only scan of a COG archive -> one metadata row per file.
 
@@ -181,7 +162,7 @@ def cog_scenes(
                         and mext[1] <= aoi[3] and mext[3] >= aoi[1]
                     ):
                         continue
-                    want = _native_envelope(aoi, info.crs)
+                    want = proj.extent_from_mercator(aoi, info.crs)
                     want = (
                         max(want[0], ext[0]), max(want[1], ext[1]),
                         min(want[2], ext[2]), min(want[3], ext[3]),

@@ -191,32 +191,76 @@ def test_windowed_reader_rejects_what_read_rejects(case, reader):
         reader(make())
 
 
-@pytest.mark.parametrize("compression", ["none", "deflate", "packbits", "lzw"])
-def test_striped_tiff_windowed_read(compression):
+_LOSSLESS = ["none", "deflate", "packbits", "lzw"]
+# (compression, bands, planar, tiled): the single-band striped files, then
+# 3-band chunky and planar files, striped and tiled, and one planar JPEG
+_WINDOW_FILES = (
+    [(c, 1, 1, False) for c in _LOSSLESS]
+    + [
+        (c, 3, planar, tiled)
+        for c in _LOSSLESS
+        for planar in (1, 2)
+        for tiled in (False, True)
+    ]
+    + [("jpeg", 3, 2, False)]
+)
+
+
+@pytest.mark.parametrize(
+    "compression,bands,planar,tiled",
+    _WINDOW_FILES,
+    ids=[
+        c if b == 1 else f"{c}-3band-planar{p}-{'tiled' if t else 'striped'}"
+        for c, b, p, t in _WINDOW_FILES
+    ],
+)
+def test_striped_tiff_windowed_read(compression, bands, planar, tiled):
     """Classic striped GeoTIFF (the Landsat L1 layout): strips are
     modeled as full-width tiles, so row windows fetch only the
-    intersecting strips."""
-    img = _img(600, 400, "u2")
+    intersecting strips — in every plane of a planar file.  Windows of
+    chunky and planar, striped and tiled files equal the crop of the
+    whole-file read."""
+    if compression == "jpeg":
+        img = _smooth(600, 400, bands)
+    elif bands == 1:
+        img = _img(600, 400, "u2")
+    else:  # own generator: the module RNG's later draws stay as they were
+        rng = np.random.default_rng(10 * planar + tiled)
+        img = (rng.random((600, 400, bands)) * 60000).astype("u2")
     data = tiff.encode(
-        img, tiled=False, rows_per_strip=64, compression=compression, geo=GEO
+        img, tiled=tiled, tile=(128, 128), rows_per_strip=64,
+        compression=compression, planar=planar, geo=GEO,
     )
+    full = tiff.read(data)[0]
+    if compression != "jpeg":
+        assert np.array_equal(full, img)
     rd = cog.BytesRangeReader(data)
     cr = cog.CogReader(rd)
     lv = cr.info.levels[0]
-    assert lv.striped and (lv.tile_w, lv.tile_h) == (400, 64)
+    assert lv.planar == planar
+    if not tiled:
+        assert lv.striped and (lv.tile_w, lv.tile_h) == (400, 64)
     # the classic writer puts the IFD at the tail, so parsing fetched the
     # whole file into the prefix cache; truncate it to force the window
     # onto the range-read path and assert strip pruning
     cr.prefix = cr.prefix[:8]
     before = rd.bytes_read
     w = cr.window(0, 30, 70, 250, 100)  # rows 70..170 -> strips 1..2
-    assert np.array_equal(w, img[70:170, 30:280])
-    if compression == "none":
-        # 3 of 10 strips intersect [64,192); only they are fetched
-        assert rd.bytes_read - before <= 3 * 64 * 400 * 2 + 4096
+    assert np.array_equal(w, full[70:170, 30:280])
+    if compression == "none" and not tiled:
+        # 3 of 10 strips intersect [64,192) in each plane; only they are
+        # fetched (a chunky strip holds all bands, a planar one one band)
+        assert rd.bytes_read - before <= bands * 3 * 64 * 400 * 2 + 4096
     # short last strip decodes too (600 = 9*64 + 24 rows)
     tail = cr.window(0, 0, 590, 400, 10)
-    assert np.array_equal(tail, img[590:600])
+    assert np.array_equal(tail, full[590:600])
+    fx0, fy0, fx1, fy1 = cr.info.extent
+    arr, actual, _ = cr.window_by_extent(
+        (fx0 + 900, fy1 - 2100, fx0 + 2100, fy1 - 900)
+    )
+    x0 = int(round((actual[0] - fx0) / 30.0))
+    y0 = int(round((fy1 - actual[3]) / 30.0))
+    assert np.array_equal(arr, full[y0 : y0 + arr.shape[0], x0 : x0 + arr.shape[1]])
 
 
 def test_striped_tiff_window_by_extent():
@@ -541,40 +585,43 @@ def test_cog_scenes_utm_cross_crs(spark, tmp_path):
 def test_cog_scenes_reads_striped_archive(spark, tmp_path):
     """A plain striped GeoTIFF (no overviews, tail IFD) flows through the
     same Spark source: AOI row-window reads fetch only the intersecting
-    strips."""
+    strips.  A planar 3-band file reads the same way, every plane."""
     from geotrellis_landsat_emr_demo_spark import fixtures
     from geotrellis_landsat_emr_demo_spark.sources import cog as cogsrc
 
     spec = fixtures.scene_specs("t-small", n_scenes=1, px=512)[0]
-    arr = fixtures.scene_array(spec)[0]  # single band
+    bands = fixtures.scene_array(spec)[:3]
     sx = (spec["xmax"] - spec["xmin"]) / 512
-    p = tmp_path / "striped.tif"
-    p.write_bytes(
-        tiff.encode(
-            arr, tiled=False, rows_per_strip=64,
-            geo=dict(
-                pixel_scale=(sx, sx),
-                tiepoint=(0, 0, 0, spec["xmin"], spec["ymax"], 0),
-                epsg=3857,
-            ),
-        )
+    geo = dict(
+        pixel_scale=(sx, sx),
+        tiepoint=(0, 0, 0, spec["xmin"], spec["ymax"], 0),
+        epsg=3857,
     )
+    want = {"striped": bands[:1], "planar": bands}
+    for name, arr in want.items():
+        (tmp_path / f"{name}.tif").write_bytes(
+            tiff.encode(
+                arr.transpose(1, 2, 0), tiled=False, rows_per_strip=64,
+                planar=1 if name == "striped" else 2, geo=geo,
+            )
+        )
     # AOI: a horizontal band across the middle (strip-friendly window)
     aoi = (
         spec["xmin"], spec["ymin"] + 200 * sx,
         spec["xmax"], spec["ymax"] - 200 * sx,
     )
-    rows = cogsrc.cog_scenes(spark, [str(p)], aoi=aoi).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    got = kernels.decode_payload(bytes(r.bytes))
-    y0 = int(round((spec["ymax"] - r.ymax) / sx))
-    assert np.array_equal(got[0], arr[y0 : y0 + got.shape[1], :])
-    # a foreign tail-IFD file costs ONE full pass to find the IFD chain;
-    # the window is then served from the parse prefix (never a second
-    # fetch of the same ranges) — proper head-IFD COGs keep the
-    # read-fraction property (test_cog_scenes_window_matches_fixture)
-    assert r.bytes_read <= r.file_bytes + 4096
+    paths = [str(tmp_path / f"{name}.tif") for name in want]
+    rows = {r.image_id: r for r in cogsrc.cog_scenes(spark, paths, aoi=aoi).collect()}
+    assert sorted(rows) == sorted(want)
+    for name, r in rows.items():
+        got = kernels.decode_payload(bytes(r.bytes))
+        y0 = int(round((spec["ymax"] - r.ymax) / sx))
+        assert np.array_equal(got, want[name][:, y0 : y0 + got.shape[1], :])
+        # a foreign tail-IFD file costs ONE full pass to find the IFD
+        # chain; the window is then served from the parse prefix (never a
+        # second fetch of the same ranges) — proper head-IFD COGs keep the
+        # read-fraction property (test_cog_scenes_window_matches_fixture)
+        assert r.bytes_read <= r.file_bytes + 4096
 
 
 def test_cog_entry_matches_golden_constants(spark):

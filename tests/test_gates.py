@@ -125,6 +125,31 @@ def test_gate_branches_give_equal_output(spark, monkeypatch, gate_log, name):
     assert closed_log and {d[3] for d in closed_log} == {over}, closed_log
 
 
+def test_lsh_near_dups_count_the_corpus_once(spark, monkeypatch, gate_log):
+    """A ``bits=None`` near-dup call counts its input once: the one count
+    sizes the hash and decides both broadcast gates.  An explicit ``bits``
+    never broadcasts the buckets, so it makes no bucket decision."""
+    emb = _emb(spark)
+    n = emb.count()
+    counted, frame, count = [], type(emb), type(emb).count
+    monkeypatch.setattr(frame, "count", lambda df: counted.append(df) or count(df))
+    gate_log.clear()
+    _lsh_near_dups(spark)
+    assert len(counted) == 1
+    tables, caps = 8, gates.CAPS
+    assert gate_log.decisions("lsh_broadcast_bucket_rows") == [
+        ("lsh_broadcast_bucket_rows", n * tables, caps["lsh_broadcast_bucket_rows"], "fits")
+    ]
+    assert gate_log.decisions("lsh_broadcast_vectors") == [
+        ("lsh_broadcast_vectors", n, caps["lsh_broadcast_vectors"], "fits")
+    ]
+    gate_log.clear()
+    similarity.lsh_near_dup_pairs(_emb(spark), threshold=0.3, bits=6)
+    assert len(counted) == 2
+    assert gate_log.decisions("lsh_broadcast_bucket_rows") == []
+    assert [d[3] for d in gate_log.decisions("lsh_broadcast_vectors")] == ["fits"]
+
+
 def _package_sources():
     for dirpath, _, filenames in os.walk(PACKAGE):
         for f in filenames:

@@ -82,7 +82,7 @@ def test_knn_join_fine_grid(spark, tsmall_catalog):
     pts = fixtures.query_points_pdf("t-small").head(4)
     got = {
         (r.query_id, r.image_id, r.rank)
-        for r in joins.knn_join(spark, images, pts, zoom=14, max_rounds=20).collect()
+        for r in joins.knn_join(spark, images, pts, zoom=14).collect()
     }
     expect = {t for t in brute_knn() if t[0] in set(pts.query_id)}
     assert got == expect
