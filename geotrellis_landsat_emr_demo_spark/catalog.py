@@ -231,26 +231,44 @@ class Catalog:
             or not any(k in meta and meta[k] != v for k, v in meta_filter.items())
         ]
 
-    def stage_spark_write(self, df, table: str, write_options: dict | None = None) -> list[str]:
+    def stage_spark_write(
+        self, df, table: str, write_options: dict | None = None, partition_by: str | None = None
+    ) -> list:
         """Write a Spark DataFrame as staged parquet files under the table
         dir (NOT yet visible). Call :meth:`commit` to publish them.
+        Returns one entry per file: its path, or with ``partition_by`` a
+        (path, value) pair.
 
         ``write_options`` pass through to the parquet writer — e.g.
         ``operators.ingest.TILE_WRITE_OPTIONS``, the tiles table's
         one-tile row groups (a row group is the payload-IO unit: a point
-        read decompresses one whole column chunk of it)."""
+        read decompresses one whole column chunk of it).
+
+        ``partition_by`` names an integer column to partition the write
+        on: each task writes one file per value it holds, the column
+        itself is not stored, and its value comes back with the file.
+        Spark's writer sorts each task's rows by that column unless they
+        already are, so sort within partitions by the column first and
+        any other order after it."""
         stage = os.path.join(self.root, f"_stage-{uuid.uuid4().hex}")
         w = df.write.mode("overwrite")
         for k, v in (write_options or {}).items():
             w = w.option(k, v)
+        if partition_by is not None:
+            w = w.partitionBy(partition_by)
         w.parquet(stage)
         out = []
         tdir = self.table_dir(table)
-        for name in sorted(os.listdir(stage)):
-            if name.endswith(".parquet"):
+        for dirpath, _, names in sorted(os.walk(stage)):
+            for name in sorted(names):
+                if not name.endswith(".parquet"):
+                    continue
                 dst = os.path.join(tdir, f"{uuid.uuid4().hex}.parquet")
-                shutil.move(os.path.join(stage, name), dst)
-                out.append(dst)
+                shutil.move(os.path.join(dirpath, name), dst)
+                if partition_by is None:
+                    out.append(dst)
+                else:  # dirpath ends in "<partition_by>=<value>"
+                    out.append((dst, int(os.path.basename(dirpath).split("=", 1)[1])))
         shutil.rmtree(stage, ignore_errors=True)
         return out
 

@@ -33,6 +33,7 @@ NODATA_U16 = 0
 _MAGIC = b"GTRS"
 _FMT = {"npy-u16": 1, "npy-u16-z": 2, "jq75": 3, "png-u16": 4}
 _FMT_INV = {v: k for k, v in _FMT.items()}
+LOSSY_FMTS = frozenset({"jq75"})  # decode(encode(x)) != x
 _HDR = struct.Struct(">4sBBHII")
 
 

@@ -1,5 +1,6 @@
 """Size gates: the one place the engine chooses between a driver-side or
-broadcast fast path and its distributed fallback.
+broadcast fast path and its distributed fallback, or bounds how much one
+task takes on (``pyramid_group_levels``).
 
 Every gate is a cap in :data:`CAPS`, named after what it bounds, and is
 decided by one of three calls (``jaccard_key_fanout`` alone is a bound
@@ -73,6 +74,13 @@ CAPS: dict[str, int] = {
     # contracted edges collected for the driver union-find
     # (5M edges: 80 MB collected)
     "cc_contracted_edges": 5_000_000,
+    # -- operators.ingest --
+    # pyramid levels ingest_images builds per shuffle; 0 or 1 builds one
+    # level per shuffle.  Not a driver bound but a task bound: one
+    # (ancestor, ts) group holds up to 4^k child tiles, at k = 4 that is
+    # 256 x ~0.66 MB of decoded u16 (5 bands) plus their Arrow payloads,
+    # ~340 MB per task
+    "pyramid_group_levels": 4,
 }
 
 

@@ -16,8 +16,9 @@ and ``stream_ingest_files`` — goes through ONE path, :func:`_leaf_tiles`
        the partials once more per salt bucket (reduce-side skew)
     -> groupBy(x, y, ts).applyInPandas  final combine -> one tile row
        (order-insensitive: first-data-wins in ascending image_id)
-    -> per-level groupBy(parent).applyInPandas  2x2 downsample 13 -> 1
-       (Pyramid.upLevels, LandsatIngest.scala:42-57)
+    -> groupBy(x >> k, y >> k, ts).applyInPandas  k levels of 2x2
+       downsample per shuffle, 13 -> 1 (Pyramid.upLevels,
+       LandsatIngest.scala:42-57, which shuffles once per level)
     -> layer_attrs: distinct sorted times + extent union
        (LandsatIngest.scala:46-55)
 
@@ -30,14 +31,15 @@ tasks and salt buckets gives bitwise the tiles of kernels.merge_fragments
 Scale notes (100 TB design):
 - the only wide shuffles are the leaf combine (keyed by the same (x,y,ts)
   the data is later read by; plus one salt-keyed shuffle when salting) and
-  one per pyramid level; all are partial-aggregation shaped, bytes shrink
-  monotonically up the pyramid.
+  one per group of up to ``gates.CAPS["pyramid_group_levels"]`` pyramid
+  levels; all are partial-aggregation shaped, bytes shrink monotonically
+  up the pyramid.
 - the map-side combiner caps a hot key's reduce fan-in at one partial per
   chunk task; salting splits what is left across ~sqrt(fan-in) buckets
   (:func:`_auto_salt_buckets`; BENCH/BASELINE.md §skew).
 - every stage commits atomically (data + lineage in one manifest swap) with
-  a completion marker, so an interrupted ingest resumes without recomputing
-  finished levels (north_rule resumability).
+  a completion marker per level, so an interrupted ingest resumes without
+  recomputing finished levels (north_rule resumability).
 """
 
 from __future__ import annotations
@@ -49,7 +51,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import MAX_ZOOM, MIN_ZOOM, TILE_SIZE
+from .. import MAX_ZOOM, MIN_ZOOM, TILE_SIZE, gates
 from ..catalog import Catalog
 from ..core import cellindex, kernels, proj, tiling
 
@@ -199,23 +201,21 @@ def _salt_fn(pdf: pd.DataFrame) -> pd.DataFrame:
     )])
 
 
-def _tile_pdf(layer, zoom, x, y, ts, tile, caption, image_id, n_frags):
+def _tile_row(layer, zoom, x, y, ts, tile, caption, image_id, n_frags) -> dict:
     """One TILE_SCHEMA row."""
     millis = int(pd.Timestamp(ts).value // 1_000_000)
-    return pd.DataFrame(
-        dict(
-            layer=[layer],
-            zoom=[zoom],
-            x=[x],
-            y=[y],
-            cell_key=[int(cellindex.cell_key(zoom, x, y))],
-            time_key=[int(cellindex.day_bucket(millis))],
-            ts=[ts],
-            tile=[tile],
-            caption=[caption],
-            image_id=[image_id],
-            n_frags=[n_frags],
-        )
+    return dict(
+        layer=layer,
+        zoom=zoom,
+        x=x,
+        y=y,
+        cell_key=int(cellindex.cell_key(zoom, x, y)),
+        time_key=int(cellindex.day_bucket(millis)),
+        ts=ts,
+        tile=tile,
+        caption=caption,
+        image_id=image_id,
+        n_frags=n_frags,
     )
 
 
@@ -248,11 +248,11 @@ def _final_fn(layer: str, zoom: int, store_fmt: str):
                 kernels.pad_to_tile(pixels, ox, oy, TILE_SIZE), store_fmt
             )
         first = _first(pdf)
-        return _tile_pdf(
+        return pd.DataFrame([_tile_row(
             layer, zoom, int(pdf["x"].iloc[0]), int(pdf["y"].iloc[0]),
             pdf["ts"].iloc[0], tile, pdf["caption"].iloc[first],
             pdf["image_id"].iloc[first], int(pdf["n_frags"].sum()),
-        )
+        )])
 
     return fn
 
@@ -297,29 +297,54 @@ def _leaf_tiles(
     )
 
 
-def _parent_fn(layer: str, zoom: int, store_fmt: str):
-    """applyInPandas fn for groupBy(parent x, y, ts): assemble the 2x2
-    children into the z-1 parent (Pyramid.upLevels, LandsatIngest.scala:42)."""
+def _pyramid_fn(layer: str, zoom: int, k: int, store_fmt: str):
+    """applyInPandas fn for groupBy(x >> k, y >> k, ts) over zoom-``zoom``
+    tiles: the group's ancestors at zoom - 1 .. zoom - k, every level's
+    tile rows (Pyramid.upLevels, LandsatIngest.scala:42-57, one level per
+    pass there).
+
+    Each parent is kernels.assemble_parent of its <= 4 children, and the
+    next level starts from the parents in hand: decode(encode(x)) == x
+    for a lossless store format, so these are the pixels a re-read of the
+    stored level would give; a lossy format's parents go up as their
+    decoded stored bytes.  image_id / caption are the lexicographically
+    first child's and n_frags the children's sum — both rules are
+    associative, so every level's fields equal a level-by-level build."""
+    lossy = store_fmt in kernels.LOSSY_FMTS
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        children = {}
-        for row in pdf.itertuples(index=False):
-            quad = (row.y % 2) * 2 + (row.x % 2)
-            children[quad] = kernels.decode_payload(row.tile)
-        parent = kernels.assemble_parent(children, TILE_SIZE)
-        first = _first(pdf)
-        return _tile_pdf(
-            layer, zoom, int(pdf["x"].iloc[0]) // 2, int(pdf["y"].iloc[0]) // 2,
-            pdf["ts"].iloc[0], kernels.encode_payload(parent, store_fmt),
-            pdf["caption"].iloc[first], pdf["image_id"].iloc[first],
-            int(pdf["n_frags"].sum()),
-        )
+        ts = pdf["ts"].iloc[0]
+        level = {
+            (int(x), int(y)): (kernels.decode_payload(t), iid, cap, int(n))
+            for x, y, t, iid, cap, n in zip(
+                pdf["x"], pdf["y"], pdf["tile"], pdf["image_id"], pdf["caption"],
+                pdf["n_frags"],
+            )
+        }
+        rows = []
+        for z in range(zoom - 1, zoom - k - 1, -1):
+            quads: dict = {}
+            for (x, y), child in level.items():
+                quads.setdefault((x // 2, y // 2), {})[(y % 2) * 2 + x % 2] = child
+            level = {}
+            for (x, y), children in quads.items():
+                pixels = kernels.assemble_parent(
+                    {q: c[0] for q, c in children.items()}, TILE_SIZE
+                )
+                tile = kernels.encode_payload(pixels, store_fmt)
+                _, iid, cap, _ = min(children.values(), key=lambda c: c[1])
+                n = sum(c[3] for c in children.values())
+                level[(x, y)] = (
+                    kernels.decode_payload(tile) if lossy else pixels, iid, cap, n
+                )
+                rows.append(_tile_row(layer, z, x, y, ts, tile, cap, iid, n))
+        return pd.DataFrame(rows)
 
     return fn
 
 
 # The tiles table's row-group bound, set by both tile writers
-# (_commit_level and compact_tiles): one tile per row group.  The row
+# (_commit_levels and compact_tiles): one tile per row group.  The row
 # group is the unit of payload IO for a serving read — one whole `tile`
 # column chunk is decompressed per hit — so a point read decompresses
 # exactly the tile it serves, as the reference's ValueReader reads one
@@ -395,83 +420,91 @@ def compact_tiles(
     return report
 
 
-def _lineage_pdf(layer, stage, zoom, rows, nbytes, wall_s, partitions):
-    return pd.DataFrame(
-        [
-            dict(
-                layer=layer,
-                stage=stage,
-                zoom=zoom,
-                rows=int(rows),
-                bytes=int(nbytes),
-                wall_s=float(wall_s),
-                partitions=int(partitions),
-                finished_at=pd.Timestamp.utcnow().tz_localize(None),
-            )
-        ]
-    )
+def _stage(layer: str, zoom: int) -> str:
+    """The completion marker of one level."""
+    return f"ingest:{layer}:z{zoom}"
 
 
-def _commit_level(
-    cat: Catalog,
-    df: DataFrame,
-    layer: str,
-    stage: str,
-    zoom: int,
-    t0: float,
-):
-    """Stage tile files + lineage row, publish in ONE atomic manifest swap
-    (exactly-once per stage even if we crash right after).
+_LEVEL = "level"  # the partition column of a tile write: a copy of zoom
 
-    Rows are SFC-sorted (cell_key) within each output partition before the
-    write — a free sort (no shuffle) that gives every parquet row group a
-    tight cell_key min/max, so the serving point reads prune row groups
-    the way the reference's Z-order SFC index prunes backend range scans
-    (conf/output.json:15-18); ``TILE_WRITE_OPTIONS`` holds a row group to
-    one tile, so a serving hit decompresses only the payload it serves.
-    Full cross-file clustering happens at compaction (:func:`compact_tiles`)."""
-    files = cat.stage_spark_write(
-        df.sortWithinPartitions("cell_key", "ts"), "tiles", write_options=TILE_WRITE_OPTIONS
-    )
+
+def _commit_levels(cat: Catalog, df: DataFrame, layer: str, zooms: list, t0: float) -> dict:
+    """Stage the tile files of the levels ``zooms`` (``df``: their
+    TILE_SCHEMA rows) in ONE Spark write, then publish them with one
+    lineage row and one completion marker per level in ONE atomic
+    manifest swap — exactly-once per level even if we crash right after.
+    Returns {stage: dict(rows, bytes, wall_s)}.
+
+    The write is partitioned on a copy of ``zoom``: every file holds one
+    level and is committed with its {"layer", "zoom"} metadata, so
+    manifest pruning opens only that level's files.  Rows are sorted
+    within each output partition by (that copy, cell_key, ts) — a free
+    sort (no shuffle) that gives every parquet row group a tight cell_key
+    min/max, so the serving point reads prune row groups the way the
+    reference's Z-order SFC index prunes backend range scans
+    (conf/output.json:15-18).  Sorted by (zoom, cell_key, ts) instead,
+    Spark's writer added its own sort on the partition column and lost
+    the cell_key order.  ``TILE_WRITE_OPTIONS`` holds a row group to one
+    tile, so a serving hit decompresses only the payload it serves.  Full
+    cross-file clustering happens at compaction (:func:`compact_tiles`).
+
+    Wall time: the step's wall since ``t0`` is split across its levels in
+    proportion to their tile rows (evenly if there are none), so the
+    levels' ``wall_s`` sum to the step's — up to the swap in the markers
+    (which the swap carries), through it in the returned metrics."""
     import os
+    import uuid
     from concurrent.futures import ThreadPoolExecutor
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
+
+    staged = cat.stage_spark_write(
+        df.withColumn(_LEVEL, F.col("zoom")).sortWithinPartitions(_LEVEL, "cell_key", "ts"),
+        "tiles",
+        write_options=TILE_WRITE_OPTIONS,
+        partition_by=_LEVEL,
+    )
 
     # stat + footer reads per staged file (row counts without a second
     # Spark job) — threaded: this is driver-serial bookkeeping between
-    # stages, and at 32 writer files x 4 pyramid levels the sequential
-    # loop was a measurable slice of the inter-stage gap
-    def _file_meta(f):
-        return os.path.getsize(f), pq.ParquetFile(f).metadata.num_rows
+    # stages
+    def _file_meta(entry):
+        return os.path.getsize(entry[0]), pq.ParquetFile(entry[0]).metadata.num_rows
 
-    with ThreadPoolExecutor(max_workers=min(16, max(1, len(files)))) as ex:
-        metas = list(ex.map(_file_meta, files))
-    nbytes = sum(m[0] for m in metas)
-    rows = sum(m[1] for m in metas)
-    wall = time.time() - t0
-    import uuid
+    with ThreadPoolExecutor(max_workers=min(16, max(1, len(staged)))) as ex:
+        metas = list(ex.map(_file_meta, staged))
+    level = {z: dict(rows=0, bytes=0, files=0) for z in zooms}
+    for (_, z), (nbytes, rows) in zip(staged, metas):
+        level[z]["rows"] += rows
+        level[z]["bytes"] += nbytes
+        level[z]["files"] += 1
+    total = sum(v["rows"] for v in level.values())
 
-    import pyarrow as pa
+    def stats(wall):
+        return {
+            z: dict(rows=v["rows"], bytes=v["bytes"],
+                    wall_s=wall * (v["rows"] / total if total else 1 / len(zooms)))
+            for z, v in level.items()
+        }
 
+    marks = stats(time.time() - t0)
+    finished = pd.Timestamp.utcnow().tz_localize(None)
+    lineage = pd.DataFrame([
+        dict(layer=layer, stage=_stage(layer, z), zoom=z, **m,
+             partitions=level[z]["files"], finished_at=finished)
+        for z, m in marks.items()
+    ])
     # a unique name, like every staged data file: a rerun after a rollback
     # must not overwrite the lineage file an archived snapshot still lists
     lpath = os.path.join(cat.table_dir("lineage"), f"{uuid.uuid4().hex}.parquet")
-    pq.write_table(
-        pa.Table.from_pandas(
-            _lineage_pdf(layer, stage, zoom, rows, nbytes, wall, len(files)),
-            preserve_index=False,
-        ),
-        lpath,
-    )
+    pq.write_table(pa.Table.from_pandas(lineage, preserve_index=False), lpath)
     cat.commit(
-        # per-file metadata -> manifest-level partition pruning for the
-        # serving point reads (files of other zooms never opened)
-        {"tiles": [(f, {"layer": layer, "zoom": zoom}) for f in files],
+        {"tiles": [(f, {"layer": layer, "zoom": z}) for f, z in staged],
          "lineage": [lpath]},
-        markers={stage: dict(rows=rows, bytes=nbytes, wall_s=wall, zoom=zoom)},
+        markers={_stage(layer, z): dict(m, zoom=z) for z, m in marks.items()},
     )
-    return rows, nbytes
+    return {_stage(layer, z): m for z, m in stats(time.time() - t0).items()}
 
 
 _SALT_TARGET = 32  # fragments per (key, salt) reduce group the salted path aims for
@@ -514,8 +547,11 @@ def _auto_salt_buckets(images_df: DataFrame, zoom: int, par: int) -> int:
 
 
 def read_level(spark: SparkSession, cat: Catalog, layer: str, zoom: int) -> DataFrame:
-    # manifest metadata prunes the file set to the level; the filter stays
-    # for files committed without metadata (older snapshots)
+    """The committed tiles of one level: the child level a pyramid step
+    starts from (the deepest committed level, so a resumed ingest never
+    rebuilds a committed one), and export's input.  Manifest metadata
+    prunes the file set to the level; the filter stays for files
+    committed without metadata (older snapshots)."""
     return (
         cat.read_spark(spark, "tiles", layer=layer, zoom=zoom)
         .filter((F.col("layer") == layer) & (F.col("zoom") == zoom))
@@ -534,7 +570,9 @@ def ingest_images(
     cell_type: str = "uint16",
 ) -> dict:
     """Run the full ingest; resumable (skips stages whose completion marker
-    is already committed).  Returns metrics {stage: {rows, wall_s, ...}}.
+    is already committed).  Returns metrics {stage: {rows, wall_s, ...}}:
+    the pyramid levels built in one step split its wall time in proportion
+    to their rows (:func:`_commit_levels`).
 
     ``images_df`` defaults to the catalog's ``images`` table.
 
@@ -551,32 +589,42 @@ def ingest_images(
             images_df, max_zoom, spark.sparkContext.defaultParallelism
         )
 
-    leaf_stage = f"ingest:{layer}:z{max_zoom}"
+    leaf_stage = _stage(layer, max_zoom)
     if not cat.is_committed(leaf_stage):
         t0 = time.time()
         tiles = _leaf_tiles(
             images_df.select(*SOURCE_COLS), layer, max_zoom, store_fmt, salt_buckets
         )
-        rows, nbytes = _commit_level(cat, tiles, layer, leaf_stage, max_zoom, t0)
-        metrics[leaf_stage] = dict(rows=rows, bytes=nbytes, wall_s=time.time() - t0)
+        metrics.update(_commit_levels(cat, tiles, layer, [max_zoom], t0))
     else:
         metrics[leaf_stage] = dict(skipped=True, **(cat.marker(leaf_stage) or {}))
 
-    for zoom in range(max_zoom - 1, min_zoom - 1, -1):
-        stage = f"ingest:{layer}:z{zoom}"
-        if cat.is_committed(stage):
+    # the pyramid: each step reads its deepest committed level and builds
+    # the uncommitted levels below it, up to the cap's k per shuffle
+    child = max_zoom
+    while child > min_zoom:
+        zooms = []
+        for zoom in range(child - 1, min_zoom - 1, -1):
+            if cat.is_committed(_stage(layer, zoom)):
+                break
+            zooms.append(zoom)
+        if not zooms:
+            stage = _stage(layer, child - 1)
             metrics[stage] = dict(skipped=True, **(cat.marker(stage) or {}))
+            child -= 1
             continue
+        cap = "pyramid_group_levels"
+        k = len(zooms) if gates.fits(cap, len(zooms)) else max(1, gates.CAPS[cap])
         t0 = time.time()
         parents = (
-            read_level(spark, cat, layer, zoom + 1)
-            .withColumn("px", (F.col("x") / 2).cast("int"))
-            .withColumn("py", (F.col("y") / 2).cast("int"))
-            .groupBy("px", "py", "ts")
-            .applyInPandas(_parent_fn(layer, zoom, store_fmt), schema=TILE_SCHEMA)
+            read_level(spark, cat, layer, child)
+            .withColumn("gx", F.shiftright("x", k))
+            .withColumn("gy", F.shiftright("y", k))
+            .groupBy("gx", "gy", "ts")
+            .applyInPandas(_pyramid_fn(layer, child, k, store_fmt), schema=TILE_SCHEMA)
         )
-        rows, nbytes = _commit_level(cat, parents, layer, stage, zoom, t0)
-        metrics[stage] = dict(rows=rows, bytes=nbytes, wall_s=time.time() - t0)
+        metrics.update(_commit_levels(cat, parents, layer, zooms[:k], t0))
+        child -= k
 
     attrs_stage = f"ingest:{layer}:attrs"
     if not cat.is_committed(attrs_stage):

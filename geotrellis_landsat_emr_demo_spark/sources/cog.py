@@ -55,14 +55,16 @@ SCENES_SCHEMA = (
 )
 
 
-def _paths_df(spark: SparkSession, paths) -> DataFrame:
+def _paths_df(spark: SparkSession, paths, n: int | None = None) -> DataFrame:
     """list[str] | DataFrame -> slim relation with a ``path`` column,
-    spread one-file-per-partition-ish so per-file I/O parallelizes."""
+    spread one-file-per-partition-ish so per-file I/O parallelizes.
+    ``n``: the relation's row count, when the caller has counted it."""
     if isinstance(paths, DataFrame):
         df = paths
     else:
         df = spark.createDataFrame([(p,) for p in paths], "path string")
-    n = df.count()
+    if n is None:
+        n = df.count()
     par = min(max(1, n), spark.sparkContext.defaultParallelism * 4)
     return df.repartition(par)
 
@@ -131,7 +133,11 @@ def cog_scenes(
     engine's uint16 cell type.  ``bytes_read``/``file_bytes`` account
     the range-read cost per row (the test gate for the <<file-size
     property)."""
-    df = _paths_df(spark, paths)
+    return _scenes(_paths_df(spark, paths), aoi, resolution, fmt)
+
+
+def _scenes(df: DataFrame, aoi, resolution: float | None, fmt: str) -> DataFrame:
+    """:func:`cog_scenes` over a :func:`_paths_df` relation."""
     have = set(df.columns)
     if aoi is not None and {"mxmin", "mymin", "mxmax", "mymax"} <= have:
         axmin, aymin, axmax, aymax = (float(v) for v in aoi)
@@ -227,8 +233,9 @@ def cog_sync(
     The crawl front door for a growing scene archive: each pass discovers
     files absent from the ``cog_seen`` lineage table (left-anti join — an
     O(|new|) probe, never an in-list of history), window-reads them
-    (:func:`cog_scenes`), appends images + lineage in ONE atomic commit,
-    then runs the batch-incremental tile rebuild
+    (:func:`cog_scenes`, sized by the one count of them this pass takes),
+    appends images + lineage in ONE atomic commit, then runs the
+    batch-incremental tile rebuild
     (:func:`streaming.incremental.incremental_ingest`), which has its own
     ``scenes_seen`` lineage.  Exactly-once across crashes: dying between
     the two commits leaves the new images appended-but-unprocessed, and
@@ -262,7 +269,7 @@ def cog_sync(
     # stay unseen so a later pass with a different/no AOI can ingest it
     # (silent-omission fix; an AOI-missed file costs one header re-probe
     # per pass, never a pixel read).
-    scenes = cog_scenes(spark, new, aoi=aoi, resolution=resolution, fmt=fmt)
+    scenes = _scenes(_paths_df(spark, new, n_new), aoi, resolution, fmt)
     spool = os.path.join(cat.root, f"_cogsync-{uuid.uuid4().hex}")
     try:
         scenes.write.parquet(spool)

@@ -671,6 +671,22 @@ def test_cog_sync_incremental(spark, cog_dir, tmp_path):
     assert n3 >= n1
 
 
+def test_cog_sync_counts_each_relation_once(spark, cog_dir, tmp_path, monkeypatch):
+    """One sync pass counts its new paths once: the count that decides
+    whether there is work also sizes the window-read's partitioning."""
+    from geotrellis_landsat_emr_demo_spark.catalog import Catalog
+    from geotrellis_landsat_emr_demo_spark.sources import cog as cogsrc
+
+    cat = Catalog(str(tmp_path / "sync-count"))
+    paths = sorted(glob.glob(os.path.join(cog_dir, "*.tif")))[:2]
+    counted, frame = [], type(spark.range(1))
+    count = frame.count
+    monkeypatch.setattr(frame, "count", lambda df: counted.append(df) or count(df))
+    assert cogsrc.cog_sync(spark, cat, "sync", paths, max_zoom=12)["new_files"] == 2
+    # the new paths here, the new images in the incremental ingest
+    assert len(counted) == len({id(df) for df in counted}) == 2
+
+
 def test_bigtiff_roundtrip_and_window():
     """BigTIFF (magic 43, 8-byte offsets, LONG8 tile-offset tag): the
     flavor 4 GiB+ archives require.  Same content, either container."""

@@ -10,12 +10,14 @@ doesn't run."""
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
+import bench
 
 SFS = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
@@ -196,3 +198,13 @@ def test_pyramid_rollup_equiv(spark, sf_dir):
         _ref_pyramid_rollup(spark, sf_dir).collect(),
         ("zoom",),
     )
+
+
+def test_pyramid_rollup_reuses_leaf_exchange(spark):
+    """The three levels share the leaf aggregate's exchange: the final
+    adaptive plan scans the events once and reuses the exchange twice."""
+    df = entry.q_pyramid_rollup(spark, os.path.join(os.path.dirname(bench.SF_DIR), "sf0.001"))
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert final.count("ReusedExchange") == 2, final
+    assert final.count("FileScan") == 1, final

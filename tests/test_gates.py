@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import ast
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -14,8 +15,10 @@ import pytest
 from pyspark.sql import functions as F
 
 import bench
-from geotrellis_landsat_emr_demo_spark import gates
-from geotrellis_landsat_emr_demo_spark.operators import graph, similarity, textops
+from conftest import SCRATCH
+from geotrellis_landsat_emr_demo_spark import fixtures, gates
+from geotrellis_landsat_emr_demo_spark.catalog import Catalog
+from geotrellis_landsat_emr_demo_spark.operators import graph, ingest, similarity, textops
 
 SF = os.path.join(os.path.dirname(bench.SF_DIR), "sf0.001")
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -69,6 +72,18 @@ def _components(spark):
     )
 
 
+def _pyramid(spark):
+    # t-small into an empty catalog, z13 leaves and the pyramid to z9
+    root = os.path.join(SCRATCH, "gate-pyramid")
+    shutil.rmtree(root, ignore_errors=True)
+    cat = Catalog(root)
+    fixtures.write_all(cat, "t-small")
+    ingest.ingest_images(spark, cat, "landsat", max_zoom=13, min_zoom=9)
+    return cat.read_spark(spark, "tiles").select(
+        "zoom", "x", "y", "ts", "tile", "image_id", "caption", "n_frags"
+    )
+
+
 # cap -> (operator on a small input, caps that make the run reach the gate)
 _NO_DENSE = {"jaccard_dense_doc_tokens": CLOSED}
 CASES = {
@@ -88,6 +103,7 @@ CASES = {
     "cc_driver_edges": (_components, {}),
     "cc_contract_nodes": (_components, {"cc_driver_edges": CLOSED}),
     "cc_contracted_edges": (_components, {"cc_driver_edges": CLOSED}),
+    "pyramid_group_levels": (_pyramid, {}),
 }
 
 

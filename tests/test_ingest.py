@@ -273,16 +273,16 @@ def test_resume_after_crash(spark, tsmall_catalog, monkeypatch):
     shutil.rmtree(root, ignore_errors=True)
     cat = Catalog(root)
     fixtures.write_all(cat, "t-small")
-    commit_level = ingest._commit_level
+    commit_levels = ingest._commit_levels
 
-    def crash_after_z13(cat, df, layer, stage, zoom, t0):
-        out = commit_level(cat, df, layer, stage, zoom, t0)
-        if stage == "ingest:landsat:z13":
-            raise RuntimeError(f"injected failure after {stage}")
+    def crash_after_z13(cat, df, layer, zooms, t0):
+        out = commit_levels(cat, df, layer, zooms, t0)
+        if zooms == [13]:
+            raise RuntimeError("injected failure after ingest:landsat:z13")
         return out
 
     with monkeypatch.context() as mp:
-        mp.setattr(ingest, "_commit_level", crash_after_z13)
+        mp.setattr(ingest, "_commit_levels", crash_after_z13)
         with pytest.raises(RuntimeError, match="injected failure"):
             ingest.ingest_images(spark, cat, "landsat", max_zoom=13, min_zoom=11)
     assert cat.is_committed("ingest:landsat:z13")
@@ -313,8 +313,10 @@ def test_lineage_file_survives_rollback(spark):
     ts = pd.Timestamp("2020-01-01")
 
     def commit(n):
-        df = spark.createDataFrame(pd.DataFrame(dict(cell_key=list(range(n)), ts=[ts] * n)))
-        ingest._commit_level(cat, df.coalesce(1), "landsat", "ingest:landsat:z13", 13, 0.0)
+        df = spark.createDataFrame(
+            pd.DataFrame(dict(zoom=[13] * n, cell_key=list(range(n)), ts=[ts] * n))
+        )
+        ingest._commit_levels(cat, df.coalesce(1), "landsat", [13], 0.0)
 
     commit(1)
     first = cat.snapshot_id()
@@ -325,20 +327,95 @@ def test_lineage_file_survives_rollback(spark):
 
 
 def test_pyramid_parent_pixels(tsmall_catalog):
-    """A zoom-12 parent equals the oracle assembly of its zoom-13 children."""
+    """One parent per level, z12..z1, equals the oracle assembly of its
+    stored children — levels built from parents in hand within a pyramid
+    step, and the first level of each step (z9 -> z5, z5 -> z1)."""
     pdf = tsmall_catalog.read_pandas("tiles")
-    leaf = pdf[pdf.zoom == 13]
-    parent = pdf[pdf.zoom == 12].iloc[0]
-    ts = parent.ts
-    kids = leaf[
-        (leaf.x // 2 == parent.x) & (leaf.y // 2 == parent.y) & (leaf.ts == ts)
-    ]
-    children = {
-        (int(r.y) % 2) * 2 + (int(r.x) % 2): K.decode_payload(r.tile)
-        for r in kids.itertuples(index=False)
+    for zoom in range(12, 0, -1):
+        child = pdf[pdf.zoom == zoom + 1]
+        parent = pdf[pdf.zoom == zoom].iloc[0]
+        ts = parent.ts
+        kids = child[
+            (child.x // 2 == parent.x) & (child.y // 2 == parent.y) & (child.ts == ts)
+        ]
+        children = {
+            (int(r.y) % 2) * 2 + (int(r.x) % 2): K.decode_payload(r.tile)
+            for r in kids.itertuples(index=False)
+        }
+        expect = K.assemble_parent(children)
+        assert (K.decode_payload(parent.tile) == expect).all(), zoom
+
+
+def _tile_digests(pdf) -> dict:
+    """sha256 per (zoom, x, y, ts) over a tile's bytes and provenance."""
+    import hashlib
+
+    return {
+        (int(r.zoom), int(r.x), int(r.y), _millis(r.ts)): hashlib.sha256(
+            bytes(r.tile) + repr((r.image_id, r.caption, int(r.n_frags))).encode()
+        ).hexdigest()
+        for r in pdf.itertuples(index=False)
     }
-    expect = K.assemble_parent(children)
-    assert (K.decode_payload(parent.tile) == expect).all()
+
+
+@pytest.mark.parametrize("point", ["group_written", "z12_committed"])
+def test_resume_inside_pyramid(spark, tsmall_catalog, monkeypatch, point):
+    """Crash inside the pyramid, rerun, and get the tiles of an
+    uninterrupted run.  ``group_written``: the z13 -> z9 step has staged
+    its files but not committed them.  ``z12_committed``: one level per
+    shuffle (a closed cap, the commits a level-by-level build makes), dead
+    after the z12 commit; the rerun builds z11..z9 in one step from the
+    committed z12 and never rebuilds it."""
+    from geotrellis_landsat_emr_demo_spark import gates
+
+    root = os.path.join(SCRATCH, f"resume-{point}")
+    shutil.rmtree(root, ignore_errors=True)
+    cat = Catalog(root)
+    fixtures.write_all(cat, "t-small")
+    crashed, commit, stage_write = [], Catalog.commit, Catalog.stage_spark_write
+
+    def write_then_crash(self, df, table, **kw):
+        out = stage_write(self, df, table, **kw)
+        if any(z < 13 for _, z in out):
+            crashed.extend(f for f, _ in out)
+            raise RuntimeError("injected failure after the pyramid write")
+        return out
+
+    def commit_then_crash(self, adds, markers=None):
+        out = commit(self, adds, markers)
+        if "ingest:landsat:z12" in (markers or {}):
+            raise RuntimeError("injected failure after the z12 commit")
+        return out
+
+    with monkeypatch.context() as mp:
+        if point == "group_written":
+            mp.setattr(Catalog, "stage_spark_write", write_then_crash)
+        else:
+            mp.setitem(gates.CAPS, "pyramid_group_levels", 1)
+            mp.setattr(Catalog, "commit", commit_then_crash)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            ingest.ingest_images(spark, cat, "landsat", max_zoom=13, min_zoom=9)
+    committed = {z for z in range(9, 14) if cat.is_committed(f"ingest:landsat:z{z}")}
+    assert committed == ({13} if point == "group_written" else {13, 12})
+    z12_files = cat.files("tiles", zoom=12)
+
+    m = ingest.ingest_images(spark, cat, "landsat", max_zoom=13, min_zoom=9)
+    assert {k for k, v in m.items() if v.get("skipped")} == {
+        f"ingest:landsat:z{z}" for z in committed
+    }
+    if point == "z12_committed":
+        assert cat.files("tiles", zoom=12) == z12_files
+    pdf = cat.read_pandas("tiles")
+    assert not pdf.duplicated(["layer", "zoom", "x", "y", "ts"]).any()
+    ref = tsmall_catalog.read_pandas("tiles").query("zoom >= 9")
+    assert _tile_digests(pdf) == _tile_digests(ref)
+    assert cat.read_pandas("lineage")["zoom"].value_counts().to_dict() == {
+        z: 1 for z in range(9, 14)
+    }
+    # the crashed write's files sit under the table dir, never published
+    assert bool(crashed) == (point == "group_written")
+    assert all(os.path.exists(f) for f in crashed)
+    assert not set(crashed) & set(cat.files("tiles"))
 
 
 def test_layer_attrs(tsmall_catalog):

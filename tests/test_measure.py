@@ -43,8 +43,10 @@ def test_measure_ingest_and_leaf(spark):
         assert r["cpus"] == 2 and len(walls) == 2
         assert r["cold_s"] == walls[0] and r["warm_s"] == walls[1]
         assert all(rep["spark"]["spark.tasks"] > 0 for rep in r["reps"]), r["reps"]
-        # neither workload passes a size gate, so no decision is recorded
-        assert all(rep["gates"] == [] for rep in r["reps"]), r["reps"]
+        # the ingest builds z12..z9 in one pyramid step, one decision of
+        # its cap per rep; the leaf passes no size gate
+        made = ["gate=pyramid_group_levels n=4 cap=4 branch=fits"] if r is by["ingest"] else []
+        assert all(rep["gates"] == made for rep in r["reps"]), r["reps"]
     assert "Physical Plan" in by["envelope_pip_join"]["plan"]
     assert set(by["ingest"]["reps"][0]["stages"]) == {"z13", "z12", "z11", "z10", "z9", "attrs"}
 
